@@ -370,7 +370,12 @@ def maintain_triangle_count(
 
     from data_ingestion_resolution_platform_spark.util import local_df
 
-    row = stats.read().collect()[0]
+    rows = stats.read().filter(F.col("metric") == "triangles").collect()
+    if len(rows) != 1:
+        raise ValueError(
+            f"stats table holds {len(rows)} 'triangles' rows; expected exactly 1"
+        )
+    row = rows[0]
     counts = local_df(
         stats.spark,
         [

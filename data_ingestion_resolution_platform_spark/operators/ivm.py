@@ -531,6 +531,15 @@ def maintain_topk(
     Displaced rows leave the view through the MERGE delete clause;
     rides the view's epoch ledger.
 
+    Plan shape: ``changes`` is persisted once; the three small control
+    frames — ``vtouched`` (stored rows of touched groups),
+    ``dirty_groups`` and ``new_top`` — are local checkpoints. Each is
+    referenced two or three times, and every reference to an un-cut
+    frame re-plans its nested broadcast subtree as separate Spark jobs
+    that AQE does not reuse: one MERGE fanned out into ~90 jobs. Cut,
+    each evaluates once (k·touched rows at most) and the MERGE runs in
+    ~16 jobs.
+
     Column contract: ``changes`` = view columns + ``change_col``;
     ``base_after`` must contain every view column (project the ordering
     measure into the feed upstream, e.g. ``nb = length(content)``).
@@ -555,7 +564,11 @@ def maintain_topk(
         ).select(*keys)
         touched = changes.select(*gk).distinct()
         if view.exists():
-            vtouched = view.read().join(F.broadcast(touched), on=gk, how="left_semi")
+            vtouched = (
+                view.read()
+                .join(F.broadcast(touched), on=gk, how="left_semi")
+                .localCheckpoint(eager=False)
+            )
         else:
             vtouched = pos.limit(0)
         # dirty = a retraction key matches a stored row (exact key match,
@@ -565,6 +578,7 @@ def maintain_topk(
             .join(F.broadcast(neg_keys), on=keys, how="left_semi")
             .select(*gk)
             .distinct()
+            .localCheckpoint(eager=False)
         )
         order = F.expr(order_expr)
         ordering = [order.desc() if descending else order.asc()] + [
@@ -590,7 +604,7 @@ def maintain_topk(
         rescan = base_after.select(*cols).join(
             F.broadcast(dirty_groups), on=gk, how="left_semi"
         )
-        new_top = new_clean.unionByName(topk(rescan))
+        new_top = new_clean.unionByName(topk(rescan)).localCheckpoint(eager=False)
         displaced = vtouched.select(*keys).join(
             new_top.select(*keys), on=keys, how="left_anti"
         )

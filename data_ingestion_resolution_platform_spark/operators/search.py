@@ -231,9 +231,8 @@ def vocab_topk(
 # and hand it to maintain_distinct with group=term, value=doc.
 #
 # Reference analogue: none (the reference has no search); this extends
-# its "keep every read model continuously fresh" merge discipline
-# (/root/reference/backend/services/resolution.py:36-74) to lexical
-# retrieval.
+# its "keep every read model continuously fresh" finalize discipline
+# (reference/backend/main.py:147-203) to lexical retrieval.
 
 
 def term_changes(

@@ -44,6 +44,24 @@ def _env_conf_pairs(env_conf: str) -> list[tuple[str, str]]:
     return out
 
 
+def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap default: ``min(16g, MemTotal / 2)``.
+
+    The heap is pre-touched at JVM start (below), so it must fit the
+    host with room for the Python side: a fixed 16g cannot start a JVM
+    on a 15 GB machine. Falls back to 16g where ``meminfo`` is
+    unreadable (non-Linux hosts)."""
+    cap_mb = 16 << 10
+    try:
+        with open(meminfo) as f:
+            total_kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, IndexError, ValueError):
+        return "16g"
+    return f"{min(cap_mb, total_kb // 2048)}m"
+
+
 def get_spark(
     app_name: str = "dirp_spark",
     parallelism: int | None = None,
@@ -61,6 +79,7 @@ def get_spark(
     total executor cores, and AQE coalesces small post-shuffle
     partitions either way.
     """
+    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory()
     cpus = parallelism or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     shuffle = shuffle_partitions or cpus
     builder = (
@@ -73,21 +92,18 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_mem)
         # Pre-size and pre-touch the heap: without this the JVM grows the
         # heap DURING the workload and the kernel zeroes pages on first
         # touch — measured 60-70% system time with 24 executor threads
         # faulting concurrently (zone-lock contention), which inverted
         # the high-parallelism benchmarks. Pre-touch moves page zeroing
-        # to JVM startup, outside any measured window. Xms is capped
-        # below Xmx so small sessions stay cheap.
+        # to JVM startup, outside any measured window; the host-sized
+        # default heap keeps it startable.
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get(
-                "SPARK_GRAFT_DRIVER_JAVA_OPTS",
-                "-Xms{m} -XX:+AlwaysPreTouch".format(
-                    m=os.environ.get("SPARK_DRIVER_MEMORY", "16g")
-                ),
+                "SPARK_GRAFT_DRIVER_JAVA_OPTS", f"-Xms{driver_mem} -XX:+AlwaysPreTouch"
             ),
         )
         .config("spark.ui.enabled", "false")

@@ -41,6 +41,59 @@ from data_ingestion_resolution_platform_spark.util import empty_df
 from data_ingestion_resolution_platform_spark.streaming.schema_evolution import reconcile_exprs
 
 
+class EpochChange:
+    """One epoch's view change-set, built once and shared by every
+    maintained view (the reference advances all of its read models from
+    one job's changes, reference/backend/worker.py:195-228).
+
+    The CDF is synthesized from what the target MERGE is about to do:
+    ``pre`` holds the current target rows for the batch keys (every one
+    is replaced or deleted → sign -1), ``post`` the surviving winners
+    (sign +1). The target is touched by ONE broadcast semi-join on the
+    (small) winner key set — never a full rescan, never a target
+    shuffle — and ``pre`` is persisted, so N views cost one probe.
+    ``base_after`` is the LOGICAL post-epoch state (target minus batch
+    keys, plus surviving winners), left lazy: the top-k back-fill only
+    evaluates it for the groups a retraction dirtied.
+
+    Valid only until the target MERGE commits (it vacuums the bucket
+    versions ``pre`` and ``base_after`` were planned over); the caller
+    releases it in ``finally``.
+    """
+
+    def __init__(self, target, winners: DataFrame, keys) -> None:
+        keys = list(keys)
+        self.post = winners.filter(F.col("op") != "D")
+        if target.exists():
+            batch_keys = F.broadcast(winners.select(*keys))
+            self.pre = (
+                target.read().join(batch_keys, on=keys, how="left_semi").persist()
+            )
+            self.base_after = (
+                target.read()
+                .join(batch_keys, on=keys, how="left_anti")
+                .unionByName(self.post, allowMissingColumns=True)
+            )
+        else:
+            self.pre = None
+            self.base_after = self.post
+
+    def changes(self, proj) -> DataFrame:
+        """The signed pre/post mini-CDF projected onto ``proj`` (column
+        names or expressions valid over both target and winner rows),
+        with a ``change_type`` column."""
+        post = self.post.select(*proj, F.lit("update_postimage").alias("change_type"))
+        if self.pre is None:
+            return post
+        return self.pre.select(
+            *proj, F.lit("update_preimage").alias("change_type")
+        ).unionByName(post)
+
+    def release(self) -> None:
+        if self.pre is not None:
+            self.pre.unpersist()
+
+
 @dataclass
 class CDCPipeline:
     """Config + orchestration for the source-code-table CDC engine.
@@ -284,6 +337,11 @@ class CDCPipeline:
             max_candidates=10,
             wide_cols=["content"],
         )
+        # the winners feed every view and the target MERGE: one
+        # evaluation of the source semi-join + dropDuplicates per epoch
+        winners = resolved.winners.persist()
+        advancers = self._view_advancers()
+        change = None
         try:
             # resolve_and_detect returns lazily; the persisted per-key
             # aggregate materializes inside the first consumer below, so
@@ -305,29 +363,20 @@ class CDCPipeline:
                 fl.result()
             phases["resolve_audit"] = _time.time() - _t0
             _t0 = _time.time()
-            # maintained metrics BEFORE the target merge: the pre-images
+            # maintained views BEFORE the target merge: the pre-images
             # must be read from the pre-merge target, and this ordering
-            # keeps the retry story convergent — if the stats MERGE
-            # commits but the target MERGE then fails, redelivery skips
-            # the stats epoch (its own ledger) and re-runs the target
-            # merge from the same deterministic winners. The reverse
-            # order would strand the stats forever behind the target's
-            # committed-epoch early return.
-            if self.stats is not None:
-                self._maintain_stats(resolved.winners, epoch)
-            if self.view is not None:
-                # same pre-merge / own-ledger / convergent-retry
-                # contract as the stats (comment above)
-                self._maintain_view(resolved.winners, epoch)
-            if self.leaderboard is not None:
-                # same contract again (pre-merge, own ledger)
-                self._maintain_leaderboard(resolved.winners, epoch)
-            if self.freq is not None:
-                # same contract again (pre-merge, own ledger)
-                self._maintain_freq(resolved.winners, epoch)
-            if self.qsample is not None:
-                # same contract again (pre-merge, own ledger)
-                self._maintain_quantiles(resolved.winners, epoch)
+            # keeps the retry story convergent — if a view MERGE commits
+            # but the target MERGE then fails, redelivery skips that
+            # view's epoch (its own ledger) and re-runs the target merge
+            # from the same deterministic winners. The reverse order
+            # would strand the view forever behind the target's
+            # committed-epoch early return. Every view advances from
+            # the ONE change-set built above, so the target is probed
+            # once per epoch, not once per view.
+            if advancers:
+                change = EpochChange(self.target, winners, self.keys)
+                for advance in advancers:
+                    advance(change, epoch)
             if self.history is not None:
                 # SCD2 history from the RAW batch (every event is a
                 # potential version boundary, not just winners) —
@@ -345,7 +394,7 @@ class CDCPipeline:
                     f"h{epoch}",
                 )
             stats = self.target.merge(
-                resolved.winners,
+                winners,
                 list(self.keys),
                 epoch_id=epoch,
                 delete_condition=F.col("op") == "D",
@@ -382,80 +431,57 @@ class CDCPipeline:
                 pass
             raise
         finally:
+            if change is not None:
+                change.release()
+            winners.unpersist()
             resolved.unpersist()
         return stats
 
-    def _maintain_stats(self, winners: DataFrame, epoch: int) -> None:
-        """Advance the maintained per-``stats_keys`` aggregate (row
-        count + content bytes) by this epoch's delta.
+    def _view_advancers(self) -> list:
+        """The enabled maintained views' per-epoch advance steps, in
+        the order ``process_batch`` runs them."""
+        return [
+            advance
+            for table, advance in (
+                (self.stats, self._maintain_stats),
+                (self.view, self._maintain_view),
+                (self.leaderboard, self._maintain_leaderboard),
+                (self.freq, self._maintain_freq),
+                (self.qsample, self._maintain_quantiles),
+            )
+            if table is not None
+        ]
 
-        The epoch's CDF is synthesized from what the MERGE is about to
-        do: current target rows for the batch keys are the pre-images
-        (every one is replaced or deleted → sign -1), surviving winners
-        are the post-images (sign +1). Unchanged re-deliveries cancel
-        exactly (-x + x = 0). The target is only touched by ONE
-        broadcast semi-join on the (small) batch key set — never a full
-        rescan, never a shuffle of the target."""
+    def _maintain_stats(self, change: "EpochChange", epoch: int) -> None:
+        """Advance the maintained per-``stats_keys`` aggregate (row
+        count + content bytes) by this epoch's delta: the signed
+        pre/post mini-CDF of :class:`EpochChange` — unchanged
+        re-deliveries cancel exactly (-x + x = 0)."""
         from data_ingestion_resolution_platform_spark.operators.ivm import (
             maintain_aggregate,
         )
 
-        key_list = list(self.keys)
-        cols = [*key_list, "lang", "content"]
-        post = (
-            winners.filter(F.col("op") != "D")
-            .select(*cols, F.lit("update_postimage").alias("change_type"))
-        )
-        if self.target.exists():
-            pre = (
-                self.target.read()
-                .join(F.broadcast(winners.select(*key_list)), on=key_list, how="left_semi")
-                .select(*cols, F.lit("update_preimage").alias("change_type"))
-            )
-            cdf = pre.unionByName(post)
-        else:
-            cdf = post
         maintain_aggregate(
             self.stats,
-            cdf,
+            change.changes([*self.keys, "lang", "content"]),
             list(self.stats_keys),
             {"total_bytes": "length(content)"},
             epoch_id=f"m{epoch}",
             count_alias="n_paths",
         )
 
-    def _maintain_freq(self, winners: DataFrame, epoch: int) -> None:
+    def _maintain_freq(self, change: "EpochChange", epoch: int) -> None:
         """Advance the maintained count-min cells by this epoch's delta
-        (``operators/sketch.py maintain_cms``).
-
-        Same invertible mini-CDF as ``_maintain_stats`` (pre-images =
-        current target rows for the batch keys via ONE broadcast
-        semi-join, post-images = surviving winners; unchanged
-        re-deliveries cancel exactly), same pre-merge / own-ledger /
-        convergent-retry contract. Only the epoch's delta ever shuffles
-        — ≤ depth·|batch| exploded rows combining to ≤ depth·width
-        cells."""
+        (``operators/sketch.py maintain_cms``). Only the epoch's delta
+        ever shuffles — ≤ depth·|batch| exploded rows combining to
+        ≤ depth·width cells."""
         from data_ingestion_resolution_platform_spark.operators.sketch import (
             maintain_cms,
         )
 
-        key_list = list(self.keys)
-        cols = [*key_list, "commit", "lang", "content"]
-        post = winners.filter(F.col("op") != "D").select(
-            *cols, F.lit("update_postimage").alias("change_type")
-        )
-        if self.target.exists():
-            pre = (
-                self.target.read()
-                .join(F.broadcast(winners.select(*key_list)), on=key_list, how="left_semi")
-                .select(*cols, F.lit("update_preimage").alias("change_type"))
-            )
-            cdf = pre.unionByName(post)
-        else:
-            cdf = post
         maintain_cms(
             self.freq,
-            cdf,
+            change.changes([*self.keys, "commit", "lang", "content"]),
             self.freq_item,
             depth=self.freq_depth,
             width=self.freq_width,
@@ -470,38 +496,23 @@ class CDCPipeline:
             raise ValueError("seed_dim requires maintain_view=True")
         return self.dim.merge(dim, [self.view_join_key], epoch_id=epoch_id)
 
-    def _maintain_view(self, winners: DataFrame, epoch: int) -> None:
+    def _maintain_view(self, change: "EpochChange", epoch: int) -> None:
         """Advance the maintained ``target ⋈ dim`` view by this feed
         epoch's R-side delta (ΔS is empty here; dim changes arrive via
-        :meth:`apply_dim_changes`).
-
-        Same invertible mini-CDF as ``_maintain_stats``: pre-images are
-        the current target rows for the batch keys (ONE broadcast
-        semi-join, never a target shuffle or rescan), post-images are
-        the surviving winners. ``maintain_join`` broadcasts the delta
-        against the dim, so epoch cost is O(|batch|)."""
+        :meth:`apply_dim_changes`). ``maintain_join`` broadcasts the
+        delta against the dim, so epoch cost is O(|batch|)."""
         from data_ingestion_resolution_platform_spark.operators.ivm import maintain_join
 
         if not self.dim.exists():
             raise ValueError(
                 "maintain_view=True but the dim table is unseeded — call seed_dim() first"
             )
-        key_list = list(self.keys)
-        cols = [*key_list, *self.view_attrs]
-        post = winners.filter(F.col("op") != "D").select(
-            *cols, F.lit("update_postimage").alias("change_type")
-        )
-        if self.target.exists():
-            pre = (
-                self.target.read()
-                .join(F.broadcast(winners.select(*key_list)), on=key_list, how="left_semi")
-                .select(*cols, F.lit("update_preimage").alias("change_type"))
-            )
-            r_changes = pre.unionByName(post)
+        cols = [*self.keys, *self.view_attrs]
+        r_changes = change.changes(cols)
+        if change.pre is not None:
             r_before = self.target.read().select(*cols)
         else:
-            r_changes = post
-            r_before = post.drop("change_type").limit(0)
+            r_before = r_changes.drop("change_type").limit(0)
         s_before = self.dim.read()
         s_changes = s_before.limit(0).withColumn("change_type", F.lit("insert"))
         maintain_join(
@@ -511,7 +522,7 @@ class CDCPipeline:
             r_before=r_before,
             s_before=s_before,
             join_keys=[self.view_join_key],
-            out_keys=key_list,
+            out_keys=list(self.keys),
             epoch_id=f"v{epoch}",
         )
 
@@ -521,44 +532,17 @@ class CDCPipeline:
         lb_val = F.expr(self.leaderboard_order).cast("long").alias("lb_val")
         return gk, rk, [*gk, *rk, lb_val]
 
-    def _maintain_leaderboard(self, winners: DataFrame, epoch: int) -> None:
+    def _maintain_leaderboard(self, change: "EpochChange", epoch: int) -> None:
         """Advance the maintained per-``leaderboard_keys`` top-k view by
-        this epoch's delta (``operators/ivm.py maintain_topk``).
-
-        Same invertible mini-CDF as ``_maintain_stats``; runs pre-merge
-        on its own ledger for the same convergent-retry argument. The
-        back-fill base must be the POST-epoch state, but the physical
-        target merge happens after — so it is constructed LOGICALLY
-        (target minus batch keys, plus surviving winners), lazily: the
-        back-fill only evaluates it for groups a retraction dirtied,
-        semi-pruned inside maintain_topk."""
+        this epoch's delta (``operators/ivm.py maintain_topk``), with
+        the change-set's logical post-epoch state as back-fill base."""
         from data_ingestion_resolution_platform_spark.operators.ivm import maintain_topk
 
-        key_list = list(self.keys)
         gk, rk, proj = self._leaderboard_proj()
-        post = winners.filter(F.col("op") != "D").select(
-            *proj, F.lit("update_postimage").alias("change_type")
-        )
-        if self.target.exists():
-            pre = (
-                self.target.read()
-                .join(F.broadcast(winners.select(*key_list)), on=key_list, how="left_semi")
-                .select(*proj, F.lit("update_preimage").alias("change_type"))
-            )
-            changes = pre.unionByName(post)
-            base_after = (
-                self.target.read()
-                .join(F.broadcast(winners.select(*key_list)), on=key_list, how="left_anti")
-                .select(*proj)
-                .unionByName(winners.filter(F.col("op") != "D").select(*proj))
-            )
-        else:
-            changes = post
-            base_after = winners.filter(F.col("op") != "D").select(*proj)
         maintain_topk(
             self.leaderboard,
-            changes,
-            base_after,
+            change.changes(proj),
+            change.base_after.select(*proj),
             gk,
             rk,
             "lb_val",
@@ -584,7 +568,7 @@ class CDCPipeline:
         qs_val = F.expr(self.quantile_value).cast("long").alias("qs_val")
         return gk, rk, [*gk, *rk, qs_h, qs_val]
 
-    def _maintain_quantiles(self, winners: DataFrame, epoch: int) -> None:
+    def _maintain_quantiles(self, change: "EpochChange", epoch: int) -> None:
         """Advance the maintained per-``quantile_keys`` uniform sample by
         this epoch's delta — ``operators/ivm.py maintain_topk`` with
         ``descending=False`` over the key hash, so the view invariant is
@@ -593,39 +577,14 @@ class CDCPipeline:
         per-job summary counters its status endpoints recompute from
         full table state, `/root/reference/backend/main.py:103-107` —
         here as a distribution, not a count, and never rescanned).
-
-        Same invertible pre/post mini-CDF and pre-merge / own-ledger /
-        convergent-retry contract as ``_maintain_leaderboard``: the
-        back-fill base is the LOGICAL post-epoch state (target minus
-        batch keys, plus surviving winners), evaluated lazily and only
-        for groups a retraction dirtied."""
+        Shares the leaderboard's lazy ``base_after``."""
         from data_ingestion_resolution_platform_spark.operators.ivm import maintain_topk
 
-        key_list = list(self.keys)
         gk, rk, proj = self._quantiles_proj()
-        post = winners.filter(F.col("op") != "D").select(
-            *proj, F.lit("update_postimage").alias("change_type")
-        )
-        if self.target.exists():
-            pre = (
-                self.target.read()
-                .join(F.broadcast(winners.select(*key_list)), on=key_list, how="left_semi")
-                .select(*proj, F.lit("update_preimage").alias("change_type"))
-            )
-            changes = pre.unionByName(post)
-            base_after = (
-                self.target.read()
-                .join(F.broadcast(winners.select(*key_list)), on=key_list, how="left_anti")
-                .select(*proj)
-                .unionByName(winners.filter(F.col("op") != "D").select(*proj))
-            )
-        else:
-            changes = post
-            base_after = winners.filter(F.col("op") != "D").select(*proj)
         maintain_topk(
             self.qsample,
-            changes,
-            base_after,
+            change.changes(proj),
+            change.base_after.select(*proj),
             gk,
             rk,
             "qs_h",

@@ -7,7 +7,9 @@ from data_ingestion_resolution_platform_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("dirp_tests", parallelism=8, shuffle_partitions=8)
+    # local[N] and shuffle partitions follow $SPARK_GRAFT_CPUS (else all
+    # cores); the driver heap defaults to half the host's memory
+    s = get_spark("dirp_tests")
     yield s
 
 

@@ -5,9 +5,11 @@ exactly-once under redelivery, and across a snapshot bootstrap."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from data_ingestion_resolution_platform_spark.operators.sketch import kmv_hash
 from data_ingestion_resolution_platform_spark.sources.feed import synth_change_feed
 from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
 
@@ -71,3 +73,83 @@ def test_leaderboard_bootstrap_handoff(spark, tmp_path):
     # tail strictly after the watermark: maintained state must converge
     pipe.replay_bounded(feed.filter(F.col("lsn") > thr), epochs=1, epoch_offset=1)
     assert _as_set(pipe.leaderboard.read()) == _as_set(_recompute(pipe))
+
+
+# Spark jobs one leaderboard epoch may run (audit appends run on pool
+# threads outside the group and are not counted). Each reference to an
+# un-cut control frame of maintain_topk re-plans its broadcast subtree
+# as separate jobs; see CHANGES.md for the measured counts.
+MAX_TOPK_EPOCH_JOBS = 40
+
+
+def test_topk_epoch_job_fanout_is_bounded(spark, tmp_path):
+    feed = synth_change_feed(spark, n_events=3000, n_repos=10, seed=7, partitions=8)
+    pipe = CDCPipeline(
+        spark,
+        feed_dir="unused",
+        warehouse=str(tmp_path / "wh"),
+        maintain_leaderboard=True,
+    )
+    thr = feed.agg(F.max("lsn")).collect()[0][0] // 2
+    pipe.replay_bounded(feed.filter(F.col("lsn") <= thr), epochs=1)
+    sc = spark.sparkContext
+    group = f"topk-fanout-{tmp_path.name}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        pipe.process_batch(feed.filter(F.col("lsn") > thr), 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert _as_set(pipe.leaderboard.read()) == _as_set(_recompute(pipe))
+    assert 0 < n_jobs <= MAX_TOPK_EPOCH_JOBS, n_jobs
+
+
+def test_shared_change_set_released_on_success_and_failure(spark, tmp_path, monkeypatch):
+    """The epoch's persisted winners and target pre-image feed both
+    top-k views and are released in ``finally``: nothing stays cached
+    after a committed epoch or after a FAILED one, and the redelivered
+    epoch converges."""
+    feed = synth_change_feed(spark, n_events=1500, n_repos=6, seed=3, partitions=4)
+    thr = feed.agg(F.max("lsn")).collect()[0][0] // 2
+    pipe = CDCPipeline(
+        spark,
+        feed_dir="unused",
+        warehouse=str(tmp_path / "wh"),
+        maintain_leaderboard=True,
+        maintain_quantiles=True,
+        quantile_k=4,
+    )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    pipe.replay_bounded(feed.filter(F.col("lsn") <= thr), epochs=1)
+    assert cache.isEmpty()
+
+    def boom(self, *a, **k):
+        raise RuntimeError("injected target-merge crash")
+
+    monkeypatch.setattr(type(pipe.target), "merge", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        pipe.replay_bounded(feed.filter(F.col("lsn") > thr), epochs=1, epoch_offset=1)
+    monkeypatch.undo()
+    assert cache.isEmpty()
+
+    pipe.replay_bounded(feed.filter(F.col("lsn") > thr), epochs=1, epoch_offset=1)
+    assert cache.isEmpty()
+    assert _as_set(pipe.leaderboard.read()) == _as_set(_recompute(pipe))
+    # bottom-k hash sample == direct recompute over the live target
+    w = Window.partitionBy("repo").orderBy("qs_h", "path")
+    want = (
+        pipe.target.read()
+        .select(
+            "repo",
+            "path",
+            kmv_hash(F.concat_ws("\x1f", "repo", "path")).alias("qs_h"),
+            F.length("content").cast("long").alias("qs_val"),
+        )
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= 4)
+        .drop("_rn")
+    )
+    got = pipe.qsample.read().select("repo", "path", "qs_h", "qs_val")
+    assert sorted(got.collect()) == sorted(want.collect())

@@ -127,3 +127,24 @@ def test_redelivery_and_crash_replay(spark, stores):
     }
     # full redelivery is a no-op
     assert maintain_triangle_count(edges, stats, epoch_id="e1", **batch)["skipped"]
+
+
+def test_stats_row_read_by_metric_not_position(spark, stores):
+    # a second metric row sharing the stats table must not be mistaken
+    # for the triangle row, whichever row a scan returns first
+    edges, stats = stores
+    build_triangle_state(edges, stats, _pairs(spark, [(1, 2), (2, 3)]), epoch_id="seed")
+    stats.merge(
+        spark.createDataFrame(
+            [("aux", 99, 99), ("triangles", 0, 2)],
+            "metric string, n_triangles long, n_edges long",
+        ).coalesce(1),
+        ["metric"],
+        epoch_id="aux",
+    )
+    assert stats.read().collect()[0]["metric"] == "aux"
+    maintain_triangle_count(
+        edges, stats, _pairs(spark, [(1, 3)]), _pairs(spark, []), epoch_id="e1"
+    )
+    got = {r["metric"]: (r["n_triangles"], r["n_edges"]) for r in stats.read().collect()}
+    assert got == {"triangles": (1, 3), "aux": (99, 99)}
