@@ -146,12 +146,19 @@ def maintain_clusters(
 
     up = _ids(upserted_ids, id_col).distinct().localCheckpoint(eager=False)
     rm = _ids(removed_ids, id_col).distinct().localCheckpoint(eager=False)
+    # a delta pair with a removed endpoint (e.g. verified against the
+    # pre-epoch corpus) must neither enter the relabel scope — its
+    # removed doc could become a survivor's cluster label — nor land in
+    # the edge store; both frames are epoch-sized
     delta = (
         delta_pairs.select(
             F.least("id_a", "id_b").alias("id_a"),
             F.greatest("id_a", "id_b").alias("id_b"),
         )
         .distinct()
+        .join(F.broadcast(rm.select(F.col("id").alias("id_a"))), on="id_a", how="left_anti")
+        .join(F.broadcast(rm.select(F.col("id").alias("id_b"))), on="id_b", how="left_anti")
+        .select("id_a", "id_b")
         .localCheckpoint(eager=False)
     )
 

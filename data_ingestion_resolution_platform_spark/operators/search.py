@@ -194,7 +194,9 @@ def vocab_topk(
 
     One explode + one groupBy (map-side partial sums); global top-k is
     a ``LIMIT`` sort — Spark executes TakeOrderedAndProject (per-
-    partition heaps, no full sort shuffle).
+    partition heaps, no full sort shuffle). The rank is read off the
+    at most k rows by sorting them in one array (``(-cf, term)`` is a
+    total order, terms being unique) — no unpartitioned window.
     """
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
@@ -205,11 +207,13 @@ def vocab_topk(
         F.countDistinct("doc_id").alias("df"),
     )
     top = agg.orderBy(F.col("cf").desc(), F.col("term").asc()).limit(k)
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.col("cf").desc(), F.col("term").asc())
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        "rank", "term", "cf", "df"
+    rows = top.agg(
+        F.sort_array(
+            F.collect_list(F.struct((-F.col("cf")).alias("neg_cf"), "term", "cf", "df"))
+        ).alias("rows")
+    )
+    return rows.select(F.posexplode("rows").alias("pos", "r")).select(
+        (F.col("pos") + 1).alias("rank"), "r.term", "r.cf", "r.df"
     )
 
 

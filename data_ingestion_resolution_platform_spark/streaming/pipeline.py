@@ -24,9 +24,11 @@ from __future__ import annotations
 import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from data_ingestion_resolution_platform_spark.functions.hashing import content_sha256
 from data_ingestion_resolution_platform_spark.operators.cdc import resolve_and_detect
@@ -39,6 +41,27 @@ from data_ingestion_resolution_platform_spark.sources.lake import (
 from data_ingestion_resolution_platform_spark.streaming.lineage import epoch_summary, lineage_rows
 from data_ingestion_resolution_platform_spark.util import empty_df
 from data_ingestion_resolution_platform_spark.streaming.schema_evolution import reconcile_exprs
+
+
+def run_concurrently(spark: SparkSession, steps: list) -> None:
+    """Run independent epoch steps (zero-argument callables), one pool
+    thread each, wait for EVERY step, then re-raise the first failure
+    in step order, unwrapped.
+
+    Spark local properties (job group, scheduler pool, SQL execution
+    ids) are per thread, so each step is wrapped with
+    ``inheritable_thread_target``: the steps' jobs land in the
+    caller's job group, stay cancellable with it, and are counted
+    under it by ``statusTracker``. This is the package's one place that
+    starts threads (``tests/test_thread_sources.py``)."""
+    if not steps:
+        return
+    with ThreadPoolExecutor(max_workers=len(steps)) as pool:
+        # one wrap per step: each wrap clones the caller's properties,
+        # so a step that changes its own job group touches no other step
+        futures = [pool.submit(inheritable_thread_target(spark)(step)) for step in steps]
+    for fut in futures:
+        fut.result()
 
 
 class EpochChange:
@@ -54,15 +77,20 @@ class EpochChange:
     shuffle — and ``pre`` is persisted, so N views cost one probe.
     ``base_after`` is the LOGICAL post-epoch state (target minus batch
     keys, plus surviving winners), left lazy: the top-k back-fill only
-    evaluates it for the groups a retraction dirtied.
+    evaluates it for the groups a retraction dirtied. ``batch`` is the
+    epoch's raw (reconciled) batch, for the SCD2 history, which turns
+    every event into a potential version boundary, not just winners.
 
-    Valid only until the target MERGE commits (it vacuums the bucket
-    versions ``pre`` and ``base_after`` were planned over); the caller
-    releases it in ``finally``.
+    The view steps read these frames CONCURRENTLY (``process_batch``
+    runs them on a pool) and strictly read-only: a view writes only its
+    own table. Valid only until the target MERGE commits (it vacuums the
+    bucket versions ``pre`` and ``base_after`` were planned over); the
+    caller releases it in ``finally``, after every step has returned.
     """
 
-    def __init__(self, target, winners: DataFrame, keys) -> None:
+    def __init__(self, target, batch: DataFrame, winners: DataFrame, keys) -> None:
         keys = list(keys)
+        self.batch = batch
         self.post = winners.filter(F.col("op") != "D")
         if target.exists():
             batch_keys = F.broadcast(winners.select(*keys))
@@ -317,6 +345,14 @@ class CDCPipeline:
         (``resolve_and_detect``: winners + conflicts share the shuffle);
         lineage is a map-side partition scan; everything downstream
         reads the small persisted per-key aggregate.
+
+        Two fan-outs run on :func:`run_concurrently`, one after the
+        other: the conflicts/lineage audit appends, then every enabled
+        maintained view (SCD2 history included) from the shared
+        :class:`EpochChange`. Each step writes only its own table under
+        its own epoch ledger, so the steps are independent; all of them
+        finish before the target MERGE, and the change-set and winners
+        are released only after every step has returned.
         """
         if self.target.epoch_committed(epoch):
             return {"skipped": True, "epoch": epoch}
@@ -353,45 +389,35 @@ class CDCPipeline:
             # write order: audit data first, target + its ledger marker
             # last (a crash in between leaves an uncommitted epoch that
             # replays idempotently; audit appends are ledger-guarded too).
-            # The two audit writes are independent Spark jobs — submit
-            # them from threads so they overlap (lineage is a map-side
-            # scan of the source; conflicts materializes the fused agg).
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fc = pool.submit(self.conflicts.append, conflicts, f"c{epoch}")
-                fl = pool.submit(self.lineage.append, lin, f"l{epoch}", 1)
-                fc.result()
-                fl.result()
+            # Fan-out 1: the two audit appends are independent Spark
+            # jobs (lineage is a map-side scan of the source; conflicts
+            # materializes the fused agg), so they overlap.
+            run_concurrently(
+                self.spark,
+                [
+                    partial(self.conflicts.append, conflicts, f"c{epoch}"),
+                    partial(self.lineage.append, lin, f"l{epoch}", 1),
+                ],
+            )
             phases["resolve_audit"] = _time.time() - _t0
             _t0 = _time.time()
-            # maintained views BEFORE the target merge: the pre-images
-            # must be read from the pre-merge target, and this ordering
-            # keeps the retry story convergent — if a view MERGE commits
-            # but the target MERGE then fails, redelivery skips that
-            # view's epoch (its own ledger) and re-runs the target merge
-            # from the same deterministic winners. The reverse order
-            # would strand the view forever behind the target's
-            # committed-epoch early return. Every view advances from
-            # the ONE change-set built above, so the target is probed
-            # once per epoch, not once per view.
+            # Fan-out 2: the maintained views, BEFORE the target merge:
+            # the pre-images must be read from the pre-merge target, and
+            # this ordering keeps the retry story convergent — if some
+            # view MERGEs commit but another view or the target MERGE
+            # then fails, redelivery skips the committed views' epochs
+            # (their own ledgers) and re-runs the rest from the same
+            # deterministic winners. The reverse order would strand the
+            # views forever behind the target's committed-epoch early
+            # return. Every view advances from the ONE change-set, so
+            # the target is probed once per epoch, not once per view;
+            # the views only read it, so they run concurrently (an epoch
+            # of small view jobs is bound by driver-side planning, which
+            # overlaps across threads).
             if advancers:
-                change = EpochChange(self.target, winners, self.keys)
-                for advance in advancers:
-                    advance(change, epoch)
-            if self.history is not None:
-                # SCD2 history from the RAW batch (every event is a
-                # potential version boundary, not just winners) —
-                # O(delta) epoch apply, own ledger ⇒ convergent retries
-                from data_ingestion_resolution_platform_spark.operators.scd import (
-                    historize_epoch,
-                )
-
-                historize_epoch(
-                    self.history,
-                    batch,
-                    list(self.keys),
-                    self.lsn_col,
-                    list(self.history_attrs),
-                    f"h{epoch}",
+                change = EpochChange(self.target, batch, winners, self.keys)
+                run_concurrently(
+                    self.spark, [partial(advance, change, epoch) for advance in advancers]
                 )
             stats = self.target.merge(
                 winners,
@@ -438,8 +464,9 @@ class CDCPipeline:
         return stats
 
     def _view_advancers(self) -> list:
-        """The enabled maintained views' per-epoch advance steps, in
-        the order ``process_batch`` runs them."""
+        """The enabled maintained views' per-epoch advance steps, each
+        ``advance(change, epoch)``, in the order ``process_batch``
+        submits them (and re-raises their failures)."""
         return [
             advance
             for table, advance in (
@@ -448,9 +475,25 @@ class CDCPipeline:
                 (self.leaderboard, self._maintain_leaderboard),
                 (self.freq, self._maintain_freq),
                 (self.qsample, self._maintain_quantiles),
+                (self.history, self._maintain_history),
             )
             if table is not None
         ]
+
+    def _maintain_history(self, change: "EpochChange", epoch: int) -> None:
+        """Advance the SCD2 history from the RAW batch (every event is a
+        potential version boundary, not just winners) — O(delta) epoch
+        apply, own ledger ⇒ convergent retries."""
+        from data_ingestion_resolution_platform_spark.operators.scd import historize_epoch
+
+        historize_epoch(
+            self.history,
+            change.batch,
+            list(self.keys),
+            self.lsn_col,
+            list(self.history_attrs),
+            f"h{epoch}",
+        )
 
     def _maintain_stats(self, change: "EpochChange", epoch: int) -> None:
         """Advance the maintained per-``stats_keys`` aggregate (row

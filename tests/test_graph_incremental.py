@@ -119,6 +119,25 @@ def test_update_drops_stale_edges(spark, stores):
     _assert_state(labels, _expected(spark, [1, 2, 3], [(2, 3)]))
 
 
+def test_delta_pair_with_removed_min_endpoint_not_a_label(spark, stores):
+    """A delta pair whose removed endpoint is its component's minimum id
+    (verified against the pre-epoch corpus) must not label the
+    survivor with the deleted id, nor land in the edge store."""
+    labels, edges = stores
+    build_cluster_state(labels, edges, _pairs(spark, [(1, 2)]), _ids(spark, [1, 2, 3]))
+    # doc 3 updated, doc 1 deleted; the Δ verify still paired 3 with 1
+    maintain_clusters(
+        labels,
+        edges,
+        _pairs(spark, [(1, 3)]),
+        _ids(spark, [3]),
+        _ids(spark, [1]),
+        epoch_id="e1",
+    )
+    _assert_state(labels, _expected(spark, [2, 3], []))
+    assert edges.read().count() == 0
+
+
 def test_untouched_components_not_relabeled(spark, stores):
     labels, edges = stores
     build_cluster_state(

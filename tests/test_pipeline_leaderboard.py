@@ -75,10 +75,10 @@ def test_leaderboard_bootstrap_handoff(spark, tmp_path):
     assert _as_set(pipe.leaderboard.read()) == _as_set(_recompute(pipe))
 
 
-# Spark jobs one leaderboard epoch may run (audit appends run on pool
-# threads outside the group and are not counted). Each reference to an
-# un-cut control frame of maintain_topk re-plans its broadcast subtree
-# as separate jobs; see CHANGES.md for the measured counts.
+# Spark jobs one leaderboard epoch may run, the audit appends included
+# (their pool threads inherit the caller's job group). Each reference to
+# an un-cut control frame of maintain_topk re-plans its broadcast
+# subtree as separate jobs; see CHANGES.md for the measured counts.
 MAX_TOPK_EPOCH_JOBS = 40
 
 

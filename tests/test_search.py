@@ -80,3 +80,26 @@ def test_vocab_topk_counts(corpus):
     assert top["batch"] == (1, 4, 2)
     assert top["merge"] == (2, 3, 2)
     assert top["spark"] == (3, 3, 3)
+
+
+def test_vocab_topk_rank_equals_window_rank(spark, corpus):
+    """The rank read off the sorted top-k equals the unpartitioned
+    ``row_number`` window it replaced, ties at the cut included, and no
+    window is planned."""
+    from pyspark.sql import Window
+
+    agg = postings(corpus).groupBy("term").agg(
+        F.sum("tf").alias("cf"), F.count("*").alias("df")
+    )
+    order = [F.col("cf").desc(), F.col("term").asc()]
+    for k in (1, 2, 3, 5, 50):
+        got = vocab_topk(corpus, k=k)
+        assert "Window" not in got._jdf.queryExecution().executedPlan().toString()
+        want = (
+            agg.orderBy(*order)
+            .limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
+            .select("rank", "term", "cf", "df")
+        )
+        assert [tuple(r) for r in got.collect()] == sorted(tuple(r) for r in want.collect())
+    assert vocab_topk(corpus.limit(0), k=3).collect() == []
