@@ -51,7 +51,9 @@ pre-epoch snapshot, labels commit first. If the job dies between the
 two commits, the re-delivered epoch recomputes scope from the advanced
 labels + stale edge store: the affected set it derives is a superset of
 the crashed epoch's (new labels map touched nodes to their new
-clusters), stale edges are filtered identically, and min-id labeling is
+clusters), stale edges are found from the changed ids themselves (the
+removed ids join the probe set and the edge store is probed on both
+endpoints, so no label is needed to reach them), and min-id labeling is
 insensitive to widening the scope to whole components — so the labels
 MERGE no-ops via the ledger and the edges MERGE lands the identical
 batch. Covered by `tests/test_graph_incremental.py::test_crash_replay`.
@@ -181,24 +183,31 @@ def maintain_clusters(
     # full membership of those components (plus brand-new ids not yet in
     # the store) — the relabeling scope
     scope_members = cur.join(F.broadcast(affected), on="cluster_id").select("id")
-    # pre-epoch membership (removed ids INCLUDED) — the edge-store probe
-    # key: a stale edge may have a removed node on its id_a side
+    # pre-epoch membership plus every changed id — the edge-store probe
+    # key. The removed ids are unioned in explicitly: on a replay after
+    # the labels commit, no label reaches them any more, yet their stale
+    # edges must still be found and deleted
     scan_nodes = (
-        scope_members.unionByName(up).distinct().localCheckpoint(eager=False)
+        scope_members.unionByName(up).unionByName(rm).distinct().localCheckpoint(eager=False)
     )
     scope_nodes = scan_nodes.join(
         rm.hint("broadcast"), on="id", how="left_anti"
     ).localCheckpoint(eager=False)
 
     # surviving old edges inside the scope: probe the pair store with the
-    # (small) scope-node set; drop every pair touching a changed doc —
-    # its current pairs, if any, are in delta.
+    # (small) scope-node set on both endpoints (a changed doc may sit on
+    # id_b of an edge whose id_a partner is out of scope); drop every
+    # pair touching a changed doc — its current pairs, if any, are in delta.
     stale_ends = up.unionByName(rm).localCheckpoint(eager=False)
     old_edges = edges.read().select("id_a", "id_b") if edges.exists() else None
     if old_edges is not None:
         scoped_old = old_edges.join(
             F.broadcast(scan_nodes.select(F.col("id").alias("id_a"))), on="id_a"
-        )
+        ).unionByName(
+            old_edges.join(
+                F.broadcast(scan_nodes.select(F.col("id").alias("id_b"))), on="id_b"
+            ).select("id_a", "id_b")
+        ).distinct()
         stale = scoped_old.join(
             F.broadcast(stale_ends.select(F.col("id").alias("id_a"))),
             on="id_a",

@@ -80,6 +80,7 @@ class EpochChange:
     evaluates it for the groups a retraction dirtied. ``batch`` is the
     epoch's raw (reconciled) batch, for the SCD2 history, which turns
     every event into a potential version boundary, not just winners.
+    ``CDCPipeline.bootstrap`` builds it with ``winners = batch``.
 
     The view steps read these frames CONCURRENTLY (``process_batch``
     runs them on a pool) and strictly read-only: a view writes only its
@@ -265,11 +266,11 @@ class CDCPipeline:
             compact_small_file_bytes=self.audit_small_file_bytes,
             compact_min_dirs=self.audit_compact_min_dirs,
         )
-        self.stats = (
-            LakeTable(self.spark, os.path.join(self.warehouse, "stats"))
-            if self.maintain_stats
-            else None
-        )
+
+        def side_table(name: str, enabled: bool):
+            return LakeTable(self.spark, os.path.join(self.warehouse, name)) if enabled else None
+
+        self.stats = side_table("stats", self.maintain_stats)
         if self.maintain_history:
             # closed-versions append + open-versions snapshot: epoch
             # cost tracks the live key count, not accumulated history
@@ -283,27 +284,11 @@ class CDCPipeline:
             )
         else:
             self.history = None
-        if self.maintain_view:
-            self.view = LakeTable(self.spark, os.path.join(self.warehouse, "view"))
-            self.dim = LakeTable(self.spark, os.path.join(self.warehouse, "dim"))
-        else:
-            self.view = None
-            self.dim = None
-        self.leaderboard = (
-            LakeTable(self.spark, os.path.join(self.warehouse, "leaderboard"))
-            if self.maintain_leaderboard
-            else None
-        )
-        self.freq = (
-            LakeTable(self.spark, os.path.join(self.warehouse, "freq"))
-            if self.maintain_freq
-            else None
-        )
-        self.qsample = (
-            LakeTable(self.spark, os.path.join(self.warehouse, "qsample"))
-            if self.maintain_quantiles
-            else None
-        )
+        self.view = side_table("view", self.maintain_view)
+        self.dim = side_table("dim", self.maintain_view)
+        self.leaderboard = side_table("leaderboard", self.maintain_leaderboard)
+        self.freq = side_table("freq", self.maintain_freq)
+        self.qsample = side_table("qsample", self.maintain_quantiles)
         self.checkpoint = os.path.join(self.warehouse, "_checkpoint")
 
     # -- batch core (shared by streaming + bounded replay) ---------------
@@ -465,16 +450,44 @@ class CDCPipeline:
 
     def _view_advancers(self) -> list:
         """The enabled maintained views' per-epoch advance steps, each
-        ``advance(change, epoch)``, in the order ``process_batch``
-        submits them (and re-raises their failures)."""
+        ``advance(change, epoch)``, in the order ``process_batch`` and
+        ``bootstrap`` submit them (and re-raise their failures)."""
+        from data_ingestion_resolution_platform_spark.operators.sketch import kmv_hash
+
+        leaderboard = partial(
+            self._maintain_topk,
+            table=self.leaderboard,
+            group_keys=self.leaderboard_keys,
+            order="lb_val",
+            cols=lambda: [F.expr(self.leaderboard_order).cast("long").alias("lb_val")],
+            k=self.leaderboard_k,
+            prefix="t",
+            descending=True,
+        )
+        # bottom-k on the portable hash of the FULL natural key (unit-
+        # separator joined, so the composite is unambiguous): a uniform
+        # sample of the live rows, carrying the quantile measure
+        quantiles = partial(
+            self._maintain_topk,
+            table=self.qsample,
+            group_keys=self.quantile_keys,
+            order="qs_h",
+            cols=lambda: [
+                kmv_hash(F.concat_ws("\x1f", *self.keys)).alias("qs_h"),
+                F.expr(self.quantile_value).cast("long").alias("qs_val"),
+            ],
+            k=self.quantile_k,
+            prefix="q",
+            descending=False,
+        )
         return [
             advance
             for table, advance in (
                 (self.stats, self._maintain_stats),
                 (self.view, self._maintain_view),
-                (self.leaderboard, self._maintain_leaderboard),
+                (self.leaderboard, leaderboard),
                 (self.freq, self._maintain_freq),
-                (self.qsample, self._maintain_quantiles),
+                (self.qsample, quantiles),
                 (self.history, self._maintain_history),
             )
             if table is not None
@@ -569,71 +582,35 @@ class CDCPipeline:
             epoch_id=f"v{epoch}",
         )
 
-    def _leaderboard_proj(self):
-        gk = list(self.leaderboard_keys)
-        rk = [k for k in self.keys if k not in set(gk)]
-        lb_val = F.expr(self.leaderboard_order).cast("long").alias("lb_val")
-        return gk, rk, [*gk, *rk, lb_val]
-
-    def _maintain_leaderboard(self, change: "EpochChange", epoch: int) -> None:
-        """Advance the maintained per-``leaderboard_keys`` top-k view by
-        this epoch's delta (``operators/ivm.py maintain_topk``), with
-        the change-set's logical post-epoch state as back-fill base."""
+    def _maintain_topk(
+        self, change: "EpochChange", epoch, *, table, group_keys, order, cols, k, prefix, descending
+    ) -> None:
+        """Advance a maintained per-``group_keys`` top-k view by this
+        epoch's delta (``operators/ivm.py maintain_topk``), with the
+        change-set's lazy logical post-epoch state as back-fill base.
+        ``cols()`` builds aliased expressions over the key + payload
+        columns (so pre-images from the target and post-images from the
+        winners project identically); ``order`` names the one that
+        ranks. Bound twice by :meth:`_view_advancers`: the leaderboard
+        (descending on ``lb_val``) and the quantile sample (ascending on
+        the key hash ``qs_h`` — "the k live rows with the smallest
+        sampling hashes", an exact bottom-k sample of the post-epoch
+        table that stays exact under updates and deletes)."""
         from data_ingestion_resolution_platform_spark.operators.ivm import maintain_topk
 
-        gk, rk, proj = self._leaderboard_proj()
+        gk = list(group_keys)
+        rk = [c for c in self.keys if c not in set(gk)]
+        proj = [*gk, *rk, *cols()]
         maintain_topk(
-            self.leaderboard,
+            table,
             change.changes(proj),
             change.base_after.select(*proj),
             gk,
             rk,
-            "lb_val",
-            k=self.leaderboard_k,
-            epoch_id=f"t{epoch}",
-        )
-
-    def _quantiles_proj(self):
-        """Projection for the maintained sample view: group keys, rest
-        keys, the ascending-order sampling hash ``qs_h`` (portable mixed
-        hash of the FULL natural key, unit-separator joined so the
-        composite is unambiguous), and the quantile measure ``qs_val``.
-        Both extra columns are pure expressions over the key + payload
-        columns, so pre-images from the target and post-images from the
-        winners project identically."""
-        from data_ingestion_resolution_platform_spark.operators.sketch import kmv_hash
-
-        gk = list(self.quantile_keys)
-        rk = [k for k in self.keys if k not in set(gk)]
-        qs_h = kmv_hash(F.concat_ws("\x1f", *[F.col(k) for k in self.keys])).alias(
-            "qs_h"
-        )
-        qs_val = F.expr(self.quantile_value).cast("long").alias("qs_val")
-        return gk, rk, [*gk, *rk, qs_h, qs_val]
-
-    def _maintain_quantiles(self, change: "EpochChange", epoch: int) -> None:
-        """Advance the maintained per-``quantile_keys`` uniform sample by
-        this epoch's delta — ``operators/ivm.py maintain_topk`` with
-        ``descending=False`` over the key hash, so the view invariant is
-        "the k live rows with the smallest sampling hashes" (an exact
-        bottom-k sample of the post-epoch table; reference analogue: the
-        per-job summary counters its status endpoints recompute from
-        full table state, `/root/reference/backend/main.py:103-107` —
-        here as a distribution, not a count, and never rescanned).
-        Shares the leaderboard's lazy ``base_after``."""
-        from data_ingestion_resolution_platform_spark.operators.ivm import maintain_topk
-
-        gk, rk, proj = self._quantiles_proj()
-        maintain_topk(
-            self.qsample,
-            change.changes(proj),
-            change.base_after.select(*proj),
-            gk,
-            rk,
-            "qs_h",
-            k=self.quantile_k,
-            epoch_id=f"q{epoch}",
-            descending=False,
+            order,
+            k=k,
+            epoch_id=f"{prefix}{epoch}",
+            descending=descending,
         )
 
     def apply_dim_changes(self, s_changes: DataFrame, epoch_id: str | int) -> dict:
@@ -708,114 +685,31 @@ class CDCPipeline:
         the full history through the resolver costs O(history), the
         snapshot MERGE costs O(|table|) once.
 
-        Maintained side tables are seeded too — a snapshot-seeded
-        target with an empty stats table would make the next epoch's
-        ``_maintain_stats`` subtract pre-images that were never added
-        (silently wrong aggregate), and an unseeded history would miss
-        the snapshot keys' current versions. Both seeds ride their own
-        epoch ledgers and run BEFORE the target merge (same crash-retry
-        ordering argument as ``process_batch``: the target ledger's
-        early return must imply the side tables committed).
+        Maintained side tables are seeded by the same view steps as a
+        feed epoch: a snapshot is an insert-only epoch, advanced into
+        every enabled view from one :class:`EpochChange` on
+        :func:`run_concurrently`, under the ledger ids ``m_``, ``h_``,
+        ``t_``, ``q_``, ``f_`` and ``v_`` + ``epoch_id`` (the SCD2
+        history opens each snapshot key's version at the watermark).
+        The views run before the target merge, as in ``process_batch``,
+        so a re-run after a failure skips the views that committed and
+        converges. A bootstrap onto an already-populated target
+        retracts that target's rows for the snapshot keys like any
+        other epoch.
         """
         if self.target.epoch_committed(epoch_id):
             return {"skipped": True, "epoch": epoch_id}
         batch = snapshot.withColumn("op", F.lit("I")).withColumn(
             self.lsn_col, F.lit(watermark_lsn).cast("long")
         )
-        if self.stats is not None:
-            from data_ingestion_resolution_platform_spark.operators.ivm import (
-                maintain_aggregate,
+        change = EpochChange(self.target, batch, batch, self.keys)
+        try:
+            run_concurrently(
+                self.spark,
+                [partial(advance, change, f"_{epoch_id}") for advance in self._view_advancers()],
             )
-
-            cdf = snapshot.select(
-                *self.keys, "lang", "content", F.lit("insert").alias("change_type")
-            )
-            maintain_aggregate(
-                self.stats,
-                cdf,
-                list(self.stats_keys),
-                {"total_bytes": "length(content)"},
-                epoch_id=f"m_{epoch_id}",
-                count_alias="n_paths",
-            )
-        if self.history is not None:
-            # snapshot keys enter the SCD2 history as open versions
-            # valid from the watermark LSN — point-in-time reads before
-            # the watermark stay empty by contract (the snapshot holds
-            # no pre-watermark change history to reconstruct)
-            from data_ingestion_resolution_platform_spark.operators.scd import (
-                historize_epoch,
-            )
-
-            historize_epoch(
-                self.history,
-                batch,
-                list(self.keys),
-                self.lsn_col,
-                list(self.history_attrs),
-                f"h_{epoch_id}",
-            )
-        if self.leaderboard is not None:
-            # same argument as the stats seed: the next epoch's
-            # pre-images would dirty groups whose stored buffer the
-            # leaderboard never held
-            from pyspark.sql import Window
-
-            gk, rk, proj = self._leaderboard_proj()
-            w = Window.partitionBy(*gk).orderBy(
-                F.col("lb_val").desc(), *[F.col(c) for c in rk]
-            )
-            seed_lb = (
-                snapshot.select(*proj)
-                .withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= self.leaderboard_k)
-                .drop("_rn")
-            )
-            self.leaderboard.merge(seed_lb, [*gk, *rk], epoch_id=f"t_{epoch_id}")
-        if self.qsample is not None:
-            # same argument as the stats seed: an unseeded sample over a
-            # snapshot-seeded target would treat the next epoch's
-            # pre-images as retractions of rows it never sampled
-            from pyspark.sql import Window
-
-            gk, rk, proj = self._quantiles_proj()
-            w = Window.partitionBy(*gk).orderBy(
-                F.col("qs_h").asc(), *[F.col(c) for c in rk]
-            )
-            seed_qs = (
-                snapshot.select(*proj)
-                .withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= self.quantile_k)
-                .drop("_rn")
-            )
-            self.qsample.merge(seed_qs, [*gk, *rk], epoch_id=f"q_{epoch_id}")
-        if self.freq is not None:
-            # same argument as the stats seed: the next epoch's
-            # pre-images would decrement cells the sketch never counted
-            from data_ingestion_resolution_platform_spark.operators.sketch import (
-                maintain_cms,
-            )
-
-            maintain_cms(
-                self.freq,
-                snapshot.withColumn("change_type", F.lit("insert")),
-                self.freq_item,
-                depth=self.freq_depth,
-                width=self.freq_width,
-                epoch_id=f"f_{epoch_id}",
-            )
-        if self.view is not None:
-            # same argument as the stats seed: a snapshot-seeded target
-            # with an empty view would make the next epoch's pre-images
-            # subtract rows the view never held
-            if not self.dim.exists():
-                raise ValueError(
-                    "bootstrap with maintain_view=True requires seed_dim() first"
-                )
-            seed_view = snapshot.select(*self.keys, *self.view_attrs).join(
-                self.dim.read(), on=self.view_join_key, how="inner"
-            )
-            self.view.merge(seed_view, list(self.keys), epoch_id=f"v_{epoch_id}")
+        finally:
+            change.release()
         return self.target.merge(batch, list(self.keys), epoch_id=epoch_id)
 
     # -- streaming entry --------------------------------------------------

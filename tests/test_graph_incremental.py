@@ -213,14 +213,21 @@ def test_crash_replay_between_commits_converges(spark, stores):
     state (the docstring's convergence argument, exercised)."""
     labels, edges = stores
     build_cluster_state(
-        labels, edges, _pairs(spark, [(1, 2), (4, 5)]), _ids(spark, [1, 2, 4, 5])
+        labels,
+        edges,
+        _pairs(spark, [(1, 2), (4, 5), (6, 9), (7, 8)]),
+        _ids(spark, [1, 2, 4, 5, 6, 7, 8, 9]),
     )
     # doc 2 changed (still matches 1, newly matches 4), doc 5 deleted —
-    # Δ carries every post-epoch pair touching a changed doc
+    # Δ carries every post-epoch pair touching a changed doc. Docs 6 and
+    # 8 are deleted on the id_a / id_b side of an edge whose partner (9 /
+    # 7) is untouched: once the labels commit, no label reaches their
+    # stale edges any more, so the replay must find them from the
+    # removed ids alone.
     batch = dict(
         delta_pairs=_pairs(spark, [(1, 2), (2, 4)]),
         upserted_ids=_ids(spark, [2]),
-        removed_ids=_ids(spark, [5]),
+        removed_ids=_ids(spark, [5, 6, 8]),
     )
     # crash: let the labels MERGE land, then fail the edges MERGE
     real_merge = edges.merge
@@ -237,6 +244,6 @@ def test_crash_replay_between_commits_converges(spark, stores):
     # re-delivery: labels no-ops via the ledger, edges completes
     maintain_clusters(labels, edges, epoch_id="e1", **batch)
     assert edges.epoch_committed("e1")
-    _assert_state(labels, _expected(spark, [1, 2, 4], [(1, 2), (2, 4)]))
+    _assert_state(labels, _expected(spark, [1, 2, 4, 7, 9], [(1, 2), (2, 4)]))
     surviving = {(r.id_a, r.id_b) for r in edges.read().collect()}
     assert surviving == {(1, 2), (2, 4)}

@@ -166,10 +166,11 @@ def test_one_view_fails_while_the_others_commit(spark, tmp_path, monkeypatch):
 
     injected = ValueError("injected leaderboard failure")
 
-    def boom(change, epoch):
+    def boom(*args, **kwargs):
         raise injected
 
-    monkeypatch.setattr(pipe, "_maintain_leaderboard", boom)
+    # fail the leaderboard step only: its MERGE is its last action
+    monkeypatch.setattr(pipe.leaderboard, "merge", boom)
     with pytest.raises(ValueError) as exc:
         pipe.replay_bounded(tail, epochs=1, epoch_offset=1)
     # the release in ``finally`` ran only after every view step returned

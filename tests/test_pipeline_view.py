@@ -98,6 +98,11 @@ def test_unseeded_dim_raises(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="seed_dim"):
         pipe.replay_bounded(feed, epochs=1)
+    # the bootstrap seeds the view through the same step, before the target
+    snapshot = apply_changes(feed, ["repo", "path"], "lsn").drop("op", "lsn")
+    with pytest.raises(ValueError, match="seed_dim"):
+        pipe.bootstrap(snapshot, watermark_lsn=0)
+    assert not pipe.target.epoch_committed("bootstrap")
 
 
 def test_view_requires_flag(spark, tmp_path):
