@@ -31,7 +31,7 @@ import json
 import os
 import shutil
 import time
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -863,13 +863,20 @@ class MorLakeTable:
         keys: Sequence[str] | None = None,
         epoch_id: str | int | None = None,
         delete_condition: F.Column | None = None,
+        before_commit: Callable[[], None] | None = None,
     ) -> dict:
         """MERGE semantics deferred to read time: the key-unique batch
         (tombstones flagged, not dropped) is appended as one delta.
 
         ``keys`` is accepted for call-shape parity with the COW tables
         (the pipeline swaps targets without branching) but must match
-        the table's configured key."""
+        the table's configured key.
+
+        ``before_commit`` (an internal commit hook) runs once the delta
+        dir is written and before the manifest flip, ledger record or
+        compaction; until then ``read()`` sees the pre-merge table. If
+        it raises, the delta dir is removed and the error re-raised: the
+        manifest and ledger are left as they were."""
         if keys is not None and list(keys) != self.keys:
             raise ValueError(f"merge keys {list(keys)} != table keys {self.keys}")
         if epoch_id is not None and self.ledger.committed(epoch_id):
@@ -881,6 +888,12 @@ class MorLakeTable:
             self.DEL, F.coalesce(flag.cast("boolean"), F.lit(False))
         )
         out.write.mode("overwrite").parquet(self._delta_dir(seq))
+        if before_commit is not None:
+            try:
+                before_commit()
+            except BaseException:
+                shutil.rmtree(self._delta_dir(seq), ignore_errors=True)
+                raise
         m["deltas"] = sorted(set(m["deltas"]) | {seq})
         m["next_seq"] = seq + 1
         dbytes, _ = _dir_stats(self._delta_dir(seq))
@@ -1204,10 +1217,18 @@ class PartitionedLakeTable:
         keys: Sequence[str],
         epoch_id: str | int | None = None,
         delete_condition: F.Column | None = None,
+        before_commit: Callable[[], None] | None = None,
     ) -> dict:
         """Bucket-pruned COW MERGE with size-triggered bucket splits;
         same WHEN-clause semantics as ``LakeTable.merge``. ``batch``
-        must be key-unique."""
+        must be key-unique.
+
+        ``before_commit`` (an internal commit hook) runs once the
+        ``_staging_<epoch>`` write is done and before any file move,
+        ``_DIR`` flip, vacuum or ledger record; until then ``read()``
+        sees the pre-merge table. If it raises, the staging dir is
+        removed and the error re-raised: ``_DIR``, ``_SCHEMA``, the
+        bucket dirs and the ledger are left as they were."""
         if epoch_id is not None and self.ledger.committed(epoch_id):
             return {"skipped": True, "epoch": str(epoch_id)}
         key_list = list(keys)
@@ -1264,6 +1285,12 @@ class PartitionedLakeTable:
             staged_out.write.mode("overwrite").partitionBy(rcol).parquet(staging)
         finally:
             staged.unpersist()
+        if before_commit is not None:
+            try:
+                before_commit()
+            except BaseException:
+                shutil.rmtree(staging, ignore_errors=True)
+                raise
 
         def res_dir(r: int) -> str:
             return os.path.join(staging, f"{rcol}={r}")

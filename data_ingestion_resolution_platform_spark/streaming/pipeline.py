@@ -22,6 +22,7 @@ checks + clear-and-rebuild + unique-key upserts (SURVEY.md §2.9).
 from __future__ import annotations
 
 import os
+import threading
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import partial
@@ -43,10 +44,10 @@ from data_ingestion_resolution_platform_spark.util import empty_df
 from data_ingestion_resolution_platform_spark.streaming.schema_evolution import reconcile_exprs
 
 
-def run_concurrently(spark: SparkSession, steps: list) -> None:
+def run_concurrently(spark: SparkSession, steps: list) -> list:
     """Run independent epoch steps (zero-argument callables), one pool
     thread each, wait for EVERY step, then re-raise the first failure
-    in step order, unwrapped.
+    in step order, unwrapped; else return the steps' results in order.
 
     Spark local properties (job group, scheduler pool, SQL execution
     ids) are per thread, so each step is wrapped with
@@ -55,13 +56,49 @@ def run_concurrently(spark: SparkSession, steps: list) -> None:
     under it by ``statusTracker``. This is the package's one place that
     starts threads (``tests/test_thread_sources.py``)."""
     if not steps:
-        return
+        return []
     with ThreadPoolExecutor(max_workers=len(steps)) as pool:
         # one wrap per step: each wrap clones the caller's properties,
         # so a step that changes its own job group touches no other step
         futures = [pool.submit(inheritable_thread_target(spark)(step)) for step in steps]
-    for fut in futures:
-        fut.result()
+    return [fut.result() for fut in futures]
+
+
+def stage_then_commit(spark: SparkSession, steps: list, merge) -> dict:
+    """Run ``steps`` and ``merge(before_commit=gate)`` on ONE
+    :func:`run_concurrently` fan-out, the merge listed last, and return
+    the merge's stats.
+
+    Every step, the merge included, computes and stages at once; only
+    the merge's COMMIT is ordered last. The merge calls ``gate`` after
+    staging its files and before anything becomes visible: it blocks
+    until every other step has returned and raises if any of them
+    failed, so a failed step leaves the target uncommitted (the
+    reference's audit → read models → finalized table commit order,
+    reference/backend/worker.py:195-228). ``run_concurrently`` gives
+    every step its own thread, so the waiting merge never starves a
+    step, and re-raises the first failure in step order — the failed
+    step's own error, not the gate's."""
+    done = [threading.Event() for _ in steps]
+    failed = threading.Event()
+
+    def gated(step, finished: threading.Event) -> None:
+        try:
+            step()
+        except BaseException:
+            failed.set()
+            raise
+        finally:
+            finished.set()
+
+    def gate() -> None:
+        for finished in done:
+            finished.wait()
+        if failed.is_set():
+            raise RuntimeError("target commit withheld: another step of the epoch failed")
+
+    gated_steps = [partial(gated, step, fin) for step, fin in zip(steps, done)]
+    return run_concurrently(spark, [*gated_steps, partial(merge, before_commit=gate)])[-1]
 
 
 class EpochChange:
@@ -83,10 +120,12 @@ class EpochChange:
     ``CDCPipeline.bootstrap`` builds it with ``winners = batch``.
 
     The view steps read these frames CONCURRENTLY (``process_batch``
-    runs them on a pool) and strictly read-only: a view writes only its
-    own table. Valid only until the target MERGE commits (it vacuums the
-    bucket versions ``pre`` and ``base_after`` were planned over); the
-    caller releases it in ``finally``, after every step has returned.
+    runs them on a pool, beside the staging target MERGE) and strictly
+    read-only: a view writes only its own table. Valid until the gated
+    target commit (it vacuums the bucket versions ``pre`` and
+    ``base_after`` were planned over), which :func:`stage_then_commit`
+    holds back until every view step has returned; the caller releases
+    it in ``finally``, after the whole fan-out has returned.
     """
 
     def __init__(self, target, batch: DataFrame, winners: DataFrame, keys) -> None:
@@ -331,13 +370,14 @@ class CDCPipeline:
         lineage is a map-side partition scan; everything downstream
         reads the small persisted per-key aggregate.
 
-        Two fan-outs run on :func:`run_concurrently`, one after the
-        other: the conflicts/lineage audit appends, then every enabled
-        maintained view (SCD2 history included) from the shared
-        :class:`EpochChange`. Each step writes only its own table under
-        its own epoch ledger, so the steps are independent; all of them
-        finish before the target MERGE, and the change-set and winners
-        are released only after every step has returned.
+        ONE fan-out (:func:`stage_then_commit`) runs the conflicts and
+        lineage audit appends, every enabled maintained view (SCD2
+        history included) from the shared :class:`EpochChange`, and the
+        target MERGE, listed last. Each step writes only its own table
+        under its own epoch ledger, so all of them compute at once; only
+        the target's commit is gated behind every other step. The
+        change-set and winners are released only after the fan-out has
+        returned; the status row is the one write left after it.
         """
         if self.target.epoch_committed(epoch):
             return {"skipped": True, "epoch": epoch}
@@ -365,58 +405,58 @@ class CDCPipeline:
         change = None
         try:
             # resolve_and_detect returns lazily; the persisted per-key
-            # aggregate materializes inside the first consumer below, so
-            # "audit" wall time includes the fused resolve shuffle.
+            # aggregate materializes inside whichever fan-out step
+            # reaches it first (conflicts append or target MERGE), so
+            # that step's wall time includes the fused resolve shuffle.
             conflicts = resolved.conflicts.withColumn(
                 "epoch", F.lit(epoch).cast("long")
             )
             lin = lineage_rows(batch, epoch, self.lsn_col)
-            # write order: audit data first, target + its ledger marker
-            # last (a crash in between leaves an uncommitted epoch that
-            # replays idempotently; audit appends are ledger-guarded too).
-            # Fan-out 1: the two audit appends are independent Spark
-            # jobs (lineage is a map-side scan of the source; conflicts
-            # materializes the fused agg), so they overlap.
-            run_concurrently(
-                self.spark,
-                [
-                    partial(self.conflicts.append, conflicts, f"c{epoch}"),
-                    partial(self.lineage.append, lin, f"l{epoch}", 1),
-                ],
-            )
-            phases["resolve_audit"] = _time.time() - _t0
-            _t0 = _time.time()
-            # Fan-out 2: the maintained views, BEFORE the target merge:
-            # the pre-images must be read from the pre-merge target, and
-            # this ordering keeps the retry story convergent — if some
-            # view MERGEs commit but another view or the target MERGE
-            # then fails, redelivery skips the committed views' epochs
-            # (their own ledgers) and re-runs the rest from the same
-            # deterministic winners. The reverse order would strand the
-            # views forever behind the target's committed-epoch early
-            # return. Every view advances from the ONE change-set, so
-            # the target is probed once per epoch, not once per view;
-            # the views only read it, so they run concurrently (an epoch
-            # of small view jobs is bound by driver-side planning, which
-            # overlaps across threads).
+            n_conf = 0
+
+            def audit_conflicts() -> None:
+                nonlocal n_conf
+                self.conflicts.append(conflicts, f"c{epoch}")
+                # A7/M7 status input, counted from the persisted per-key
+                # aggregate the append has materialized — counting the
+                # conflicts frame would re-run the candidate semi-join
+                n_conf = resolved.conflict_key_count()
+
+            # write order: audit data and views first, target + its
+            # ledger marker last (a crash in between leaves an
+            # uncommitted epoch that replays idempotently; every other
+            # step is ledger-guarded too). Only the COMMIT is ordered:
+            # the audit appends, the views and the target MERGE's
+            # residue collect and staging write read nothing of each
+            # other's output, so they all run at once. The target's staged files stay invisible until its
+            # gated commit, so the views read their pre-images from the
+            # pre-merge target; and if some view MERGEs commit but
+            # another step fails, the target does not commit, so
+            # redelivery skips the committed views' epochs (their own
+            # ledgers) and re-runs the rest from the same deterministic
+            # winners. The reverse order would strand the views forever
+            # behind the target's committed-epoch early return. Every
+            # view advances from the ONE change-set, so the target is
+            # probed once per epoch, not once per view.
+            steps = [audit_conflicts, partial(self.lineage.append, lin, f"l{epoch}", 1)]
             if advancers:
                 change = EpochChange(self.target, batch, winners, self.keys)
-                run_concurrently(
-                    self.spark, [partial(advance, change, epoch) for advance in advancers]
-                )
-            stats = self.target.merge(
-                winners,
-                list(self.keys),
-                epoch_id=epoch,
-                delete_condition=F.col("op") == "D",
+                steps += [partial(advance, change, epoch) for advance in advancers]
+            stats = stage_then_commit(
+                self.spark,
+                steps,
+                partial(
+                    self.target.merge,
+                    winners,
+                    list(self.keys),
+                    epoch_id=epoch,
+                    delete_condition=F.col("op") == "D",
+                ),
             )
-            phases["merge"] = _time.time() - _t0
+            phases["stage_commit"] = _time.time() - _t0
             _t0 = _time.time()
             # A7/M7 status decision (reference `worker.py:404-411`):
-            # conflicts ⇒ NEEDS_REVIEW, else COMPLETED. Counted from the
-            # persisted per-key aggregate — counting the conflicts frame
-            # itself would re-run the candidate semi-join + aggregation.
-            n_conf = resolved.conflict_key_count()
+            # conflicts ⇒ NEEDS_REVIEW, else COMPLETED.
             status = "NEEDS_REVIEW" if n_conf else "COMPLETED"
             self.lineage.append(
                 epoch_summary(self.spark, epoch, status, n_conf), f"s{epoch}", 1
@@ -688,12 +728,14 @@ class CDCPipeline:
         Maintained side tables are seeded by the same view steps as a
         feed epoch: a snapshot is an insert-only epoch, advanced into
         every enabled view from one :class:`EpochChange` on
-        :func:`run_concurrently`, under the ledger ids ``m_``, ``h_``,
+        :func:`stage_then_commit`, under the ledger ids ``m_``, ``h_``,
         ``t_``, ``q_``, ``f_`` and ``v_`` + ``epoch_id`` (the SCD2
         history opens each snapshot key's version at the watermark).
-        The views run before the target merge, as in ``process_batch``,
-        so a re-run after a failure skips the views that committed and
-        converges. A bootstrap onto an already-populated target
+        As in ``process_batch``, the target merge stages beside the
+        seeds and its commit waits for all of them (the change-set is
+        valid until that gated commit), so a failed seed leaves the
+        target uncommitted and a re-run skips the seeds that committed
+        and converges. A bootstrap onto an already-populated target
         retracts that target's rows for the snapshot keys like any
         other epoch.
         """
@@ -704,13 +746,13 @@ class CDCPipeline:
         )
         change = EpochChange(self.target, batch, batch, self.keys)
         try:
-            run_concurrently(
+            return stage_then_commit(
                 self.spark,
                 [partial(advance, change, f"_{epoch_id}") for advance in self._view_advancers()],
+                partial(self.target.merge, batch, list(self.keys), epoch_id=epoch_id),
             )
         finally:
             change.release()
-        return self.target.merge(batch, list(self.keys), epoch_id=epoch_id)
 
     # -- streaming entry --------------------------------------------------
     def run_stream(self, available_now: bool = True, trigger_seconds: float | None = None):

@@ -1,13 +1,22 @@
 """Merge-on-read lake table: COW-equivalence, tombstones, exactly-once,
-compaction, schema evolution across deltas."""
+compaction, schema evolution across deltas; the ``before_commit`` hook
+of the MOR and bucketed COW merges."""
 
 from __future__ import annotations
 
+import glob
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from data_ingestion_resolution_platform_spark.operators.cdc import resolve_latest
 from data_ingestion_resolution_platform_spark.sources.feed import synth_change_feed
-from data_ingestion_resolution_platform_spark.sources.lake import LakeTable, MorLakeTable
+from data_ingestion_resolution_platform_spark.sources.lake import (
+    LakeTable,
+    MorLakeTable,
+    PartitionedLakeTable,
+)
 
 
 def _epochs(feed, n):
@@ -112,3 +121,61 @@ def test_mor_schema_evolution_across_deltas(spark, tmp_path):
     mor.compact()
     rows = {r.k: (r.v, r.branch) for r in mor.read().collect()}
     assert rows == {"a": ("x", None), "b": ("y", "main")}
+
+
+def _hooked_table(kind, spark, root):
+    if kind == "cow":
+        return PartitionedLakeTable(spark, root, bucket_keys=["repo"], n_buckets=4)
+    return MorLakeTable(spark, root, keys=["repo", "path"], lsn_col="lsn")
+
+
+def _commit_state(table):
+    """Everything a merge commit changes: the ``_DIR`` / ``_MANIFEST``
+    bytes, the ledger, and the bucket version and delta dirs."""
+    meta = "_DIR" if isinstance(table, PartitionedLakeTable) else "_MANIFEST"
+    with open(os.path.join(table.root, meta), "rb") as f:
+        raw = f.read()
+    dirs = sorted(
+        glob.glob(os.path.join(table.root, "b=*", "v=*"))
+        + glob.glob(os.path.join(table.root, "delta", "d=*"))
+    )
+    return raw, table.committed_epochs(), dirs
+
+
+@pytest.mark.parametrize("kind", ["cow", "mor"])
+def test_before_commit_gates_the_merge_commit(spark, tmp_path, kind):
+    feed = synth_change_feed(spark, 3000, n_repos=6, seed=4)
+    first, second = [resolve_latest(p, ["repo", "path"], "lsn") for p in _epochs(feed, 2)]
+    keys, dele = ["repo", "path"], F.col("op") == "D"
+    table = _hooked_table(kind, spark, str(tmp_path / "t"))
+    table.merge(first, keys, epoch_id=1, delete_condition=dele)
+    rows = _state(table.read())
+    before = _commit_state(table)
+
+    refused = RuntimeError("commit refused")
+    seen = []
+
+    def refuse():
+        # the staged epoch is written but not yet visible
+        seen.append(_state(table.read()))
+        raise refused
+
+    with pytest.raises(RuntimeError) as exc:
+        table.merge(second, keys, epoch_id=2, delete_condition=dele, before_commit=refuse)
+    assert exc.value is refused
+    assert seen == [rows]
+    assert _commit_state(table) == before
+    assert _state(table.read()) == rows
+    assert not glob.glob(os.path.join(table.root, "_staging_*"))
+
+    # a hook that passes commits the same table as no hook
+    twin = _hooked_table(kind, spark, str(tmp_path / "twin"))
+    twin.merge(first, keys, epoch_id=1, delete_condition=dele)
+    twin.merge(second, keys, epoch_id=2, delete_condition=dele)
+    calls = []
+    table.merge(
+        second, keys, epoch_id=2, delete_condition=dele, before_commit=lambda: calls.append(1)
+    )
+    assert calls == [1]
+    assert _state(table.read()) == _state(twin.read()) != rows
+    assert table.committed_epochs() == twin.committed_epochs()

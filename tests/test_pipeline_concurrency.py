@@ -1,12 +1,17 @@
-"""The two per-epoch fan-outs of ``CDCPipeline.process_batch`` (audit
-appends, then the maintained views) run on ``run_concurrently``: every
-step's Spark jobs stay in the caller's job group, a failing step is
-re-raised unchanged only after every other step has returned, and the
-views that committed before the failure are skipped by their own
-ledgers when the epoch is redelivered."""
+"""The one per-epoch fan-out of ``CDCPipeline.process_batch`` and
+``bootstrap`` (audit appends, maintained views and the target MERGE,
+whose commit alone is gated last) runs on ``run_concurrently``: every
+step's Spark jobs stay in the caller's job group, the target MERGE
+stages beside the other steps but commits only after all of them have
+returned, a failing step is re-raised unchanged only after every other
+step has returned and leaves the target uncommitted, and the views that
+committed before the failure are skipped by their own ledgers when the
+epoch is redelivered."""
 
 from __future__ import annotations
 
+import glob
+import os
 import threading
 import time
 
@@ -14,12 +19,14 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from data_ingestion_resolution_platform_spark.operators.cdc import apply_changes
 from data_ingestion_resolution_platform_spark.operators.sketch import cms_cells, kmv_hash
 from data_ingestion_resolution_platform_spark.sources.feed import synth_change_feed
 from data_ingestion_resolution_platform_spark.streaming.pipeline import (
     CDCPipeline,
     run_concurrently,
 )
+from test_mor import _commit_state
 
 
 def test_run_concurrently_waits_then_raises_first_failure_in_step_order(spark):
@@ -95,6 +102,56 @@ def test_epoch_jobs_all_land_in_callers_job_group(spark, tmp_path):
     assert all(before < j < after for j in in_group)
 
 
+@pytest.mark.parametrize("entry", ["process_batch", "bootstrap"])
+def test_target_merge_stages_beside_the_views_and_commits_last(
+    spark, tmp_path, monkeypatch, entry
+):
+    feed = synth_change_feed(spark, n_events=1000, n_repos=5, seed=11, partitions=4)
+    pipe = CDCPipeline(
+        spark,
+        feed_dir="unused",
+        warehouse=str(tmp_path / "wh"),
+        maintain_stats=True,
+        maintain_freq=True,
+        freq_width=32,
+    )
+    log: list[str] = []
+    entered = threading.Event()
+    merge = type(pipe.target).merge
+
+    def spy_merge(self, *args, **kwargs):
+        if self is pipe.target:
+            entered.set()
+        return merge(self, *args, **kwargs)
+
+    step = pipe._maintain_freq
+
+    def blocked_step(*args):
+        # the target MERGE must start while this view step is running
+        assert entered.wait(60), "the target merge did not start beside the view step"
+        step(*args)
+        log.append("view step returned")
+
+    record = pipe.target.ledger.record
+
+    def spy_record(epoch_id, stats):
+        log.append("target ledger record")
+        record(epoch_id, stats)
+
+    monkeypatch.setattr(type(pipe.target), "merge", spy_merge)
+    monkeypatch.setattr(pipe, "_maintain_freq", blocked_step)
+    monkeypatch.setattr(pipe.target.ledger, "record", spy_record)
+    if entry == "process_batch":
+        pipe.process_batch(feed, 0)
+    else:
+        pipe.bootstrap(apply_changes(feed, ["repo", "path"], "lsn").drop("op", "lsn"), 0)
+    assert log == ["view step returned", "target ledger record"]
+    monkeypatch.undo()
+    assert pipe.freq.epoch_committed("f0" if entry == "process_batch" else "f_bootstrap")
+    got = {(r.repo, r.n_paths, r.total_bytes) for r in pipe.stats.read().collect()}
+    assert got == _stats(pipe)
+
+
 K = 4
 
 
@@ -144,7 +201,8 @@ def _assert_views_match_target(pipe):
     }
 
 
-def test_one_view_fails_while_the_others_commit(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("target_mode", ["cow", "mor"])
+def test_one_view_fails_while_the_others_commit(spark, tmp_path, monkeypatch, target_mode):
     feed = synth_change_feed(spark, n_events=1500, n_repos=6, seed=9, partitions=4)
     thr = feed.agg(F.max("lsn")).collect()[0][0] // 2
     pipe = CDCPipeline(
@@ -158,11 +216,13 @@ def test_one_view_fails_while_the_others_commit(spark, tmp_path, monkeypatch):
         maintain_quantiles=True,
         quantile_k=K,
         maintain_history=True,
+        target_mode=target_mode,
     )
     cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
     pipe.replay_bounded(feed.filter(F.col("lsn") <= thr), epochs=1)
     tail = feed.filter(F.col("lsn") > thr)
+    committed = _commit_state(pipe.target)
 
     injected = ValueError("injected leaderboard failure")
 
@@ -186,6 +246,11 @@ def test_one_view_fails_while_the_others_commit(spark, tmp_path, monkeypatch):
     assert pipe.history.epoch_committed("h1")
     assert not pipe.leaderboard.epoch_committed("t1")
     assert not pipe.target.epoch_committed(1)
+    # the target MERGE staged beside the views, but its gated commit
+    # refused: the _DIR / _MANIFEST bytes, ledger and data dirs are as
+    # before (no new delta dir), and no staging dir is left
+    assert _commit_state(pipe.target) == committed
+    assert not glob.glob(os.path.join(pipe.target.root, "_staging_*"))
     stats_version = pipe.stats.current_version()
 
     pipe.replay_bounded(tail, epochs=1, epoch_offset=1)
