@@ -19,6 +19,9 @@ the benchmark's scale).
 startup) and reports throughput at both + scaling efficiency — the
 sandbox evidence for the north rule's two-cluster-size criterion
 (see BASELINE.md).
+
+The other modes (``MODES`` below) each print one JSON document; the
+``--*-growth`` corpus sweeps share one loop, :func:`growth_sweep`.
 """
 
 from __future__ import annotations
@@ -30,6 +33,12 @@ import subprocess
 import sys
 import tempfile
 import time
+from contextlib import contextmanager
+from functools import partial
+
+# timed maintain reps (replica sweeps) / timed epochs (graph + rescan
+# sweeps) per size
+GROWTH_REPS = 3
 
 
 def _sf_dir() -> str:
@@ -52,9 +61,49 @@ def _feed_events() -> int:
         return 1_000_000
 
 
-def run_cdc_replay(
-    parallelism: int, n_events: int, epochs: int | None = None, reps: int | None = None
-) -> dict:
+def _median(xs, key=None):
+    """Upper median: the middle element, the higher one of an even count."""
+    return sorted(xs, key=key)[len(xs) // 2]
+
+
+def _timed(call):
+    """``(call(), wall seconds rounded to ms)``."""
+    t0 = time.monotonic()
+    result = call()
+    return result, round(time.monotonic() - t0, 3)
+
+
+@contextmanager
+def _bench_dir(prefix: str):
+    """A fresh warehouse dir, removed on exit.
+
+    SPARK_GRAFT_BENCH_DIR=/dev/shm puts it on tmpfs: on a real cluster
+    every node contributes disks/object-store bandwidth, so a single
+    shared VM disk understates scaling; tmpfs models per-node storage
+    whose bandwidth scales with cores."""
+    wh = tempfile.mkdtemp(prefix=prefix, dir=os.environ.get("SPARK_GRAFT_BENCH_DIR") or None)
+    try:
+        yield wh
+    finally:
+        shutil.rmtree(wh, ignore_errors=True)
+
+
+def _replicas(family: str, default: str) -> list[int]:
+    return [int(x) for x in os.environ.get(f"SPARK_GRAFT_{family}_REPLICAS", default).split(",")]
+
+
+def _replicate(df, k_rep: int):
+    """``df`` ×k_rep, each copy tagged with its replica index ``r``."""
+    from pyspark.sql import functions as F
+
+    return df.withColumn("r", F.explode(F.sequence(F.lit(0), F.lit(k_rep - 1))))
+
+
+def _same_rows(a, b) -> bool:
+    return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def run_cdc_replay(parallelism: int, n_events: int) -> dict:
     """The target metric: events/sec of feed→resolve→MERGE apply.
 
     Measurement protocol (round-1 lesson: a cold single run undershoots
@@ -63,29 +112,19 @@ def run_cdc_replay(
     - feed materialized to parquet first (synthesis excluded),
     - one small warmup replay on a throwaway warehouse (JVM/codegen/
       shuffle-service warmup excluded from the timed window),
-    - ``reps`` timed replays on fresh warehouses with an os.sync between
-      them (async writeback of a prior rep otherwise poisons the next),
+    - ``$SPARK_GRAFT_CDC_REPS`` timed replays on fresh warehouses with
+      an os.sync between them (async writeback of a prior rep otherwise
+      poisons the next),
     - report the MEDIAN rep.
     """
-    from pyspark.sql import functions as F
-
     from data_ingestion_resolution_platform_spark.session import get_spark
     from data_ingestion_resolution_platform_spark.sources.feed import synth_change_feed
     from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
 
-    if epochs is None:
-        epochs = int(os.environ.get("SPARK_GRAFT_EPOCHS", "4"))
-    if reps is None:
-        reps = int(os.environ.get("SPARK_GRAFT_CDC_REPS", "3"))
+    epochs = int(os.environ.get("SPARK_GRAFT_EPOCHS", "4"))
+    reps = int(os.environ.get("SPARK_GRAFT_CDC_REPS", "3"))
     spark = get_spark("bench_cdc", parallelism=parallelism)
-    # SPARK_GRAFT_BENCH_DIR=/dev/shm puts the bench warehouse on tmpfs:
-    # on a real cluster every node contributes disks/object-store
-    # bandwidth, so a single shared VM disk understates scaling; tmpfs
-    # models per-node storage whose bandwidth scales with cores.
-    base = tempfile.mkdtemp(
-        prefix="bench_wh_", dir=os.environ.get("SPARK_GRAFT_BENCH_DIR") or None
-    )
-    try:
+    with _bench_dir("bench_wh_") as base:
         feed = synth_change_feed(
             spark, n_events, n_repos=max(100, n_events // 10_000), skew=2.0, seed=42,
             partitions=parallelism * 2,
@@ -112,9 +151,7 @@ def run_cdc_replay(
                 spark, feed_dir="unused", warehouse=wh, target_mode=target_mode
             )
             os.sync()  # drain dirty pages so timing is apply-only
-            t0 = time.time()
-            epoch_stats = pipe.replay_bounded(feed_df, epochs=epochs)
-            elapsed = time.time() - t0
+            epoch_stats, elapsed = _timed(lambda: pipe.replay_bounded(feed_df, epochs=epochs))
             n_final = pipe.target.read().count()
             phases: dict[str, float] = {}
             for st in epoch_stats:
@@ -122,21 +159,18 @@ def run_cdc_replay(
                     phases[k] = round(phases.get(k, 0.0) + v, 3)
             runs.append((elapsed, n_final, phases))
             shutil.rmtree(wh, ignore_errors=True)
-        runs.sort(key=lambda r: r[0])
-        elapsed, n_final, phases = runs[len(runs) // 2]
+        elapsed, n_final, phases = _median(runs, key=lambda r: r[0])
         return {
             "parallelism": parallelism,
             "events": n_events,
             "epochs": epochs,
             "reps": reps,
-            "seconds": round(elapsed, 3),
-            "seconds_all_reps": [round(r[0], 3) for r in runs],
+            "seconds": elapsed,
+            "seconds_all_reps": sorted(r[0] for r in runs),
             "phase_seconds": phases,
             "events_per_sec": round(n_events / elapsed, 1),
             "final_rows": n_final,
         }
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def run_resolve_core(parallelism: int, n_events: int) -> dict:
@@ -175,42 +209,32 @@ def run_resolve_core(parallelism: int, n_events: int) -> dict:
         return n
 
     run(feed.limit(10_000))  # codegen/JIT warmup outside the timed window
-    t0 = time.time()
-    n_win = run(feed)
-    elapsed = time.time() - t0
+    n_win, elapsed = _timed(lambda: run(feed))
     return {
         "parallelism": parallelism,
         "events": n_events,
-        "seconds": round(elapsed, 3),
+        "seconds": elapsed,
         "events_per_sec": round(n_events / elapsed, 1),
         "winners": n_win,
     }
 
 
-def run_growth_sweep(parallelism: int, adaptive: bool) -> dict:
+def run_growth_sweep(spark, make_table) -> dict:
     """Target-growth sweep: does per-epoch MERGE cost track the TOUCHED
     set or the TOTAL target size?
 
     Phase 1 grows the target with insert epochs (fresh repos each).
     Phase 2 times single-repo update epochs against the grown target —
     the canonical CDC shape (a micro-batch touches few repos out of
-    many). ``adaptive=True`` = linear-hashing splits at a small
-    max_bucket_bytes; ``adaptive=False`` = fixed initial bucket count
-    (the round-1 design). At 100 TB the fixed layout rewrites
-    O(target/n_buckets) per touched bucket; adaptive keeps bucket size
-    ~constant so updates rewrite O(batch + a few bucket-sized files).
+    many). ``make_table(root)`` picks the layout (see :func:`run_growth`).
+    A ``MorLakeTable`` target also times ONE compaction at the end of the
+    growth phase and the read-back after the updates, because MoR's
+    bargain is cheap ingest for a reconcile-at-read cost.
     """
-    import tempfile
-
     from pyspark.sql import functions as F
 
-    from data_ingestion_resolution_platform_spark.session import get_spark
-    from data_ingestion_resolution_platform_spark.sources.lake import PartitionedLakeTable
+    from data_ingestion_resolution_platform_spark.sources.lake import MorLakeTable
 
-    spark = get_spark("bench_growth", parallelism=parallelism)
-    wh = tempfile.mkdtemp(
-        prefix="bench_growth_", dir=os.environ.get("SPARK_GRAFT_BENCH_DIR") or None
-    )
     rows_per_epoch = int(os.environ.get("SPARK_GRAFT_GROWTH_ROWS", "400000"))
     repos_per_epoch = 16
     grow_epochs = int(os.environ.get("SPARK_GRAFT_GROWTH_EPOCHS", "14"))
@@ -230,40 +254,150 @@ def run_growth_sweep(parallelism: int, adaptive: bool) -> dict:
             F.concat(sha, sha, sha).alias("content"),
         )
 
-    tbl = PartitionedLakeTable(
-        spark, os.path.join(wh, "t"), bucket_keys=["repo"], n_buckets=32,
-        max_bucket_bytes=(4 << 20) if adaptive else (1 << 60),
-    )
-    grow_secs, upd_secs, buckets = [], [], []
-    try:
+    def timed_merge(epoch: int, *args):
+        return _timed(lambda: tbl.merge(batch(epoch, *args), ["repo", "path"], epoch_id=epoch))[1]
+
+    with _bench_dir("bench_growth_") as wh:
+        tbl = make_table(os.path.join(wh, "t"))
+        mor = isinstance(tbl, MorLakeTable)
+        out: dict = {"rows_per_epoch": rows_per_epoch, "grow_epoch_secs": []}
+        buckets = []
         for e in range(grow_epochs):
-            t0 = time.time()
-            tbl.merge(batch(e, repo_lo=e * repos_per_epoch, n_repos=repos_per_epoch,
-                            n_rows=rows_per_epoch, update=False),
-                      ["repo", "path"], epoch_id=e)
-            grow_secs.append(round(time.time() - t0, 3))
-            buckets.append(tbl.n_live_buckets())
-        total_rows = tbl.read().count()
+            out["grow_epoch_secs"].append(
+                timed_merge(e, e * repos_per_epoch, repos_per_epoch, rows_per_epoch, False)
+            )
+            if not mor:
+                buckets.append(tbl.n_live_buckets())
+        if mor:
+            out["compact_sec"] = _timed(tbl.compact)[1]
+        out["final_rows"] = tbl.read().count()
         # single-repo micro-batches against the grown target: the
         # canonical CDC update shape. Cost should track ONE bucket's
         # bytes, not the target's.
-        for e in range(update_epochs):
-            t0 = time.time()
-            tbl.merge(batch(100 + e, repo_lo=e * repos_per_epoch, n_repos=1,
-                            n_rows=5000, update=True),
-                      ["repo", "path"], epoch_id=100 + e)
-            upd_secs.append(round(time.time() - t0, 3))
-        return {
-            "adaptive": adaptive,
-            "rows_per_epoch": rows_per_epoch,
-            "final_rows": total_rows,
-            "final_buckets": tbl.n_live_buckets(),
-            "grow_epoch_secs": grow_secs,
-            "single_repo_update_secs": upd_secs,
-            "buckets_per_epoch": buckets,
-        }
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
+        out["single_repo_update_secs"] = [
+            timed_merge(100 + e, e * repos_per_epoch, 1, 5000, True)
+            for e in range(update_epochs)
+        ]
+        if mor:
+            out["read_with_4_deltas_sec"] = _timed(lambda: tbl.read().count())[1]
+        else:
+            out["final_buckets"] = tbl.n_live_buckets()
+            out["buckets_per_epoch"] = buckets
+        return out
+
+
+def run_growth(parallelism: int) -> dict:
+    """The MERGE growth sweep on the three target layouts.
+
+    ``adaptive`` = linear-hashing splits at a small max_bucket_bytes;
+    ``fixed`` = fixed initial bucket count (the round-1 design). At
+    100 TB the fixed layout rewrites O(target/n_buckets) per touched
+    bucket; adaptive keeps bucket size ~constant so updates rewrite
+    O(batch + a few bucket-sized files). ``mor`` = merge-on-read: each
+    epoch is an O(batch) delta append regardless of target size."""
+    from data_ingestion_resolution_platform_spark.session import get_spark
+    from data_ingestion_resolution_platform_spark.sources.lake import (
+        MorLakeTable,
+        PartitionedLakeTable,
+    )
+
+    spark = get_spark("bench_growth", parallelism=parallelism)
+
+    def bucketed(max_bucket_bytes):
+        return lambda root: PartitionedLakeTable(
+            spark, root, bucket_keys=["repo"], n_buckets=32, max_bucket_bytes=max_bucket_bytes
+        )
+
+    return {
+        "metric": "merge_cost_vs_target_growth",
+        "adaptive": {"adaptive": True, **run_growth_sweep(spark, bucketed(4 << 20))},
+        "fixed": {"adaptive": False, **run_growth_sweep(spark, bucketed(1 << 60))},
+        "mor": run_growth_sweep(
+            spark, lambda root: MorLakeTable(spark, root, keys=["repo", "path"], lsn_col="lsn")
+        ),
+    }
+
+
+def growth_sweep(
+    header: dict,
+    replicas: list[int],
+    count: tuple[str, int],
+    seed,
+    epoch,
+    rebuild,
+    report,
+    *,
+    arms: tuple[str, ...] = ("",),
+    replay: bool = True,
+    warmup=None,
+) -> dict:
+    """Corpus-growth sweep: does a FIXED change epoch's maintenance cost
+    track the epoch or the corpus? One loop for every ``--*-growth``
+    family; each family supplies its callables.
+
+    For each replica count ``k`` (``count = (key, rows_per_replica)``
+    records ``key: rows_per_replica * k``) and each arm:
+
+    - ``seed(k, arm, root)`` builds the state, untimed;
+    - ``rebuild(state)`` and ``epoch(state, j)`` do their own prep
+      untimed and return the ONE call to time;
+    - ``replay``: every epoch re-applies one idempotent change
+      (``epoch_id=None``). The rebuild IS the seed (a full build from
+      the corpus) and runs on every arm before its epochs, and
+      ``epoch(state, 0)`` is applied once untimed: the first maintain
+      of a session pays the Arrow worker-pool fork + codegen warmup
+      (~10 s) that a live pipeline pays once, not per epoch. Otherwise
+      the epochs advance the state (ids ``e{j}``, so none can be
+      replayed as a warmup) and the rebuild is the batch recompute over
+      the maintained state, after them;
+    - then ``GROWTH_REPS`` timed epochs, ``j = 1..GROWTH_REPS``, give
+      ``maintain[_{arm}]_secs`` and their upper median. ``rebuild_s``
+      and ``report(state, rebuilt)`` (untimed extra per-size fields,
+      e.g. a parity check) come from the first arm only.
+
+    ``warmup(root)`` runs once, untimed, before the first size. The
+    growth ratios compare the last size with the first.
+    """
+    count_key, per_replica = count
+    out = {**header, "sizes": []}
+    with _bench_dir("bench_sweep_") as wh:
+        if warmup is not None:
+            warmup(os.path.join(wh, "warmup"))
+        for k in replicas:
+            entry: dict = {"replicas": k, count_key: per_replica * k}
+            for arm in arms:
+                first = arm == arms[0]
+                st = seed(k, arm, os.path.join(wh, f"{arm}{k}"))
+
+                def timed_rebuild():
+                    # rebuild(st) runs its prep before _timed starts
+                    rebuilt, entry["rebuild_s"] = _timed(rebuild(st))
+                    entry.update(report(st, rebuilt))
+
+                if replay:
+                    if first:
+                        timed_rebuild()
+                    else:
+                        rebuild(st)()
+                    epoch(st, 0)()
+                secs = [_timed(epoch(st, j))[1] for j in range(1, GROWTH_REPS + 1)]
+                tag = f"maintain_{arm}_" if arm else "maintain_"
+                entry[tag + "secs"] = secs
+                entry[tag + "median_s"] = _median(secs)
+                if first and not replay:
+                    timed_rebuild()
+            out["sizes"].append(entry)
+    s0, s1 = out["sizes"][0], out["sizes"][-1]
+
+    def growth(key: str) -> float:
+        return round(s1[key] / max(s0[key], 1e-9), 2)
+
+    out["corpus_growth"] = growth(count_key)
+    out["rebuild_growth"] = growth("rebuild_s")
+    for arm in arms:
+        tag = f"maintain_{arm}_" if arm else "maintain_"
+        out[tag + "growth"] = growth(tag + "median_s")
+    return out
 
 
 def run_ivf_growth(parallelism: int) -> dict:
@@ -289,108 +423,80 @@ def run_ivf_growth(parallelism: int) -> dict:
     from data_ingestion_resolution_platform_spark.session import get_spark
 
     spark = get_spark("bench_ivf_growth", parallelism=parallelism)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    base = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    base = spark.read.parquet(f"{_sf_dir()}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
     base_n = base.count()
     dim = len(base.select("embedding").first()[0])
-    reps = [int(x) for x in os.environ.get("SPARK_GRAFT_IVF_REPLICAS", "16,64,256").split(",")]
-    rows_per_cell = int(os.environ.get("SPARK_GRAFT_IVF_ROWS_PER_CELL", "2000"))
-    n_maintain = int(os.environ.get("SPARK_GRAFT_IVF_MAINTAIN_REPS", "3"))
+    rows_per_cell = 2000
 
-    def cents_for(n_cells: int) -> dict[int, list[int]]:
+    def seed(k_rep, arm, root):
+        n_cells = max(4, base_n * k_rep // rows_per_cell)
         # deterministic quantized codebook (no training pass needed for
         # a cost sweep; cell balance is rough but the epoch's target
         # cell is measured, not assumed)
-        return {
+        cents = {
             j: [((j * 2654435761 + d * 40503) % 1201) - 600 for d in range(dim)]
             for j in range(n_cells)
         }
-
-    wh = tempfile.mkdtemp(
-        prefix="bench_ivfg_", dir=os.environ.get("SPARK_GRAFT_BENCH_DIR") or None
-    )
-    out: dict = {
-        "metric": "ivf_epoch_cost_vs_corpus_growth",
-        "base_rows": base_n,
-        "dim": dim,
-        "rows_per_cell_target": rows_per_cell,
-        "parallelism": parallelism,
-        "sizes": [],
-    }
-    try:
-        for k_rep in reps:
-            n = base_n * k_rep
-            n_cells = max(4, n // rows_per_cell)
-            cents = cents_for(n_cells)
-            corpus = base.withColumn(
-                "r", F.explode(F.sequence(F.lit(0), F.lit(k_rep - 1)))
-            ).select(
-                (F.col("vec_id") + F.col("r") * base_n).alias("vec_id"), "embedding"
-            )
-            # fixed epoch: the most-populated cell of the replica-0 slice
-            a0 = ivf_kmeans_index(base, cents, "embedding", "vec_id", n_cells)
-            target = (
-                a0.groupBy("cell").count().orderBy(F.col("count").desc(), "cell").first()
-            )
-            members = [
-                r.neighbor_id
-                for r in a0.filter(F.col("cell") == target.cell)
-                .orderBy("neighbor_id")
-                .limit(64)
-                .collect()
-            ]
-            dels, srcs = members[:32], members[32:64] or members[:32]
-            del_rows = base.filter(F.col("vec_id").isin(dels)).withColumn(
-                "change_type", F.lit("delete")
-            )
-            ins_rows = (
-                base.filter(F.col("vec_id").isin(srcs))
-                .withColumn("vec_id", F.col("vec_id") + F.lit(10_000_000))
-                .withColumn("change_type", F.lit("insert"))
-            )
-            changes = del_rows.unionByName(ins_rows).select(
-                "change_type", "vec_id", "embedding"
-            )
-            root = os.path.join(wh, f"ivf_{k_rep}")
-            idx = CellPartitionedIvf(spark, root, n_cells=n_cells, cents=cents)
-            t0 = time.time()
-            idx.build(corpus, "embedding", "vec_id", epoch_id="b")
-            rebuild_s = round(time.time() - t0, 3)
-            touched_rows = idx.read([target.cell]).count()
-            # untimed warmup apply: the first maintain of a session pays
-            # the Arrow worker-pool fork + codegen warmup (~10 s) that a
-            # live pipeline pays once, not per epoch
-            idx.maintain(changes, "embedding", "vec_id", epoch_id=None)
-            secs = []
-            for _ in range(n_maintain):
-                # epoch_id=None: the rewrite is idempotent, so re-applying
-                # measures the identical touched-cell read+rewrite cost
-                t0 = time.time()
-                idx.maintain(changes, "embedding", "vec_id", epoch_id=None)
-                secs.append(round(time.time() - t0, 3))
-            out["sizes"].append(
-                {
-                    "replicas": k_rep,
-                    "rows": n,
-                    "n_cells": n_cells,
-                    "target_cell": int(target.cell),
-                    "touched_rows": touched_rows,
-                    "rebuild_s": rebuild_s,
-                    "maintain_secs": secs,
-                    "maintain_median_s": sorted(secs)[len(secs) // 2],
-                }
-            )
-        s0, s1 = out["sizes"][0], out["sizes"][-1]
-        out["rebuild_growth"] = round(s1["rebuild_s"] / max(s0["rebuild_s"], 1e-9), 2)
-        out["maintain_growth"] = round(
-            s1["maintain_median_s"] / max(s0["maintain_median_s"], 1e-9), 2
+        corpus = _replicate(base, k_rep).select(
+            (F.col("vec_id") + F.col("r") * base_n).alias("vec_id"), "embedding"
         )
-        out["corpus_growth"] = round(s1["rows"] / s0["rows"], 2)
-        return out
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
+        # fixed epoch: the most-populated cell of the replica-0 slice
+        a0 = ivf_kmeans_index(base, cents, "embedding", "vec_id", n_cells)
+        cell = int(
+            a0.groupBy("cell").count().orderBy(F.col("count").desc(), "cell").first().cell
+        )
+        members = [
+            r.neighbor_id
+            for r in a0.filter(F.col("cell") == cell)
+            .orderBy("neighbor_id")
+            .limit(64)
+            .collect()
+        ]
+        dels, srcs = members[:32], members[32:64] or members[:32]
+        del_rows = base.filter(F.col("vec_id").isin(dels)).withColumn(
+            "change_type", F.lit("delete")
+        )
+        ins_rows = (
+            base.filter(F.col("vec_id").isin(srcs))
+            .withColumn("vec_id", F.col("vec_id") + F.lit(10_000_000))
+            .withColumn("change_type", F.lit("insert"))
+        )
+        changes = del_rows.unionByName(ins_rows).select(
+            "change_type", "vec_id", "embedding"
+        )
+        idx = CellPartitionedIvf(spark, root, n_cells=n_cells, cents=cents)
+        return idx, corpus, changes, cell
+
+    def rebuild(st):
+        idx, corpus, _, _ = st
+        return partial(idx.build, corpus, "embedding", "vec_id", epoch_id="b")
+
+    def epoch(st, j):
+        idx, _, changes, _ = st
+        # epoch_id=None: the rewrite is idempotent, so re-applying
+        # measures the identical touched-cell read+rewrite cost
+        return partial(idx.maintain, changes, "embedding", "vec_id", epoch_id=None)
+
+    def report(st, _):
+        idx, _, _, cell = st
+        return {
+            "n_cells": idx.n_cells,
+            "target_cell": cell,
+            "touched_rows": idx.read([cell]).count(),
+        }
+
+    return growth_sweep(
+        {
+            "metric": "ivf_epoch_cost_vs_corpus_growth",
+            "base_rows": base_n,
+            "dim": dim,
+            "rows_per_cell_target": rows_per_cell,
+            "parallelism": parallelism,
+        },
+        _replicas("IVF", "16,64,256"), ("rows", base_n), seed, epoch, rebuild, report,
+    )
 
 
 def run_cms_growth(parallelism: int) -> dict:
@@ -416,15 +522,12 @@ def run_cms_growth(parallelism: int) -> dict:
     from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
 
     spark = get_spark("bench_cms_growth", parallelism=parallelism)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    base = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    base = spark.read.parquet(f"{_sf_dir()}/events.parquet").select(
         "event_id", "event_type", "user_id"
     )
     base_n = base.count()
     item = "concat(event_type, '/', cast(pmod(user_id, 100) as string))"
     depth, width = 4, 256
-    reps = [int(x) for x in os.environ.get("SPARK_GRAFT_CMS_REPLICAS", "1,4,16").split(",")]
-    n_maintain = int(os.environ.get("SPARK_GRAFT_CMS_MAINTAIN_REPS", "3"))
     epoch_rows = base.orderBy("event_id").limit(1000)
     changes = (
         epoch_rows.withColumn("change_type", F.lit("update_preimage"))
@@ -432,60 +535,36 @@ def run_cms_growth(parallelism: int) -> dict:
         .persist()
     )
     changes.count()
-    wh = tempfile.mkdtemp(
-        prefix="bench_cmsg_", dir=os.environ.get("SPARK_GRAFT_BENCH_DIR") or None
-    )
-    out: dict = {
-        "metric": "cms_epoch_cost_vs_corpus_growth",
-        "base_rows": base_n,
-        "depth": depth,
-        "width": width,
-        "epoch_rows": 1000,
-        "parallelism": parallelism,
-        "sizes": [],
-    }
-    try:
-        for k_rep in reps:
-            corpus = base.withColumn(
-                "r", F.explode(F.sequence(F.lit(0), F.lit(k_rep - 1)))
-            ).drop("r")
-            t = LakeTable(spark, os.path.join(wh, f"cms_{k_rep}"))
-            t0 = time.time()
-            t.merge(
-                cms_cells(corpus, F.expr(item), depth, width),
-                ["d", "bucket"],
-                epoch_id="seed",
-            )
-            rebuild_s = round(time.time() - t0, 3)
-            # untimed warmup apply (codegen + worker warmup, paid once)
-            maintain_cms(t, changes, item, depth, width, epoch_id=None)
-            secs = []
-            for _ in range(n_maintain):
-                # net-zero epoch: state-invariant, so each apply measures
-                # the identical delta-agg + touched-cell MERGE cost
-                t0 = time.time()
-                maintain_cms(t, changes, item, depth, width, epoch_id=None)
-                secs.append(round(time.time() - t0, 3))
-            out["sizes"].append(
-                {
-                    "replicas": k_rep,
-                    "rows": base_n * k_rep,
-                    "cells": t.read().count(),
-                    "rebuild_s": rebuild_s,
-                    "maintain_secs": secs,
-                    "maintain_median_s": sorted(secs)[len(secs) // 2],
-                }
-            )
-        s0, s1 = out["sizes"][0], out["sizes"][-1]
-        out["rebuild_growth"] = round(s1["rebuild_s"] / max(s0["rebuild_s"], 1e-9), 2)
-        out["maintain_growth"] = round(
-            s1["maintain_median_s"] / max(s0["maintain_median_s"], 1e-9), 2
+
+    def seed(k_rep, arm, root):
+        return LakeTable(spark, root), _replicate(base, k_rep).drop("r")
+
+    def rebuild(st):
+        t, corpus = st
+        return lambda: t.merge(
+            cms_cells(corpus, F.expr(item), depth, width), ["d", "bucket"], epoch_id="seed"
         )
-        out["corpus_growth"] = round(s1["rows"] / s0["rows"], 2)
-        return out
+
+    # net-zero epoch: state-invariant, so each apply measures the
+    # identical delta-agg + touched-cell MERGE cost
+    def epoch(st, j):
+        return partial(maintain_cms, st[0], changes, item, depth, width, epoch_id=None)
+
+    try:
+        return growth_sweep(
+            {
+                "metric": "cms_epoch_cost_vs_corpus_growth",
+                "base_rows": base_n,
+                "depth": depth,
+                "width": width,
+                "epoch_rows": 1000,
+                "parallelism": parallelism,
+            },
+            _replicas("CMS", "1,4,16"), ("rows", base_n), seed, epoch, rebuild,
+            lambda st, _: {"cells": st[0].read().count()},
+        )
     finally:
         changes.unpersist()
-        shutil.rmtree(wh, ignore_errors=True)
 
 
 def run_search_growth(parallelism: int) -> dict:
@@ -521,11 +600,8 @@ def run_search_growth(parallelism: int) -> dict:
     )
 
     spark = get_spark("bench_search_growth", parallelism=parallelism)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    base = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    base = spark.read.parquet(f"{_sf_dir()}/documents.parquet").select("doc_id", "text")
     base_n = base.count()
-    reps = [int(x) for x in os.environ.get("SPARK_GRAFT_SEARCH_REPLICAS", "1,16,64").split(",")]
-    n_maintain = int(os.environ.get("SPARK_GRAFT_SEARCH_MAINTAIN_REPS", "3"))
     epoch_docs = base.orderBy("doc_id").limit(500)
     changes = (
         epoch_docs.withColumn("change_type", F.lit("update_preimage"))
@@ -533,16 +609,6 @@ def run_search_growth(parallelism: int) -> dict:
         .persist()
     )
     changes.count()
-    wh = tempfile.mkdtemp(
-        prefix="bench_searchg_", dir=os.environ.get("SPARK_GRAFT_BENCH_DIR") or None
-    )
-    out: dict = {
-        "metric": "search_index_epoch_cost_vs_corpus_growth",
-        "base_rows": base_n,
-        "epoch_docs": 500,
-        "parallelism": parallelism,
-        "sizes": [],
-    }
 
     def cow_tables(root):
         return tuple(
@@ -564,54 +630,43 @@ def run_search_growth(parallelism: int) -> dict:
             LakeTable(spark, os.path.join(root, "stats")),
         )
 
-    try:
-        # untimed JVM/codegen warmup: a throwaway seed+maintain on a tiny
-        # corpus so the first timed size doesn't absorb startup cost
-        warm = cow_tables(os.path.join(wh, "warmup"))
+    # untimed JVM/codegen warmup: a throwaway seed+maintain on a tiny
+    # corpus so the first timed size doesn't absorb startup cost
+    def warmup(root):
+        warm = cow_tables(root)
         seed_search_index(*warm, base.limit(50), epoch_id="seed")
         maintain_search_index(*warm, changes, epoch_id=None)
-        for k_rep in reps:
-            corpus = (
-                base.withColumn("r", F.explode(F.sequence(F.lit(0), F.lit(k_rep - 1))))
-                .select(
-                    (
-                        F.col("doc_id")
-                        + F.col("r").cast("long") * F.lit(100_000_000).cast("long")
-                    ).alias("doc_id"),
-                    "text",
-                )
-            )
-            row: dict = {"replicas": k_rep, "docs": base_n * k_rep}
-            for flavor, mk in (("cow", cow_tables), ("mor", mor_tables)):
-                tables = mk(os.path.join(wh, f"{flavor}_{k_rep}"))
-                t0 = time.time()
-                seed_search_index(*tables, corpus, epoch_id="seed")
-                if flavor == "cow":
-                    row["rebuild_s"] = round(time.time() - t0, 3)
-                    row["postings_rows"] = tables[0].read().count()
-                # untimed warmup apply (codegen + worker warmup)
-                maintain_search_index(*tables, changes, epoch_id=None)
-                secs = []
-                for _ in range(n_maintain):
-                    t0 = time.time()
-                    maintain_search_index(*tables, changes, epoch_id=None)
-                    secs.append(round(time.time() - t0, 3))
-                row[f"maintain_{flavor}_secs"] = secs
-                row[f"maintain_{flavor}_median_s"] = sorted(secs)[len(secs) // 2]
-            out["sizes"].append(row)
-        s0, s1 = out["sizes"][0], out["sizes"][-1]
-        out["corpus_growth"] = round(s1["docs"] / s0["docs"], 2)
-        out["rebuild_growth"] = round(s1["rebuild_s"] / max(s0["rebuild_s"], 1e-9), 2)
-        for flavor in ("cow", "mor"):
-            out[f"maintain_{flavor}_growth"] = round(
-                s1[f"maintain_{flavor}_median_s"]
-                / max(s0[f"maintain_{flavor}_median_s"], 1e-9),
-                2,
-            )
-        return out
+
+    def seed(k_rep, arm, root):
+        corpus = _replicate(base, k_rep).select(
+            (
+                F.col("doc_id") + F.col("r").cast("long") * F.lit(100_000_000).cast("long")
+            ).alias("doc_id"),
+            "text",
+        )
+        return (cow_tables if arm == "cow" else mor_tables)(root), corpus
+
+    def rebuild(st):
+        tables, corpus = st
+        return partial(seed_search_index, *tables, corpus, epoch_id="seed")
+
+    def epoch(st, j):
+        return partial(maintain_search_index, *st[0], changes, epoch_id=None)
+
+    try:
+        return growth_sweep(
+            {
+                "metric": "search_index_epoch_cost_vs_corpus_growth",
+                "base_rows": base_n,
+                "epoch_docs": 500,
+                "parallelism": parallelism,
+            },
+            _replicas("SEARCH", "1,16,64"), ("docs", base_n), seed, epoch, rebuild,
+            lambda st, _: {"postings_rows": st[0][0].read().count()},
+            arms=("cow", "mor"), warmup=warmup,
+        )
     finally:
         changes.unpersist()
-        shutil.rmtree(wh, ignore_errors=True)
 
 
 def run_qsample_growth(parallelism: int) -> dict:
@@ -636,96 +691,75 @@ def run_qsample_growth(parallelism: int) -> dict:
     from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
 
     spark = get_spark("bench_qsample_growth", parallelism=parallelism)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    base = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    base = spark.read.parquet(f"{_sf_dir()}/events.parquet").select(
         "event_id", "user_id", "value"
     )
     base_n = base.count()
     k = 256
-    reps = [int(x) for x in os.environ.get("SPARK_GRAFT_QS_REPLICAS", "1,4,16").split(",")]
-    n_maintain = int(os.environ.get("SPARK_GRAFT_QS_MAINTAIN_REPS", "3"))
+    group = F.pmod(F.col("user_id"), F.lit(40)).cast("string").alias("g")
+    val = F.floor(F.col("value") * 100).cast("long").alias("val")
     changes = (
         base.orderBy("event_id")
         .limit(1000)
         .select(
-            F.pmod(F.col("user_id"), F.lit(40)).cast("string").alias("g"),
+            group,
             # ids disjoint from every replicated corpus id
             (F.col("event_id") + F.lit(1 << 40)).alias("id"),
-            F.floor(F.col("value") * 100).cast("long").alias("val"),
+            val,
         )
         .withColumn("change_type", F.lit("insert"))
         .persist()
     )
     changes.count()
-    wh = tempfile.mkdtemp(
-        prefix="bench_qsg_", dir=os.environ.get("SPARK_GRAFT_BENCH_DIR") or None
-    )
-    out: dict = {
-        "metric": "qsample_epoch_cost_vs_corpus_growth",
-        "base_rows": base_n,
-        "k": k,
-        "groups": 40,
-        "epoch_rows": 1000,
-        "parallelism": parallelism,
-        "sizes": [],
-    }
-    try:
-        # global untimed warmup: JIT + codegen + parquet reader init
-        # otherwise land entirely on the FIRST size's rebuild, making the
-        # growth ratios read backwards (r5: 18.2 s cold vs 4-5 s warm)
-        warm = LakeTable(spark, os.path.join(wh, "qs_warm"))
+
+    # global untimed warmup: JIT + codegen + parquet reader init
+    # otherwise land entirely on the FIRST size's rebuild, making the
+    # growth ratios read backwards (r5: 18.2 s cold vs 4-5 s warm)
+    def warmup(root):
+        warm = LakeTable(spark, root)
         warm.merge(
             qsample_sketch(
-                base.limit(5000).select(
-                    F.pmod(F.col("user_id"), F.lit(40)).cast("string").alias("g"),
-                    F.col("event_id").alias("id"),
-                    F.floor(F.col("value") * 100).cast("long").alias("val"),
-                ),
+                base.limit(5000).select(group, F.col("event_id").alias("id"), val),
                 ["g"], "val", "id", k=k,
             ),
             ["g"], epoch_id="warm",
         )
         maintain_qsample(warm, changes, ["g"], "val", "id", k=k, epoch_id=None)
-        for k_rep in reps:
-            corpus = base.withColumn(
-                "r", F.explode(F.sequence(F.lit(0), F.lit(k_rep - 1)))
-            ).select(
-                F.pmod(F.col("user_id"), F.lit(40)).cast("string").alias("g"),
-                # replica-unique id keeps the sampling key a true row id
-                (F.col("event_id") * F.lit(k_rep) + F.col("r")).alias("id"),
-                F.floor(F.col("value") * 100).cast("long").alias("val"),
-            )
-            t = LakeTable(spark, os.path.join(wh, f"qs_{k_rep}"))
-            t0 = time.time()
-            t.merge(qsample_sketch(corpus, ["g"], "val", "id", k=k), ["g"], epoch_id="seed")
-            rebuild_s = round(time.time() - t0, 3)
-            # untimed warmup apply (codegen + worker warmup, paid once)
-            maintain_qsample(t, changes, ["g"], "val", "id", k=k, epoch_id=None)
-            secs = []
-            for _ in range(n_maintain):
-                t0 = time.time()
-                maintain_qsample(t, changes, ["g"], "val", "id", k=k, epoch_id=None)
-                secs.append(round(time.time() - t0, 3))
-            out["sizes"].append(
-                {
-                    "replicas": k_rep,
-                    "rows": base_n * k_rep,
-                    "sketch_rows": t.read().count(),
-                    "rebuild_s": rebuild_s,
-                    "maintain_secs": secs,
-                    "maintain_median_s": sorted(secs)[len(secs) // 2],
-                }
-            )
-        s0, s1 = out["sizes"][0], out["sizes"][-1]
-        out["rebuild_growth"] = round(s1["rebuild_s"] / max(s0["rebuild_s"], 1e-9), 2)
-        out["maintain_growth"] = round(
-            s1["maintain_median_s"] / max(s0["maintain_median_s"], 1e-9), 2
+
+    def seed(k_rep, arm, root):
+        corpus = _replicate(base, k_rep).select(
+            group,
+            # replica-unique id keeps the sampling key a true row id
+            (F.col("event_id") * F.lit(k_rep) + F.col("r")).alias("id"),
+            val,
         )
-        out["corpus_growth"] = round(s1["rows"] / s0["rows"], 2)
-        return out
+        return LakeTable(spark, root), corpus
+
+    def rebuild(st):
+        t, corpus = st
+        return lambda: t.merge(
+            qsample_sketch(corpus, ["g"], "val", "id", k=k), ["g"], epoch_id="seed"
+        )
+
+    def epoch(st, j):
+        return partial(maintain_qsample, st[0], changes, ["g"], "val", "id", k=k, epoch_id=None)
+
+    try:
+        return growth_sweep(
+            {
+                "metric": "qsample_epoch_cost_vs_corpus_growth",
+                "base_rows": base_n,
+                "k": k,
+                "groups": 40,
+                "epoch_rows": 1000,
+                "parallelism": parallelism,
+            },
+            _replicas("QS", "1,4,16"), ("rows", base_n), seed, epoch, rebuild,
+            lambda st, _: {"sketch_rows": st[0].read().count()},
+            warmup=warmup,
+        )
     finally:
         changes.unpersist()
-        shutil.rmtree(wh, ignore_errors=True)
 
 
 def run_cc_growth(parallelism: int) -> dict:
@@ -762,115 +796,76 @@ def run_cc_growth(parallelism: int) -> dict:
     )
 
     spark = get_spark("bench_cc_growth", parallelism=parallelism)
-    n0 = int(os.environ.get("SPARK_GRAFT_CC_NODES", "100000"))
-    reps = [int(x) for x in os.environ.get("SPARK_GRAFT_CC_REPLICAS", "1,4,16").split(",")]
-    backends = os.environ.get("SPARK_GRAFT_CC_BACKENDS", "cow,bucketed").split(",")
-    n_epochs = int(os.environ.get("SPARK_GRAFT_CC_EPOCHS", "3"))
+    n0 = 100_000
     n_delta = 128
 
-    def chain_edges(n: int):
-        return (
+    def seed(k_rep, arm, root):
+        n = n0 * k_rep
+        if arm == "bucketed":
+            labels = PartitionedLakeTable(spark, root + "/labels", ["id"], n_buckets=32)
+            edges = PartitionedLakeTable(spark, root + "/edges", ["id_a", "id_b"], n_buckets=32)
+        else:
+            labels = LakeTable(spark, root + "/labels")
+            edges = LakeTable(spark, root + "/edges")
+        chains = (
             spark.range(n)
             .filter(F.col("id") % 5 != 4)
             .filter(F.col("id") + 1 < n)
             .select(F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
         )
+        nodes = spark.range(n).select(F.col("id").alias("doc_id"))
+        build_cluster_state(labels, edges, chains, nodes, epoch_id="seed")
+        return labels, edges, n
 
-    def nodes_df(n: int):
-        return spark.range(n).select(F.col("id").alias("doc_id"))
+    def epoch(st, j):
+        labels, edges, n = st
+        stride = n // n_delta
+        # removals ≡ j (mod stride) split their chains; bridge
+        # endpoints ≡ 0 and 7 (mod stride) stay disjoint from
+        # every rep's removals
+        rm = spark.range(n_delta).select((F.col("id") * stride + j).alias("doc_id"))
+        new_id = F.lit(n) + (j - 1) * n_delta + F.col("id")
+        new_ids = spark.range(n_delta).select(new_id.alias("doc_id"))
+        delta = spark.range(n_delta).select(
+            new_id.alias("id_a"), (F.col("id") * stride).alias("id_b")
+        ).unionByName(spark.range(n_delta).select(
+            new_id.alias("id_a"), (F.col("id") * stride + 7).alias("id_b")
+        ))
+        return partial(maintain_clusters, labels, edges, delta, new_ids, rm, epoch_id=f"e{j}")
 
-    wh = tempfile.mkdtemp(
-        prefix="bench_ccg_", dir=os.environ.get("SPARK_GRAFT_BENCH_DIR") or None
+    def rebuild(st):
+        labels, edges, _ = st
+        live_edges = edges.read().select("id_a", "id_b")
+        live_nodes = labels.read().select(F.col("id").alias("doc_id"))
+
+        def full():
+            cc = connected_components(live_edges, "id_a", "id_b", id_out="id")
+            return (
+                live_nodes.select(F.col("doc_id").alias("id"))
+                .join(cc, on="id", how="left")
+                .select("id", F.coalesce("cluster_id", F.col("id")).alias("cluster_id"))
+            ).localCheckpoint(eager=True)
+
+        return full
+
+    def report(st, full):
+        labels, edges, _ = st
+        return {
+            "parity_ok": _same_rows(labels.read().select("id", "cluster_id"), full),
+            "edges_rows": edges.read().count(),
+        }
+
+    return growth_sweep(
+        {
+            "metric": "cc_epoch_cost_vs_corpus_growth",
+            "base_nodes": n0,
+            "delta_per_epoch": {"bridges": n_delta, "deletes": n_delta},
+            "epochs": GROWTH_REPS,
+            "parallelism": parallelism,
+        },
+        _replicas("CC", "1,4,16"), ("nodes", n0), seed, epoch, rebuild,
+        report, arms=("cow", "bucketed"), replay=False,
     )
-    out: dict = {
-        "metric": "cc_epoch_cost_vs_corpus_growth",
-        "base_nodes": n0,
-        "delta_per_epoch": {"bridges": n_delta, "deletes": n_delta},
-        "epochs": n_epochs,
-        "parallelism": parallelism,
-        "sizes": [],
-    }
-    try:
-        for k_rep in reps:
-            n = n0 * k_rep
-            stride = n // n_delta
-            entry: dict = {"replicas": k_rep, "nodes": n}
-            for backend in backends:
-                root = os.path.join(wh, f"{backend}_{k_rep}")
-                if backend == "bucketed":
-                    labels = PartitionedLakeTable(
-                        spark, root + "/labels", ["id"], n_buckets=32
-                    )
-                    edges = PartitionedLakeTable(
-                        spark, root + "/edges", ["id_a", "id_b"], n_buckets=32
-                    )
-                else:
-                    labels = LakeTable(spark, root + "/labels")
-                    edges = LakeTable(spark, root + "/edges")
-                build_cluster_state(
-                    labels, edges, chain_edges(n), nodes_df(n), epoch_id="seed"
-                )
-                secs = []
-                for j in range(1, n_epochs + 1):
-                    # removals ≡ j (mod stride) split their chains; bridge
-                    # endpoints ≡ 0 and 7 (mod stride) stay disjoint from
-                    # every rep's removals
-                    rm = spark.range(n_delta).select(
-                        (F.col("id") * stride + j).alias("doc_id")
-                    )
-                    new_ids = spark.range(n_delta).select(
-                        (F.lit(n) + (j - 1) * n_delta + F.col("id")).alias("doc_id")
-                    )
-                    a = spark.range(n_delta).select(
-                        (F.lit(n) + (j - 1) * n_delta + F.col("id")).alias("id_a"),
-                        (F.col("id") * stride).alias("id_b"),
-                    )
-                    b = spark.range(n_delta).select(
-                        (F.lit(n) + (j - 1) * n_delta + F.col("id")).alias("id_a"),
-                        (F.col("id") * stride + 7).alias("id_b"),
-                    )
-                    delta = a.unionByName(b)
-                    t0 = time.monotonic()
-                    maintain_clusters(
-                        labels, edges, delta, new_ids, rm, epoch_id=f"e{j}"
-                    )
-                    secs.append(round(time.monotonic() - t0, 3))
-                entry[f"maintain_{backend}_secs"] = secs
-                entry[f"maintain_{backend}_median_s"] = sorted(secs)[len(secs) // 2]
-                if backend == backends[0]:
-                    # rebuild arm + parity, measured once per size
-                    live_edges = edges.read().select("id_a", "id_b")
-                    live_nodes = labels.read().select(F.col("id").alias("doc_id"))
-                    t0 = time.monotonic()
-                    cc = connected_components(
-                        live_edges, "id_a", "id_b", id_out="id"
-                    )
-                    full = (
-                        live_nodes.select(F.col("doc_id").alias("id"))
-                        .join(cc, on="id", how="left")
-                        .select(
-                            "id",
-                            F.coalesce("cluster_id", F.col("id")).alias("cluster_id"),
-                        )
-                    ).localCheckpoint(eager=True)
-                    entry["rebuild_s"] = round(time.monotonic() - t0, 3)
-                    got = labels.read().select("id", "cluster_id")
-                    entry["parity_ok"] = (
-                        got.exceptAll(full).count() == 0
-                        and full.exceptAll(got).count() == 0
-                    )
-                    entry["edges_rows"] = live_edges.count()
-            out["sizes"].append(entry)
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
-    s0, s1 = out["sizes"][0], out["sizes"][-1]
-    out["corpus_growth"] = round(s1["nodes"] / s0["nodes"], 2)
-    out["rebuild_growth"] = round(s1["rebuild_s"] / s0["rebuild_s"], 2)
-    for backend in backends:
-        k = f"maintain_{backend}_median_s"
-        if k in s0 and k in s1:
-            out[f"maintain_{backend}_growth"] = round(s1[k] / s0[k], 2)
-    return out
 
 
 def run_tri_growth(parallelism: int) -> dict:
@@ -898,93 +893,63 @@ def run_tri_growth(parallelism: int) -> dict:
     from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
 
     spark = get_spark("bench_tri_growth", parallelism=parallelism)
-    n0 = int(os.environ.get("SPARK_GRAFT_TRI_NODES", "100000"))
-    reps = [int(x) for x in os.environ.get("SPARK_GRAFT_TRI_REPLICAS", "1,4,16").split(",")]
-    n_epochs = int(os.environ.get("SPARK_GRAFT_TRI_EPOCHS", "3"))
+    n0 = 100_000
     n_delta = 128
 
-    def clique_edges(n: int):
+    def seed(k_rep, arm, root):
+        n = n0 * k_rep
         # nodes 5k..5k+4 fully connected: pairs (5k+i, 5k+j), i<j<5
         node = spark.range(n // 5).select((F.col("id") * 5).alias("base"))
-        pairs = [(i, j) for i in range(5) for j in range(i + 1, 5)]
-        pieces = [
-            node.select(
-                (F.col("base") + i).alias("id_a"), (F.col("base") + j).alias("id_b")
-            )
-            for i, j in pairs
-        ]
-        out = pieces[0]
-        for p in pieces[1:]:
-            out = out.unionByName(p)
-        return out
+        cliques = None
+        for i in range(5):
+            for j in range(i + 1, 5):
+                piece = node.select(
+                    (F.col("base") + i).alias("id_a"), (F.col("base") + j).alias("id_b")
+                )
+                cliques = piece if cliques is None else cliques.unionByName(piece)
+        edges = LakeTable(spark, root + "/edges")
+        stats = LakeTable(spark, root + "/stats")
+        build_triangle_state(edges, stats, cliques, epoch_id="seed")
+        return edges, stats, n
 
-    wh = tempfile.mkdtemp(
-        prefix="bench_trig_", dir=os.environ.get("SPARK_GRAFT_BENCH_DIR") or None
-    )
-    out: dict = {
-        "metric": "triangle_epoch_cost_vs_corpus_growth",
-        "base_nodes": n0,
-        "delta_per_epoch": {"removals": n_delta, "bridges": n_delta},
-        "epochs": n_epochs,
-        "parallelism": parallelism,
-        "sizes": [],
-    }
-    try:
-        for k_rep in reps:
-            n = n0 * k_rep
-            n_cliques = n // 5
-            stride = n_cliques // n_delta
-            root = os.path.join(wh, f"s{k_rep}")
-            edges = LakeTable(spark, root + "/edges")
-            stats = LakeTable(spark, root + "/stats")
-            build_cluster_seed = clique_edges(n)
-            build_triangle_state(edges, stats, build_cluster_seed, epoch_id="seed")
-            secs = []
-            for j in range(1, n_epochs + 1):
-                # remove edge (5k, 5k+j) in every stride-th clique
-                # (j ∈ 1..3 → distinct edges per rep), bridge 5k+4 to the
-                # next clique's 5k+2 (closes nothing)
-                sel = spark.range(n_delta).select(
-                    (F.col("id") * stride * 5).alias("base")
-                )
-                removals = sel.select(
-                    F.col("base").alias("id_a"), (F.col("base") + j).alias("id_b")
-                )
-                adds = sel.select(
-                    (F.col("base") + 4).alias("id_a"),
-                    (F.col("base") + 5 + j).alias("id_b"),
-                )
-                t0 = time.monotonic()
-                maintain_triangle_count(
-                    edges, stats, adds, removals, epoch_id=f"e{j}"
-                )
-                secs.append(round(time.monotonic() - t0, 3))
-            entry: dict = {
-                "replicas": k_rep,
-                "nodes": n,
-                "maintain_secs": secs,
-                "maintain_median_s": sorted(secs)[len(secs) // 2],
-            }
-            live = edges.read().select("id_a", "id_b")
-            t0 = time.monotonic()
-            full = triangle_count(live, "id_a", "id_b").collect()[0]
-            entry["rebuild_s"] = round(time.monotonic() - t0, 3)
-            row = stats.read().collect()[0]
-            entry["parity_ok"] = (
+    def epoch(st, j):
+        edges, stats, n = st
+        stride = (n // 5) // n_delta
+        # remove edge (5k, 5k+j) in every stride-th clique
+        # (j ∈ 1..3 → distinct edges per rep), bridge 5k+4 to the
+        # next clique's 5k+2 (closes nothing)
+        sel = spark.range(n_delta).select((F.col("id") * stride * 5).alias("base"))
+        removals = sel.select(F.col("base").alias("id_a"), (F.col("base") + j).alias("id_b"))
+        adds = sel.select(
+            (F.col("base") + 4).alias("id_a"), (F.col("base") + 5 + j).alias("id_b")
+        )
+        return partial(maintain_triangle_count, edges, stats, adds, removals, epoch_id=f"e{j}")
+
+    def rebuild(st):
+        live = st[0].read().select("id_a", "id_b")
+        return lambda: triangle_count(live, "id_a", "id_b").collect()[0]
+
+    def report(st, full):
+        row = st[1].read().collect()[0]
+        return {
+            "parity_ok": (
                 row["n_triangles"] == full["n_triangles"]
                 and row["n_edges"] == full["n_edges"]
-            )
-            entry["n_triangles"] = int(row["n_triangles"])
-            out["sizes"].append(entry)
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
-    s0, s1 = out["sizes"][0], out["sizes"][-1]
-    out["corpus_growth"] = round(s1["nodes"] / s0["nodes"], 2)
-    out["rebuild_growth"] = round(s1["rebuild_s"] / s0["rebuild_s"], 2)
-    out["maintain_growth"] = round(
-        s1["maintain_median_s"] / s0["maintain_median_s"], 2
+            ),
+            "n_triangles": int(row["n_triangles"]),
+        }
+
+    return growth_sweep(
+        {
+            "metric": "triangle_epoch_cost_vs_corpus_growth",
+            "base_nodes": n0,
+            "delta_per_epoch": {"removals": n_delta, "bridges": n_delta},
+            "epochs": GROWTH_REPS,
+            "parallelism": parallelism,
+        },
+        _replicas("TRI", "1,4,16"), ("nodes", n0), seed, epoch, rebuild,
+        report, replay=False,
     )
-    return out
 
 
 def run_rescan_growth(parallelism: int) -> dict:
@@ -1004,13 +969,12 @@ def run_rescan_growth(parallelism: int) -> dict:
     from data_ingestion_resolution_platform_spark.operators.rescan import (
         maintain_group_rescan,
     )
+    from data_ingestion_resolution_platform_spark.plans.queries import _funnel_per_user
     from data_ingestion_resolution_platform_spark.session import get_spark
     from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
 
     spark = get_spark("bench_rescan_growth", parallelism=parallelism)
-    n0 = int(os.environ.get("SPARK_GRAFT_RESCAN_USERS", "50000"))
-    reps = [int(x) for x in os.environ.get("SPARK_GRAFT_RESCAN_REPLICAS", "1,4,16").split(",")]
-    n_epochs = int(os.environ.get("SPARK_GRAFT_RESCAN_EPOCHS", "3"))
+    n0 = 50_000
     n_delta = 256
     ev_per_user = 8
     types = ["view", "click", "purchase", "view", "click", "other", "view", "purchase"]
@@ -1035,92 +999,68 @@ def run_rescan_growth(parallelism: int) -> dict:
         )
 
     def funnel_rows(ev):
-        from data_ingestion_resolution_platform_spark.plans.queries import (
-            _funnel_per_user,
-        )
-
         return _funnel_per_user(ev.select("user_id", "event_type", "ts"))
 
-    wh = tempfile.mkdtemp(
-        prefix="bench_rescang_", dir=os.environ.get("SPARK_GRAFT_BENCH_DIR") or None
-    )
-    out: dict = {
-        "metric": "rescan_epoch_cost_vs_base_growth",
-        "base_users": n0,
-        "events_per_user": ev_per_user,
-        "delta_users_per_epoch": n_delta,
-        "epochs": n_epochs,
-        "parallelism": parallelism,
-        "sizes": [],
-    }
-    try:
-        for k_rep in reps:
-            n_users = n0 * k_rep
-            stride = n_users // n_delta
-            root = os.path.join(wh, f"s{k_rep}")
-            lake = LakeTable(spark, root + "/events")
-            store = LakeTable(spark, root + "/funnel")
-            lake.merge(events_for(n_users), ["event_id"], epoch_id="seed")
-            store.merge(funnel_rows(lake.read()), ["user_id"], epoch_id="seed")
+    def seed(k_rep, arm, root):
+        n_users = n0 * k_rep
+        lake = LakeTable(spark, root + "/events")
+        store = LakeTable(spark, root + "/funnel")
+        lake.merge(events_for(n_users), ["event_id"], epoch_id="seed")
+        store.merge(funnel_rows(lake.read()), ["user_id"], epoch_id="seed")
+        return lake, store, n_users
 
-            def recompute(aff):
-                return funnel_rows(lake.read().join(F.broadcast(aff), on="user_id"))
+    def epoch(st, j):
+        lake, store, n_users = st
+        users = spark.range(n_delta).select(
+            (F.col("id") * (n_users // n_delta) + j).alias("user_id")
+        )
+        # delete the user's first view (event seq 0) and insert a
+        # backdated view — both flip all three stages
+        dels = users.select(
+            F.col("user_id").alias("event_id"), "user_id"
+        ).withColumn("_del", F.lit(True))
+        ins = users.select(
+            (F.col("user_id") + 100_000_000 * j).alias("event_id"),
+            "user_id",
+        ).withColumn("_del", F.lit(False))
+        batch = ins.unionByName(dels).withColumn(
+            "event_type", F.lit("view")
+        ).withColumn(
+            "ts", F.to_timestamp(F.lit("2020-01-01 00:00:00"))
+        )
+        # the lake advance is the TARGET-table write (bucketed /
+        # MoR at scale — benched by the other sweeps); the timed
+        # window here is the read-model rescan alone
+        lake.merge(
+            batch, ["event_id"], epoch_id=f"l{j}",
+            delete_condition=F.col("_del"), drop_cols=["_del"],
+        )
 
-            secs = []
-            for j in range(1, n_epochs + 1):
-                users = spark.range(n_delta).select(
-                    (F.col("id") * stride + j).alias("user_id")
-                )
-                # delete the user's first view (event seq 0) and insert a
-                # backdated view — both flip all three stages
-                dels = users.select(
-                    F.col("user_id").alias("event_id"), "user_id"
-                ).withColumn("_del", F.lit(True))
-                ins = users.select(
-                    (F.col("user_id") + 100_000_000 * j).alias("event_id"),
-                    "user_id",
-                ).withColumn("_del", F.lit(False))
-                batch = ins.unionByName(dels).withColumn(
-                    "event_type", F.lit("view")
-                ).withColumn(
-                    "ts", F.to_timestamp(F.lit("2020-01-01 00:00:00"))
-                )
-                # the lake advance is the TARGET-table write (bucketed /
-                # MoR at scale — benched by the other sweeps); the timed
-                # window here is the read-model rescan alone
-                lake.merge(
-                    batch, ["event_id"], epoch_id=f"l{j}",
-                    delete_condition=F.col("_del"), drop_cols=["_del"],
-                )
-                t0 = time.monotonic()
-                maintain_group_rescan(
-                    store, ["user_id"], users, recompute, epoch_id=f"e{j}"
-                )
-                secs.append(round(time.monotonic() - t0, 3))
-            entry: dict = {
-                "replicas": k_rep,
-                "users": n_users,
-                "maintain_secs": secs,
-                "maintain_median_s": sorted(secs)[len(secs) // 2],
-            }
-            t0 = time.monotonic()
-            full = funnel_rows(lake.read()).localCheckpoint(eager=True)
-            entry["rebuild_s"] = round(time.monotonic() - t0, 3)
-            got = store.read().select("user_id", "v", "c", "p")
-            entry["parity_ok"] = (
-                got.exceptAll(full).count() == 0
-                and full.exceptAll(got).count() == 0
-            )
-            out["sizes"].append(entry)
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
-    s0, s1 = out["sizes"][0], out["sizes"][-1]
-    out["corpus_growth"] = round(s1["users"] / s0["users"], 2)
-    out["rebuild_growth"] = round(s1["rebuild_s"] / s0["rebuild_s"], 2)
-    out["maintain_growth"] = round(
-        s1["maintain_median_s"] / s0["maintain_median_s"], 2
+        def recompute(aff):
+            return funnel_rows(lake.read().join(F.broadcast(aff), on="user_id"))
+
+        return partial(
+            maintain_group_rescan, store, ["user_id"], users, recompute, epoch_id=f"e{j}"
+        )
+
+    def rebuild(st):
+        return lambda: funnel_rows(st[0].read()).localCheckpoint(eager=True)
+
+    def report(st, full):
+        return {"parity_ok": _same_rows(st[1].read().select("user_id", "v", "c", "p"), full)}
+
+    return growth_sweep(
+        {
+            "metric": "rescan_epoch_cost_vs_base_growth",
+            "base_users": n0,
+            "events_per_user": ev_per_user,
+            "delta_users_per_epoch": n_delta,
+            "epochs": GROWTH_REPS,
+            "parallelism": parallelism,
+        },
+        _replicas("RESCAN", "1,4,16"), ("users", n0), seed, epoch, rebuild,
+        report, replay=False,
     )
-    return out
 
 
 def run_ann_recall(parallelism: int) -> dict:
@@ -1149,10 +1089,9 @@ def run_ann_recall(parallelism: int) -> dict:
     from data_ingestion_resolution_platform_spark.session import get_spark
 
     spark = get_spark("bench_ann_recall", parallelism=parallelism)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     k = 10
     emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        spark.read.parquet(f"{_sf_dir()}/embeddings.parquet")
         .select("vec_id", "embedding")
         .persist()
     )
@@ -1182,9 +1121,7 @@ def run_ann_recall(parallelism: int) -> dict:
                     probes = query_probe_cells(queries, "embedding", "vec_id", n_cells, n_probe)
                 probes = probes.persist()
                 probe_rows = probes.select("query_id", "cell").collect()
-                t0 = time.time()
-                res = ivf_probe(idx, probes, k=k).collect()
-                probe_s = round(time.time() - t0, 3)
+                res, probe_s = _timed(lambda: ivf_probe(idx, probes, k=k).collect())
                 probes.unpersist()
                 hits = sum((r["query_id"], r["neighbor_id"]) in truth for r in res)
                 scanned = sum(sizes.get(r["cell"], 0) for r in probe_rows)
@@ -1239,9 +1176,6 @@ def run_scd2_growth(parallelism: int) -> dict:
     large_v = int(os.environ.get("SPARK_GRAFT_SCD2_LARGE_VERSIONS", "40"))
     upd_keys = int(os.environ.get("SPARK_GRAFT_SCD2_UPD_KEYS", "20000"))
     upd_epochs = int(os.environ.get("SPARK_GRAFT_SCD2_UPD_EPOCHS", "3"))
-    wh = tempfile.mkdtemp(
-        prefix="bench_scd2_", dir=os.environ.get("SPARK_GRAFT_BENCH_DIR") or None
-    )
 
     # incompressible ~192 B payload (sha256 hex ×3) so history bytes are
     # real data the rewrite cannot compress away
@@ -1277,7 +1211,7 @@ def run_scd2_growth(parallelism: int) -> dict:
         "update_keys_per_epoch": upd_keys,
         "parallelism": parallelism,
     }
-    try:
+    with _bench_dir("bench_scd2_") as wh:
         # untimed JVM/codegen warmup so the first timed arm isn't penalized
         warm = LakeTable(spark, os.path.join(wh, "warm"))
         historize_epoch(warm, seed_feed(1).limit(2000), ["key"], "lsn", ["attr"], 0)
@@ -1295,16 +1229,15 @@ def run_scd2_growth(parallelism: int) -> dict:
                     hist, seed_feed(versions), ["key"], "lsn", ["attr"], "seed"
                 )
                 base = keys_n * versions + 1
-                secs = []
-                for e in range(upd_epochs):
-                    t0 = time.time()
-                    historize_epoch(
+                secs = [
+                    _timed(lambda: historize_epoch(
                         hist, upd_delta(e, base), ["key"], "lsn", ["attr"], e
-                    )
-                    secs.append(round(time.time() - t0, 3))
+                    ))[1]
+                    for e in range(upd_epochs)
+                ]
                 res[size] = {
                     "epoch_secs": secs,
-                    "median_s": sorted(secs)[len(secs) // 2],
+                    "median_s": _median(secs),
                     "history_rows": hist.read().count(),
                 }
                 shutil.rmtree(root, ignore_errors=True)
@@ -1312,76 +1245,7 @@ def run_scd2_growth(parallelism: int) -> dict:
                 res["large"]["median_s"] / res["small"]["median_s"], 2
             )
             out[arm] = res
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
     return out
-
-
-def run_growth_sweep_mor(parallelism: int) -> dict:
-    """Merge-on-read arm of the growth sweep: the same insert-growth +
-    single-repo-update schedule as :func:`run_growth_sweep`, but the
-    target is a ``MorLakeTable`` — each epoch is an O(batch) delta
-    append regardless of target size, with ONE timed compaction at the
-    end of the growth phase. Reports the read-back time too, because
-    MoR's bargain is cheap ingest for a reconcile-at-read cost."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from data_ingestion_resolution_platform_spark.session import get_spark
-    from data_ingestion_resolution_platform_spark.sources.lake import MorLakeTable
-
-    spark = get_spark("bench_growth_mor", parallelism=parallelism)
-    wh = tempfile.mkdtemp(
-        prefix="bench_growth_mor_", dir=os.environ.get("SPARK_GRAFT_BENCH_DIR") or None
-    )
-    rows_per_epoch = int(os.environ.get("SPARK_GRAFT_GROWTH_ROWS", "400000"))
-    repos_per_epoch = 16
-    grow_epochs = int(os.environ.get("SPARK_GRAFT_GROWTH_EPOCHS", "14"))
-    update_epochs = 4
-
-    def batch(epoch: int, repo_lo: int, n_repos: int, n_rows: int, update: bool):
-        sha = F.sha2((F.col("id") + epoch * 10_000_000).cast("string"), 256)
-        return spark.range(n_rows).select(
-            (F.col("id") + epoch * 10_000_000).alias("lsn"),
-            F.lit("U" if update else "I").alias("op"),
-            F.concat(
-                F.lit("repo_"), (repo_lo + F.pmod(F.col("id"), F.lit(n_repos))).cast("string")
-            ).alias("repo"),
-            F.concat(F.lit("src/f"), F.pmod(F.col("id"), F.lit(n_rows)).cast("string"), F.lit(".py")).alias("path"),
-            F.concat(sha, sha, sha).alias("content"),
-        )
-
-    tbl = MorLakeTable(spark, os.path.join(wh, "t"), keys=["repo", "path"], lsn_col="lsn")
-    grow_secs, upd_secs = [], []
-    try:
-        for e in range(grow_epochs):
-            t0 = time.time()
-            tbl.merge(batch(e, repo_lo=e * repos_per_epoch, n_repos=repos_per_epoch,
-                            n_rows=rows_per_epoch, update=False), epoch_id=e)
-            grow_secs.append(round(time.time() - t0, 3))
-        t0 = time.time()
-        tbl.compact()
-        compact_sec = round(time.time() - t0, 3)
-        total_rows = tbl.read().count()
-        for e in range(update_epochs):
-            t0 = time.time()
-            tbl.merge(batch(100 + e, repo_lo=e * repos_per_epoch, n_repos=1,
-                            n_rows=5000, update=True), epoch_id=100 + e)
-            upd_secs.append(round(time.time() - t0, 3))
-        t0 = time.time()
-        tbl.read().count()
-        read_with_deltas_sec = round(time.time() - t0, 3)
-        return {
-            "rows_per_epoch": rows_per_epoch,
-            "final_rows": total_rows,
-            "grow_epoch_secs": grow_secs,
-            "compact_sec": compact_sec,
-            "single_repo_update_secs": upd_secs,
-            "read_with_4_deltas_sec": read_with_deltas_sec,
-        }
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
 
 
 def run_compaction_policy(parallelism: int) -> dict:
@@ -1395,17 +1259,12 @@ def run_compaction_policy(parallelism: int) -> dict:
     Append arm: the small-file auto-policy on an append-only table
     (Scd2HistoryStore's closed side) — file count and timed full-history
     read, armed vs plain, same appended content."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from data_ingestion_resolution_platform_spark.session import get_spark
     from data_ingestion_resolution_platform_spark.sources.lake import LakeTable, MorLakeTable
 
     spark = get_spark("bench_compact", parallelism=parallelism)
-    wh = tempfile.mkdtemp(
-        prefix="bench_compact_", dir=os.environ.get("SPARK_GRAFT_BENCH_DIR") or None
-    )
     base_rows = int(os.environ.get("SPARK_GRAFT_COMPACT_BASE", "1000000"))
     epoch_rows = int(os.environ.get("SPARK_GRAFT_COMPACT_EPOCH_ROWS", "100000"))
     epochs = int(os.environ.get("SPARK_GRAFT_COMPACT_EPOCHS", "12"))
@@ -1427,7 +1286,7 @@ def run_compaction_policy(parallelism: int) -> dict:
         "parallelism": parallelism,
         "mor_ratio_sweep": {},
     }
-    try:
+    with _bench_dir("bench_compact_") as wh:
         # each update epoch lands ~0.1× the base's bytes, so these
         # thresholds fold every ~2nd / 5th / 10th epoch respectively
         for ratio in (0.2, 0.5, 1.0, None):
@@ -1443,24 +1302,23 @@ def run_compaction_policy(parallelism: int) -> dict:
             compactions = 0
             merge_secs = []
             for e in range(epochs):
-                t0 = time.time()
-                s = t.merge(batch((e * epoch_rows) % base_rows, epoch_rows, salt=10**9 + e), epoch_id=e)
-                merge_secs.append(round(time.time() - t0, 3))
+                s, sec = _timed(lambda: t.merge(
+                    batch((e * epoch_rows) % base_rows, epoch_rows, salt=10**9 + e), epoch_id=e
+                ))
+                merge_secs.append(sec)
                 ingested += s["delta_bytes"]
                 written += s["delta_bytes"]
                 if s.get("compacted"):
                     compactions += 1
                     written += s["compact_stats"]["base_bytes"]
             ss = t.scan_stats()
-            t0 = time.time()
-            t.read().count()
-            read_s = round(time.time() - t0, 3)
+            read_s = _timed(lambda: t.read().count())[1]
             t.compact()  # measure the true live snapshot size
             live = t.scan_stats()["base_bytes"]
             out["mor_ratio_sweep"]["none" if ratio is None else str(ratio)] = {
                 "compactions": compactions,
                 "merge_secs": merge_secs,
-                "merge_median_s": sorted(merge_secs)[len(merge_secs) // 2],
+                "merge_median_s": _median(merge_secs),
                 "final_n_deltas": ss["n_deltas"],
                 "final_scan_bytes": ss["scan_bytes"],
                 "live_bytes": live,
@@ -1478,25 +1336,24 @@ def run_compaction_policy(parallelism: int) -> dict:
                 spark, os.path.join(wh, f"app_{arm}"), append_only=True,
                 compact_small_file_bytes=small, compact_min_dirs=8,
             )
-            t0 = time.time()
-            for e in range(app_epochs):
-                t.append(batch(e * app_rows, app_rows, salt=e), epoch_id=e)
-            ingest_s = round(time.time() - t0, 3)
+
+            def ingest():
+                for e in range(app_epochs):
+                    t.append(batch(e * app_rows, app_rows, salt=e), epoch_id=e)
+
+            ingest_s = _timed(ingest)[1]
             s = t.append_stats()
-            t0 = time.time()
-            n = t.read().count()
+            n, read_s = _timed(lambda: t.read().count())
             arm_out[arm] = {
                 "ingest_s": ingest_s,
                 "n_files": s["n_files"],
                 "n_epoch_dirs": s["n_epoch_dirs"],
                 "compacted_gen": s["compacted_gen"],
                 "rows": n,
-                "read_s": round(time.time() - t0, 3),
+                "read_s": read_s,
             }
         out["append_small_file_policy"] = arm_out
         return out
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
 
 
 def hw_scaling_probe(n: int, n4: int, seconds: float = 10.0) -> dict:
@@ -1535,7 +1392,7 @@ def hw_scaling_probe(n: int, n4: int, seconds: float = 10.0) -> dict:
     }
 
 
-def storage_bw_probe(n: int, n4: int, mb_per_proc: int = 512) -> dict:
+def storage_bw_probe(n: int, n4: int, target: str, mb_per_proc: int = 512) -> dict:
     """Aggregate write bandwidth of the bench storage target at two
     writer counts — best of 2 reps per level. A single rep right after
     the heavy e2e subprocesses can measure memory-reclaim transients
@@ -1544,9 +1401,6 @@ def storage_bw_probe(n: int, n4: int, mb_per_proc: int = 512) -> dict:
     writers; see scripts/storage_probe.py). The reading still bounds
     any write-inclusive scaling number on ONE shared VM; a real cluster
     adds disks/object-store bandwidth with every node."""
-    import tempfile
-
-    target = os.environ.get("SPARK_GRAFT_BENCH_DIR") or tempfile.gettempdir()
 
     def one_rate(k: int) -> float:
         procs = []
@@ -1600,6 +1454,222 @@ def _hash_worker(seconds: float) -> int:
             h = hashlib.sha256(h * 8).digest()
         n += 1000
     return n
+
+
+def _fresh_jvm(
+    args: list, *, settle: float, env: dict | None = None, cpus: int | None = None
+) -> dict:
+    """Run ``bench.py *args`` in a fresh process (so a fresh JVM) and
+    return the JSON on its last stdout line.
+
+    A sync + ``settle`` pause first: async writeback from the previous
+    run otherwise lands in this one's timed window. ``cpus`` pins the
+    child to CPUs 0..cpus-1 with taskset: at local[N] on a bigger box
+    the JVM's GC/JIT/shuffle helper threads otherwise run on the idle
+    cores, inflating the small-N level — a real N-core node has no free
+    cores to donate."""
+    subprocess.run(["sync"], check=False)
+    time.sleep(settle)
+    cmd = [sys.executable, __file__, *map(str, args)]
+    if cpus is not None:
+        cmd = ["taskset", "-c", f"0-{cpus - 1}", *cmd]
+    proc = subprocess.run(
+        cmd, capture_output=True, text=True, env=env,
+        cwd=os.path.dirname(os.path.abspath(__file__)),
+    )
+    lines = proc.stdout.strip().splitlines()
+    if not lines:
+        raise RuntimeError(f"{cmd} printed nothing (exit {proc.returncode}): {proc.stderr[-2000:]}")
+    return json.loads(lines[-1])
+
+
+def _scaling_levels(cpus: int) -> tuple[int, int]:
+    """The (N, 4N) core counts of the scaling pair.
+
+    Sized to ~75% of the host: at 4N == all vCPUs the JVM's GC/shuffle
+    threads + the Python driver compete with executor threads and
+    depress the 4N level only, so big hosts keep ~25% headroom (6 vs 24
+    on 32 vCPUs). Small hosts fall back to N = 1 (1 vs 4 on 4 vCPUs)."""
+    n = max(1, int(cpus * 0.75) // 4)
+    if 4 * n > cpus:
+        raise ValueError(f"a 1-vs-4-core scaling pair needs >= 4 CPUs, have {cpus}")
+    return n, 4 * n
+
+
+def _scaling_pair(flag: str, levels: tuple[int, int], env: dict, best: dict) -> dict:
+    """One time-paired rep: ``flag`` at 4N then at N, back to back (same
+    host state), each in a fresh JVM pinned to its level's CPUs. Keeps
+    the per-level best run in ``best``; returns ``{level: result}``."""
+    pair = {}
+    for par in reversed(levels):
+        r = _fresh_jvm([flag, par], settle=5, env=env, cpus=par)
+        pair[par] = r
+        if par not in best or r["events_per_sec"] > best[par]["events_per_sec"]:
+            best[par] = r
+    return pair
+
+
+def _ratio(pair: dict, levels: tuple[int, int]) -> float:
+    n, n4 = levels
+    return (pair[n4]["events_per_sec"] / pair[n]["events_per_sec"]) / (n4 / n)
+
+
+def run_scaling_core(cpus: int) -> dict:
+    """Focused core-probe rerun with WINDOW QUALIFICATION (r4 verdict
+    Next-round #3): this VM's host throughput oscillates ±40% on
+    multi-minute timescales, and rounds 3-4 spent their verdicts
+    re-litigating which reps landed in degraded windows. The fix is
+    structural: immediately before AND after EACH paired rep, run the
+    framework-free sha256 ceiling probe (no JVM, no shuffle — the N→4N
+    scaling ANY engine could reach in that window); the rep's window
+    ceiling is the WORSE of the two, so a window that collapses mid-rep
+    (a rep takes ~5 min; the pre-probe alone cannot see that far ahead —
+    round-5 rep 7 qualified at 0.974 pre yet the 4N side ran in a
+    throttled window) disqualifies itself. A rep whose window ceiling
+    < 0.8 is recorded but marked unqualified and excluded from the
+    headline median — the protocol qualifies windows up front instead
+    of explaining them post-hoc. The loop keeps running (up to a bounded
+    attempt cap) until it has the requested number of QUALIFIED reps."""
+    levels = n, n4 = _scaling_levels(cpus)
+    want = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "5"))
+    max_attempts = int(os.environ.get("SPARK_GRAFT_SCALING_MAX_ATTEMPTS", str(want * 2)))
+    qual_thresh = float(os.environ.get("SPARK_GRAFT_CEILING_QUALIFY", "0.8"))
+    probe_s = float(os.environ.get("SPARK_GRAFT_CEILING_PROBE_S", "6"))
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_CONTENT_WORDS=os.environ.get("SPARK_GRAFT_CONTENT_WORDS", "150"),
+    )
+    rep_rows: list[dict] = []
+    best: dict[int, dict] = {}
+    attempt = 0
+    while attempt < max_attempts and sum(r["qualified"] for r in rep_rows) < want:
+        attempt += 1
+        hw_pre = hw_scaling_probe(n, n4, seconds=probe_s)
+        pair = _scaling_pair("--core-only", levels, env, best)
+        hw_post = hw_scaling_probe(n, n4, seconds=probe_s)
+        ceiling = min(hw_pre["hw_efficiency"], hw_post["hw_efficiency"])
+        row = {
+            "rep": attempt,
+            "ceiling": ceiling,
+            "ceiling_pre": hw_pre["hw_efficiency"],
+            "ceiling_post": hw_post["hw_efficiency"],
+            "qualified": ceiling >= qual_thresh,
+            "ratio": round(_ratio(pair, levels), 3),
+            "events_per_sec_n": pair[n]["events_per_sec"],
+            "events_per_sec_4n": pair[n4]["events_per_sec"],
+        }
+        rep_rows.append(row)
+        print(json.dumps(row), file=sys.stderr)
+
+    qual = [r["ratio"] for r in rep_rows if r["qualified"]]
+    allr = [r["ratio"] for r in rep_rows]
+    return {
+        "metric": "cdc_core_scaling_efficiency",
+        "value": round(_median(qual or allr), 3),
+        "unit": "ratio",
+        "n": n, "4n": n4,
+        "qualify_threshold": qual_thresh,
+        "qualified_reps": len(qual),
+        "attempts": attempt,
+        "no_qualified_windows": not qual,
+        "all_rep_median": round(_median(allr), 3),
+        "rep_rows": rep_rows,
+        "core_events_per_sec_n": best[n]["events_per_sec"],
+        "core_events_per_sec_4n": best[n4]["events_per_sec"],
+        "core_events": best[n]["events"],
+    }
+
+
+def run_scaling(cpus: int) -> dict:
+    """N vs 4N throughput + efficiency for the compute core and the
+    end-to-end replay (COW and MoR targets), normalized by the host's
+    framework-free ceiling and storage bandwidth at the same levels."""
+    levels = n, n4 = _scaling_levels(cpus)
+    # scaling evidence needs compute-dominated epochs: the metric
+    # targets a 10^10-event replay where per-epoch orchestration is
+    # noise, so measure with 2x events in 2 epochs (4x rows/epoch)
+    # rather than the headline's 4 micro-epochs.
+    n_events = 2 * _feed_events()
+    # single-VM timings vary ±30-40% (hypervisor neighbors,
+    # writeback); efficiency = median of time-paired ratios (below)
+    reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "3"))
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_FEED_EVENTS_SCALED=str(n_events),
+        SPARK_GRAFT_EPOCHS=os.environ.get("SPARK_GRAFT_EPOCHS", "2"),
+        # the scaling loop does its own best-of-reps across fresh
+        # JVMs; one inner rep per subprocess
+        SPARK_GRAFT_CDC_REPS="1",
+        # 1 KB contents (realistic source files) for both probes
+        SPARK_GRAFT_CONTENT_WORDS=os.environ.get("SPARK_GRAFT_CONTENT_WORDS", "150"),
+    )
+    # tmpfs warehouse for the e2e probe: per-node storage bandwidth
+    # scales with a real cluster; this VM's one disk does not
+    if os.path.isdir("/dev/shm"):
+        env.setdefault("SPARK_GRAFT_BENCH_DIR", "/dev/shm")
+    results: dict[str, dict[int, dict]] = {"core": {}, "e2e": {}, "e2e_mor": {}}
+    ratios: dict[str, list[float]] = {"core": [], "e2e": [], "e2e_mor": []}
+    # Host throughput on this VM drifts ±40% on multi-MINUTE
+    # timescales (measured: the same pinned 24-core core probe hit
+    # 348k and 499k ev/s an hour apart). A best-of-per-level ratio
+    # therefore mixes host states — N's best from a fast window
+    # against 4N's best from a slow one yields a meaningless
+    # efficiency. The robust statistic is the MEDIAN OF TIME-PAIRED
+    # RATIOS: each rep runs 4N then N back-to-back (same host
+    # state), computes its own efficiency, and the median across
+    # reps discards the drifted pairs. Per-level bests are still
+    # reported for throughput context.
+    # Three probes per pair:
+    #   core    — disk-free fused resolve+detect (executor scaling; on
+    #             a cluster this is what added nodes buy)
+    #   e2e     — full replay incl. COW lake writes (bounded here by
+    #             the ONE local disk both levels share — context)
+    #   e2e_mor — full replay with the merge-on-read target, the
+    #             10^10-event ingest configuration (O(batch) delta
+    #             appends instead of bucket rewrites): measured cow
+    #             0.35 vs mor 0.42-0.58 at 8M events/2 epochs — the
+    #             gap is the storage-bound COW rewrite share
+    for _ in range(reps):
+        for mode, flag, extra in (
+            ("core", "--core-only", {}),
+            ("e2e", "--cdc-only", {}),
+            ("e2e_mor", "--cdc-only", {"SPARK_GRAFT_TARGET_MODE": "mor"}),
+        ):
+            pair = _scaling_pair(flag, levels, {**env, **extra}, results[mode])
+            ratios[mode].append(_ratio(pair, levels))
+
+    def eff(mode: str) -> float:
+        return round(_median(ratios[mode]), 3)
+
+    hw = hw_scaling_probe(n, n4)
+    # probe the same storage target the e2e warehouses used
+    bw = storage_bw_probe(n, n4, env.get("SPARK_GRAFT_BENCH_DIR") or tempfile.gettempdir())
+    return {
+        "metric": "cdc_scaling_efficiency",
+        "value": eff("core"),
+        "normalized_vs_host_ceiling": round(eff("core") / hw["hw_efficiency"], 3),
+        **hw,
+        **bw,
+        "unit": "ratio",
+        "n": n, "4n": n4,
+        "core_events_per_sec_n": results["core"][n]["events_per_sec"],
+        "core_events_per_sec_4n": results["core"][n4]["events_per_sec"],
+        "core_events": results["core"][n]["events"],
+        "core_ratio_reps": [round(x, 3) for x in ratios["core"]],
+        "e2e_ratio_reps": [round(x, 3) for x in ratios["e2e"]],
+        "e2e_efficiency": eff("e2e"),
+        "e2e_events_per_sec_n": results["e2e"][n]["events_per_sec"],
+        "e2e_events_per_sec_4n": results["e2e"][n4]["events_per_sec"],
+        "e2e_mor_ratio_reps": [round(x, 3) for x in ratios["e2e_mor"]],
+        "e2e_mor_efficiency": eff("e2e_mor"),
+        "e2e_mor_events_per_sec_n": results["e2e_mor"][n]["events_per_sec"],
+        "e2e_mor_events_per_sec_4n": results["e2e_mor"][n4]["events_per_sec"],
+        "e2e_phase_seconds_n": results["e2e"][n].get("phase_seconds"),
+        "e2e_phase_seconds_4n": results["e2e"][n4].get("phase_seconds"),
+        "e2e_events": n_events,
+        "reps": reps,
+        "sf": _sf_dir(),
+    }
 
 
 HEADLINE = [
@@ -1656,10 +1726,8 @@ def _queries_single_pass(parallelism: int, sf_dir: str, seed: int) -> dict[str, 
     """
     import random
 
-    from data_ingestion_resolution_platform_spark.plans.queries import QUERIES
-    from data_ingestion_resolution_platform_spark.session import get_spark
-
     from data_ingestion_resolution_platform_spark.plans import queries as Q
+    from data_ingestion_resolution_platform_spark.session import get_spark
 
     spark = get_spark("bench_queries", parallelism=parallelism)
     # warm the JVM outside any timed window: JIT + codegen + parquet
@@ -1674,36 +1742,26 @@ def _queries_single_pass(parallelism: int, sf_dir: str, seed: int) -> dict[str, 
         # queries mark their lake-building sections with fixture_phase();
         # operator_s = total - fixture is the regression-meaningful number
         Q.reset_fixture_time()
-        t0 = time.time()
-        QUERIES[name](spark, sf_dir).count()
-        total = round(time.time() - t0, 3)
+        total = _timed(lambda: Q.QUERIES[name](spark, sf_dir).count())[1]
         out[name] = {"t": total, "f": round(Q.fixture_time(), 3)}
     spark.stop()
     return out
 
 
-def run_queries(parallelism: int, sf_dir: str, reps: int = 3) -> dict[str, float]:
-    """Per-query MEDIAN over ``reps`` fresh-JVM passes, each pass in a
+def run_queries(parallelism: int, sf_dir: str) -> dict[str, float]:
+    """Per-query MEDIAN over ``$SPARK_GRAFT_QUERY_REPS`` fresh-JVM passes, each pass in a
     different randomized order — the same per-rep process isolation the
     CDC headline uses, extended to the per-query numbers so a
     regression can be told from JVM-aging / position noise."""
-    reps = int(os.environ.get("SPARK_GRAFT_QUERY_REPS", str(reps)))
+    reps = int(os.environ.get("SPARK_GRAFT_QUERY_REPS", "3"))
     samples: dict[str, list[dict]] = {name: [] for name in HEADLINE}
     for seed in range(reps):
-        subprocess.run(["sync"], check=False)
-        time.sleep(2)
-        proc = subprocess.run(
-            [sys.executable, __file__, "--queries-only", str(parallelism), str(seed)],
-            capture_output=True, text=True,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-        )
-        one = json.loads(proc.stdout.strip().splitlines()[-1])
+        one = _fresh_jvm(["--queries-only", parallelism, seed], settle=2)
         for name, t in one.items():
-            samples[name].append(t if isinstance(t, dict) else {"t": t, "f": 0.0})
+            samples[name].append(t)
     out: dict[str, dict] = {}
     for name, ts in samples.items():
-        ts.sort(key=lambda s: s["t"])
-        med = ts[len(ts) // 2]
+        med = _median(ts, key=lambda s: s["t"])
         out[name] = {
             "total_s": med["t"],
             "fixture_s": med["f"],
@@ -1719,311 +1777,58 @@ def _cdc_median_of_reps(parallelism: int, n_events: int, reps: int = 3) -> dict:
     cache pressure + JVM aging poison every rep after the first), so
     per-rep process isolation is what makes the median meaningful —
     and matches how the driver actually invokes a cold bench."""
-    runs = []
     env = dict(os.environ, SPARK_GRAFT_CDC_REPS="1",
                SPARK_GRAFT_FEED_EVENTS_SCALED=str(n_events))
-    for _ in range(reps):
-        subprocess.run(["sync"], check=False)
-        time.sleep(3)
-        proc = subprocess.run(
-            [sys.executable, __file__, "--cdc-only", str(parallelism)],
-            capture_output=True, text=True, env=env,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-        )
-        runs.append(json.loads(proc.stdout.strip().splitlines()[-1]))
-    runs.sort(key=lambda r: r["events_per_sec"])
-    med = dict(runs[len(runs) // 2])
+    runs = [_fresh_jvm(["--cdc-only", parallelism], settle=3, env=env) for _ in range(reps)]
+    med = dict(_median(runs, key=lambda r: r["events_per_sec"]))
     med["reps"] = reps
-    med["events_per_sec_all_reps"] = [r["events_per_sec"] for r in runs]
+    med["events_per_sec_all_reps"] = sorted(r["events_per_sec"] for r in runs)
     return med
+
+
+# every mode flag: ``python bench.py FLAG`` prints ``json.dumps(MODES[FLAG](cpus))``
+MODES = {
+    "--scaling-core": run_scaling_core,
+    "--scaling": run_scaling,
+    "--growth": run_growth,
+    "--scd2-growth": run_scd2_growth,
+    "--ivf-growth": run_ivf_growth,
+    "--cms-growth": run_cms_growth,
+    "--qsample-growth": run_qsample_growth,
+    "--search-growth": run_search_growth,
+    "--cc-growth": run_cc_growth,
+    "--tri-growth": run_tri_growth,
+    "--rescan-growth": run_rescan_growth,
+    "--compact-policy": run_compaction_policy,
+    "--ann-recall": run_ann_recall,
+}
 
 
 def main() -> None:
     sf_dir = _sf_dir()
     cpus = _cpus()
+    # subprocess workers of run_queries / _cdc_median_of_reps / the
+    # scaling modes: one fresh-JVM run, its result as the last line
     if "--queries-only" in sys.argv:
-        # subprocess worker for run_queries: one fresh-JVM shuffled pass
         i = sys.argv.index("--queries-only")
         par, seed = int(sys.argv[i + 1]), int(sys.argv[i + 2])
         print(json.dumps(_queries_single_pass(par, sf_dir, seed)))
         return
-
     if "--cdc-only" in sys.argv:
-        # subprocess worker for --scaling
         par = int(sys.argv[sys.argv.index("--cdc-only") + 1])
         n_events = int(os.environ.get("SPARK_GRAFT_FEED_EVENTS_SCALED", str(_feed_events())))
         print(json.dumps(run_cdc_replay(par, n_events)))
         return
-
     if "--core-only" in sys.argv:
-        # subprocess worker for --scaling (compute-core probe)
         par = int(sys.argv[sys.argv.index("--core-only") + 1])
         n_events = int(os.environ.get("SPARK_GRAFT_CORE_EVENTS", "10000000"))
         print(json.dumps(run_resolve_core(par, n_events)))
         return
 
-    if "--scaling-core" in sys.argv:
-        # Focused core-probe rerun with WINDOW QUALIFICATION (r4 verdict
-        # Next-round #3): this VM's host throughput oscillates ±40% on
-        # multi-minute timescales, and rounds 3-4 spent their verdicts
-        # re-litigating which reps landed in degraded windows. The fix is
-        # structural: immediately before AND after EACH paired rep, run
-        # the framework-free sha256 ceiling probe (no JVM, no shuffle —
-        # the N→4N scaling ANY engine could reach in that window); the
-        # rep's window ceiling is the WORSE of the two, so a window that
-        # collapses mid-rep (a rep takes ~5 min; the pre-probe alone
-        # cannot see that far ahead — round-5 rep 7 qualified at 0.974
-        # pre yet the 4N side ran in a throttled window) disqualifies
-        # itself. A rep whose window ceiling < 0.8 is recorded but marked
-        # unqualified and excluded from the headline median — the
-        # protocol qualifies windows up front instead of explaining them
-        # post-hoc. The loop keeps running (up to a bounded attempt cap)
-        # until it has the requested number of QUALIFIED reps.
-        n = max(2, int(cpus * 0.75) // 4)
-        n4 = n * 4
-        want = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "5"))
-        max_attempts = int(os.environ.get("SPARK_GRAFT_SCALING_MAX_ATTEMPTS", str(want * 2)))
-        qual_thresh = float(os.environ.get("SPARK_GRAFT_CEILING_QUALIFY", "0.8"))
-        probe_s = float(os.environ.get("SPARK_GRAFT_CEILING_PROBE_S", "6"))
-        env = dict(
-            os.environ,
-            SPARK_GRAFT_CONTENT_WORDS=os.environ.get("SPARK_GRAFT_CONTENT_WORDS", "150"),
-        )
-        env.setdefault("SPARK_DRIVER_MEMORY", "48g")
-        rep_rows: list[dict] = []
-        best: dict[int, dict] = {}
-        attempt = 0
-        while attempt < max_attempts and sum(r["qualified"] for r in rep_rows) < want:
-            attempt += 1
-            hw_pre = hw_scaling_probe(n, n4, seconds=probe_s)
-            pair: dict[int, dict] = {}
-            for par in (n4, n):
-                subprocess.run(["sync"], check=False)
-                time.sleep(5)
-                proc = subprocess.run(
-                    ["taskset", "-c", f"0-{par - 1}",
-                     sys.executable, __file__, "--core-only", str(par)],
-                    capture_output=True, text=True, env=env,
-                    cwd=os.path.dirname(os.path.abspath(__file__)),
-                )
-                r = json.loads(proc.stdout.strip().splitlines()[-1])
-                pair[par] = r
-                if par not in best or r["events_per_sec"] > best[par]["events_per_sec"]:
-                    best[par] = r
-            hw_post = hw_scaling_probe(n, n4, seconds=probe_s)
-            ceiling = min(hw_pre["hw_efficiency"], hw_post["hw_efficiency"])
-            ratio = (pair[n4]["events_per_sec"] / pair[n]["events_per_sec"]) / (n4 / n)
-            row = {
-                "rep": attempt,
-                "ceiling": ceiling,
-                "ceiling_pre": hw_pre["hw_efficiency"],
-                "ceiling_post": hw_post["hw_efficiency"],
-                "qualified": ceiling >= qual_thresh,
-                "ratio": round(ratio, 3),
-                "events_per_sec_n": pair[n]["events_per_sec"],
-                "events_per_sec_4n": pair[n4]["events_per_sec"],
-            }
-            rep_rows.append(row)
-            print(json.dumps(row), file=sys.stderr)
-
-        def _median(xs: list[float]) -> float | None:
-            if not xs:
-                return None
-            s = sorted(xs)
-            m = len(s)
-            return s[m // 2] if m % 2 else (s[m // 2 - 1] + s[m // 2]) / 2
-
-        qual = [r["ratio"] for r in rep_rows if r["qualified"]]
-        allr = [r["ratio"] for r in rep_rows]
-        med = _median(qual) if qual else _median(allr)
-        print(json.dumps({
-            "metric": "cdc_core_scaling_efficiency",
-            "value": round(med, 3),
-            "unit": "ratio",
-            "n": n, "4n": n4,
-            "qualify_threshold": qual_thresh,
-            "qualified_reps": len(qual),
-            "attempts": attempt,
-            "no_qualified_windows": not qual,
-            "all_rep_median": round(_median(allr), 3),
-            "rep_rows": rep_rows,
-            "core_events_per_sec_n": best[n]["events_per_sec"],
-            "core_events_per_sec_4n": best[n4]["events_per_sec"],
-            "core_events": best[n]["events"],
-        }))
-        return
-
-    if "--growth" in sys.argv:
-        out = {
-            "metric": "merge_cost_vs_target_growth",
-            "adaptive": run_growth_sweep(cpus, adaptive=True),
-            "fixed": run_growth_sweep(cpus, adaptive=False),
-            "mor": run_growth_sweep_mor(cpus),
-        }
-        print(json.dumps(out))
-        return
-
-    if "--scd2-growth" in sys.argv:
-        print(json.dumps(run_scd2_growth(cpus)))
-        return
-
-    if "--ivf-growth" in sys.argv:
-        print(json.dumps(run_ivf_growth(cpus)))
-        return
-
-    if "--cms-growth" in sys.argv:
-        print(json.dumps(run_cms_growth(cpus)))
-        return
-
-    if "--compact-policy" in sys.argv:
-        print(json.dumps(run_compaction_policy(cpus)))
-        return
-
-    if "--qsample-growth" in sys.argv:
-        print(json.dumps(run_qsample_growth(cpus)))
-        return
-
-    if "--search-growth" in sys.argv:
-        print(json.dumps(run_search_growth(cpus)))
-        return
-
-    if "--cc-growth" in sys.argv:
-        print(json.dumps(run_cc_growth(cpus)))
-        return
-
-    if "--tri-growth" in sys.argv:
-        print(json.dumps(run_tri_growth(cpus)))
-        return
-
-    if "--rescan-growth" in sys.argv:
-        print(json.dumps(run_rescan_growth(cpus)))
-        return
-
-    if "--ann-recall" in sys.argv:
-        print(json.dumps(run_ann_recall(cpus)))
-        return
-
-    if "--scaling" in sys.argv:
-        # N and 4N with headroom: at 4N == all vCPUs the JVM's GC/shuffle
-        # threads + the Python driver compete with executor threads and
-        # depress the 4N level only; leaving ~25% headroom measures the
-        # engine rather than the host's oversubscription behavior.
-        n = max(2, int(cpus * 0.75) // 4)
-        n4 = n * 4
-        # scaling evidence needs compute-dominated epochs: the metric
-        # targets a 10^10-event replay where per-epoch orchestration is
-        # noise, so measure with 2x events in 2 epochs (4x rows/epoch)
-        # rather than the headline's 4 micro-epochs.
-        n_events = 2 * _feed_events()
-        # single-VM timings vary ±30-40% (hypervisor neighbors,
-        # writeback); efficiency = median of time-paired ratios (below)
-        reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "3"))
-        env = dict(
-            os.environ,
-            SPARK_GRAFT_FEED_EVENTS_SCALED=str(n_events),
-            SPARK_GRAFT_EPOCHS=os.environ.get("SPARK_GRAFT_EPOCHS", "2"),
-            # the scaling loop does its own best-of-reps across fresh
-            # JVMs; one inner rep per subprocess
-            SPARK_GRAFT_CDC_REPS="1",
-            # 1 KB contents (realistic source files) for both probes
-            SPARK_GRAFT_CONTENT_WORDS=os.environ.get("SPARK_GRAFT_CONTENT_WORDS", "150"),
-        )
-        # tmpfs warehouse for the e2e probe: per-node storage bandwidth
-        # scales with a real cluster; this VM's one disk does not
-        if os.path.isdir("/dev/shm") and "SPARK_GRAFT_BENCH_DIR" not in env:
-            env["SPARK_GRAFT_BENCH_DIR"] = "/dev/shm"
-        # large heap: allocation-rate GC contention at 4N threads is the
-        # main JVM-side scaling tax; a roomy young gen removes most of it
-        env.setdefault("SPARK_DRIVER_MEMORY", "48g")
-        results: dict[str, dict[int, dict]] = {"core": {}, "e2e": {}, "e2e_mor": {}}
-        ratios: dict[str, list[float]] = {"core": [], "e2e": [], "e2e_mor": []}
-        # Host throughput on this VM drifts ±40% on multi-MINUTE
-        # timescales (measured: the same pinned 24-core core probe hit
-        # 348k and 499k ev/s an hour apart). A best-of-per-level ratio
-        # therefore mixes host states — N's best from a fast window
-        # against 4N's best from a slow one yields a meaningless
-        # efficiency. The robust statistic is the MEDIAN OF TIME-PAIRED
-        # RATIOS: each rep runs 4N then N back-to-back (same host
-        # state), computes its own efficiency, and the median across
-        # reps discards the drifted pairs. Per-level bests are still
-        # reported for throughput context.
-        # Three probes per pair:
-        #   core    — disk-free fused resolve+detect (executor scaling; on
-        #             a cluster this is what added nodes buy)
-        #   e2e     — full replay incl. COW lake writes (bounded here by
-        #             the ONE local disk both levels share — context)
-        #   e2e_mor — full replay with the merge-on-read target, the
-        #             10^10-event ingest configuration (O(batch) delta
-        #             appends instead of bucket rewrites): measured cow
-        #             0.35 vs mor 0.42-0.58 at 8M events/2 epochs — the
-        #             gap is the storage-bound COW rewrite share
-        for rep in range(reps):
-            for mode, flag, extra in (
-                ("core", "--core-only", {}),
-                ("e2e", "--cdc-only", {}),
-                ("e2e_mor", "--cdc-only", {"SPARK_GRAFT_TARGET_MODE": "mor"}),
-            ):
-                pair: dict[int, dict] = {}
-                for par in (n4, n):
-                    subprocess.run(["sync"], check=False)
-                    time.sleep(5)
-                    # pin the subprocess to exactly `par` CPUs: at
-                    # local[N] on a bigger box the JVM's GC/JIT/shuffle
-                    # helper threads otherwise run on the idle cores,
-                    # inflating the small-N level — a real N-core node
-                    # has no free cores to donate
-                    proc = subprocess.run(
-                        ["taskset", "-c", f"0-{par - 1}",
-                         sys.executable, __file__, flag, str(par)],
-                        capture_output=True, text=True, env={**env, **extra},
-                        cwd=os.path.dirname(os.path.abspath(__file__)),
-                    )
-                    line = proc.stdout.strip().splitlines()[-1]
-                    r = json.loads(line)
-                    pair[par] = r
-                    best = results[mode]
-                    if par not in best or r["events_per_sec"] > best[par]["events_per_sec"]:
-                        best[par] = r
-                ratios[mode].append(
-                    (pair[n4]["events_per_sec"] / pair[n]["events_per_sec"]) / (n4 / n)
-                )
-
-        def eff(mode: str) -> float:
-            rs = sorted(ratios[mode])
-            return round(rs[len(rs) // 2], 3)
-
-        hw = hw_scaling_probe(n, n4)
-        # probe the same storage target the e2e warehouses used
-        if "SPARK_GRAFT_BENCH_DIR" not in os.environ and os.path.isdir("/dev/shm"):
-            os.environ["SPARK_GRAFT_BENCH_DIR"] = "/dev/shm"
-        bw = storage_bw_probe(n, n4)
-        print(json.dumps({
-            "metric": "cdc_scaling_efficiency",
-            "value": eff("core"),
-            "normalized_vs_host_ceiling": round(eff("core") / hw["hw_efficiency"], 3),
-            **hw,
-            **bw,
-            "unit": "ratio",
-            "n": n, "4n": n4,
-            "core_events_per_sec_n": results["core"][n]["events_per_sec"],
-            "core_events_per_sec_4n": results["core"][n4]["events_per_sec"],
-            "core_events": results["core"][n]["events"],
-            "core_ratio_reps": [round(x, 3) for x in ratios["core"]],
-            "e2e_ratio_reps": [round(x, 3) for x in ratios["e2e"]],
-            "e2e_efficiency": eff("e2e"),
-            "e2e_events_per_sec_n": results["e2e"][n]["events_per_sec"],
-            "e2e_events_per_sec_4n": results["e2e"][n4]["events_per_sec"],
-            "e2e_mor_ratio_reps": [round(x, 3) for x in ratios["e2e_mor"]],
-            "e2e_mor_efficiency": eff("e2e_mor"),
-            "e2e_mor_events_per_sec_n": results["e2e_mor"][n]["events_per_sec"],
-            "e2e_mor_events_per_sec_4n": results["e2e_mor"][n4]["events_per_sec"],
-            "e2e_phase_seconds_n": results["e2e"][n].get("phase_seconds"),
-            "e2e_phase_seconds_4n": results["e2e"][n4].get("phase_seconds"),
-            "e2e_events": n_events,
-            "reps": reps,
-            "sf": sf_dir,
-        }))
-        return
+    for flag, run in MODES.items():
+        if flag in sys.argv:
+            print(json.dumps(run(cpus)))
+            return
 
     split = run_queries(cpus, sf_dir)
     cdc = _cdc_median_of_reps(cpus, _feed_events())

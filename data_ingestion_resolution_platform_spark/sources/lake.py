@@ -659,7 +659,6 @@ class LakeTable:
         keys: Sequence[str],
         epoch_id: str | int | None = None,
         delete_condition: F.Column | None = None,
-        collect_stats: bool = False,
         drop_cols: Sequence[str] = (),
     ) -> dict:
         """MERGE INTO this USING batch ON keys (COW rewrite).
@@ -727,10 +726,6 @@ class LakeTable:
             merged.write.mode("overwrite").parquet(self.versions.dir_for(v))
             self.versions.commit(v)
             stats: dict = {"mode": "merge"}
-            if collect_stats:
-                stats["upserts"] = upserts.count()
-                if delete_condition is not None:
-                    stats["deletes"] = batch.filter(delete_condition).count()
             if epoch_id is not None:
                 self.ledger.record(epoch_id, stats)
             self.versions.vacuum()
