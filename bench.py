@@ -258,6 +258,12 @@ def run_growth_sweep(spark, make_table) -> dict:
         return _timed(lambda: tbl.merge(batch(epoch, *args), ["repo", "path"], epoch_id=epoch))[1]
 
     with _bench_dir("bench_growth_") as wh:
+        # untimed warm-up on a throwaway table of the same layout (as
+        # --qsample-growth): JIT + codegen otherwise land on
+        # grow_epoch_secs[0] (32-vCPU adaptive read 12.7 s then 5.8 s)
+        warm = make_table(os.path.join(wh, "warm"))
+        warm.merge(batch(0, 0, repos_per_epoch, 10_000, False), ["repo", "path"], epoch_id=0)
+        warm.merge(batch(100, 0, 1, 5000, True), ["repo", "path"], epoch_id=100)
         tbl = make_table(os.path.join(wh, "t"))
         mor = isinstance(tbl, MorLakeTable)
         out: dict = {"rows_per_epoch": rows_per_epoch, "grow_epoch_secs": []}
@@ -487,6 +493,14 @@ def run_ivf_growth(parallelism: int) -> dict:
             "touched_rows": idx.read([cell]).count(),
         }
 
+    # untimed warm-up on the 1-replica corpus (as --qsample-growth):
+    # JIT, codegen and the Arrow worker fork otherwise land on the
+    # first size's rebuild_s
+    def warmup(root):
+        st = seed(1, "", root)
+        rebuild(st)()
+        epoch(st, 0)()
+
     return growth_sweep(
         {
             "metric": "ivf_epoch_cost_vs_corpus_growth",
@@ -496,6 +510,7 @@ def run_ivf_growth(parallelism: int) -> dict:
             "parallelism": parallelism,
         },
         _replicas("IVF", "16,64,256"), ("rows", base_n), seed, epoch, rebuild, report,
+        warmup=warmup,
     )
 
 
@@ -550,6 +565,13 @@ def run_cms_growth(parallelism: int) -> dict:
     def epoch(st, j):
         return partial(maintain_cms, st[0], changes, item, depth, width, epoch_id=None)
 
+    # untimed warm-up on a 5k-row corpus (as --qsample-growth): JIT and
+    # codegen otherwise land on the first size's rebuild_s
+    def warmup(root):
+        st = LakeTable(spark, root), base.limit(5000)
+        rebuild(st)()
+        epoch(st, 0)()
+
     try:
         return growth_sweep(
             {
@@ -562,6 +584,7 @@ def run_cms_growth(parallelism: int) -> dict:
             },
             _replicas("CMS", "1,4,16"), ("rows", base_n), seed, epoch, rebuild,
             lambda st, _: {"cells": st[0].read().count()},
+            warmup=warmup,
         )
     finally:
         changes.unpersist()
@@ -799,8 +822,7 @@ def run_cc_growth(parallelism: int) -> dict:
     n0 = 100_000
     n_delta = 128
 
-    def seed(k_rep, arm, root):
-        n = n0 * k_rep
+    def state(n, arm, root):
         if arm == "bucketed":
             labels = PartitionedLakeTable(spark, root + "/labels", ["id"], n_buckets=32)
             edges = PartitionedLakeTable(spark, root + "/edges", ["id_a", "id_b"], n_buckets=32)
@@ -816,6 +838,9 @@ def run_cc_growth(parallelism: int) -> dict:
         nodes = spark.range(n).select(F.col("id").alias("doc_id"))
         build_cluster_state(labels, edges, chains, nodes, epoch_id="seed")
         return labels, edges, n
+
+    def seed(k_rep, arm, root):
+        return state(n0 * k_rep, arm, root)
 
     def epoch(st, j):
         labels, edges, n = st
@@ -855,6 +880,13 @@ def run_cc_growth(parallelism: int) -> dict:
             "edges_rows": edges.read().count(),
         }
 
+    # untimed warm-up on a 10x smaller graph (as --qsample-growth): JIT
+    # and codegen otherwise land on the first size's first epoch
+    def warmup(root):
+        st = state(n0 // 10, "cow", root)
+        epoch(st, 1)()
+        rebuild(st)()
+
     return growth_sweep(
         {
             "metric": "cc_epoch_cost_vs_corpus_growth",
@@ -864,7 +896,7 @@ def run_cc_growth(parallelism: int) -> dict:
             "parallelism": parallelism,
         },
         _replicas("CC", "1,4,16"), ("nodes", n0), seed, epoch, rebuild,
-        report, arms=("cow", "bucketed"), replay=False,
+        report, arms=("cow", "bucketed"), replay=False, warmup=warmup,
     )
 
 
@@ -896,8 +928,7 @@ def run_tri_growth(parallelism: int) -> dict:
     n0 = 100_000
     n_delta = 128
 
-    def seed(k_rep, arm, root):
-        n = n0 * k_rep
+    def state(n, root):
         # nodes 5k..5k+4 fully connected: pairs (5k+i, 5k+j), i<j<5
         node = spark.range(n // 5).select((F.col("id") * 5).alias("base"))
         cliques = None
@@ -911,6 +942,9 @@ def run_tri_growth(parallelism: int) -> dict:
         stats = LakeTable(spark, root + "/stats")
         build_triangle_state(edges, stats, cliques, epoch_id="seed")
         return edges, stats, n
+
+    def seed(k_rep, arm, root):
+        return state(n0 * k_rep, root)
 
     def epoch(st, j):
         edges, stats, n = st
@@ -939,6 +973,12 @@ def run_tri_growth(parallelism: int) -> dict:
             "n_triangles": int(row["n_triangles"]),
         }
 
+    # untimed warm-up on a 10x smaller graph (as --qsample-growth)
+    def warmup(root):
+        st = state(n0 // 10, root)
+        epoch(st, 1)()
+        rebuild(st)()
+
     return growth_sweep(
         {
             "metric": "triangle_epoch_cost_vs_corpus_growth",
@@ -948,7 +988,7 @@ def run_tri_growth(parallelism: int) -> dict:
             "parallelism": parallelism,
         },
         _replicas("TRI", "1,4,16"), ("nodes", n0), seed, epoch, rebuild,
-        report, replay=False,
+        report, replay=False, warmup=warmup,
     )
 
 
@@ -1001,13 +1041,15 @@ def run_rescan_growth(parallelism: int) -> dict:
     def funnel_rows(ev):
         return _funnel_per_user(ev.select("user_id", "event_type", "ts"))
 
-    def seed(k_rep, arm, root):
-        n_users = n0 * k_rep
+    def state(n_users, root):
         lake = LakeTable(spark, root + "/events")
         store = LakeTable(spark, root + "/funnel")
         lake.merge(events_for(n_users), ["event_id"], epoch_id="seed")
         store.merge(funnel_rows(lake.read()), ["user_id"], epoch_id="seed")
         return lake, store, n_users
+
+    def seed(k_rep, arm, root):
+        return state(n0 * k_rep, root)
 
     def epoch(st, j):
         lake, store, n_users = st
@@ -1049,6 +1091,12 @@ def run_rescan_growth(parallelism: int) -> dict:
     def report(st, full):
         return {"parity_ok": _same_rows(st[1].read().select("user_id", "v", "c", "p"), full)}
 
+    # untimed warm-up on 10x fewer users (as --qsample-growth)
+    def warmup(root):
+        st = state(n0 // 10, root)
+        epoch(st, 1)()
+        rebuild(st)()
+
     return growth_sweep(
         {
             "metric": "rescan_epoch_cost_vs_base_growth",
@@ -1059,7 +1107,7 @@ def run_rescan_growth(parallelism: int) -> dict:
             "parallelism": parallelism,
         },
         _replicas("RESCAN", "1,4,16"), ("users", n0), seed, epoch, rebuild,
-        report, replay=False,
+        report, replay=False, warmup=warmup,
     )
 
 

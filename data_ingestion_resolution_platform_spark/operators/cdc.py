@@ -350,7 +350,6 @@ def apply_changes(
     changes: DataFrame,
     keys: Sequence[str],
     lsn_col: str,
-    op_col: str = "op",
     tie_breakers: Sequence[str] = (),
 ) -> DataFrame:
     """M1-M6: collapse an I/U/D change feed to final table state.
@@ -361,7 +360,7 @@ def apply_changes(
     same state.
     """
     winners = resolve_latest(changes, keys, lsn_col, tie_breakers=tie_breakers)
-    return winners.filter(F.col(op_col) != F.lit("D"))
+    return winners.filter(F.col("op") != F.lit("D"))
 
 
 def apply_patches(
@@ -369,7 +368,6 @@ def apply_patches(
     keys: Sequence[str],
     lsn_col: str,
     value_cols: Sequence[str],
-    op_col: str = "op",
 ) -> DataFrame:
     """Partial-image CDC (Debezium-style patch events) → final state.
 
@@ -400,7 +398,7 @@ def apply_patches(
     ``lsn`` (= last surviving I/U LSN); tombstoned keys are absent.
     """
     lsn = F.col(lsn_col)
-    op = F.col(op_col)
+    op = F.col("op")
     aggs = [
         F.max(F.when(op == "D", lsn)).alias("__last_d"),
         F.max(F.when(op == "I", lsn)).alias("__last_i"),

@@ -38,9 +38,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_ingestion_resolution_platform_spark.operators.dedup import minhash_bands
+from data_ingestion_resolution_platform_spark.sources.lake import (
+    CHANGE_COL,
+    DELETE,
+    PREIMAGE,
+    is_positive,
+)
 from data_ingestion_resolution_platform_spark.util import reuse_for_self_join
-
-_UPSERT_TYPES = ("insert", "update_postimage")
 
 
 def _pack(bands: DataFrame) -> DataFrame:
@@ -75,7 +79,6 @@ def incremental_minhash_epoch(
     changes: DataFrame,
     text_col: str,
     id_col: str,
-    change_col: str = "change_type",
     epoch_id: str | int | None = None,
     **mh,
 ) -> DataFrame:
@@ -92,11 +95,11 @@ def incremental_minhash_epoch(
     it stays valid and deterministic whether collected before or after
     the merge (time travel keeps the old version readable).
     """
-    upserts = changes.filter(F.col(change_col).isin(*_UPSERT_TYPES)).select(
+    upserts = changes.filter(is_positive()).select(
         F.col(id_col), F.col(text_col)
     )
     changed_ids = (
-        changes.filter(F.col(change_col) != "update_preimage")
+        changes.filter(F.col(CHANGE_COL) != PREIMAGE)
         .select(F.col(id_col).alias("doc"))
         .distinct()
     )
@@ -134,7 +137,7 @@ def incremental_minhash_epoch(
 
     # advance the index: upsert Δ band arrays, drop tombstoned docs
     deletes = (
-        changes.filter(F.col(change_col) == "delete")
+        changes.filter(F.col(CHANGE_COL) == DELETE)
         .select(F.col(id_col).alias("doc"))
         .distinct()
         .withColumn("bands", F.lit(None).cast("array<struct<band:int,bucket:long>>"))

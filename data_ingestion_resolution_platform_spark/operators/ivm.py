@@ -57,20 +57,20 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: CDF change_type → contribution sign
-_SIGN = {
-    "insert": 1,
-    "update_postimage": 1,
-    "update_preimage": -1,
-    "delete": -1,
-}
+from data_ingestion_resolution_platform_spark.sources.lake import (
+    CHANGE_COL,
+    DELETE,
+    INSERT,
+    change_sign,
+    is_positive,
+    is_retraction,
+)
 
 
 def delta_aggregate(
     changes: DataFrame,
     group_keys: Sequence[str],
     sum_cols: Mapping[str, str] | None = None,
-    change_col: str = "change_type",
     count_alias: str = "n_rows",
 ) -> DataFrame:
     """Collapse a pre-image-bearing change feed into one signed delta
@@ -83,10 +83,7 @@ def delta_aggregate(
     recomputed aggregate).
     """
     sum_cols = dict(sum_cols or {})
-    sign = F.create_map(
-        *[F.lit(x) for kv in _SIGN.items() for x in kv]
-    )[F.col(change_col)]
-    base = changes.withColumn("_sign", sign).filter(F.col("_sign").isNotNull())
+    base = changes.withColumn("_sign", change_sign()).filter(F.col("_sign").isNotNull())
     aggs = [F.sum("_sign").cast("long").alias(count_alias)]
     for alias, expr in sum_cols.items():
         aggs.append(
@@ -139,7 +136,6 @@ def maintain_aggregate(
     group_keys: Sequence[str],
     sum_cols: Mapping[str, str] | None = None,
     epoch_id: str | int | None = None,
-    change_col: str = "change_type",
     count_alias: str = "n_rows",
 ) -> dict:
     """Maintain a persisted grouped-aggregate ``LakeTable`` from one
@@ -157,9 +153,7 @@ def maintain_aggregate(
     if epoch_id is not None and table.epoch_committed(epoch_id):
         return {"skipped": True, "epoch": str(epoch_id)}
     key_list = list(group_keys)
-    delta = delta_aggregate(
-        changes, key_list, sum_cols, change_col=change_col, count_alias=count_alias
-    )
+    delta = delta_aggregate(changes, key_list, sum_cols, count_alias=count_alias)
     # delta feeds both the semi-join key side and the batch body —
     # persist so the |changes| aggregation runs once (unpersisted in
     # the finally below; same pattern as LakeTable.merge itself)
@@ -209,7 +203,6 @@ def maintain_distinct(
     group_keys: Sequence[str],
     value_col: str,
     epoch_id: str | int | None = None,
-    change_col: str = "change_type",
     distinct_alias: str = "n_distinct",
     count_alias: str = "n_rows",
 ) -> dict:
@@ -253,9 +246,7 @@ def maintain_distinct(
         )
     key_list = list(group_keys)
     mkeys = key_list + [value_col]
-    mdelta = delta_aggregate(
-        changes, mkeys, None, change_col=change_col, count_alias="_dmult"
-    ).persist()
+    mdelta = delta_aggregate(changes, mkeys, None, count_alias="_dmult").persist()
     try:
         if mult_table.exists():
             cur = mult_table.read().select(*mkeys, F.col("_mult").alias("_old"))
@@ -337,7 +328,6 @@ def maintain_minmax(
     group_keys: Sequence[str],
     value_expr: str,
     epoch_id: str | int | None = None,
-    change_col: str = "change_type",
     count_alias: str = "n_rows",
     min_alias: str = "min_v",
     max_alias: str = "max_v",
@@ -372,11 +362,8 @@ def maintain_minmax(
     if epoch_id is not None and table.epoch_committed(epoch_id):
         return {"skipped": True, "epoch": str(epoch_id)}
     key_list = list(group_keys)
-    sign = F.create_map(*[F.lit(x) for kv in _SIGN.items() for x in kv])[
-        F.col(change_col)
-    ]
     v = F.expr(value_expr)
-    signed = changes.withColumn("_sign", sign).filter(F.col("_sign").isNotNull())
+    signed = changes.withColumn("_sign", change_sign()).filter(F.col("_sign").isNotNull())
     delta = signed.groupBy(*key_list).agg(
         F.sum("_sign").cast("long").alias("_dn"),
         F.min(F.when(F.col("_sign") > 0, v)).alias("_pos_min"),
@@ -504,7 +491,6 @@ def maintain_topk(
     order_expr: str,
     k: int,
     epoch_id: str | int | None = None,
-    change_col: str = "change_type",
     descending: bool = True,
 ) -> dict:
     """Maintain a persisted per-group top-k view ``LakeTable`` (the
@@ -540,7 +526,7 @@ def maintain_topk(
     each evaluates once (k·touched rows at most) and the MERGE runs in
     ~16 jobs.
 
-    Column contract: ``changes`` = view columns + ``change_col``;
+    Column contract: ``changes`` = view columns + ``CHANGE_COL``;
     ``base_after`` must contain every view column (project the ordering
     measure into the feed upstream, e.g. ``nb = length(content)``).
     """
@@ -548,7 +534,7 @@ def maintain_topk(
         return {"skipped": True, "epoch": str(epoch_id)}
     gk, rk = list(group_keys), list(row_keys)
     keys = gk + rk
-    cols = [c for c in changes.columns if c != change_col]
+    cols = [c for c in changes.columns if c != CHANGE_COL]
     # the feed fans out into pos / neg / touched and re-enters the batch
     # plan several times; one persisted evaluation keeps a potentially
     # expensive upstream (a changelog's time-travel diff) from being
@@ -556,12 +542,8 @@ def maintain_topk(
     # the single MERGE action evaluates the whole tree once
     changes = changes.persist()
     try:
-        pos = changes.filter(
-            F.col(change_col).isin("insert", "update_postimage")
-        ).select(*cols)
-        neg_keys = changes.filter(
-            F.col(change_col).isin("delete", "update_preimage")
-        ).select(*keys)
+        pos = changes.filter(is_positive()).select(*cols)
+        neg_keys = changes.filter(is_retraction()).select(*keys)
         touched = changes.select(*gk).distinct()
         if view.exists():
             vtouched = (
@@ -637,7 +619,6 @@ def delta_join(
     r_before: DataFrame,
     s_before: DataFrame,
     join_keys: Sequence[str],
-    change_col: str = "change_type",
     how: str = "inner",
 ) -> DataFrame:
     """Signed delta of a materialized equi-join view ``V = R ⋈ S``
@@ -662,9 +643,10 @@ def delta_join(
     typed NULLs.
 
     where S₀/R₀ are the PRE-epoch snapshots, every change-feed row
-    carries a ±1 sign (see ``_SIGN``; the feed must be invertible,
-    i.e. produced with ``include_preimages=True``), state rows carry
-    +1, and an output row's sign is the product of its inputs' signs.
+    carries a ±1 sign (``sources.lake.CHANGE_SIGN``; the feed must be
+    invertible, i.e. produced with ``include_preimages=True``), state
+    rows carry +1, and an output row's sign is the product of its
+    inputs' signs.
     The third term corrects the double count when both sides change
     the same join key in one epoch.
 
@@ -678,12 +660,12 @@ def delta_join(
     rows.
 
     Column contract: ``r_changes`` must equal ``r_before``'s columns
-    plus ``change_col`` (same for the S side), and the two sides'
+    plus ``CHANGE_COL`` (same for the S side), and the two sides'
     non-join columns must be disjoint.
     """
     jk = list(join_keys)
-    r_cols = [c for c in r_changes.columns if c != change_col]
-    s_cols = [c for c in s_changes.columns if c != change_col]
+    r_cols = [c for c in r_changes.columns if c != CHANGE_COL]
+    s_cols = [c for c in s_changes.columns if c != CHANGE_COL]
     if sorted(r_cols) != sorted(r_before.columns):
         raise ValueError(
             f"r_changes columns {sorted(r_cols)} != r_before {sorted(r_before.columns)}"
@@ -695,13 +677,12 @@ def delta_join(
     overlap = (set(r_cols) & set(s_cols)) - set(jk)
     if overlap:
         raise ValueError(f"non-join columns shared by both sides: {sorted(overlap)}")
-    sign_map = F.create_map(*[F.lit(x) for kv in _SIGN.items() for x in kv])
 
     def signed(ch: DataFrame) -> DataFrame:
         return (
-            ch.withColumn("_sign", sign_map[F.col(change_col)])
+            ch.withColumn("_sign", change_sign())
             .filter(F.col("_sign").isNotNull())
-            .drop(change_col)
+            .drop(CHANGE_COL)
         )
 
     dr, ds = signed(r_changes), signed(s_changes)
@@ -742,11 +723,9 @@ def delta_join(
 
     # Δμ: presence deltas of the S side (insert +1 / delete -1 on the
     # join key; updates keep μ constant and are excluded)
-    dmu = s_changes.filter(
-        F.col(change_col).isin("insert", "delete")
-    ).select(
+    dmu = s_changes.filter(F.col(CHANGE_COL).isin(INSERT, DELETE)).select(
         *jk,
-        F.when(F.col(change_col) == "insert", F.lit(1))
+        F.when(F.col(CHANGE_COL) == INSERT, F.lit(1))
         .otherwise(F.lit(-1))
         .alias("_sign"),
     )
@@ -780,7 +759,6 @@ def maintain_join(
     join_keys: Sequence[str],
     out_keys: Sequence[str],
     epoch_id: str | int | None = None,
-    change_col: str = "change_type",
     how: str = "inner",
 ) -> dict:
     """Maintain a persisted equi-join view ``LakeTable`` from one
@@ -807,9 +785,7 @@ def maintain_join(
     if epoch_id is not None and view.epoch_committed(epoch_id):
         return {"skipped": True, "epoch": str(epoch_id)}
     key_list = list(out_keys)
-    dv = delta_join(
-        r_changes, s_changes, r_before, s_before, join_keys, change_col, how=how
-    )
+    dv = delta_join(r_changes, s_changes, r_before, s_before, join_keys, how=how)
     attrs = [c for c in dv.columns if c not in set(key_list) | {"_sign"}]
     # collapse identical attribute images first (cancels same-epoch
     # churn), then pick the surviving image per key: max_by over the

@@ -36,7 +36,6 @@ def scd2_history(
     keys: Sequence[str],
     lsn_col: str,
     attr_cols: Sequence[str],
-    op_col: str = "op",
 ) -> DataFrame:
     """Collapse an ordered I/U/D feed into type-2 validity intervals.
 
@@ -50,13 +49,13 @@ def scd2_history(
     w = Window.partitionBy(*keys).orderBy(lsn_col)
     attrs = F.struct(*[F.col(c) for c in attr_cols])
     prev_attrs = F.lag(attrs).over(w)
-    prev_op = F.lag(F.col(op_col)).over(w)
+    prev_op = F.lag(F.col("op")).over(w)
     # Boundary = first event, tombstone, first event after a tombstone,
     # or attribute change. Comparing against the *immediate* predecessor
     # is equivalent to comparing against the previous survivor: a run of
     # equal-attribute events with no D inside collapses inductively.
     boundary = (
-        (F.col(op_col) == F.lit("D"))
+        (F.col("op") == F.lit("D"))
         | prev_op.isNull()
         | (prev_op == F.lit("D"))
         | ~attrs.eqNullSafe(prev_attrs)
@@ -65,7 +64,7 @@ def scd2_history(
     # Same partitioning + ordering as `w`: Catalyst reuses the exchange.
     w2 = Window.partitionBy(*keys).orderBy(lsn_col)
     closed = b.withColumn("valid_to_lsn", F.lead(F.col(lsn_col)).over(w2))
-    versions = closed.filter(F.col(op_col) != F.lit("D"))
+    versions = closed.filter(F.col("op") != F.lit("D"))
     return versions.select(
         *keys,
         *attr_cols,
@@ -81,7 +80,6 @@ def scd2_apply_increment(
     keys: Sequence[str],
     lsn_col: str,
     attr_cols: Sequence[str],
-    op_col: str = "op",
 ) -> DataFrame:
     """One epoch of incremental SCD2 maintenance: the MERGE batch that
     advances a type-2 history by a feed delta WITHOUT rescanning it.
@@ -113,17 +111,15 @@ def scd2_apply_increment(
     ``valid_to_lsn < valid_from_lsn`` means an out-of-order delta) and
     refuses to corrupt the table.
     """
-    dv = scd2_history(delta, keys, lsn_col, attr_cols, op_col)
-    first_ev = F.struct(
-        F.col(lsn_col), F.col(op_col), *[F.col(c) for c in attr_cols]
-    )
+    dv = scd2_history(delta, keys, lsn_col, attr_cols)
+    first_ev = F.struct(F.col(lsn_col), F.col("op"), *[F.col(c) for c in attr_cols])
     firsts = (
         delta.groupBy(*keys)
         .agg(F.min_by(first_ev, F.col(lsn_col)).alias("__f"))
         .select(
             *keys,
             F.col(f"__f.{lsn_col}").alias("__f_lsn"),
-            F.col(f"__f.{op_col}").alias("__f_op"),
+            F.col("__f.op").alias("__f_op"),
             *[F.col(f"__f.{c}").alias(f"__f_{c}") for c in attr_cols],
         )
     )
@@ -298,7 +294,6 @@ def historize_epoch(
     lsn_col: str,
     attr_cols: Sequence[str],
     epoch_id,
-    op_col: str = "op",
 ) -> dict:
     """Exactly-once epoch apply of a feed delta to a LakeTable-backed
     SCD2 history (MERGE ON (keys, valid_from_lsn); a committed
@@ -319,7 +314,7 @@ def historize_epoch(
     if history.epoch_committed(epoch_id):
         return {"skipped": True, "epoch": str(epoch_id)}
     if not history.exists():
-        batch = scd2_history(delta, keys, lsn_col, attr_cols, op_col)
+        batch = scd2_history(delta, keys, lsn_col, attr_cols)
     else:
         # Scd2HistoryStore serves the open set from its own snapshot —
         # O(open), independent of accumulated history; a plain LakeTable
@@ -329,9 +324,7 @@ def historize_epoch(
             if hasattr(history, "open_versions")
             else history.read().filter(F.col("is_current") == 1)
         )
-        batch = scd2_apply_increment(
-            open_v, delta, keys, lsn_col, attr_cols, op_col
-        )
+        batch = scd2_apply_increment(open_v, delta, keys, lsn_col, attr_cols)
         # <= not <: a delta whose first LSN EQUALS an open version's
         # valid_from_lsn would produce a zero-length version plus two
         # batch rows sharing the MERGE key (keys, valid_from_lsn) —

@@ -35,6 +35,12 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_ingestion_resolution_platform_spark.sources.lake import (
+    CHANGE_COL,
+    DELETE,
+    change_sign,
+    is_positive,
+)
 from data_ingestion_resolution_platform_spark.util import local_df
 
 # Portable tokenizer: lowercase, split on runs of non-alphanumerics.
@@ -243,7 +249,6 @@ def term_changes(
     changes: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    change_col: str = "change_type",
 ) -> DataFrame:
     """Doc-level invertible change feed → token-level change feed.
 
@@ -257,7 +262,7 @@ def term_changes(
     """
     return changes.select(
         F.col(id_col).alias("doc_id"),
-        F.col(change_col),
+        F.col(CHANGE_COL),
         F.explode(_tokens(F.col(text_col))).alias("term"),
     )
 
@@ -316,7 +321,6 @@ def maintain_search_index(
     changes: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    change_col: str = "change_type",
     epoch_id: str | int | None = None,
 ) -> dict:
     """Advance the inverted index by one invertible change-feed epoch,
@@ -334,19 +338,13 @@ def maintain_search_index(
     termstats-then-postings ordering inside maintain_distinct enforces
     its own recoverability invariant.
     """
-    from data_ingestion_resolution_platform_spark.operators.ivm import (
-        _SIGN,
-        maintain_distinct,
-    )
+    from data_ingestion_resolution_platform_spark.operators.ivm import maintain_distinct
 
     dl_expr = F.size(_tokens(F.col(text_col)))
-    sign = F.create_map(*[F.lit(x) for kv in _SIGN.items() for x in kv])[
-        F.col(change_col)
-    ]
     # global scalar: Δn_docs = Σ sign over doc images, Δsum_dl likewise
     if epoch_id is None or not stats_table.epoch_committed(epoch_id):
         d = (
-            changes.withColumn("_sign", sign)
+            changes.withColumn("_sign", change_sign())
             .filter(F.col("_sign").isNotNull())
             .agg(
                 F.coalesce(F.sum("_sign"), F.lit(0)).cast("long").alias("_dn"),
@@ -381,10 +379,10 @@ def maintain_search_index(
     # the batch schema is backend-portable: plain COW LakeTable, MoR,
     # and bucketed tables all accept (batch, keys, delete_condition)
     # with no marker column to drop
-    post = changes.filter(
-        F.col(change_col).isin("insert", "update_postimage")
-    ).select(F.col(id_col).alias("doc_id"), dl_expr.alias("dl"))
-    dels = changes.filter(F.col(change_col) == "delete").select(
+    post = changes.filter(is_positive()).select(
+        F.col(id_col).alias("doc_id"), dl_expr.alias("dl")
+    )
+    dels = changes.filter(F.col(CHANGE_COL) == DELETE).select(
         F.col(id_col).alias("doc_id"), F.lit(-1).cast("int").alias("dl")
     )
     doclen_table.merge(
@@ -397,11 +395,10 @@ def maintain_search_index(
     return maintain_distinct(
         postings_table,
         termstats_table,
-        term_changes(changes, text_col, id_col, change_col),
+        term_changes(changes, text_col, id_col),
         ["term"],
         "doc_id",
         epoch_id=epoch_id,
-        change_col=change_col,
         distinct_alias="df",
         count_alias="cf",
     )

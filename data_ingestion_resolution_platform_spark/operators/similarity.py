@@ -24,6 +24,12 @@ from data_ingestion_resolution_platform_spark.functions.vectors import (
     quantize_vector,
     quantized_cosine,
 )
+from data_ingestion_resolution_platform_spark.sources.lake import (
+    CHANGE_COL,
+    DELETE,
+    is_positive,
+    is_retraction,
+)
 
 
 def _cell_salt(cell: int, seed: int) -> int:
@@ -310,7 +316,6 @@ def maintain_ivf_index(
     portable: bool = False,
     cents: dict[int, list[int]] | None = None,
     epoch_id: str | int | None = None,
-    change_col: str = "change_type",
 ) -> dict:
     """Maintain a persisted IVF index ``LakeTable`` from one invertible
     change-feed epoch on the embedding corpus, exactly-once — the
@@ -344,15 +349,13 @@ def maintain_ivf_index(
     """
     if epoch_id is not None and index.epoch_committed(epoch_id):
         return {"skipped": True, "epoch": str(epoch_id)}
-    src = changes.filter(
-        F.col(change_col).isin("insert", "update_postimage")
-    ).select(F.col(id_col).alias("__mid"), F.col(vec_col))
+    src = changes.filter(is_positive()).select(F.col(id_col).alias("__mid"), F.col(vec_col))
     if cents is not None:
         up = ivf_kmeans_index(src, cents, vec_col, "__mid", n_cells)
     else:
         up = ivf_index(src, vec_col, "__mid", n_cells, seed, portable)
     up = up.withColumn("_del", F.lit(False))
-    dels = changes.filter(F.col(change_col) == "delete").select(
+    dels = changes.filter(F.col(CHANGE_COL) == DELETE).select(
         F.col(id_col).alias("neighbor_id"),
         F.lit(None).cast(up.schema["cq"].dataType).alias("cq"),
         F.lit(None).cast(up.schema["cell"].dataType).alias("cell"),
@@ -455,19 +458,14 @@ class CellPartitionedIvf:
         vec_col: str,
         id_col: str,
         epoch_id: str | int | None = None,
-        change_col: str = "change_type",
     ) -> dict:
         import os
         import shutil
 
         if epoch_id is not None and self.ledger.committed(epoch_id):
             return {"skipped": True, "epoch": str(epoch_id)}
-        pos = changes.filter(
-            F.col(change_col).isin("insert", "update_postimage")
-        ).select(F.col(id_col).alias("__mid"), F.col(vec_col))
-        neg = changes.filter(
-            F.col(change_col).isin("delete", "update_preimage")
-        ).select(F.col(id_col).alias("__mid"), F.col(vec_col))
+        pos = changes.filter(is_positive()).select(F.col(id_col).alias("__mid"), F.col(vec_col))
+        neg = changes.filter(is_retraction()).select(F.col(id_col).alias("__mid"), F.col(vec_col))
         up = self._assign(pos, vec_col, "__mid").persist()
         old = self._assign(neg, vec_col, "__mid").select("neighbor_id", "cell")
         try:

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from data_ingestion_resolution_platform_spark.functions.hashing import (
     portable_poly_hash,
 )
+from data_ingestion_resolution_platform_spark.sources.lake import CHANGE_COL, is_retraction
 
 #: Hash space [0, HASH_SPACE) of ``portable_poly_hash`` — Mersenne-31.
 HASH_SPACE = (1 << 31) - 1
@@ -141,6 +142,14 @@ def kmv_merge(a: Column, b: Column, k: int) -> Column:
     return F.slice(F.array_sort(F.array_distinct(F.concat(a, b))), 1, k)
 
 
+def _refuse_retractions(changes: DataFrame, name: str, why: str, instead: str) -> None:
+    """The insert-only sketches' guard: a feed row that retracts
+    (delete / update_preimage) raises rather than letting the sketch
+    drift silently from its one-shot build."""
+    if changes.filter(is_retraction()).limit(1).count() > 0:
+        raise ValueError(f"{name} is insert-only ({why}); use {instead} for invertible feeds")
+
+
 def maintain_kmv(
     table,
     changes: DataFrame,
@@ -148,7 +157,6 @@ def maintain_kmv(
     value_col: str,
     k: int = 256,
     epoch_id: str | int | None = None,
-    change_col: str = "change_type",
     n_salt: int = 16,
 ) -> dict:
     """Advance a persisted per-group KMV ``LakeTable`` (schema: group
@@ -167,14 +175,9 @@ def maintain_kmv(
     from data_ingestion_resolution_platform_spark.operators.topk import grouped_topk
 
     keys = list(group_cols)
-    retract = changes.filter(
-        F.col(change_col).isin("delete", "update_preimage")
-    ).limit(1)
-    if retract.count() > 0:
-        raise ValueError(
-            "maintain_kmv is insert-only (KMV cannot retract a minimum); "
-            "use ivm.maintain_distinct for invertible feeds"
-        )
+    _refuse_retractions(
+        changes, "maintain_kmv", "KMV cannot retract a minimum", "ivm.maintain_distinct"
+    )
     delta = changes.select(
         *keys, kmv_hash(F.col(value_col)).alias("_h")
     ).distinct()
@@ -260,7 +263,6 @@ def maintain_cms(
     depth: int = 4,
     width: int = 512,
     epoch_id: str | int | None = None,
-    change_col: str = "change_type",
     count_alias: str = "cnt",
 ) -> dict:
     """Advance a persisted count-min ``LakeTable`` (keys ``d, bucket``)
@@ -280,10 +282,10 @@ def maintain_cms(
 
     h = _item_hash(F.expr(item_expr))
     exploded = changes.select(
-        F.col(change_col),
+        F.col(CHANGE_COL),
         F.explode(F.array(*_cell_structs(h, depth, width))).alias("_c"),
     ).select(
-        F.col(change_col),
+        F.col(CHANGE_COL),
         F.col("_c.d").alias("d"),
         F.col("_c.bucket").alias("bucket"),
     )
@@ -292,7 +294,6 @@ def maintain_cms(
         exploded,
         ["d", "bucket"],
         epoch_id=epoch_id,
-        change_col=change_col,
         count_alias=count_alias,
     )
 
@@ -303,8 +304,9 @@ def maintain_cms(
 #
 # Completes the sketch triad (distinct = KMV, frequency = count-min,
 # quantiles = this): bounded-state grouped quantiles for UNBOUNDED value
-# domains, where ivm.maintain_percentiles' exact multiplicity histogram
-# — O(distinct values) state — is the wrong shape at 10^10 rows.
+# domains, where the exact multiplicity histogram (ivm.maintain_distinct
+# read by ivm.quantiles_from_multiplicity) — O(distinct values) state —
+# is the wrong shape at 10^10 rows.
 #
 # Structure: per group, the k rows whose mixed portable hash of a UNIQUE
 # numeric row id is smallest — i.e. a uniform random sample of rows
@@ -406,7 +408,6 @@ def maintain_qsample(
     id_col: str,
     k: int = 256,
     epoch_id: str | int | None = None,
-    change_col: str = "change_type",
     n_salt: int = 16,
 ) -> dict:
     """Advance a persisted per-group quantile-sample ``LakeTable``
@@ -419,8 +420,10 @@ def maintain_qsample(
     REFUSED, same contract as :func:`maintain_kmv`: a bottom-k sample
     cannot re-admit the row the deleted one displaced, so the
     maintained sketch would silently stop equaling the one-shot build —
-    invertible feeds belong to ``ivm.maintain_percentiles``'s exact
-    multiplicity table. The maintained sketch EQUALS the one-shot
+    invertible feeds belong to the exact multiplicity histogram
+    (``ivm.maintain_distinct`` + ``ivm.quantiles_from_multiplicity``)
+    or to the pipeline's ``maintain_quantiles`` sample, which stays
+    exact under retractions. The maintained sketch EQUALS the one-shot
     :func:`qsample_sketch` of all epochs' rows (exact homomorphism),
     which is what the property tests and the oracle twin assert.
     """
@@ -429,15 +432,14 @@ def maintain_qsample(
     from data_ingestion_resolution_platform_spark.operators.topk import grouped_topk
 
     keys = list(group_cols)
-    retract = changes.filter(
-        F.col(change_col).isin("delete", "update_preimage")
-    ).limit(1)
-    if retract.count() > 0:
-        raise ValueError(
-            "maintain_qsample is insert-only (a bottom-k sample cannot "
-            "re-admit a displaced row); use ivm.maintain_percentiles for "
-            "invertible feeds"
-        )
+    _refuse_retractions(
+        changes,
+        "maintain_qsample",
+        "a bottom-k sample cannot re-admit a displaced row",
+        "ivm.maintain_distinct + ivm.quantiles_from_multiplicity (exact "
+        "histogram) or CDCPipeline(maintain_quantiles=True) (a sample that "
+        "stays exact under retractions)",
+    )
     delta = changes.select(
         *keys,
         kmv_hash(F.col(id_col)).alias("_h"),

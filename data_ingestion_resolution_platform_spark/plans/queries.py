@@ -1931,6 +1931,23 @@ _DERIVED_FEED_SQL = """
 """
 
 
+def _replayed_pipeline(spark: SparkSession, sf_dir: str, name: str, **flags):
+    """A fresh ``CDCPipeline(**flags)`` under
+    ``/tmp/dirp_pipeline_<name>_<sf tag>`` that has replayed the derived
+    code feed in 3 LSN-ranged epochs."""
+    import shutil
+
+    from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
+
+    tag = os.path.basename(os.path.normpath(sf_dir))
+    wh = f"/tmp/dirp_pipeline_{name}_{tag}"
+    shutil.rmtree(wh, ignore_errors=True)
+    feed = _derived_code_feed(spark, sf_dir)
+    pipe = CDCPipeline(spark, feed_dir="unused", warehouse=wh, **flags)
+    pipe.replay_bounded(feed, epochs=3)
+    return pipe
+
+
 def q_pipeline_cdc_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL engine under the driver's hard gate: derived change feed
     → LSN-ranged epoch replay (fused resolve+conflict detection, lineage
@@ -1939,16 +1956,7 @@ def q_pipeline_cdc_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. The oracle is the pure-SQL LWW collapse of the same feed; the
     equality IS the north rule's "matches the reference's final table
     state after replay" check at driver scale."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    wh = f"/tmp/dirp_pipeline_e2e_{tag}"
-    shutil.rmtree(wh, ignore_errors=True)
-    feed = _derived_code_feed(spark, sf_dir)
-    pipe = CDCPipeline(spark, feed_dir="unused", warehouse=wh)
-    pipe.replay_bounded(feed, epochs=3)
+    pipe = _replayed_pipeline(spark, sf_dir, "e2e")
     return pipe.target.read().select(
         "repo", "path", "lsn", "op", "ts", "commit", "lang", "content"
     )
@@ -2013,18 +2021,7 @@ def q_pipeline_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     type-2 history table per epoch alongside the LWW target (own
     exactly-once ledger, O(delta) apply). Oracle: one-shot SCD2 SQL
     over the same derived feed."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    wh = f"/tmp/dirp_pipeline_hist_{tag}"
-    shutil.rmtree(wh, ignore_errors=True)
-    feed = _derived_code_feed(spark, sf_dir)
-    pipe = CDCPipeline(
-        spark, feed_dir="unused", warehouse=wh, maintain_history=True
-    )
-    pipe.replay_bounded(feed, epochs=3)
+    pipe = _replayed_pipeline(spark, sf_dir, "hist", maintain_history=True)
     return pipe.history.read().select(
         "repo", "path", "commit", "lang", "content",
         "valid_from_lsn", "valid_to_lsn", "is_current",
@@ -2069,21 +2066,11 @@ def q_pipeline_epoch_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes each epoch's conflicted-key count (distinct
     (lang, sha256(content)) signatures per (repo, path) within the
     epoch) straight from the feed in SQL."""
-    import shutil
-
     from data_ingestion_resolution_platform_spark.streaming.lineage import (
         status_history,
     )
-    from data_ingestion_resolution_platform_spark.streaming.pipeline import (
-        CDCPipeline,
-    )
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    wh = f"/tmp/dirp_pipeline_status_{tag}"
-    shutil.rmtree(wh, ignore_errors=True)
-    feed = _derived_code_feed(spark, sf_dir)
-    pipe = CDCPipeline(spark, feed_dir="unused", warehouse=wh)
-    pipe.replay_bounded(feed, epochs=3)
+    pipe = _replayed_pipeline(spark, sf_dir, "status")
     return status_history(pipe.lineage.read())
 
 
@@ -2117,16 +2104,7 @@ def q_pipeline_maintained_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates the pure-SQL LWW collapse of the whole feed: the
     maintained table must equal the recomputed truth after 3 epochs of
     inserts, updates, deletes, and ledger-guarded commits."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    wh = f"/tmp/dirp_pipeline_stats_{tag}"
-    shutil.rmtree(wh, ignore_errors=True)
-    feed = _derived_code_feed(spark, sf_dir)
-    pipe = CDCPipeline(spark, feed_dir="unused", warehouse=wh, maintain_stats=True)
-    pipe.replay_bounded(feed, epochs=3)
+    pipe = _replayed_pipeline(spark, sf_dir, "stats", maintain_stats=True)
     return pipe.stats.read().select("repo", "n_paths", "total_bytes")
 
 
@@ -2155,18 +2133,7 @@ def q_pipeline_maintained_leaderboard(spark: SparkSession, sf_dir: str) -> DataF
     ledger (``operators/ivm.py maintain_topk``). Shares
     ``SQL_IVM_TOPK``'s oracle: the maintained leaderboard must converge
     to the top-3 recomputed from the full-feed LWW state."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    wh = f"/tmp/dirp_pipeline_lb_{tag}"
-    shutil.rmtree(wh, ignore_errors=True)
-    feed = _derived_code_feed(spark, sf_dir)
-    pipe = CDCPipeline(
-        spark, feed_dir="unused", warehouse=wh, maintain_leaderboard=True
-    )
-    pipe.replay_bounded(feed, epochs=3)
+    pipe = _replayed_pipeline(spark, sf_dir, "lb", maintain_leaderboard=True)
     return pipe.leaderboard.read().select(
         "repo", "path", F.col("lb_val").alias("nb")
     )
@@ -2892,13 +2859,7 @@ def q_pipeline_maintained_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = _derived_code_feed(spark, sf_dir)
     thr = feed.agg(F.max("lsn")).collect()[0][0] // 2
     s1, s2 = _repo_dim(spark, 1), _repo_dim(spark, 2)
-    pipe = CDCPipeline(
-        spark,
-        feed_dir="unused",
-        warehouse=wh,
-        maintain_view=True,
-        view_attrs=("lang", "commit"),
-    )
+    pipe = CDCPipeline(spark, feed_dir="unused", warehouse=wh, maintain_view=True)
     pipe.seed_dim(s1)
     pipe.replay_bounded(feed.filter(F.col("lsn") <= thr), epochs=1)
     pipe.apply_dim_changes(
@@ -3435,12 +3396,7 @@ def q_pipeline_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = _derived_code_feed(spark, sf_dir)
     thr = feed.agg(F.max("lsn")).collect()[0][0] // 2
     pipe = CDCPipeline(
-        spark,
-        feed_dir="unused",
-        warehouse=wh,
-        maintain_stats=True,
-        maintain_view=True,
-        view_attrs=("lang", "commit"),
+        spark, feed_dir="unused", warehouse=wh, maintain_stats=True, maintain_view=True
     )
     pipe.seed_dim(_repo_dim(spark, 1))
     pipe.replay_bounded(feed.filter(F.col("lsn") <= thr), epochs=1)
@@ -4885,19 +4841,9 @@ def q_pipeline_maintained_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang in the final state; the oracle rebuilds the cells from the
     pure-SQL LWW collapse and probes identically — exact equality
     because CM counters are additive under signed deltas."""
-    import shutil
-
     from data_ingestion_resolution_platform_spark.operators.sketch import cms_lookup
-    from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    wh = f"/tmp/dirp_pipeline_freq_{tag}"
-    shutil.rmtree(wh, ignore_errors=True)
-    feed = _derived_code_feed(spark, sf_dir)
-    pipe = CDCPipeline(
-        spark, feed_dir="unused", warehouse=wh, maintain_freq=True, freq_width=32
-    )
-    pipe.replay_bounded(feed, epochs=3)
+    pipe = _replayed_pipeline(spark, sf_dir, "freq", maintain_freq=True, freq_width=32)
     cand = pipe.target.read().select("lang").distinct()
     return cms_lookup(pipe.freq.read(), cand, "lang", depth=4, width=32)
 
@@ -5085,18 +5031,7 @@ def q_pipeline_maintained_quantiles(spark: SparkSession, sf_dir: str) -> DataFra
     paths/repo of the derived feed against k = 8 keep the truncation and
     back-fill paths genuinely exercised (a k ≥ group size sample would
     pass vacuously)."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    wh = f"/tmp/dirp_pipeline_qs_{tag}"
-    shutil.rmtree(wh, ignore_errors=True)
-    feed = _derived_code_feed(spark, sf_dir)
-    pipe = CDCPipeline(
-        spark, feed_dir="unused", warehouse=wh, maintain_quantiles=True, quantile_k=8
-    )
-    pipe.replay_bounded(feed, epochs=3)
+    pipe = _replayed_pipeline(spark, sf_dir, "qs", maintain_quantiles=True, quantile_k=8)
     return pipe.qsample.read().select(
         "repo", "path", F.col("qs_val").alias("clen")
     )

@@ -33,8 +33,37 @@ import shutil
 import time
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+#: The change-data feed (CDF) contract every maintainer reads, defined
+#: once beside :func:`snapshot_diff`, which produces it: each change
+#: row carries ``CHANGE_COL`` holding one of the four change types.
+CHANGE_COL = "change_type"
+INSERT = "insert"
+DELETE = "delete"
+PREIMAGE = "update_preimage"
+POSTIMAGE = "update_postimage"
+#: change type → contribution sign: after-images add, before-images
+#: (deletes carry the before-image) retract
+CHANGE_SIGN = {INSERT: 1, POSTIMAGE: 1, PREIMAGE: -1, DELETE: -1}
+
+
+def change_sign() -> Column:
+    """The row's ±1 :data:`CHANGE_SIGN` (NULL for an unknown type)."""
+    return F.create_map(*[F.lit(x) for kv in CHANGE_SIGN.items() for x in kv])[
+        F.col(CHANGE_COL)
+    ]
+
+
+def is_positive() -> Column:
+    """The rows that carry an after-image (insert / update_postimage)."""
+    return F.col(CHANGE_COL).isin(INSERT, POSTIMAGE)
+
+
+def is_retraction() -> Column:
+    """The rows that retract a before-image (delete / update_preimage)."""
+    return F.col(CHANGE_COL).isin(DELETE, PREIMAGE)
 
 
 def _dir_stats(path: str) -> tuple[int, int]:
@@ -106,27 +135,27 @@ def snapshot_diff(
     for c in compare:
         changed = changed | ~(F.col(f"_a_{c}").eqNullSafe(F.col(f"_b_{c}")))
     change_type = (
-        F.when(F.col("_in_a").isNull(), F.lit("insert"))
-        .when(F.col("_in_b").isNull(), F.lit("delete"))
-        .when(changed, F.lit("update_postimage"))
+        F.when(F.col("_in_a").isNull(), F.lit(INSERT))
+        .when(F.col("_in_b").isNull(), F.lit(DELETE))
+        .when(changed, F.lit(POSTIMAGE))
     )
     if include_preimages:
         def img(change: str, side: str) -> F.Column:
             return F.struct(
-                F.lit(change).alias("change_type"),
+                F.lit(change).alias(CHANGE_COL),
                 *[F.col(f"_{side}_{c}").alias(c) for c in compare],
             )
 
         rows = (
-            F.when(F.col("_in_a").isNull(), F.array(img("insert", "b")))
-            .when(F.col("_in_b").isNull(), F.array(img("delete", "a")))
-            .when(changed, F.array(img("update_preimage", "a"), img("update_postimage", "b")))
+            F.when(F.col("_in_a").isNull(), F.array(img(INSERT, "b")))
+            .when(F.col("_in_b").isNull(), F.array(img(DELETE, "a")))
+            .when(changed, F.array(img(PREIMAGE, "a"), img(POSTIMAGE, "b")))
         )
         # explode skips NULL arrays (unchanged keys) — no extra filter
         ex = j.select(*key_list, F.explode(rows).alias("_chg"))
         return ex.select(
             *key_list,
-            F.col("_chg.change_type").alias("change_type"),
+            F.col(f"_chg.{CHANGE_COL}").alias(CHANGE_COL),
             *[F.col(f"_chg.{c}").alias(c) for c in compare],
         )
     out_vals = [
@@ -136,8 +165,8 @@ def snapshot_diff(
         for c in compare
     ]
     return (
-        j.select(*key_list, change_type.alias("change_type"), *out_vals)
-        .filter(F.col("change_type").isNotNull())
+        j.select(*key_list, change_type.alias(CHANGE_COL), *out_vals)
+        .filter(F.col(CHANGE_COL).isNotNull())
     )
 
 
@@ -158,8 +187,8 @@ def apply_changelog(
         changes,
         keys,
         epoch_id=epoch_id,
-        delete_condition=F.col("change_type") == "delete",
-        drop_cols=("change_type",),
+        delete_condition=F.col(CHANGE_COL) == DELETE,
+        drop_cols=(CHANGE_COL,),
     )
 
 

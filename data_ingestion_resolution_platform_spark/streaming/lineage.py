@@ -70,7 +70,7 @@ def status_history(lineage: DataFrame) -> DataFrame:
     )
 
 
-def lineage_rows(batch: DataFrame, epoch: int, lsn_col: str = "lsn", op_col: str = "op") -> DataFrame:
+def lineage_rows(batch: DataFrame, epoch: int, lsn_col: str = "lsn") -> DataFrame:
     """One row per input partition: offsets + op counts.
 
     Computed with a single partial-aggregating groupBy on
@@ -81,9 +81,9 @@ def lineage_rows(batch: DataFrame, epoch: int, lsn_col: str = "lsn", op_col: str
         batch.groupBy(F.spark_partition_id().alias("partition_id"))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.sum((F.col(op_col) == "I").cast("long")).alias("n_inserts"),
-            F.sum((F.col(op_col) == "U").cast("long")).alias("n_updates"),
-            F.sum((F.col(op_col) == "D").cast("long")).alias("n_deletes"),
+            F.sum((F.col("op") == "I").cast("long")).alias("n_inserts"),
+            F.sum((F.col("op") == "U").cast("long")).alias("n_updates"),
+            F.sum((F.col("op") == "D").cast("long")).alias("n_deletes"),
             F.min(lsn_col).alias("min_lsn"),
             F.max(lsn_col).alias("max_lsn"),
         )

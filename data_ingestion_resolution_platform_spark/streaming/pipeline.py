@@ -35,6 +35,10 @@ from data_ingestion_resolution_platform_spark.functions.hashing import content_s
 from data_ingestion_resolution_platform_spark.operators.cdc import resolve_and_detect
 from data_ingestion_resolution_platform_spark.sources.feed import CHANGE_FEED_SCHEMA
 from data_ingestion_resolution_platform_spark.sources.lake import (
+    CHANGE_COL,
+    INSERT,
+    POSTIMAGE,
+    PREIMAGE,
     LakeTable,
     MorLakeTable,
     PartitionedLakeTable,
@@ -149,13 +153,11 @@ class EpochChange:
     def changes(self, proj) -> DataFrame:
         """The signed pre/post mini-CDF projected onto ``proj`` (column
         names or expressions valid over both target and winner rows),
-        with a ``change_type`` column."""
-        post = self.post.select(*proj, F.lit("update_postimage").alias("change_type"))
+        with a ``CHANGE_COL`` column."""
+        post = self.post.select(*proj, F.lit(POSTIMAGE).alias(CHANGE_COL))
         if self.pre is None:
             return post
-        return self.pre.select(
-            *proj, F.lit("update_preimage").alias("change_type")
-        ).unionByName(post)
+        return self.pre.select(*proj, F.lit(PREIMAGE).alias(CHANGE_COL)).unionByName(post)
 
     def release(self) -> None:
         if self.pre is not None:
@@ -166,16 +168,48 @@ class EpochChange:
 class CDCPipeline:
     """Config + orchestration for the source-code-table CDC engine.
 
-    Natural key ``(repo, path)``; identity signature
-    ``(lang, sha256(content))``; winner = last writer by LSN
-    (BASELINE.json north rule, SURVEY.md §1.4).
+    The feed contract is fixed (BASELINE.json north rule, SURVEY.md
+    §1.4; ``sources/feed.CHANGE_FEED_SCHEMA``): natural key ``keys``
+    = ``(repo, path)``, identity signature ``(lang, sha256(content))``,
+    winner = last writer by ``lsn_col``, and the ``op`` envelope column
+    I/U/D. The views' change-sets speak the one CDF vocabulary of
+    ``sources/lake.py`` (``CHANGE_COL`` and its four change types).
+
+    The maintained views are defined over that contract, so their
+    shapes (group keys, tracked attributes, ordering measures,
+    ``leaderboard_k``, ``freq_depth``) are the class constants below,
+    not fields. Only the sketch width ``freq_width`` and the sample
+    size ``quantile_k`` differ among callers (registry vs perfbench).
+
+    One small-file policy (``small_file_bytes`` / ``compact_min_dirs``)
+    arms every append-only stream: the conflicts and lineage audits and
+    the SCD2 history's closed versions. At one dir per epoch forever,
+    10^4 epochs mean 10^4s of tiny files on every full read, so a stream
+    folds once ≥ ``compact_min_dirs`` dirs are live AND the mean file
+    sits below ``small_file_bytes`` (``sources/lake.LakeTable``'s
+    measured auto-compaction). 16 dirs keep the short test pipelines
+    fold-free. A MOR target folds its deltas every 8 epochs.
     """
+
+    keys = ("repo", "path")
+    lsn_col = "lsn"
+    stats_keys = ("repo",)
+    history_attrs = ("commit", "lang", "content")
+    view_join_key = "repo"
+    view_attrs = ("lang", "commit")
+    leaderboard_keys = ("repo",)
+    leaderboard_order = "length(content)"
+    leaderboard_k = 3
+    freq_item = "lang"
+    freq_depth = 4
+    quantile_keys = ("repo",)
+    quantile_value = "length(content)"
+    small_file_bytes = 64 << 20
+    compact_min_dirs = 16
 
     spark: SparkSession
     feed_dir: str
     warehouse: str
-    keys: tuple[str, ...] = ("repo", "path")
-    lsn_col: str = "lsn"
     renames: dict = field(default_factory=dict)
     n_buckets: int = 32
     max_bucket_bytes: int = 256 << 20
@@ -184,15 +218,6 @@ class CDCPipeline:
     # (ingest-optimized — O(batch) epoch cost even when every epoch
     # touches every bucket).
     target_mode: str = "cow"
-    compact_every: int | None = 8
-    # measured small-file auto-compaction for the append-only audit
-    # streams (conflicts/lineage): at one dir per epoch forever, 10^4
-    # epochs mean 10^4s of tiny files on every audit read — fold when
-    # ≥ audit_compact_min_dirs dirs are live AND mean file size sits
-    # below the threshold (sources/lake.LakeTable small-file policy).
-    # min_dirs=16 keeps the short test pipelines fold-free.
-    audit_small_file_bytes: int | None = 64 << 20
-    audit_compact_min_dirs: int = 16
     # opt-in incrementally-maintained metrics table (operators/ivm.py):
     # per-stats_key row counts + content bytes kept in lock-step with
     # the target WITHOUT ever rescanning it — the epoch's pre-images
@@ -200,13 +225,11 @@ class CDCPipeline:
     # and post-images (the winners) form an invertible mini-CDF whose
     # signed delta advances the aggregate.
     maintain_stats: bool = False
-    stats_keys: tuple[str, ...] = ("repo",)
     # opt-in SCD2 history table (operators/scd.py): every attribute
     # change of (commit, lang, content) becomes a validity interval,
     # advanced per epoch at O(delta) by historize_epoch's exactly-once
     # MERGE — the warehouse-facing audit twin of the LWW target.
     maintain_history: bool = False
-    history_attrs: tuple[str, ...] = ("commit", "lang", "content")
     # opt-in incrementally-maintained denormalized JOIN view
     # (operators/ivm.py maintain_join): ``target ⋈ dim`` kept in
     # lock-step with the target WITHOUT recomputing the join — the
@@ -216,8 +239,6 @@ class CDCPipeline:
     # dim changes arrive via :meth:`apply_dim_changes`. The dim must be
     # seeded once via :meth:`seed_dim` before the first epoch.
     maintain_view: bool = False
-    view_join_key: str = "repo"
-    view_attrs: tuple[str, ...] = ("lang", "commit")
     # opt-in incrementally-maintained per-group top-k read model
     # (operators/ivm.py maintain_topk): the reference's paginated
     # ORDER BY … LIMIT list endpoints as a continuously-fresh table.
@@ -225,9 +246,6 @@ class CDCPipeline:
     # measure is precomputed into the view as ``lb_val`` so the stored
     # buffer, the mini-CDF, and the back-fill all rank identically.
     maintain_leaderboard: bool = False
-    leaderboard_keys: tuple[str, ...] = ("repo",)
-    leaderboard_order: str = "length(content)"
-    leaderboard_k: int = 3
     # opt-in incrementally-maintained count-min frequency sketch
     # (operators/sketch.py maintain_cms): bounded-state "how often does
     # X occur in the current table" point queries without ever scanning
@@ -240,8 +258,6 @@ class CDCPipeline:
     # columns (repo, path, commit, lang, content) — the mini-CDF
     # projects exactly those.
     maintain_freq: bool = False
-    freq_item: str = "lang"
-    freq_depth: int = 4
     freq_width: int = 128
     # opt-in incrementally-maintained per-group uniform row sample — the
     # quantile read model that LIFTS sketch.maintain_qsample's
@@ -257,8 +273,6 @@ class CDCPipeline:
     # ``quantile_value`` read off the sample with rank error
     # O(1/sqrt(k)); state is k rows per group regardless of table size.
     maintain_quantiles: bool = False
-    quantile_keys: tuple[str, ...] = ("repo",)
-    quantile_value: str = "length(content)"
     quantile_k: int = 64
 
     def __post_init__(self) -> None:
@@ -285,7 +299,7 @@ class CDCPipeline:
                 os.path.join(self.warehouse, "target"),
                 keys=list(self.keys),
                 lsn_col=self.lsn_col,
-                compact_every=self.compact_every,
+                compact_every=8,
             )
         else:
             raise ValueError(f"unknown target_mode {self.target_mode!r} (cow|mor)")
@@ -295,15 +309,15 @@ class CDCPipeline:
             self.spark,
             os.path.join(self.warehouse, "conflicts"),
             append_only=True,
-            compact_small_file_bytes=self.audit_small_file_bytes,
-            compact_min_dirs=self.audit_compact_min_dirs,
+            compact_small_file_bytes=self.small_file_bytes,
+            compact_min_dirs=self.compact_min_dirs,
         )
         self.lineage = LakeTable(
             self.spark,
             os.path.join(self.warehouse, "lineage"),
             append_only=True,
-            compact_small_file_bytes=self.audit_small_file_bytes,
-            compact_min_dirs=self.audit_compact_min_dirs,
+            compact_small_file_bytes=self.small_file_bytes,
+            compact_min_dirs=self.compact_min_dirs,
         )
 
         def side_table(name: str, enabled: bool):
@@ -319,7 +333,11 @@ class CDCPipeline:
             )
 
             self.history = Scd2HistoryStore(
-                self.spark, os.path.join(self.warehouse, "history"), list(self.keys)
+                self.spark,
+                os.path.join(self.warehouse, "history"),
+                list(self.keys),
+                closed_small_file_bytes=self.small_file_bytes,
+                closed_compact_min_dirs=self.compact_min_dirs,
             )
         else:
             self.history = None
@@ -610,7 +628,7 @@ class CDCPipeline:
         else:
             r_before = r_changes.drop("change_type").limit(0)
         s_before = self.dim.read()
-        s_changes = s_before.limit(0).withColumn("change_type", F.lit("insert"))
+        s_changes = s_before.limit(0).withColumn(CHANGE_COL, F.lit(INSERT))
         maintain_join(
             self.view,
             r_changes,
@@ -684,7 +702,7 @@ class CDCPipeline:
             )
             if r_before is None:
                 raise ValueError("apply_dim_changes before any target state exists")
-        r_changes = r_before.limit(0).withColumn("change_type", F.lit("insert"))
+        r_changes = r_before.limit(0).withColumn(CHANGE_COL, F.lit(INSERT))
         out = maintain_join(
             self.view,
             r_changes,
@@ -700,7 +718,7 @@ class CDCPipeline:
         # would land as duplicate keys in the MERGE batch
         apply_changelog(
             self.dim,
-            s_changes.filter(F.col("change_type") != "update_preimage"),
+            s_changes.filter(F.col(CHANGE_COL) != PREIMAGE),
             [self.view_join_key],
             epoch_id=f"dim_{epoch_id}",
         )

@@ -5,6 +5,7 @@ No Spark: the harness is driven with fake seed/epoch/rebuild callables.
 
 from __future__ import annotations
 
+import ast
 import os
 import pathlib
 import re
@@ -143,6 +144,19 @@ def test_growth_sweep_removes_its_dir_when_a_step_raises(monkeypatch, tmp_path):
         _sweep(log, raise_at=2)
     assert ("seed", 1, "a") in log  # the seed wrote under the sweep dir
     assert list(tmp_path.iterdir()) == []
+
+
+def test_every_growth_sweep_warms_up_untimed():
+    """JIT and codegen belong in an untimed warm-up, not in the first
+    size's timings: every corpus sweep passes ``warmup=``."""
+    tree = ast.parse((ROOT / "bench.py").read_text())
+    calls = [
+        node for node in ast.walk(tree)
+        if isinstance(node, ast.Call) and getattr(node.func, "id", None) == "growth_sweep"
+    ]
+    assert len(calls) >= 7
+    cold = [c.lineno for c in calls if "warmup" not in {kw.arg for kw in c.keywords}]
+    assert not cold, f"growth_sweep calls without warmup= at bench.py lines {cold}"
 
 
 def test_median_is_the_upper_median():

@@ -211,14 +211,12 @@ def test_pipeline_audit_folds_keep_status_exact(spark, tmp_path):
     from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
 
     feed = synth_change_feed(spark, 3000, n_repos=12, seed=21)
-    folding = CDCPipeline(
-        spark, feed_dir="unused", warehouse=str(tmp_path / "fold"),
-        audit_small_file_bytes=1 << 20, audit_compact_min_dirs=2,
-    )
-    plain = CDCPipeline(
-        spark, feed_dir="unused", warehouse=str(tmp_path / "plain"),
-        audit_small_file_bytes=None,
-    )
+    folding = CDCPipeline(spark, feed_dir="unused", warehouse=str(tmp_path / "fold"))
+    plain = CDCPipeline(spark, feed_dir="unused", warehouse=str(tmp_path / "plain"))
+    for audit in (folding.conflicts, folding.lineage):
+        audit.compact_small_file_bytes, audit.compact_min_dirs = 1 << 20, 2
+    for audit in (plain.conflicts, plain.lineage):
+        audit.compact_small_file_bytes = None
     for p in (folding, plain):
         p.replay_bounded(feed, epochs=4)
     assert folding.lineage.append_stats()["compacted_gen"] >= 1
@@ -233,4 +231,31 @@ def test_pipeline_audit_folds_keep_status_exact(spark, tmp_path):
     cols = sorted(c for c in plain.conflicts.read().columns if c != "e")
     rows_f = sorted(tuple(r) for r in folding.conflicts.read().select(*cols).collect())
     rows_p = sorted(tuple(r) for r in plain.conflicts.read().select(*cols).collect())
+    assert rows_f == rows_p
+
+
+def test_pipeline_history_closed_side_folds(spark, tmp_path, monkeypatch):
+    """The pipeline arms its SCD2 history's closed-version stream with
+    the same small-file policy as the audit streams; a history that
+    folds reads the same as one that never does."""
+    from data_ingestion_resolution_platform_spark.sources.feed import synth_change_feed
+    from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
+
+    feed = synth_change_feed(spark, 3000, n_repos=12, seed=21)
+    plain = CDCPipeline(
+        spark, feed_dir="unused", warehouse=str(tmp_path / "plain"), maintain_history=True
+    )
+    plain.history._closed.compact_small_file_bytes = None
+    monkeypatch.setattr(CDCPipeline, "small_file_bytes", 1 << 20)
+    monkeypatch.setattr(CDCPipeline, "compact_min_dirs", 2)
+    folding = CDCPipeline(
+        spark, feed_dir="unused", warehouse=str(tmp_path / "fold"), maintain_history=True
+    )
+    for p in (folding, plain):
+        p.replay_bounded(feed, epochs=4)
+    assert folding.history._closed.append_stats()["compacted_gen"] >= 1
+    assert plain.history._closed.append_stats()["compacted_gen"] == 0
+    cols = sorted(plain.history.read().columns)
+    rows_f = sorted(tuple(r) for r in folding.history.read().select(*cols).collect())
+    rows_p = sorted(tuple(r) for r in plain.history.read().select(*cols).collect())
     assert rows_f == rows_p

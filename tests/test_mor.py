@@ -94,12 +94,9 @@ def test_pipeline_mor_target_equals_cow_target(spark, tmp_path):
     feed = synth_change_feed(spark, 5000, n_repos=12, seed=17)
     cow = CDCPipeline(spark, feed_dir="unused", warehouse=str(tmp_path / "cow"))
     mor = CDCPipeline(
-        spark,
-        feed_dir="unused",
-        warehouse=str(tmp_path / "mor"),
-        target_mode="mor",
-        compact_every=2,
+        spark, feed_dir="unused", warehouse=str(tmp_path / "mor"), target_mode="mor"
     )
+    mor.target.compact_every = 2
     cow.replay_bounded(feed, epochs=3)
     mor.replay_bounded(feed, epochs=3)
     a, b = cow.target.read(), mor.target.read()

@@ -62,7 +62,7 @@ def pipe(spark, tmp_path):
     shutil.rmtree(wh, ignore_errors=True)
     p = CDCPipeline(
         spark, feed_dir="unused", warehouse=wh,
-        maintain_stats=True, maintain_view=True, view_attrs=("lang", "commit"),
+        maintain_stats=True, maintain_view=True,
     )
     dim = spark.createDataFrame(
         [(f"repo_{i}", f"org_{i % 2}", i % 3) for i in range(3)],  # repo_3 NOT in dim

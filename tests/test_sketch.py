@@ -8,10 +8,13 @@ to exact Python recomputes and the maintainers to batch rebuilds.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from data_ingestion_resolution_platform_spark.operators import ivm
 from data_ingestion_resolution_platform_spark.operators.sketch import (
     HASH_SPACE,
     MIX_A,
@@ -125,8 +128,11 @@ def test_maintain_kmv_incremental_equals_batch(spark, people, tmp_path):
 def test_maintain_kmv_refuses_retractions(spark, people, tmp_path):
     t = LakeTable(spark, str(tmp_path / "kmv_bad"))
     bad = people.withColumn("change_type", F.lit("delete"))
-    with pytest.raises(ValueError, match="insert-only"):
+    with pytest.raises(ValueError, match="insert-only") as err:
         maintain_kmv(t, bad, ["g"], "v", k=10, epoch_id="e1")
+    # the advice names maintainers that exist
+    cited = re.findall(r"ivm\.(\w+)", str(err.value))
+    assert cited and all(hasattr(ivm, name) for name in cited), cited
 
 
 def _cms_python(items: list[str], depth: int, width: int) -> dict:

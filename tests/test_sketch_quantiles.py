@@ -16,9 +16,12 @@ qsample = quantiles). Pinned properties:
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
+from data_ingestion_resolution_platform_spark.operators import ivm
 from data_ingestion_resolution_platform_spark.operators.sketch import (
     maintain_qsample,
     qsample_merge,
@@ -89,8 +92,11 @@ def test_retractions_refused(spark, tmp_path):
     bad = _rows(spark, range(10), lambda i: "g", lambda i: i).withColumn(
         "change_type", F.lit("delete")
     )
-    with pytest.raises(ValueError, match="insert-only"):
+    with pytest.raises(ValueError, match="insert-only") as err:
         maintain_qsample(t, bad, ["g"], "v", "id", k=16, epoch_id=1)
+    # the advice names maintainers that exist
+    cited = re.findall(r"ivm\.(\w+)", str(err.value))
+    assert cited and all(hasattr(ivm, name) for name in cited), cited
 
 
 def test_bounded_state_and_fill(spark):
