@@ -1011,7 +1011,7 @@ def run_rescan_growth(parallelism: int) -> dict:
     )
     from data_ingestion_resolution_platform_spark.plans.queries import _funnel_per_user
     from data_ingestion_resolution_platform_spark.session import get_spark
-    from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
+    from data_ingestion_resolution_platform_spark.sources.lake import DELETE_COL, LakeTable
 
     spark = get_spark("bench_rescan_growth", parallelism=parallelism)
     n0 = 50_000
@@ -1060,11 +1060,11 @@ def run_rescan_growth(parallelism: int) -> dict:
         # backdated view — both flip all three stages
         dels = users.select(
             F.col("user_id").alias("event_id"), "user_id"
-        ).withColumn("_del", F.lit(True))
+        ).withColumn(DELETE_COL, F.lit(True))
         ins = users.select(
             (F.col("user_id") + 100_000_000 * j).alias("event_id"),
             "user_id",
-        ).withColumn("_del", F.lit(False))
+        ).withColumn(DELETE_COL, F.lit(False))
         batch = ins.unionByName(dels).withColumn(
             "event_type", F.lit("view")
         ).withColumn(
@@ -1073,10 +1073,7 @@ def run_rescan_growth(parallelism: int) -> dict:
         # the lake advance is the TARGET-table write (bucketed /
         # MoR at scale — benched by the other sweeps); the timed
         # window here is the read-model rescan alone
-        lake.merge(
-            batch, ["event_id"], epoch_id=f"l{j}",
-            delete_condition=F.col("_del"), drop_cols=["_del"],
-        )
+        lake.merge(batch, ["event_id"], epoch_id=f"l{j}")
 
         def recompute(aff):
             return funnel_rows(lake.read().join(F.broadcast(aff), on="user_id"))
@@ -1344,14 +1341,16 @@ def run_compaction_policy(parallelism: int) -> dict:
             )
             # untimed bootstrap: seeded base, compacted once so every
             # config starts from the same (base, zero deltas) state
-            t.merge(batch(0, base_rows, salt=0), epoch_id="seed")
+            t.merge(batch(0, base_rows, salt=0), ["k"], epoch_id="seed")
             t.compact()
             ingested = written = 0
             compactions = 0
             merge_secs = []
             for e in range(epochs):
                 s, sec = _timed(lambda: t.merge(
-                    batch((e * epoch_rows) % base_rows, epoch_rows, salt=10**9 + e), epoch_id=e
+                    batch((e * epoch_rows) % base_rows, epoch_rows, salt=10**9 + e),
+                    ["k"],
+                    epoch_id=e,
                 ))
                 merge_secs.append(sec)
                 ingested += s["delta_bytes"]

@@ -41,6 +41,7 @@ from data_ingestion_resolution_platform_spark.operators.dedup import minhash_ban
 from data_ingestion_resolution_platform_spark.sources.lake import (
     CHANGE_COL,
     DELETE,
+    DELETE_COL,
     PREIMAGE,
     is_positive,
 )
@@ -141,14 +142,8 @@ def incremental_minhash_epoch(
         .select(F.col(id_col).alias("doc"))
         .distinct()
         .withColumn("bands", F.lit(None).cast("array<struct<band:int,bucket:long>>"))
-        .withColumn("_del", F.lit(True))
+        .withColumn(DELETE_COL, F.lit(True))
     )
-    batch = _pack(new_bands).withColumn("_del", F.lit(False)).unionByName(deletes)
-    index.merge(
-        batch,
-        ["doc"],
-        epoch_id=epoch_id,
-        delete_condition=F.col("_del"),
-        drop_cols=("_del",),
-    )
+    batch = _pack(new_bands).withColumn(DELETE_COL, F.lit(False)).unionByName(deletes)
+    index.merge(batch, ["doc"], epoch_id=epoch_id)
     return out

@@ -78,6 +78,7 @@ from pyspark.sql import functions as F
 from data_ingestion_resolution_platform_spark.operators.graph import (
     connected_components,
 )
+from data_ingestion_resolution_platform_spark.sources.lake import DELETE_COL
 
 
 def _ids(df: DataFrame, col: str) -> DataFrame:
@@ -118,9 +119,7 @@ def build_cluster_state(
         .select("id", F.coalesce("cluster_id", F.col("id")).alias("cluster_id"))
     )
     stats_l = labels.merge(full, ["id"], epoch_id=epoch_id)
-    stats_e = edges.merge(
-        canon.withColumn("alive", F.lit(True)), ["id_a", "id_b"], epoch_id=epoch_id
-    )
+    stats_e = edges.merge(canon, ["id_a", "id_b"], epoch_id=epoch_id)
     return {"labels": stats_l, "edges": stats_e}
 
 
@@ -234,32 +233,17 @@ def maintain_clusters(
         .select("id", F.coalesce("cluster_id", F.col("id")).alias("cluster_id"))
     )
 
-    # one keyed batch per store, backend-portable (COW, MoR, bucketed all
-    # accept (batch, keys, delete_condition) — no marker columns that
-    # would need dropping): label deletes ride the sentinel
-    # cluster_id = -1 (doc ids are non-negative by contract, so a real
-    # label is always ≥ 0); edge deletes ride alive = false (upserted
-    # pairs are always alive, so the stored column is constant true and
-    # never read back).
-    label_batch = relabeled.unionByName(
-        rm.select("id", F.lit(-1).cast("long").alias("cluster_id"))
+    # one keyed batch per store: removed ids and stale pairs carry the
+    # lake's delete marker
+    label_batch = relabeled.withColumn(DELETE_COL, F.lit(False)).unionByName(
+        rm.select("id", F.lit(True).alias(DELETE_COL)), allowMissingColumns=True
     )
-    stats_l = labels.merge(
-        label_batch,
-        ["id"],
-        epoch_id=epoch_id,
-        delete_condition=F.col("cluster_id") < 0,
-    )
-    edge_batch = delta.withColumn("alive", F.lit(True)).unionByName(
+    stats_l = labels.merge(label_batch, ["id"], epoch_id=epoch_id)
+    edge_batch = delta.withColumn(DELETE_COL, F.lit(False)).unionByName(
         stale.join(delta.hint("broadcast"), on=["id_a", "id_b"], how="left_anti")
-        .withColumn("alive", F.lit(False))
+        .withColumn(DELETE_COL, F.lit(True))
     )
-    stats_e = edges.merge(
-        edge_batch,
-        ["id_a", "id_b"],
-        epoch_id=epoch_id,
-        delete_condition=~F.col("alive"),
-    )
+    stats_e = edges.merge(edge_batch, ["id_a", "id_b"], epoch_id=epoch_id)
     return {"labels": stats_l, "edges": stats_e, "epoch": str(epoch_id)}
 
 
@@ -328,9 +312,7 @@ def build_triangle_state(
         "metric", F.lit("triangles")
     )
     stats_s = stats.merge(counts, ["metric"], epoch_id=epoch_id)
-    stats_e = edges.merge(
-        canon.withColumn("alive", F.lit(True)), ["id_a", "id_b"], epoch_id=epoch_id
-    )
+    stats_e = edges.merge(canon, ["id_a", "id_b"], epoch_id=epoch_id)
     return {"stats": stats_s, "edges": stats_e}
 
 
@@ -404,13 +386,10 @@ def maintain_triangle_count(
         "metric string, n_triangles long, n_edges long",
     )
     stats_s = stats.merge(counts, ["metric"], epoch_id=epoch_id)
-    edge_batch = a.withColumn("alive", F.lit(True)).unionByName(
-        r.withColumn("alive", F.lit(False))
+    edge_batch = a.withColumn(DELETE_COL, F.lit(False)).unionByName(
+        r.withColumn(DELETE_COL, F.lit(True))
     )
-    stats_e = edges.merge(
-        edge_batch, ["id_a", "id_b"], epoch_id=epoch_id,
-        delete_condition=~F.col("alive"),
-    )
+    stats_e = edges.merge(edge_batch, ["id_a", "id_b"], epoch_id=epoch_id)
     return {
         "stats": stats_s,
         "edges": stats_e,

@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 from data_ingestion_resolution_platform_spark.sources.lake import (
     CHANGE_COL,
     DELETE,
+    DELETE_COL,
     INSERT,
     change_sign,
     is_positive,
@@ -187,10 +188,9 @@ def maintain_aggregate(
         batch = delta
     try:
         return table.merge(
-            batch,
+            batch.withColumn(DELETE_COL, F.col(count_alias) <= 0),
             key_list,
             epoch_id=epoch_id,
-            delete_condition=F.col(count_alias) <= 0,
         )
     finally:
         delta.unpersist()
@@ -296,10 +296,9 @@ def maintain_distinct(
                 .alias(count_alias),
             )
             counts = count_table.merge(
-                cbatch,
+                cbatch.withColumn(DELETE_COL, F.col(count_alias) <= 0),
                 key_list,
                 epoch_id=epoch_id,
-                delete_condition=F.col(count_alias) <= 0,
             )
             # NULL values stay OUT of the multiplicity table: they never
             # move the distinct count, and a NULL inside a MERGE key
@@ -309,10 +308,9 @@ def maintain_distinct(
                 *mkeys, F.col("_new").alias("_mult")
             )
             mult = mult_table.merge(
-                mbatch,
+                mbatch.withColumn(DELETE_COL, F.col("_mult") <= 0),
                 mkeys,
                 epoch_id=epoch_id,
-                delete_condition=F.col("_mult") <= 0,
             )
             return {"counts": counts, "multiplicities": mult}
         finally:
@@ -428,10 +426,9 @@ def maintain_minmax(
             )
             batch = clean.unionByName(dirty_batch)
             return table.merge(
-                batch,
+                batch.withColumn(DELETE_COL, F.col(count_alias) <= 0),
                 key_list,
                 epoch_id=epoch_id,
-                delete_condition=F.col(count_alias) <= 0,
             )
         finally:
             j.unpersist()
@@ -590,7 +587,7 @@ def maintain_topk(
         displaced = vtouched.select(*keys).join(
             new_top.select(*keys), on=keys, how="left_anti"
         )
-        batch = new_top.withColumn("_del", F.lit(False)).unionByName(
+        batch = new_top.withColumn(DELETE_COL, F.lit(False)).unionByName(
             displaced.select(
                 *keys,
                 *[
@@ -598,17 +595,11 @@ def maintain_topk(
                     for c in cols
                     if c not in keys
                 ],
-                F.lit(True).alias("_del"),
+                F.lit(True).alias(DELETE_COL),
             ),
             allowMissingColumns=False,
         )
-        return view.merge(
-            batch,
-            keys,
-            epoch_id=epoch_id,
-            delete_condition=F.col("_del"),
-            drop_cols=("_del",),
-        )
+        return view.merge(batch, keys, epoch_id=epoch_id)
     finally:
         changes.unpersist()
 
@@ -804,12 +795,6 @@ def maintain_join(
     batch = batch.select(
         *key_list,
         *[F.col(f"_img.{c}").alias(c) for c in attrs],
-        (F.col("_maxnet") < 0).alias("_ivm_delete"),
+        (F.col("_maxnet") < 0).alias(DELETE_COL),
     )
-    return view.merge(
-        batch,
-        key_list,
-        epoch_id=epoch_id,
-        delete_condition=F.col("_ivm_delete"),
-        drop_cols=("_ivm_delete",),
-    )
+    return view.merge(batch, key_list, epoch_id=epoch_id)

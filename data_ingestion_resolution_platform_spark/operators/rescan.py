@@ -22,9 +22,8 @@ non-additive IVM uses for extreme retractions, promoted to a
 first-class operator for whole-group read models.
 
 Groups whose recompute returns no row (every contributing base row
-deleted) are DELETED from the store — encoded with an ``alive``
-sentinel column so the batch rides COW, MoR, and bucketed backends
-unchanged (same convention as `graph_incremental`).
+deleted) are DELETED from the store through the lake's delete marker
+(``sources/lake.DELETE_COL``), the same on every table layout.
 
 Exactly-once: one ledgered MERGE per epoch; the recompute reads the
 post-epoch base table, so a re-delivered epoch recomputes identical
@@ -45,6 +44,8 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from data_ingestion_resolution_platform_spark.sources.lake import DELETE_COL
 
 
 def maintain_group_rescan(
@@ -89,10 +90,8 @@ def maintain_group_rescan(
                 .select(*key_list)
                 .join(rows.hint("broadcast"), on=key_list, how="left_anti")
             )
-    batch = rows.withColumn("alive", F.lit(True)).unionByName(
-        gone.withColumn("alive", F.lit(False)), allowMissingColumns=True
+    batch = rows.withColumn(DELETE_COL, F.lit(False)).unionByName(
+        gone.withColumn(DELETE_COL, F.lit(True)), allowMissingColumns=True
     )
-    stats = store.merge(
-        batch, key_list, epoch_id=epoch_id, delete_condition=~F.col("alive")
-    )
+    stats = store.merge(batch, key_list, epoch_id=epoch_id)
     return {"store": stats, "epoch": str(epoch_id)}

@@ -30,6 +30,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_ingestion_resolution_platform_spark.sources.lake import DELETE_COL
+
 
 def scd2_history(
     feed: DataFrame,
@@ -259,9 +261,9 @@ class Scd2HistoryStore:
                 batch.select(*self.keys)
                 .distinct()
                 .join(opens.select(*self.keys), on=self.keys, how="left_anti")
-                .withColumn("__del", F.lit(True))
+                .withColumn(DELETE_COL, F.lit(True))
             )
-            open_batch = opens.withColumn("__del", F.lit(False)).unionByName(
+            open_batch = opens.withColumn(DELETE_COL, F.lit(False)).unionByName(
                 dels, allowMissingColumns=True
             )
             # skip all-open epochs: an empty append would leave a
@@ -270,13 +272,7 @@ class Scd2HistoryStore:
             # batch is deterministic
             if closed_rows.limit(1).count() > 0:
                 self._closed.append(closed_rows, epoch_id=epoch_id)
-            return self._open.merge(
-                open_batch,
-                self.keys,
-                epoch_id=epoch_id,
-                delete_condition=F.col("__del"),
-                drop_cols=["__del"],
-            )
+            return self._open.merge(open_batch, self.keys, epoch_id=epoch_id)
         finally:
             batch.unpersist()
 

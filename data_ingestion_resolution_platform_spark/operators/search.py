@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from data_ingestion_resolution_platform_spark.sources.lake import (
     CHANGE_COL,
     DELETE,
+    DELETE_COL,
     change_sign,
     is_positive,
 )
@@ -375,21 +376,14 @@ def maintain_search_index(
             epoch_id=epoch_id,
         )
     # doc lengths: post-images upsert, delete images tombstone
-    # deletes ride a sentinel dl = -1 (a real document's dl is ≥ 0), so
-    # the batch schema is backend-portable: plain COW LakeTable, MoR,
-    # and bucketed tables all accept (batch, keys, delete_condition)
-    # with no marker column to drop
     post = changes.filter(is_positive()).select(
-        F.col(id_col).alias("doc_id"), dl_expr.alias("dl")
+        F.col(id_col).alias("doc_id"), dl_expr.alias("dl"), F.lit(False).alias(DELETE_COL)
     )
     dels = changes.filter(F.col(CHANGE_COL) == DELETE).select(
-        F.col(id_col).alias("doc_id"), F.lit(-1).cast("int").alias("dl")
+        F.col(id_col).alias("doc_id"), F.lit(True).alias(DELETE_COL)
     )
     doclen_table.merge(
-        post.unionByName(dels),
-        ["doc_id"],
-        epoch_id=epoch_id,
-        delete_condition=F.col("dl") < 0,
+        post.unionByName(dels, allowMissingColumns=True), ["doc_id"], epoch_id=epoch_id
     )
     # postings + termstats: the grouped-multiplicity maintenance
     return maintain_distinct(

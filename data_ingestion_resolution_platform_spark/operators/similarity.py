@@ -27,6 +27,7 @@ from data_ingestion_resolution_platform_spark.functions.vectors import (
 from data_ingestion_resolution_platform_spark.sources.lake import (
     CHANGE_COL,
     DELETE,
+    DELETE_COL,
     is_positive,
     is_retraction,
 )
@@ -354,21 +355,14 @@ def maintain_ivf_index(
         up = ivf_kmeans_index(src, cents, vec_col, "__mid", n_cells)
     else:
         up = ivf_index(src, vec_col, "__mid", n_cells, seed, portable)
-    up = up.withColumn("_del", F.lit(False))
+    up = up.withColumn(DELETE_COL, F.lit(False))
     dels = changes.filter(F.col(CHANGE_COL) == DELETE).select(
         F.col(id_col).alias("neighbor_id"),
         F.lit(None).cast(up.schema["cq"].dataType).alias("cq"),
         F.lit(None).cast(up.schema["cell"].dataType).alias("cell"),
-        F.lit(True).alias("_del"),
+        F.lit(True).alias(DELETE_COL),
     )
-    batch = up.unionByName(dels)
-    return index.merge(
-        batch,
-        ["neighbor_id"],
-        epoch_id=epoch_id,
-        delete_condition=F.col("_del"),
-        drop_cols=("_del",),
-    )
+    return index.merge(up.unionByName(dels), ["neighbor_id"], epoch_id=epoch_id)
 
 
 class CellPartitionedIvf:

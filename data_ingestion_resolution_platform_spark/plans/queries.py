@@ -68,6 +68,7 @@ from data_ingestion_resolution_platform_spark.operators.stats import (
     percentile_rank_sql,
 )
 from data_ingestion_resolution_platform_spark.sources.feed import events_as_change_feed
+from data_ingestion_resolution_platform_spark.sources.lake import DELETE_COL
 from data_ingestion_resolution_platform_spark.util import local_df
 
 
@@ -2246,7 +2247,7 @@ def q_mor_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     for e, part in enumerate(parts, start=1):
         batch = resolve_latest(part, ["repo", "path"], "lsn")
-        t.merge(batch, epoch_id=e, delete_condition=F.col("op") == "D")
+        t.merge(batch.withColumn(DELETE_COL, F.col("op") == "D"), ["repo", "path"], epoch_id=e)
         if e == 2:
             t.compact()
     return t.read().select(
@@ -2270,7 +2271,7 @@ def _two_epoch_code_lake(spark: SparkSession, sf_dir: str, root: str):
         [feed.filter(F.col("lsn") <= thr), feed.filter(F.col("lsn") > thr)], start=1
     ):
         batch = resolve_latest(part, ["repo", "path"], "lsn")
-        t.merge(batch, ["repo", "path"], epoch_id=e, delete_condition=F.col("op") == "D")
+        t.merge(batch.withColumn(DELETE_COL, F.col("op") == "D"), ["repo", "path"], epoch_id=e)
     return t
 
 
@@ -3334,8 +3335,8 @@ def q_cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys = ["repo", "path"]
     t = LakeTable(spark, root)
     e1 = feed.filter(F.col("lsn") <= thr)
-    t.merge(resolve_latest(e1, keys, "lsn"), keys, epoch_id=1,
-            delete_condition=F.col("op") == "D")
+    t.merge(resolve_latest(e1, keys, "lsn").withColumn(DELETE_COL, F.col("op") == "D"),
+            keys, epoch_id=1)
     # epoch 2 as the producer actually sends it after evolving
     drifted = feed.filter(F.col("lsn") > thr).select(
         "lsn", "op", "ts", "repo", "path",
@@ -3348,8 +3349,8 @@ def q_cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         list(t.read().schema.fields) + [T.StructField("stars", T.LongType())]
     )
     e2 = reconcile_exprs(drifted, canonical, renames={"language": "lang"})
-    t.merge(resolve_latest(e2, keys, "lsn"), keys, epoch_id=2,
-            delete_condition=F.col("op") == "D")
+    t.merge(resolve_latest(e2, keys, "lsn").withColumn(DELETE_COL, F.col("op") == "D"),
+            keys, epoch_id=2)
     return t.read().select(
         "repo", "path", "lsn", "op", "ts", "commit", "lang", "content", "stars"
     )
@@ -5363,13 +5364,10 @@ def q_funnel_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     inserts = ev.filter(F.col("event_id") % 10 == 0)
-    delta = inserts.withColumn("_del", F.lit(False)).unionByName(
-        ghosts.withColumn("_del", F.lit(True))
+    delta = inserts.withColumn(DELETE_COL, F.lit(False)).unionByName(
+        ghosts.withColumn(DELETE_COL, F.lit(True))
     )
-    lake.merge(
-        delta, ["event_id"], epoch_id="e1",
-        delete_condition=F.col("_del"), drop_cols=["_del"],
-    )
+    lake.merge(delta, ["event_id"], epoch_id="e1")
     affected = inserts.select("user_id").unionByName(ghosts.select("user_id"))
     maintain_group_rescan(store, ["user_id"], affected, recompute, epoch_id="e1")
 
@@ -5427,13 +5425,10 @@ def q_cohort_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         store.merge(_user_weeks(lake.read()), ["user_id", "wk"], epoch_id="seed")
 
     inserts = ev.filter(F.col("event_id") % 10 == 0)
-    delta = inserts.withColumn("_del", F.lit(False)).unionByName(
-        ghosts.withColumn("_del", F.lit(True))
+    delta = inserts.withColumn(DELETE_COL, F.lit(False)).unionByName(
+        ghosts.withColumn(DELETE_COL, F.lit(True))
     )
-    lake.merge(
-        delta, ["event_id"], epoch_id="e1",
-        delete_condition=F.col("_del"), drop_cols=["_del"],
-    )
+    lake.merge(delta, ["event_id"], epoch_id="e1")
     affected = inserts.select("user_id").unionByName(ghosts.select("user_id"))
     maintain_group_rescan(
         store, ["user_id", "wk"], affected, recompute,

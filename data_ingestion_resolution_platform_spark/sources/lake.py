@@ -23,6 +23,23 @@ MERGE idempotency under partial failure: re-running a crashed epoch
 recomputes each touched bucket from (surviving old version, same
 deterministic batch) — per-bucket pointers only advance on completed
 writes, so replay converges to the same state (SURVEY.md §7.4).
+
+One MERGE contract, the same on all three tables (``LakeTable``,
+``PartitionedLakeTable``, ``MorLakeTable``):
+``merge(batch, keys, epoch_id=None, before_commit=None)``.
+
+- **delete marker**: a batch row whose boolean :data:`DELETE_COL` is
+  true deletes its key; a row whose marker is false upserts. NULL
+  counts as a delete — the same rule as the views' ``op != 'D'``
+  post-image filter, so a target and its views never disagree. A
+  batch without the column is all upserts. The marker steers the
+  MERGE and never reaches a stored schema.
+- **ledger**: a MERGE under an already-committed ``epoch_id`` is a
+  no-op returning ``{"skipped": True}``.
+- **gate**: ``before_commit`` runs after the epoch is staged and
+  before anything becomes visible; if it raises, the staged files
+  are discarded, the table and its ledger stay as they were, and the
+  error propagates.
 """
 
 from __future__ import annotations
@@ -47,6 +64,9 @@ POSTIMAGE = "update_postimage"
 #: change type → contribution sign: after-images add, before-images
 #: (deletes carry the before-image) retract
 CHANGE_SIGN = {INSERT: 1, POSTIMAGE: 1, PREIMAGE: -1, DELETE: -1}
+#: The MERGE delete marker (see the module docstring): a batch row
+#: whose boolean ``DELETE_COL`` is true (or NULL) deletes its key.
+DELETE_COL = "_del"
 
 
 def change_sign() -> Column:
@@ -183,13 +203,8 @@ def apply_changelog(
     v_from converges it to v_to exactly — incremental downstream
     replication instead of full-snapshot copies, with the same
     exactly-once epoch ledger as every other MERGE."""
-    return table.merge(
-        changes,
-        keys,
-        epoch_id=epoch_id,
-        delete_condition=F.col(CHANGE_COL) == DELETE,
-        drop_cols=(CHANGE_COL,),
-    )
+    marked = changes.withColumn(DELETE_COL, F.col(CHANGE_COL) == DELETE)
+    return table.merge(marked.drop(CHANGE_COL), keys, epoch_id=epoch_id)
 
 
 class _EpochLedger:
@@ -354,7 +369,60 @@ class _Versioned:
                     self.release(v)
 
 
-class LakeTable:
+class _MergeTable:
+    """The module's MERGE contract (ledger, marker split, gate) over a
+    layout's three steps: ``_stage(batch, keys, epoch_id)`` writes the
+    epoch where no reader sees it and returns a token, ``_discard``
+    removes those files, ``_commit`` makes them visible, records the
+    ledger and returns the MERGE stats."""
+
+    ledger: _EpochLedger
+
+    def epoch_committed(self, epoch_id: str | int) -> bool:
+        return self.ledger.committed(epoch_id)
+
+    def committed_epochs(self) -> list[str]:
+        return self.ledger.all()
+
+    def merge(
+        self,
+        batch: DataFrame,
+        keys: Sequence[str],
+        epoch_id: str | int | None = None,
+        before_commit: Callable[[], None] | None = None,
+    ) -> dict:
+        """MERGE INTO this USING batch ON keys; ``batch`` must be
+        key-unique (resolve upstream). Iceberg equivalent::
+
+            MERGE INTO t USING b ON <keys>
+            WHEN MATCHED AND b._del IS NOT FALSE THEN DELETE
+            WHEN MATCHED THEN UPDATE SET *
+            WHEN NOT MATCHED AND b._del IS FALSE THEN INSERT *
+        """
+        if epoch_id is not None and self.ledger.committed(epoch_id):
+            return {"skipped": True, "epoch": str(epoch_id)}
+        # normalize the marker to a non-NULL boolean: NULL deletes
+        marker = (
+            F.coalesce(F.col(DELETE_COL).cast("boolean"), F.lit(True))
+            if DELETE_COL in batch.columns
+            else F.lit(False)
+        )
+        token = self._stage(batch.withColumn(DELETE_COL, marker), list(keys), epoch_id)
+        if before_commit is not None:
+            try:
+                before_commit()
+            except BaseException:
+                self._discard(token)
+                raise
+        return self._commit(token, epoch_id)
+
+    @staticmethod
+    def _upserts(batch: DataFrame) -> DataFrame:
+        """The rows of a marked batch that upsert, marker dropped."""
+        return batch.filter(~F.col(DELETE_COL)).drop(DELETE_COL)
+
+
+class LakeTable(_MergeTable):
     """Single-snapshot table: overwrite / append / merge, exactly-once.
 
     ``append_only=True`` switches to a cheap append layout (one subdir
@@ -536,12 +604,6 @@ class LakeTable:
             include_preimages=include_preimages,
         )
 
-    def epoch_committed(self, epoch_id: str | int) -> bool:
-        return self.ledger.committed(epoch_id)
-
-    def committed_epochs(self) -> list[str]:
-        return self.ledger.all()
-
     # -- writes ----------------------------------------------------------
     def overwrite(self, df: DataFrame, epoch_id: str | int | None = None) -> None:
         """Full-refresh rebuild (S10/M4: the reference's delete-then-
@@ -682,62 +744,30 @@ class LakeTable:
             "bytes_after": self.append_stats()["bytes"],
         }
 
-    def merge(
-        self,
-        batch: DataFrame,
-        keys: Sequence[str],
-        epoch_id: str | int | None = None,
-        delete_condition: F.Column | None = None,
-        drop_cols: Sequence[str] = (),
-    ) -> dict:
-        """MERGE INTO this USING batch ON keys (COW rewrite).
-
-        - matched + ``delete_condition``  ⇒ DELETE
-        - matched                         ⇒ UPDATE (row replaced)
-        - not matched (and not delete)    ⇒ INSERT
-
-        ``batch`` must be key-unique (resolve upstream). The batch-key
-        side of the survivor anti-join is explicitly broadcast: a
-        micro-batch's key set is small relative to the target, so the
-        big side never shuffles.
-
-        Iceberg equivalent::
-
-            MERGE INTO t USING b ON <keys>
-            WHEN MATCHED AND b.op = 'D' THEN DELETE
-            WHEN MATCHED THEN UPDATE SET *
-            WHEN NOT MATCHED AND b.op <> 'D' THEN INSERT *
-        """
-        if epoch_id is not None and self.ledger.committed(epoch_id):
-            return {"skipped": True, "epoch": str(epoch_id)}
-        key_list = list(keys)
-        # batch feeds both the broadcast key side and the upsert union —
-        # persist so the upstream resolve plan executes once; unpersist
-        # in finally so a failed write/commit (normal under the
-        # streaming retry design) doesn't leak executor storage
-        batch = batch.persist()
+    # -- merge: copy-on-write rewrite into a claimed v=N ------------------
+    def _stage(self, batch: DataFrame, keys: list[str], epoch_id) -> int:
+        """Claim ``v=N`` and write the merged snapshot there; it stays
+        invisible until :meth:`_commit` moves ``_LATEST``. The batch-key
+        side of the survivor anti-join is broadcast: a micro-batch's key
+        set is small relative to the target, so the big side never
+        shuffles."""
         # claim the target version BEFORE reading the base snapshot: the
         # claim (CAS) guarantees the snapshot we merge against IS the
         # claimed version's base, so a concurrent winner's rows can never
         # be overwritten by a merge computed from a stale read
         v = self.versions.current() + 1
+        self.versions.claim(v)  # CommitConflict → caller re-reads + retries
+        # batch feeds both the broadcast key side and the upsert union —
+        # persist so the upstream resolve plan executes once; unpersist
+        # in finally so a failed write (normal under the streaming retry
+        # design) doesn't leak executor storage
+        batch = batch.persist()
         try:
-            self.versions.claim(v)
-        except CommitConflict:
-            batch.unpersist()
-            raise
-        try:
-            upserts = (
-                batch.filter(~delete_condition) if delete_condition is not None else batch
-            )
-            if drop_cols:
-                # marker columns (e.g. a changelog's change_type) steer the
-                # WHEN clauses but must not evolve into the target schema
-                upserts = upserts.drop(*drop_cols)
+            upserts = self._upserts(batch)
             if self.exists():
                 current = self.read()
                 survivors = current.join(
-                    F.broadcast(batch.select(*key_list)), on=key_list, how="left_anti"
+                    F.broadcast(batch.select(*keys)), on=keys, how="left_anti"
                 )
                 # schema evolution (add-column): target schema becomes the
                 # union of current and batch columns; survivors carry NULL
@@ -753,6 +783,19 @@ class LakeTable:
             else:
                 merged = upserts
             merged.write.mode("overwrite").parquet(self.versions.dir_for(v))
+        except Exception:
+            self.versions.release(v)
+            raise
+        finally:
+            batch.unpersist()
+        return v
+
+    def _discard(self, v: int) -> None:
+        self.versions.release(v)
+        shutil.rmtree(self.versions.dir_for(v), ignore_errors=True)
+
+    def _commit(self, v: int, epoch_id) -> dict:
+        try:
             self.versions.commit(v)
             stats: dict = {"mode": "merge"}
             if epoch_id is not None:
@@ -761,12 +804,10 @@ class LakeTable:
         except Exception:
             self.versions.release(v)
             raise
-        finally:
-            batch.unpersist()
         return stats
 
 
-class MorLakeTable:
+class MorLakeTable(_MergeTable):
     """Merge-on-READ target table: each MERGE epoch appends one delta
     file set — an **O(batch) write with zero target reads** — and the
     read path reconciles base ∪ deltas. The third point in the COW
@@ -871,53 +912,28 @@ class MorLakeTable:
         m = self._read_manifest()
         return m["base_v"] > 0 or bool(m["deltas"])
 
-    def epoch_committed(self, epoch_id: str | int) -> bool:
-        return self.ledger.committed(epoch_id)
-
-    def committed_epochs(self) -> list[str]:
-        return self.ledger.all()
-
     def n_deltas(self) -> int:
         return len(self._read_manifest()["deltas"])
 
-    # -- writes ----------------------------------------------------------
-    def merge(
-        self,
-        batch: DataFrame,
-        keys: Sequence[str] | None = None,
-        epoch_id: str | int | None = None,
-        delete_condition: F.Column | None = None,
-        before_commit: Callable[[], None] | None = None,
-    ) -> dict:
-        """MERGE semantics deferred to read time: the key-unique batch
-        (tombstones flagged, not dropped) is appended as one delta.
-
-        ``keys`` is accepted for call-shape parity with the COW tables
-        (the pipeline swaps targets without branching) but must match
-        the table's configured key.
-
-        ``before_commit`` (an internal commit hook) runs once the delta
-        dir is written and before the manifest flip, ledger record or
-        compaction; until then ``read()`` sees the pre-merge table. If
-        it raises, the delta dir is removed and the error re-raised: the
-        manifest and ledger are left as they were."""
-        if keys is not None and list(keys) != self.keys:
-            raise ValueError(f"merge keys {list(keys)} != table keys {self.keys}")
-        if epoch_id is not None and self.ledger.committed(epoch_id):
-            return {"skipped": True, "epoch": str(epoch_id)}
+    # -- merge: deferred to read time, one delta per epoch ----------------
+    def _stage(self, batch: DataFrame, keys: list[str], epoch_id) -> tuple[dict, int]:
+        """Append the key-unique batch as delta ``d=<seq>`` (the marker
+        kept as the ``_mor_del`` tombstone flag); the manifest does not
+        list it until :meth:`_commit`. ``keys`` must be the table's
+        configured key."""
+        if keys != self.keys:
+            raise ValueError(f"merge keys {keys} != table keys {self.keys}")
         m = self._read_manifest()
         seq = m["next_seq"]
-        flag = delete_condition if delete_condition is not None else F.lit(False)
-        out = batch.withColumn(self.SEQ, F.lit(seq)).withColumn(
-            self.DEL, F.coalesce(flag.cast("boolean"), F.lit(False))
-        )
+        out = batch.withColumnRenamed(DELETE_COL, self.DEL).withColumn(self.SEQ, F.lit(seq))
         out.write.mode("overwrite").parquet(self._delta_dir(seq))
-        if before_commit is not None:
-            try:
-                before_commit()
-            except BaseException:
-                shutil.rmtree(self._delta_dir(seq), ignore_errors=True)
-                raise
+        return m, seq
+
+    def _discard(self, token: tuple[dict, int]) -> None:
+        shutil.rmtree(self._delta_dir(token[1]), ignore_errors=True)
+
+    def _commit(self, token: tuple[dict, int], epoch_id) -> dict:
+        m, seq = token
         m["deltas"] = sorted(set(m["deltas"]) | {seq})
         m["next_seq"] = seq + 1
         dbytes, _ = _dir_stats(self._delta_dir(seq))
@@ -1060,7 +1076,7 @@ class MorLakeTable:
         return stats
 
 
-class PartitionedLakeTable:
+class PartitionedLakeTable(_MergeTable):
     """Hash-bucketed target table with LINEAR-HASHING growth: MERGE
     touches only dirty buckets, and buckets that outgrow
     ``max_bucket_bytes`` split in two *during the rewrite they were
@@ -1188,12 +1204,6 @@ class PartitionedLakeTable:
     def exists(self) -> bool:
         return any(v > 0 for v in self._read_dir().values())
 
-    def epoch_committed(self, epoch_id: str | int) -> bool:
-        return self.ledger.committed(epoch_id)
-
-    def committed_epochs(self) -> list[str]:
-        return self.ledger.all()
-
     def n_live_buckets(self) -> int:
         return len(self._read_dir())
 
@@ -1235,33 +1245,18 @@ class PartitionedLakeTable:
         )
         return df
 
-    def merge(
-        self,
-        batch: DataFrame,
-        keys: Sequence[str],
-        epoch_id: str | int | None = None,
-        delete_condition: F.Column | None = None,
-        before_commit: Callable[[], None] | None = None,
-    ) -> dict:
-        """Bucket-pruned COW MERGE with size-triggered bucket splits;
-        same WHEN-clause semantics as ``LakeTable.merge``. ``batch``
-        must be key-unique.
-
-        ``before_commit`` (an internal commit hook) runs once the
-        ``_staging_<epoch>`` write is done and before any file move,
-        ``_DIR`` flip, vacuum or ledger record; until then ``read()``
-        sees the pre-merge table. If it raises, the staging dir is
-        removed and the error re-raised: ``_DIR``, ``_SCHEMA``, the
-        bucket dirs and the ledger are left as they were."""
-        if epoch_id is not None and self.ledger.committed(epoch_id):
-            return {"skipped": True, "epoch": str(epoch_id)}
-        key_list = list(keys)
+    # -- merge: bucket-pruned COW with size-triggered splits --------------
+    def _stage(self, batch: DataFrame, keys: list[str], epoch_id) -> tuple:
+        """Rewrite only the buckets the batch touches into one
+        ``_staging_<epoch>`` dir, partitioned by stage-level residue;
+        nothing moves into the bucket dirs until :meth:`_commit`."""
         d = self._read_dir()
         lmax = max(lv for _, lv in d)
         # stage one level finer than the deepest bucket: every touched
         # bucket can split once per epoch with zero re-reads
         lstage = lmax + 1
         rcol = self.BUCKET_COL
+        cols = [c for c in batch.columns if c != DELETE_COL]
         # staged is consumed three times (touched probe, anti-join build
         # side, staging write) — persist so the upstream plan runs once
         staged = batch.withColumn(rcol, self._residue_expr(lstage)).persist()
@@ -1271,25 +1266,23 @@ class PartitionedLakeTable:
             # metadata op, never data
             touched_res = sorted(r[0] for r in staged.select(rcol).distinct().collect())
             touched = sorted({self._owner(r, d, lstage) for r in touched_res})
-            upserts = (
-                staged.filter(~delete_condition) if delete_condition is not None else staged
-            )
+            upserts = self._upserts(staged)
             touched_live = [bk for bk in touched if d[bk] > 0]
             if touched_live:
                 current = self.read(touched_live).withColumn(
                     rcol, self._residue_expr(lstage)
                 )
                 survivors = current.join(
-                    F.broadcast(staged.select(*key_list)), on=key_list, how="left_anti"
+                    F.broadcast(staged.select(*keys)), on=keys, how="left_anti"
                 )
-                # add-column schema evolution, as in LakeTable.merge
+                # add-column schema evolution, as in LakeTable
                 merged = survivors.unionByName(upserts, allowMissingColumns=True)
-                out_cols = [c for c in batch.columns if c != rcol] + [
-                    c for c in current.columns if c not in batch.columns and c != rcol
+                out_cols = cols + [
+                    c for c in current.columns if c not in cols and c != rcol
                 ]
             else:
                 merged = upserts
-                out_cols = [c for c in batch.columns if c != rcol]
+                out_cols = cols
             # join(on=keys) reorders columns key-first; pin a stable
             # column order so every bucket file shares one schema layout
             merged = merged.select(*out_cols, rcol)
@@ -1309,12 +1302,16 @@ class PartitionedLakeTable:
             staged_out.write.mode("overwrite").partitionBy(rcol).parquet(staging)
         finally:
             staged.unpersist()
-        if before_commit is not None:
-            try:
-                before_commit()
-            except BaseException:
-                shutil.rmtree(staging, ignore_errors=True)
-                raise
+        return staging, d, touched, lstage, out_schema
+
+    def _discard(self, token: tuple) -> None:
+        shutil.rmtree(token[0], ignore_errors=True)
+
+    def _commit(self, token: tuple, epoch_id) -> dict:
+        """Move the staged residue files into per-bucket version dirs,
+        then ONE atomic ``_DIR`` flip, vacuum, ledger record."""
+        staging, d, touched, lstage, out_schema = token
+        rcol = self.BUCKET_COL
 
         def res_dir(r: int) -> str:
             return os.path.join(staging, f"{rcol}={r}")

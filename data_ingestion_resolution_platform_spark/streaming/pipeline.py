@@ -36,6 +36,7 @@ from data_ingestion_resolution_platform_spark.operators.cdc import resolve_and_d
 from data_ingestion_resolution_platform_spark.sources.feed import CHANGE_FEED_SCHEMA
 from data_ingestion_resolution_platform_spark.sources.lake import (
     CHANGE_COL,
+    DELETE_COL,
     INSERT,
     POSTIMAGE,
     PREIMAGE,
@@ -465,10 +466,9 @@ class CDCPipeline:
                 steps,
                 partial(
                     self.target.merge,
-                    winners,
+                    winners.withColumn(DELETE_COL, F.col("op") == "D"),
                     list(self.keys),
                     epoch_id=epoch,
-                    delete_condition=F.col("op") == "D",
                 ),
             )
             phases["stage_commit"] = _time.time() - _t0

@@ -11,8 +11,9 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2:])
@@ -22,7 +23,7 @@ def main():
     from data_ingestion_resolution_platform_spark.plans.queries import QUERIES
     from data_ingestion_resolution_platform_spark.session import get_spark
 
-    spark = get_spark("explain_audit", parallelism=8)
+    spark = get_spark("explain_audit")
     for name, fn in QUERIES.items():
         if ONLY and name not in ONLY:
             continue

@@ -12,6 +12,7 @@ from __future__ import annotations
 import hashlib
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 
@@ -53,11 +54,11 @@ def table_hash(cols, rows):
 
 
 def main():
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as E
     from data_ingestion_resolution_platform_spark.session import get_spark
 
-    spark = get_spark("selfcheck", parallelism=8)
+    spark = get_spark("selfcheck")
     con = duckdb.connect()
     # Spark session is pinned to UTC (session.py); pin DuckDB the same
     # way so timestamp-constructing oracles agree on any host timezone.

@@ -15,7 +15,7 @@ from data_ingestion_resolution_platform_spark.operators.cdc import (
     resolve_with_choices,
 )
 from data_ingestion_resolution_platform_spark.sources.feed import synth_change_feed
-from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
+from data_ingestion_resolution_platform_spark.sources.lake import DELETE_COL, LakeTable
 
 FEED_SCHEMA = "lsn long, op string, repo string, path string, lang string, content string"
 
@@ -115,7 +115,7 @@ def test_lake_merge_exactly_once(spark, tmp_path):
         FEED_SCHEMA,
     )
     resolved2 = resolve_latest(batch2, ["repo", "path"], "lsn")
-    tbl.merge(resolved2, ["repo", "path"], epoch_id=2, delete_condition=F.col("op") == "D")
+    tbl.merge(resolved2.withColumn(DELETE_COL, F.col("op") == "D"), ["repo", "path"], epoch_id=2)
     state = {(r["repo"], r["path"]): r["content"] for r in tbl.read().collect()}
     assert state == {("r1", "a.py"): "v7", ("r3", "d.go"): "d1"}
 
@@ -146,20 +146,20 @@ def test_partitioned_lake_merge(spark, tmp_path):
     b1 = spark.createDataFrame(
         [(1, "I", "r1", "a.py", "py", "v1"), (2, "I", "r2", "b.py", "py", "v2")], FEED_SCHEMA
     )
-    tbl.merge(b1, ["repo", "path"], epoch_id=1, delete_condition=F.col("op") == "D")
+    tbl.merge(b1.withColumn(DELETE_COL, F.col("op") == "D"), ["repo", "path"], epoch_id=1)
     assert {(r["repo"], r["content"]) for r in tbl.read().collect()} == {("r1", "v1"), ("r2", "v2")}
     # update one key, leave the other bucket untouched
     b2 = spark.createDataFrame([(3, "U", "r1", "a.py", "py", "v3")], FEED_SCHEMA)
-    st = tbl.merge(b2, ["repo", "path"], epoch_id=2, delete_condition=F.col("op") == "D")
+    st = tbl.merge(b2.withColumn(DELETE_COL, F.col("op") == "D"), ["repo", "path"], epoch_id=2)
     assert st["touched_buckets"] == 1
     assert {(r["repo"], r["content"]) for r in tbl.read().collect()} == {("r1", "v3"), ("r2", "v2")}
     # replay of epoch 2 is a no-op
     assert tbl.merge(b2, ["repo", "path"], epoch_id=2)["skipped"] is True
     # delete ALL rows of r1's bucket: empty version committed, no resurrection
     b3 = spark.createDataFrame([(4, "D", "r1", "a.py", "py", "")], FEED_SCHEMA)
-    tbl.merge(b3, ["repo", "path"], epoch_id=3, delete_condition=F.col("op") == "D")
+    tbl.merge(b3.withColumn(DELETE_COL, F.col("op") == "D"), ["repo", "path"], epoch_id=3)
     assert {(r["repo"], r["content"]) for r in tbl.read().collect()} == {("r2", "v2")}
     # delete for a key that never existed: clean no-op
     b4 = spark.createDataFrame([(5, "D", "zz", "q.py", "py", "")], FEED_SCHEMA)
-    tbl.merge(b4, ["repo", "path"], epoch_id=4, delete_condition=F.col("op") == "D")
+    tbl.merge(b4.withColumn(DELETE_COL, F.col("op") == "D"), ["repo", "path"], epoch_id=4)
     assert tbl.read().count() == 1

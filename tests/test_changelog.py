@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from data_ingestion_resolution_platform_spark.sources.lake import LakeTable, snapshot_diff
+from data_ingestion_resolution_platform_spark.sources.lake import DELETE_COL, LakeTable, snapshot_diff
 
 SCHEMA = "repo string, path string, lsn long, content string"
 
@@ -17,7 +17,7 @@ V1 = [
 # b.py updated, c.py deleted, d.py inserted
 V2_BATCH = [
     ("r1", "b.py", 10, "beta2"),
-    ("r2", "c.py", 11, None),  # tombstone via delete_condition
+    ("r2", "c.py", 11, None),  # tombstone via the delete marker
     ("r2", "d.py", 12, "delta"),
 ]
 
@@ -26,10 +26,9 @@ def _mk(spark, tmp_path):
     t = LakeTable(spark, str(tmp_path / "t"))
     t.merge(spark.createDataFrame(V1, SCHEMA), ["repo", "path"], epoch_id=1)
     t.merge(
-        spark.createDataFrame(V2_BATCH, SCHEMA),
+        spark.createDataFrame(V2_BATCH, SCHEMA).withColumn(DELETE_COL, F.col("content").isNull()),
         ["repo", "path"],
         epoch_id=2,
-        delete_condition=F.col("content").isNull(),
     )
     return t
 

@@ -93,7 +93,7 @@ def test_mor_compaction_clusters_base(spark, events, tmp_path):
         cluster_by=["ts", "value"], cluster_files=8,
     )
     ev = events.limit(800)
-    t.merge(ev, epoch_id="e1")
+    t.merge(ev, ["event_id"], epoch_id="e1")
     stats = t.compact()
     base_dir = f"{root}/base/v={stats['base_v']}"
     df, report = pruned_scan(spark, base_dir, [base_dir], [("value", ">=", 95.0)])

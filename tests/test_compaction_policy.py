@@ -34,21 +34,21 @@ def test_mor_ratio_policy_triggers_on_heavy_deltas(spark, tmp_path):
     )
     # bootstrap: base_v==0 and >= min_compact_deltas live deltas → the
     # ratio trigger fires (infinite ratio) and materializes a base
-    s0 = t.merge(_rows(spark, 0, 2000), epoch_id=0)
+    s0 = t.merge(_rows(spark, 0, 2000), ["k"], epoch_id=0)
     assert "compacted" not in s0  # single delta, under min_compact_deltas
-    s1 = t.merge(_rows(spark, 2000, 2000), epoch_id=1)
+    s1 = t.merge(_rows(spark, 2000, 2000), ["k"], epoch_id=1)
     assert s1.get("compact_trigger") == "ratio"
     assert t.n_deltas() == 0
     stats = t.scan_stats()
     assert stats["base_bytes"] > 0 and stats["delta_ratio"] == 0.0
 
     # a tiny delta against the 4k-row base stays below ratio 0.5
-    s2 = t.merge(_rows(spark, 0, 50, val="y"), epoch_id=2)
-    s3 = t.merge(_rows(spark, 50, 50, val="y"), epoch_id=3)
+    s2 = t.merge(_rows(spark, 0, 50, val="y"), ["k"], epoch_id=2)
+    s3 = t.merge(_rows(spark, 50, 50, val="y"), ["k"], epoch_id=3)
     assert "compacted" not in s2 and "compacted" not in s3
     assert t.n_deltas() == 2
     # heavy delta pushes cumulative delta bytes past half the base
-    s4 = t.merge(_rows(spark, 0, 3000, val="z"), epoch_id=4)
+    s4 = t.merge(_rows(spark, 0, 3000, val="z"), ["k"], epoch_id=4)
     assert s4.get("compact_trigger") == "ratio"
     assert t.n_deltas() == 0
     # content is exactly the LWW state regardless of when folds happened
@@ -59,7 +59,7 @@ def test_mor_ratio_policy_triggers_on_heavy_deltas(spark, tmp_path):
 
 def test_mor_scan_stats_track_manifest(spark, tmp_path):
     t = MorLakeTable(spark, str(tmp_path / "m"), keys=["k"], lsn_col="lsn")
-    t.merge(_rows(spark, 0, 1000), epoch_id=0)
+    t.merge(_rows(spark, 0, 1000), ["k"], epoch_id=0)
     s = t.scan_stats()
     assert s["n_deltas"] == 1 and s["delta_bytes"] > 0 and s["base_bytes"] == 0
     assert s["read_amplification"] == float("inf")
@@ -67,7 +67,7 @@ def test_mor_scan_stats_track_manifest(spark, tmp_path):
     s2 = t.scan_stats()
     assert s2["n_deltas"] == 0 and s2["base_bytes"] > 0
     assert s2["read_amplification"] == 1.0
-    t.merge(_rows(spark, 0, 500, val="y"), epoch_id=1)
+    t.merge(_rows(spark, 0, 500, val="y"), ["k"], epoch_id=1)
     s3 = t.scan_stats()
     assert s3["scan_bytes"] == s3["base_bytes"] + s3["delta_bytes"]
     assert 0 < s3["delta_ratio"] < 1.5
@@ -78,11 +78,11 @@ def test_mor_ratio_policy_replay_safe(spark, tmp_path):
     t = MorLakeTable(
         spark, str(tmp_path / "m"), keys=["k"], lsn_col="lsn", compact_ratio=0.1
     )
-    t.merge(_rows(spark, 0, 1000), epoch_id="e0")
-    t.merge(_rows(spark, 0, 800, val="y"), epoch_id="e1")  # folds
+    t.merge(_rows(spark, 0, 1000), ["k"], epoch_id="e0")
+    t.merge(_rows(spark, 0, 800, val="y"), ["k"], epoch_id="e1")  # folds
     before = _state(t.read())
     # redelivery of a folded epoch is ledger-skipped — no new delta
-    out = t.merge(_rows(spark, 0, 800, val="y"), epoch_id="e1")
+    out = t.merge(_rows(spark, 0, 800, val="y"), ["k"], epoch_id="e1")
     assert out.get("skipped")
     assert t.n_deltas() == 0
     assert _state(t.read()) == before

@@ -179,8 +179,8 @@ def test_redelivered_epoch_skips(spark, stores):
 
 def test_bucketed_backend_portability(spark, tmp_path):
     """Same epoch over PartitionedLakeTable stores — the 100 TB backend
-    where MERGE rewrites only touched buckets. The sentinel-encoded
-    batches (cluster_id = -1 / alive = false) must behave identically."""
+    where MERGE rewrites only touched buckets. The delete-marked
+    batches (removed ids, stale pairs) must behave identically."""
     from data_ingestion_resolution_platform_spark.sources.lake import (
         PartitionedLakeTable,
     )

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from data_ingestion_resolution_platform_spark.sources.lake import PartitionedLakeTable
+from data_ingestion_resolution_platform_spark.sources.lake import DELETE_COL, PartitionedLakeTable
 
 SCHEMA = "lsn long, op string, repo string, path string, content string"
 
@@ -54,7 +54,7 @@ def test_mixed_level_updates_and_deletes(spark, tmp_path):
     assert tbl.read().filter(F.col("content") == "UPDATED").count() == 500
     # delete those keys
     dele = upd.withColumn("op", F.lit("D"))
-    tbl.merge(dele, ["repo", "path"], epoch_id=2, delete_condition=F.col("op") == "D")
+    tbl.merge(dele.withColumn(DELETE_COL, F.col("op") == "D"), ["repo", "path"], epoch_id=2)
     assert tbl.read().count() == 2500
     assert tbl.read().filter(F.col("content") == "UPDATED").count() == 0
 

@@ -1,6 +1,6 @@
 """Merge-on-read lake table: COW-equivalence, tombstones, exactly-once,
 compaction, schema evolution across deltas; the ``before_commit`` hook
-of the MOR and bucketed COW merges."""
+of the plain COW, bucketed COW and MOR merges."""
 
 from __future__ import annotations
 
@@ -13,10 +13,13 @@ from pyspark.sql import functions as F
 from data_ingestion_resolution_platform_spark.operators.cdc import resolve_latest
 from data_ingestion_resolution_platform_spark.sources.feed import synth_change_feed
 from data_ingestion_resolution_platform_spark.sources.lake import (
+    DELETE_COL,
     LakeTable,
     MorLakeTable,
     PartitionedLakeTable,
 )
+
+KEYS = ["repo", "path"]
 
 
 def _epochs(feed, n):
@@ -41,8 +44,8 @@ def test_mor_equals_cow_across_epochs(spark, tmp_path):
     cow = LakeTable(spark, str(tmp_path / "cow"))
     for e, part in enumerate(_epochs(feed, 3), start=1):
         batch = resolve_latest(part, ["repo", "path"], "lsn")
-        mor.merge(batch, epoch_id=e, delete_condition=F.col("op") == "D")
-        cow.merge(batch, ["repo", "path"], epoch_id=e, delete_condition=F.col("op") == "D")
+        mor.merge(batch.withColumn(DELETE_COL, F.col("op") == "D"), KEYS, epoch_id=e)
+        cow.merge(batch.withColumn(DELETE_COL, F.col("op") == "D"), KEYS, epoch_id=e)
     assert _state(mor.read()) == _state(cow.read())
     assert mor.n_deltas() == 3  # never compacted: reads reconcile deltas
 
@@ -53,11 +56,11 @@ def test_mor_exactly_once_and_compaction(spark, tmp_path):
     parts = _epochs(feed, 2)
     for e, part in enumerate(parts, start=1):
         batch = resolve_latest(part, ["repo", "path"], "lsn")
-        mor.merge(batch, epoch_id=e, delete_condition=F.col("op") == "D")
+        mor.merge(batch.withColumn(DELETE_COL, F.col("op") == "D"), KEYS, epoch_id=e)
     before = _state(mor.read())
     # redelivered epoch is a no-op
     dup = resolve_latest(parts[0], ["repo", "path"], "lsn")
-    assert mor.merge(dup, epoch_id=1)["skipped"] is True
+    assert mor.merge(dup, KEYS, epoch_id=1)["skipped"] is True
     assert _state(mor.read()) == before
     # compaction folds deltas, preserves state, clears the delta list
     stats = mor.compact()
@@ -69,7 +72,7 @@ def test_mor_exactly_once_and_compaction(spark, tmp_path):
         [(999_999, "U", None, "repo_0001", "zzz.py", "c", "py", "new")],
         "lsn long, op string, ts timestamp, repo string, path string, commit string, lang string, content string",
     )
-    mor.merge(extra, epoch_id=3)
+    mor.merge(extra, KEYS, epoch_id=3)
     after = _state(mor.read())
     assert after[("repo_0001", "zzz.py")] == (999_999, "new")
     assert len(after) == len(before) + 1
@@ -82,7 +85,7 @@ def test_mor_auto_compact_every(spark, tmp_path):
     )
     for e, part in enumerate(_epochs(feed, 4), start=1):
         batch = resolve_latest(part, ["repo", "path"], "lsn")
-        mor.merge(batch, epoch_id=e, delete_condition=F.col("op") == "D")
+        mor.merge(batch.withColumn(DELETE_COL, F.col("op") == "D"), KEYS, epoch_id=e)
     assert mor.n_deltas() == 0  # compacted at epochs 2 and 4
     oneshot = resolve_latest(feed, ["repo", "path"], "lsn").filter(F.col("op") != "D")
     assert _state(mor.read()) == _state(oneshot)
@@ -107,9 +110,12 @@ def test_pipeline_mor_target_equals_cow_target(spark, tmp_path):
 
 def test_mor_schema_evolution_across_deltas(spark, tmp_path):
     mor = MorLakeTable(spark, str(tmp_path / "m"), keys=["k"], lsn_col="lsn")
-    mor.merge(spark.createDataFrame([("a", 1, "x")], "k string, lsn long, v string"), epoch_id=1)
+    mor.merge(
+        spark.createDataFrame([("a", 1, "x")], "k string, lsn long, v string"), ["k"], epoch_id=1
+    )
     mor.merge(
         spark.createDataFrame([("b", 2, "y", "main")], "k string, lsn long, v string, branch string"),
+        ["k"],
         epoch_id=2,
     )
     rows = {r.k: (r.v, r.branch) for r in mor.read().collect()}
@@ -121,31 +127,38 @@ def test_mor_schema_evolution_across_deltas(spark, tmp_path):
 
 
 def _hooked_table(kind, spark, root):
+    if kind == "lake":
+        return LakeTable(spark, root)
     if kind == "cow":
         return PartitionedLakeTable(spark, root, bucket_keys=["repo"], n_buckets=4)
-    return MorLakeTable(spark, root, keys=["repo", "path"], lsn_col="lsn")
+    return MorLakeTable(spark, root, keys=KEYS, lsn_col="lsn")
 
 
 def _commit_state(table):
-    """Everything a merge commit changes: the ``_DIR`` / ``_MANIFEST``
-    bytes, the ledger, and the bucket version and delta dirs."""
-    meta = "_DIR" if isinstance(table, PartitionedLakeTable) else "_MANIFEST"
+    """Everything a merge commit changes: the ``_LATEST`` / ``_DIR`` /
+    ``_MANIFEST`` bytes, the ledger, the version claims, and the
+    snapshot, bucket version and delta dirs."""
+    meta = {LakeTable: "_LATEST", PartitionedLakeTable: "_DIR"}.get(type(table), "_MANIFEST")
     with open(os.path.join(table.root, meta), "rb") as f:
         raw = f.read()
     dirs = sorted(
-        glob.glob(os.path.join(table.root, "b=*", "v=*"))
+        glob.glob(os.path.join(table.root, "v=*"))
+        + glob.glob(os.path.join(table.root, "_CLAIM_*"))
+        + glob.glob(os.path.join(table.root, "b=*", "v=*"))
         + glob.glob(os.path.join(table.root, "delta", "d=*"))
     )
     return raw, table.committed_epochs(), dirs
 
 
-@pytest.mark.parametrize("kind", ["cow", "mor"])
+@pytest.mark.parametrize("kind", ["lake", "cow", "mor"])
 def test_before_commit_gates_the_merge_commit(spark, tmp_path, kind):
     feed = synth_change_feed(spark, 3000, n_repos=6, seed=4)
-    first, second = [resolve_latest(p, ["repo", "path"], "lsn") for p in _epochs(feed, 2)]
-    keys, dele = ["repo", "path"], F.col("op") == "D"
+    first, second = [
+        resolve_latest(p, KEYS, "lsn").withColumn(DELETE_COL, F.col("op") == "D")
+        for p in _epochs(feed, 2)
+    ]
     table = _hooked_table(kind, spark, str(tmp_path / "t"))
-    table.merge(first, keys, epoch_id=1, delete_condition=dele)
+    table.merge(first, KEYS, epoch_id=1)
     rows = _state(table.read())
     before = _commit_state(table)
 
@@ -158,7 +171,7 @@ def test_before_commit_gates_the_merge_commit(spark, tmp_path, kind):
         raise refused
 
     with pytest.raises(RuntimeError) as exc:
-        table.merge(second, keys, epoch_id=2, delete_condition=dele, before_commit=refuse)
+        table.merge(second, KEYS, epoch_id=2, before_commit=refuse)
     assert exc.value is refused
     assert seen == [rows]
     assert _commit_state(table) == before
@@ -167,12 +180,10 @@ def test_before_commit_gates_the_merge_commit(spark, tmp_path, kind):
 
     # a hook that passes commits the same table as no hook
     twin = _hooked_table(kind, spark, str(tmp_path / "twin"))
-    twin.merge(first, keys, epoch_id=1, delete_condition=dele)
-    twin.merge(second, keys, epoch_id=2, delete_condition=dele)
+    twin.merge(first, KEYS, epoch_id=1)
+    twin.merge(second, KEYS, epoch_id=2)
     calls = []
-    table.merge(
-        second, keys, epoch_id=2, delete_condition=dele, before_commit=lambda: calls.append(1)
-    )
+    table.merge(second, KEYS, epoch_id=2, before_commit=lambda: calls.append(1))
     assert calls == [1]
     assert _state(table.read()) == _state(twin.read()) != rows
     assert table.committed_epochs() == twin.committed_epochs()

@@ -3,8 +3,9 @@ contract allows (no Spark).
 
 The feed contract is fixed: natural key ``(repo, path)``, last writer by
 ``lsn``, the ``op`` envelope column, and the CDF vocabulary of
-``sources/lake.py`` (``CHANGE_COL`` and its four change types). Options
-that only restate it double an untested configuration space, so these
+``sources/lake.py`` (``CHANGE_COL`` and its four change types). So is
+the MERGE contract: one delete-marker column, ``DELETE_COL``. Options
+that only restate them double an untested configuration space, so these
 checks keep them from coming back.
 """
 
@@ -15,6 +16,7 @@ import dataclasses
 from pathlib import Path
 
 import data_ingestion_resolution_platform_spark as pkg
+from data_ingestion_resolution_platform_spark.sources.lake import DELETE_COL
 from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
 
 PKG = Path(pkg.__file__).parent
@@ -35,24 +37,40 @@ def test_pipeline_fields_are_the_deployment_and_view_switches():
     ]
 
 
-def test_no_parameter_renames_the_feed_columns():
-    found = [
+def _parameters(names):
+    return [
         f"{name}:{node.lineno} {arg.arg}"
         for name, tree in _modules()
         for node in ast.walk(tree)
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda))
         for arg in [*node.args.posonlyargs, *node.args.args, *node.args.kwonlyargs]
-        if arg.arg in ("change_col", "op_col")
+        if arg.arg in names
     ]
-    assert not found, found
 
 
-def test_change_types_are_spelled_in_one_module():
-    spelled = {
+def _spelling_modules(values):
+    return {
         name
         for name, tree in _modules()
         if name != "plans/queries.py"
         for node in ast.walk(tree)
-        if isinstance(node, ast.Constant) and node.value in CHANGE_TYPES
+        if isinstance(node, ast.Constant) and node.value in values
     }
-    assert spelled == {"sources/lake.py"}
+
+
+def test_no_parameter_renames_the_feed_columns():
+    found = _parameters(("change_col", "op_col"))
+    assert not found, found
+
+
+def test_change_types_are_spelled_in_one_module():
+    assert _spelling_modules(CHANGE_TYPES) == {"sources/lake.py"}
+
+
+def test_no_parameter_restates_the_delete_marker():
+    found = _parameters(("delete_condition", "drop_cols"))
+    assert not found, found
+
+
+def test_delete_marker_is_spelled_in_one_module():
+    assert _spelling_modules({DELETE_COL}) == {"sources/lake.py"}

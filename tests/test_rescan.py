@@ -103,7 +103,7 @@ def test_multi_row_group_mode_sweeps_stale_rows(spark, store):
 
 
 def test_bucketed_backend_portability(spark, tmp_path):
-    """The alive-sentinel batch rides PartitionedLakeTable unchanged —
+    """The delete-marked batch rides PartitionedLakeTable unchanged —
     the 100 TB store where the MERGE rewrites only touched buckets."""
     from data_ingestion_resolution_platform_spark.sources.lake import (
         PartitionedLakeTable,
