@@ -416,17 +416,22 @@ def run_ivf_growth(parallelism: int) -> dict:
     assignment through the Arrow/numpy backend at every size). The
     epoch is held constant — 32 deletes + 32 inserts whose vectors are
     copies of same-cell members, so it touches exactly ONE cell at
-    every corpus size. CellPartitionedIvf.maintain must therefore cost
-    ~the same at every size (reads + rewrites one bounded cell), while
-    the full rebuild arm grows with N — the measured gap IS the reason
-    the 100 TB deployment maintains instead of rebuilding."""
+    every corpus size. The index is a ``PartitionedLakeTable`` bucketed
+    on ``cell`` with ``n_buckets = n_cells``; the seed (the rebuild
+    arm) MERGEs the whole corpus into it, and ``maintain_ivf_index``
+    must cost ~the same at every size (it rewrites only the target
+    cell's bucket), while the rebuild grows with N — the measured gap
+    IS the reason the 100 TB deployment maintains instead of
+    rebuilding."""
     from pyspark.sql import functions as F
 
     from data_ingestion_resolution_platform_spark.operators.similarity import (
-        CellPartitionedIvf,
+        IVF_KEYS,
         ivf_kmeans_index,
+        maintain_ivf_index,
     )
     from data_ingestion_resolution_platform_spark.session import get_spark
+    from data_ingestion_resolution_platform_spark.sources.lake import PartitionedLakeTable
 
     spark = get_spark("bench_ivf_growth", parallelism=parallelism)
     base = spark.read.parquet(f"{_sf_dir()}/embeddings.parquet").select(
@@ -472,25 +477,29 @@ def run_ivf_growth(parallelism: int) -> dict:
         changes = del_rows.unionByName(ins_rows).select(
             "change_type", "vec_id", "embedding"
         )
-        idx = CellPartitionedIvf(spark, root, n_cells=n_cells, cents=cents)
-        return idx, corpus, changes, cell
+        idx = PartitionedLakeTable(spark, root, bucket_keys=["cell"], n_buckets=n_cells)
+        return idx, corpus, changes, cell, n_cells, cents
 
     def rebuild(st):
-        idx, corpus, _, _ = st
-        return partial(idx.build, corpus, "embedding", "vec_id", epoch_id="b")
+        idx, corpus, _, _, n_cells, cents = st
+        index = ivf_kmeans_index(corpus, cents, "embedding", "vec_id", n_cells)
+        return partial(idx.merge, index, IVF_KEYS, epoch_id="b")
 
     def epoch(st, j):
-        idx, _, changes, _ = st
-        # epoch_id=None: the rewrite is idempotent, so re-applying
-        # measures the identical touched-cell read+rewrite cost
-        return partial(idx.maintain, changes, "embedding", "vec_id", epoch_id=None)
+        idx, _, changes, _, n_cells, cents = st
+        # epoch_id=None: the MERGE is idempotent, so re-applying
+        # measures the identical touched-bucket read+rewrite cost
+        return partial(
+            maintain_ivf_index, idx, changes, "embedding", "vec_id",
+            n_cells=n_cells, cents=cents,
+        )
 
     def report(st, _):
-        idx, _, _, cell = st
+        idx, _, _, cell, n_cells, _ = st
         return {
-            "n_cells": idx.n_cells,
+            "n_cells": n_cells,
             "target_cell": cell,
-            "touched_rows": idx.read([cell]).count(),
+            "touched_rows": idx.scan([("cell", "==", cell)]).count(),
         }
 
     # untimed warm-up on the 1-replica corpus (as --qsample-growth):

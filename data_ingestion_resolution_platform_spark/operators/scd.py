@@ -194,14 +194,7 @@ class Scd2HistoryStore:
     ``open_versions`` fast path it prefers when present.
     """
 
-    def __init__(
-        self,
-        spark,
-        root: str,
-        keys: Sequence[str],
-        closed_small_file_bytes: int | None = None,
-        closed_compact_min_dirs: int = 8,
-    ):
+    def __init__(self, spark, root: str, keys: Sequence[str]):
         import os
 
         from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
@@ -210,16 +203,10 @@ class Scd2HistoryStore:
         self.root = root
         self.keys = list(keys)
         # the closed side accumulates one small dir per epoch forever;
-        # arming closed_small_file_bytes turns on LakeTable's measured
-        # small-file auto-compaction (fold when mean file size degrades
-        # below the threshold) so full-history reads stay O(few files)
-        self._closed = LakeTable(
-            spark,
-            os.path.join(root, "closed"),
-            append_only=True,
-            compact_small_file_bytes=closed_small_file_bytes,
-            compact_min_dirs=closed_compact_min_dirs,
-        )
+        # the append layout's small-file auto-compaction folds them once
+        # the mean file size degrades, so full-history reads stay
+        # O(few files)
+        self._closed = LakeTable(spark, os.path.join(root, "closed"), append_only=True)
         self._open = LakeTable(spark, os.path.join(root, "open"))
 
     def epoch_committed(self, epoch_id) -> bool:

@@ -25,8 +25,6 @@ from data_ingestion_resolution_platform_spark.functions.vectors import (
     quantized_cosine,
 )
 from data_ingestion_resolution_platform_spark.sources.lake import (
-    CHANGE_COL,
-    DELETE,
     DELETE_COL,
     is_positive,
     is_retraction,
@@ -145,9 +143,10 @@ def ivf_index(
 ) -> DataFrame:
     """The persisted IVF artifact: ``(neighbor_id, cq, cell)``.
 
-    Write it ``partitionBy("cell")`` — probes then plan as
-    partition-pruned scans of only the probed cells
-    (see ``q_ann_ivf_persisted``), the actual 100 TB layout."""
+    MERGE it on :data:`IVF_KEYS` into a ``PartitionedLakeTable``
+    bucketed on ``cell`` — probes then scan only the files that can
+    hold a probed cell (see ``q_ann_ivf_persisted``), and
+    :func:`maintain_ivf_index` keeps it fresh."""
     return (
         assign_cells(
             corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col)),
@@ -200,8 +199,8 @@ def ivf_kmeans_index(
     instead of seeded random hyperplanes: cells follow the data's
     actual cluster structure, which buys ~1.3× recall at equal
     n_probe (measured 0.60 vs 0.45 recall@10, 16 cells / 4 probes,
-    sf0.01). Same artifact shape as :func:`ivf_index` — write it
-    ``partitionBy("cell")`` for partition-pruned probes at scale."""
+    sf0.01). Same artifact shape and cell-bucketed layout as
+    :func:`ivf_index`."""
     from data_ingestion_resolution_platform_spark.operators.kmeans import _pick_assign
 
     q = corpus.select(
@@ -296,7 +295,7 @@ def ivf_kmeans_topk(
 ) -> DataFrame:
     """IVF ANN with a k-means-trained codebook: train (bounded k×dim
     driver state), index map-only, probe = equi-join on cell (or a
-    partition-pruned scan when the index is persisted by cell)."""
+    cell-pruned ``scan`` when the index is persisted, bucketed by cell)."""
     from data_ingestion_resolution_platform_spark.operators.kmeans import kmeans_fit
 
     cents = kmeans_fit(
@@ -305,6 +304,12 @@ def ivf_kmeans_topk(
     idx = ivf_kmeans_index(corpus, cents, vec_col, id_col, n_cells)
     probes = kmeans_probe_cells(queries, cents, vec_col, id_col, n_cells, n_probe)
     return ivf_probe(idx, probes, k)
+
+
+#: The persisted IVF index's MERGE key: an id lives in exactly one
+#: cell, and keying on the cell too lets a retraction name the cell
+#: (and so the bucket of a cell-bucketed table) its stale row sits in.
+IVF_KEYS = ("neighbor_id", "cell")
 
 
 def maintain_ivf_index(
@@ -318,186 +323,54 @@ def maintain_ivf_index(
     cents: dict[int, list[int]] | None = None,
     epoch_id: str | int | None = None,
 ) -> dict:
-    """Maintain a persisted IVF index ``LakeTable`` from one invertible
-    change-feed epoch on the embedding corpus, exactly-once — the
-    similarity-search twin of ``operators/dedup_incremental``: at
-    100 TB the index is NEVER rebuilt per ingest batch; only the
-    epoch's vectors are (re)assigned to cells and MERGEd in.
+    """Advance a persisted IVF index from one invertible change-feed
+    epoch on the embedding corpus, exactly-once — the similarity-search
+    twin of ``operators/dedup_incremental``: the index is never rebuilt
+    per ingest batch; only the epoch's vectors are (re)assigned to
+    cells and MERGEd in, keyed on :data:`IVF_KEYS`.
 
     - insert / update_postimage → assign the NEW vector to its cell
       (O(|Δ|) scoring against the codebook — seeded hyperplanes by
       default, or a trained k-means codebook via ``cents``) and upsert
-      ``(neighbor_id, cq, cell)`` by id;
-    - delete → MERGE delete by id;
-    - update_preimage → ignored: the index is id-keyed, so the post-
-      image row REPLACES the old one wholesale (including a cell move
-      when the vector drifted across a centroid boundary).
+      ``(neighbor_id, cq, cell)``;
+    - delete / update_preimage → assign the OLD vector to its cell and
+      delete that ``(neighbor_id, cell)`` row. Cell assignment is a pure
+      function of (vector, codebook), so the before-image locates the
+      stale row without any id → cell lookup; a retraction whose
+      ``(neighbor_id, cell)`` the epoch also upserts (an update that
+      stays in its cell) is dropped, keeping the batch key-unique.
+
+    ``index`` is any table on the module-wide MERGE contract
+    (``sources/lake``). ``PartitionedLakeTable(bucket_keys=["cell"],
+    n_buckets=n_cells)`` is the cell-pruned layout: an epoch rewrites
+    only the buckets holding its cells, and a probe
+    ``scan([("cell", "in", cells)])`` opens only the files whose cell
+    range can hold a probed cell.
 
     The codebook (``n_cells``/``seed``/``cents``) must be the one the
-    index was built with — cell assignment is a pure function of
-    (vector, codebook), so maintained-by-delta equals rebuilt-from-
-    scratch exactly, which is what the ``ann_ivf_incremental`` oracle
-    asserts. Feed contract: one change per id per epoch (a
-    ``snapshot_diff``/``changelog`` epoch), keeping the MERGE batch
-    key-unique. Rides the index table's epoch ledger.
-
-    Scale shape: Δ-only codebook scoring (map-side, no shuffle), one
-    broadcast-keyed MERGE touching only the buckets holding changed
-    ids; probes keep planning as cell-pruned scans between epochs.
-    Retraining/re-clustering the codebook itself is a separate offline
-    concern (stale centroids degrade recall, never correctness, since
-    probes rank cells with the same codebook the index uses).
+    index was built with, so maintained-by-delta equals rebuilt-from-
+    scratch exactly (the ``ann_ivf_incremental`` oracle). Feed
+    contract: one change per id per epoch (a ``snapshot_diff`` /
+    ``changelog`` epoch with pre-images). Retraining the codebook is a
+    separate offline concern (stale centroids degrade recall, never
+    correctness, since probes rank cells with the index's codebook).
     """
-    if epoch_id is not None and index.epoch_committed(epoch_id):
-        return {"skipped": True, "epoch": str(epoch_id)}
-    src = changes.filter(is_positive()).select(F.col(id_col).alias("__mid"), F.col(vec_col))
-    if cents is not None:
-        up = ivf_kmeans_index(src, cents, vec_col, "__mid", n_cells)
-    else:
-        up = ivf_index(src, vec_col, "__mid", n_cells, seed, portable)
-    up = up.withColumn(DELETE_COL, F.lit(False))
-    dels = changes.filter(F.col(CHANGE_COL) == DELETE).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.lit(None).cast(up.schema["cq"].dataType).alias("cq"),
-        F.lit(None).cast(up.schema["cell"].dataType).alias("cell"),
-        F.lit(True).alias(DELETE_COL),
+
+    def assign(images: DataFrame) -> DataFrame:
+        src = images.select(F.col(id_col).alias("__mid"), F.col(vec_col))
+        if cents is not None:
+            return ivf_kmeans_index(src, cents, vec_col, "__mid", n_cells)
+        return ivf_index(src, vec_col, "__mid", n_cells, seed, portable)
+
+    keys = list(IVF_KEYS)
+    up = assign(changes.filter(is_positive()))
+    stale = assign(changes.filter(is_retraction())).join(
+        up.select(*keys), on=keys, how="left_anti"
     )
-    return index.merge(up.unionByName(dels), ["neighbor_id"], epoch_id=epoch_id)
-
-
-class CellPartitionedIvf:
-    """IVF index stored physically ``partitionBy("cell")`` AND
-    maintainable per CDC epoch — the layout + freshness combination the
-    100 TB deployment actually needs. ``maintain_ivf_index`` keeps the
-    index in an id-bucketed LakeTable (cheap keyed MERGE, but probes
-    scan every bucket); ``ann_ivf_persisted`` has the cell-pruned probe
-    layout but rebuilds wholesale. This class closes the square.
-
-    The trick that makes an id-keyed delta applicable to a
-    cell-partitioned store WITHOUT any global id→cell index: cell
-    assignment is a pure function of (vector, codebook), and the
-    invertible feed carries pre-images — so the OLD vector of every
-    retraction locates exactly the partition holding the stale row.
-    One epoch therefore touches at most |Δ| cells:
-
-    1. post-images → assign → new index rows (their cells),
-    2. pre-images → assign → the retracted rows' cells,
-    3. read ONLY the affected cell partitions (partition-pruned scan),
-       anti-join out the changed ids (broadcast, epoch-small),
-       union the new rows,
-    4. dynamic-partition-overwrite the affected cells; cells emptied by
-       the epoch (absent from the rewrite output) are dropped
-       explicitly, since dynamic overwrite only replaces partitions it
-       writes.
-
-    The rewrite is row-level idempotent (anti-join-then-union converges
-    from any partially applied state), so redelivery after a mid-write
-    crash is safe; the epoch ledger records completion. On Iceberg the
-    same step is a staged ``REPLACE WHERE cell IN (...)`` commit —
-    atomic without the explicit empty-cell cleanup.
-
-    Vs. the reference: `/root/reference/backend/worker.py` has no
-    vector path at all; this is the engine-side extension the brief's
-    training-data pipeline calls for.
-    """
-
-    def __init__(
-        self,
-        spark,
-        root: str,
-        n_cells: int = 16,
-        seed: int = 42,
-        portable: bool = False,
-        cents: dict[int, list[int]] | None = None,
-    ):
-        import os
-
-        from data_ingestion_resolution_platform_spark.sources.lake import _EpochLedger
-
-        self.spark = spark
-        self.root = root
-        self.data = os.path.join(root, "data")
-        self.n_cells = n_cells
-        self.seed = seed
-        self.portable = portable
-        self.cents = cents
-        self.ledger = _EpochLedger(root)
-
-    def _assign(self, df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
-        if self.cents is not None:
-            return ivf_kmeans_index(df, self.cents, vec_col, id_col, self.n_cells)
-        return ivf_index(df, vec_col, id_col, self.n_cells, self.seed, self.portable)
-
-    def build(self, corpus: DataFrame, vec_col: str, id_col: str,
-              epoch_id: str | int = "build") -> dict:
-        if self.ledger.committed(epoch_id):
-            return {"skipped": True, "epoch": str(epoch_id)}
-        self._assign(corpus, vec_col, id_col).write.partitionBy("cell").mode(
-            "overwrite"
-        ).parquet(self.data)
-        self.ledger.record(epoch_id, {"op": "build"})
-        return {"epoch": str(epoch_id)}
-
-    def read(self, cells=None) -> DataFrame:
-        """Index scan; with ``cells`` it plans as a partition-pruned
-        read of only those directories (the probe path)."""
-        df = self.spark.read.parquet(self.data)
-        if cells is not None:
-            df = df.filter(F.col("cell").isin([int(c) for c in cells]))
-        return df
-
-    def maintain(
-        self,
-        changes: DataFrame,
-        vec_col: str,
-        id_col: str,
-        epoch_id: str | int | None = None,
-    ) -> dict:
-        import os
-        import shutil
-
-        if epoch_id is not None and self.ledger.committed(epoch_id):
-            return {"skipped": True, "epoch": str(epoch_id)}
-        pos = changes.filter(is_positive()).select(F.col(id_col).alias("__mid"), F.col(vec_col))
-        neg = changes.filter(is_retraction()).select(F.col(id_col).alias("__mid"), F.col(vec_col))
-        up = self._assign(pos, vec_col, "__mid").persist()
-        old = self._assign(neg, vec_col, "__mid").select("neighbor_id", "cell")
-        try:
-            # epoch-bounded collects: ≤ n_cells ints / |Δ| ids
-            affected = sorted(
-                r.cell
-                for r in up.select("cell").union(old.select("cell")).distinct().collect()
-            )
-            if not affected:
-                if epoch_id is not None:
-                    self.ledger.record(epoch_id, {"op": "noop"})
-                return {"epoch": str(epoch_id), "cells": []}
-            moved_ids = up.select("neighbor_id").union(
-                old.select("neighbor_id")
-            ).distinct()
-            keep = self.read(affected).join(
-                F.broadcast(moved_ids), on="neighbor_id", how="left_anti"
-            )
-            out = keep.select("neighbor_id", "cq", "cell").unionByName(
-                up.select("neighbor_id", "cq", "cell")
-            )
-            # lineage break: Spark refuses to overwrite a path its plan
-            # reads; the rewrite set is the affected cells only (Iceberg:
-            # a staged REPLACE WHERE, no materialization needed)
-            out = out.localCheckpoint(eager=True)
-            out.write.partitionBy("cell").mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).parquet(self.data)
-            written = {r.cell for r in out.select("cell").distinct().collect()}
-            for cell in set(affected) - written:
-                shutil.rmtree(
-                    os.path.join(self.data, f"cell={cell}"), ignore_errors=True
-                )
-            if epoch_id is not None:
-                self.ledger.record(epoch_id, {"op": "maintain", "cells": affected})
-            return {"epoch": str(epoch_id), "cells": affected}
-        finally:
-            up.unpersist()
+    batch = up.withColumn(DELETE_COL, F.lit(False)).unionByName(
+        stale.withColumn(DELETE_COL, F.lit(True))
+    )
+    return index.merge(batch, keys, epoch_id=epoch_id)
 
 
 def ivf_probe(index: DataFrame, q_exploded: DataFrame, k: int = 10) -> DataFrame:

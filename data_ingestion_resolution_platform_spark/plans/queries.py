@@ -3056,63 +3056,62 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(emb, queries, "embedding", "vec_id", k=10, portable=True)
 
 
-def q_ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The IVF scale path made physical: the index artifact written
-    ``partitionBy("cell")``, probes planned as PARTITION-PRUNED scans of
-    only the probed cells (collected probe-cell set is ≤ n_cells ints —
-    bounded), scored against the broadcast query frame. Same oracle as
-    ``ann_ivf``: the storage layout must be result-invisible."""
+def _ivf_cell_table(spark: SparkSession, root: str):
+    """A fresh IVF index table bucketed on ``cell`` (the probe layout)."""
     import shutil
 
+    from data_ingestion_resolution_platform_spark.sources.lake import PartitionedLakeTable
+
+    shutil.rmtree(root, ignore_errors=True)
+    return PartitionedLakeTable(spark, root, bucket_keys=["cell"], n_buckets=16)
+
+
+def _ivf_probe_stored(idx, queries: DataFrame) -> DataFrame:
+    """Probe a persisted index: scan only the files that can hold a
+    probed cell (the collected probe-cell set is ≤ n_cells ints), then
+    score against the broadcast query frame."""
     from data_ingestion_resolution_platform_spark.operators.similarity import (
-        ivf_index,
         ivf_probe,
         query_probe_cells,
+    )
+
+    qcells = query_probe_cells(queries, "embedding", "vec_id", portable=True)
+    cells = sorted(r.cell for r in qcells.select("cell").distinct().collect())
+    return ivf_probe(idx.scan([("cell", "in", cells)]), qcells, k=10)
+
+
+def q_ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The IVF scale path made physical: the index artifact MERGEd into
+    a table bucketed on ``cell``, probes planned as cell-pruned scans.
+    Same oracle as ``ann_ivf``: the storage layout must be
+    result-invisible."""
+    from data_ingestion_resolution_platform_spark.operators.similarity import (
+        IVF_KEYS,
+        ivf_index,
     )
 
     tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/dirp_ivf_idx_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    idx = _ivf_cell_table(spark, f"/tmp/dirp_ivf_idx_{tag}")
     emb = _t(spark, sf_dir, "embeddings")
-    ivf_index(emb, "embedding", "vec_id", portable=True).write.partitionBy(
-        "cell"
-    ).parquet(root)
-    qcells = query_probe_cells(
-        emb.filter(F.col("vec_id") < 5), "embedding", "vec_id", portable=True
-    )
-    cells = sorted(r.cell for r in qcells.select("cell").distinct().collect())
-    stored = spark.read.parquet(root).filter(F.col("cell").isin(cells))
-    return ivf_probe(stored, qcells, k=10)
+    idx.merge(ivf_index(emb, "embedding", "vec_id", portable=True), IVF_KEYS)
+    return _ivf_probe_stored(idx, emb.filter(F.col("vec_id") < 5))
 
 
-def q_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN index kept fresh from a CDC epoch — the similarity twin of
-    ``dedup_incremental``: seed the persisted IVF index from the v1
-    corpus, then apply one invertible change epoch (inserts: vec_id %
-    17 = 3; deletes: % 13 = 2; updates: % 19 = 1 gets its vector
-    REVERSED, moving it across centroid boundaries) via
-    ``maintain_ivf_index`` — only the epoch's vectors are re-scored
-    against the codebook and MERGEd by id; the corpus is never
-    re-indexed. Probes over the maintained index must equal probes over
-    an index rebuilt from scratch on v2, which the oracle computes in
-    pure SQL with the portable codebook."""
-    import shutil
-
+def _ann_ivf_maintained(spark: SparkSession, sf_dir: str, idx) -> DataFrame:
+    """Seed ``idx`` from the v1 corpus, advance it by one invertible
+    change epoch (inserts: vec_id % 17 = 3; deletes: % 13 = 2; updates:
+    % 19 = 1 gets its vector REVERSED, moving it across centroid
+    boundaries) via ``maintain_ivf_index``, and probe it. Shared by the
+    two maintained-index queries, which differ only in ``idx``'s layout
+    and share one oracle (``_EMB_V2_BASE_SQL``)."""
     from data_ingestion_resolution_platform_spark.operators.similarity import (
+        IVF_KEYS,
         ivf_index,
-        ivf_probe,
         maintain_ivf_index,
-        query_probe_cells,
     )
-    from data_ingestion_resolution_platform_spark.sources.lake import (
-        LakeTable,
-        snapshot_diff,
-    )
+    from data_ingestion_resolution_platform_spark.sources.lake import snapshot_diff
 
     with fixture_phase():
-        tag = os.path.basename(os.path.normpath(sf_dir))
-        root = f"/tmp/dirp_ivf_inc_{tag}"
-        shutil.rmtree(root, ignore_errors=True)
         emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
         vid = F.col("vec_id")
         is_ins = F.pmod(vid, F.lit(17)) == 3
@@ -3125,69 +3124,46 @@ def q_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.col("embedding"))
             .alias("embedding"),
         )
-        idx = LakeTable(spark, root)
         idx.merge(
             ivf_index(v1, "embedding", "vec_id", portable=True),
-            ["neighbor_id"],
+            IVF_KEYS,
             epoch_id="seed_v1",
         )
     changes = snapshot_diff(v1, v2, ["vec_id"], include_preimages=True)
     maintain_ivf_index(
         idx, changes, "embedding", "vec_id", portable=True, epoch_id="inc_v2"
     )
-    qcells = query_probe_cells(
-        v2.filter(vid < 5), "embedding", "vec_id", portable=True
-    )
-    return ivf_probe(idx.read(), qcells, k=10)
+    return _ivf_probe_stored(idx, v2.filter(vid < 5))
+
+
+def q_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN index kept fresh from a CDC epoch — the similarity twin of
+    ``dedup_incremental``: only the epoch's vectors are re-scored
+    against the codebook and MERGEd; the corpus is never re-indexed.
+    The index is a plain ``LakeTable``. Probes over the maintained
+    index must equal probes over an index rebuilt from scratch on v2,
+    which the oracle computes in pure SQL with the portable codebook."""
+    import shutil
+
+    from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
+
+    tag = os.path.basename(os.path.normpath(sf_dir))
+    root = f"/tmp/dirp_ivf_inc_{tag}"
+    shutil.rmtree(root, ignore_errors=True)
+    return _ann_ivf_maintained(spark, sf_dir, LakeTable(spark, root))
 
 
 def q_ann_ivf_inc_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The maintained-index scale layout made physical: same change
-    epoch as ``ann_ivf_incremental``, but the index lives
-    ``partitionBy("cell")`` (``CellPartitionedIvf``) and the epoch
-    rewrite touches ONLY the cells the changed vectors occupy — the
-    preimage vector locates each retracted row's partition because cell
-    assignment is a pure function of (vector, codebook), so no global
-    id index is needed. Probes plan as partition-pruned scans of the
-    probed cells. Shares ``ann_ivf_incremental``'s oracle: the layout
-    must be result-invisible."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.similarity import (
-        CellPartitionedIvf,
-        ivf_probe,
-        query_probe_cells,
-    )
-    from data_ingestion_resolution_platform_spark.sources.lake import snapshot_diff
-
+    """The maintained-index scale layout: same change epoch as
+    ``ann_ivf_incremental``, but the index is bucketed on ``cell``, so
+    the epoch rewrites only the buckets holding the changed vectors'
+    old and new cells (the before-image locates each retracted row's
+    cell) and probes scan only the probed cells' files. Shares
+    ``ann_ivf_incremental``'s oracle: the layout must be
+    result-invisible."""
     tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/dirp_ivf_incp_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    vid = F.col("vec_id")
-    is_ins = F.pmod(vid, F.lit(17)) == 3
-    is_del = F.pmod(vid, F.lit(13)) == 2
-    is_upd = F.pmod(vid, F.lit(19)) == 1
-    v1 = emb.filter(~is_ins)
-    v2 = emb.filter(is_ins | ~is_del).select(
-        "vec_id",
-        F.when(~is_ins & ~is_del & is_upd, F.reverse("embedding"))
-        .otherwise(F.col("embedding"))
-        .alias("embedding"),
-    )
-    idx = CellPartitionedIvf(spark, root, portable=True)
-    idx.build(v1, "embedding", "vec_id", epoch_id="seed_v1")
-    idx.maintain(
-        snapshot_diff(v1, v2, ["vec_id"], include_preimages=True),
-        "embedding",
-        "vec_id",
-        epoch_id="inc_v2",
-    )
-    qcells = query_probe_cells(
-        v2.filter(vid < 5), "embedding", "vec_id", portable=True
-    )
-    cells = sorted(r.cell for r in qcells.select("cell").distinct().collect())
-    return ivf_probe(idx.read(cells), qcells, k=10)
+    idx = _ivf_cell_table(spark, f"/tmp/dirp_ivf_incp_{tag}")
+    return _ann_ivf_maintained(spark, sf_dir, idx)
 
 
 _EMB_V2_BASE_SQL = f"""SELECT vec_id,

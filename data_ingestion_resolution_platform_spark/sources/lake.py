@@ -431,10 +431,12 @@ class LakeTable(_MergeTable):
     small relative to the table, so after 10^4 epochs a full read opens
     10^4s of tiny files: :meth:`compact_appends` folds the accumulated
     dirs into a size-targeted file set (Iceberg ``rewrite_data_files``
-    binpack), and ``compact_small_file_bytes`` arms a measured
-    auto-policy — compact when ≥ ``compact_min_dirs`` epoch dirs are
-    live AND the mean data-file size has fallen below the threshold
-    (the small-file read-amplification signal, not a blind cadence).
+    binpack). Every append stream runs one measured auto-policy by
+    default — compact when ≥ ``compact_min_dirs`` (16) epoch dirs are
+    live AND the mean data-file size has fallen below
+    ``compact_small_file_bytes`` (64 MiB): the small-file read-
+    amplification signal, not a blind cadence. 16 dirs keep short test
+    runs fold-free; ``compact_small_file_bytes=None`` disarms it.
 
     Compaction commit protocol (crash-safe, same shape as the MoR
     manifest flip): consolidated files land under an invisible
@@ -454,8 +456,8 @@ class LakeTable(_MergeTable):
         spark: SparkSession,
         root: str,
         append_only: bool = False,
-        compact_small_file_bytes: int | None = None,
-        compact_min_dirs: int = 8,
+        compact_small_file_bytes: int | None = 64 << 20,
+        compact_min_dirs: int = 16,
         compact_target_file_bytes: int = 128 << 20,
     ):
         self.spark = spark
@@ -686,8 +688,8 @@ class LakeTable(_MergeTable):
     def maybe_compact_appends(self) -> dict | None:
         """Measured auto-compaction: fold when ≥ ``compact_min_dirs``
         epoch dirs are live AND mean file size < the configured
-        small-file threshold. Armed by ``compact_small_file_bytes``;
-        disarmed tables never pay the stat walk."""
+        small-file threshold. Disarmed tables
+        (``compact_small_file_bytes=None``) never pay the stat walk."""
         if not (self.append_only and self.compact_small_file_bytes):
             return None
         s = self.append_stats()
@@ -971,14 +973,8 @@ class MorLakeTable(_MergeTable):
         (deltas mostly replace base rows); the compaction bench measures
         the true value by compacting and comparing."""
         m = m or self._read_manifest()
-        db = m.get("delta_bytes", {})
-        missing = [s for s in m["deltas"] if str(s) not in db]
-        for s in missing:  # pre-stats manifests: backfill once
-            db[str(s)] = _dir_stats(self._delta_dir(s))[0]
-        if m.get("base_bytes") is None and m["base_v"] > 0:
-            m["base_bytes"] = _dir_stats(self._base_dir(m["base_v"]))[0]
-        base = m.get("base_bytes") or 0
-        delta = sum(db[str(s)] for s in m["deltas"])
+        base = m.get("base_bytes", 0)
+        delta = sum(m["delta_bytes"][str(s)] for s in m["deltas"])
         return {
             "base_bytes": base,
             "delta_bytes": delta,
@@ -1216,15 +1212,13 @@ class PartitionedLakeTable(_MergeTable):
         # buckets evolve independently: a bucket untouched since before a
         # schema-evolving epoch still holds old-schema files. Iceberg
         # resolves this in the METADATA layer; our stand-in is a saved
-        # unified schema (updated at every merge commit) passed to the
+        # unified schema (updated at every merge commit, before the
+        # ``_DIR`` flip, so any bucket with data has it) passed to the
         # reader explicitly — parquet clips each file against it and
         # NULL-fills absent columns, with no per-read footer merging
         # (``mergeSchema`` re-reads every live footer per read and was
         # measured 3-5x slower per epoch on a 135-bucket target).
-        saved = self._read_schema()
-        if saved is not None:
-            return self.spark.read.schema(saved).parquet(*paths)
-        return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        return self.spark.read.schema(self._read_schema()).parquet(*paths)
 
     def scan(self, predicates: Sequence[tuple]) -> DataFrame:
         """Stats-pruned predicate scan over the live buckets (see

@@ -182,14 +182,11 @@ class CDCPipeline:
     not fields. Only the sketch width ``freq_width`` and the sample
     size ``quantile_k`` differ among callers (registry vs perfbench).
 
-    One small-file policy (``small_file_bytes`` / ``compact_min_dirs``)
-    arms every append-only stream: the conflicts and lineage audits and
-    the SCD2 history's closed versions. At one dir per epoch forever,
-    10^4 epochs mean 10^4s of tiny files on every full read, so a stream
-    folds once ≥ ``compact_min_dirs`` dirs are live AND the mean file
-    sits below ``small_file_bytes`` (``sources/lake.LakeTable``'s
-    measured auto-compaction). 16 dirs keep the short test pipelines
-    fold-free. A MOR target folds its deltas every 8 epochs.
+    Every append-only stream (the conflicts and lineage audits, the
+    SCD2 history's closed versions) folds its epoch dirs under the
+    append layout's one small-file policy (``sources/lake.LakeTable``'s
+    measured auto-compaction). A MOR target folds its deltas every 8
+    epochs.
     """
 
     keys = ("repo", "path")
@@ -205,8 +202,6 @@ class CDCPipeline:
     freq_depth = 4
     quantile_keys = ("repo",)
     quantile_value = "length(content)"
-    small_file_bytes = 64 << 20
-    compact_min_dirs = 16
 
     spark: SparkSession
     feed_dir: str
@@ -307,18 +302,10 @@ class CDCPipeline:
         # conflicts/lineage are audit streams → append-only layout,
         # O(batch) writes, no rewrite of history
         self.conflicts = LakeTable(
-            self.spark,
-            os.path.join(self.warehouse, "conflicts"),
-            append_only=True,
-            compact_small_file_bytes=self.small_file_bytes,
-            compact_min_dirs=self.compact_min_dirs,
+            self.spark, os.path.join(self.warehouse, "conflicts"), append_only=True
         )
         self.lineage = LakeTable(
-            self.spark,
-            os.path.join(self.warehouse, "lineage"),
-            append_only=True,
-            compact_small_file_bytes=self.small_file_bytes,
-            compact_min_dirs=self.compact_min_dirs,
+            self.spark, os.path.join(self.warehouse, "lineage"), append_only=True
         )
 
         def side_table(name: str, enabled: bool):
@@ -334,11 +321,7 @@ class CDCPipeline:
             )
 
             self.history = Scd2HistoryStore(
-                self.spark,
-                os.path.join(self.warehouse, "history"),
-                list(self.keys),
-                closed_small_file_bytes=self.small_file_bytes,
-                closed_compact_min_dirs=self.compact_min_dirs,
+                self.spark, os.path.join(self.warehouse, "history"), list(self.keys)
             )
         else:
             self.history = None
@@ -423,10 +406,12 @@ class CDCPipeline:
         advancers = self._view_advancers()
         change = None
         try:
-            # resolve_and_detect returns lazily; the persisted per-key
-            # aggregate materializes inside whichever fan-out step
-            # reaches it first (conflicts append or target MERGE), so
-            # that step's wall time includes the fused resolve shuffle.
+            # fill the winners cache (and the per-key aggregate under it)
+            # before the fan-out. Left to the steps, two that plan over
+            # the unfilled cache at once each submit their own AQE fill
+            # job, so the epoch's job count varied from run to run; a
+            # noop write fills it without a count's extra result stage.
+            winners.write.format("noop").mode("overwrite").save()
             conflicts = resolved.conflicts.withColumn(
                 "epoch", F.lit(epoch).cast("long")
             )

@@ -183,14 +183,10 @@ def test_scd2_store_closed_autocompact_matches_unarmed(spark, tmp_path):
             F.concat(F.lit(f"v{e}_"), F.col("id").cast("string")).alias("attr"),
         )
 
-    armed = Scd2HistoryStore(
-        spark,
-        str(tmp_path / "armed"),
-        keys=["k"],
-        closed_small_file_bytes=1 << 20,
-        closed_compact_min_dirs=3,
-    )
+    armed = Scd2HistoryStore(spark, str(tmp_path / "armed"), keys=["k"])
+    armed._closed.compact_small_file_bytes, armed._closed.compact_min_dirs = 1 << 20, 3
     plain = Scd2HistoryStore(spark, str(tmp_path / "plain"), keys=["k"])
+    plain._closed.compact_small_file_bytes = None
     for e in range(6):
         for h in (armed, plain):
             historize_epoch(h, feed(e), ["k"], "lsn", ["attr"], epoch_id=e)
@@ -234,10 +230,10 @@ def test_pipeline_audit_folds_keep_status_exact(spark, tmp_path):
     assert rows_f == rows_p
 
 
-def test_pipeline_history_closed_side_folds(spark, tmp_path, monkeypatch):
-    """The pipeline arms its SCD2 history's closed-version stream with
-    the same small-file policy as the audit streams; a history that
-    folds reads the same as one that never does."""
+def test_pipeline_history_closed_side_folds(spark, tmp_path):
+    """The pipeline's SCD2 history's closed-version stream runs the
+    same small-file policy as the audit streams; a history that folds
+    reads the same as one that never does."""
     from data_ingestion_resolution_platform_spark.sources.feed import synth_change_feed
     from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
 
@@ -246,11 +242,11 @@ def test_pipeline_history_closed_side_folds(spark, tmp_path, monkeypatch):
         spark, feed_dir="unused", warehouse=str(tmp_path / "plain"), maintain_history=True
     )
     plain.history._closed.compact_small_file_bytes = None
-    monkeypatch.setattr(CDCPipeline, "small_file_bytes", 1 << 20)
-    monkeypatch.setattr(CDCPipeline, "compact_min_dirs", 2)
     folding = CDCPipeline(
         spark, feed_dir="unused", warehouse=str(tmp_path / "fold"), maintain_history=True
     )
+    closed = folding.history._closed
+    closed.compact_small_file_bytes, closed.compact_min_dirs = 1 << 20, 2
     for p in (folding, plain):
         p.replay_bounded(feed, epochs=4)
     assert folding.history._closed.append_stats()["compacted_gen"] >= 1

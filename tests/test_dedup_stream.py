@@ -109,3 +109,20 @@ def test_batch_redelivery_is_noop(spark, tmp_path):
     ds.process_batch(batch, 0)  # redelivered micro-batch
     assert ds.index.current_version() == v
     assert (ds.pairs.read().count() if ds.pairs.exists() else 0) == n_pairs
+
+
+def test_pairs_stream_folds_small_files(spark, tmp_path):
+    """The pairs log is an append stream with one dir per micro-batch;
+    it runs the append layout's small-file policy, and a log that folds
+    reads the same as one that never does."""
+    folding = DedupStream(spark, str(tmp_path / "feed"), str(tmp_path / "fold"), minhash=MH)
+    folding.pairs.compact_min_dirs = 2
+    plain = DedupStream(spark, str(tmp_path / "feed"), str(tmp_path / "plain"), minhash=MH)
+    plain.pairs.compact_small_file_bytes = None
+    for epoch, rows in enumerate([BATCH0, BATCH1, BATCH2]):
+        for ds in (folding, plain):
+            ds.process_batch(spark.createDataFrame(rows, SCHEMA), epoch)
+    assert folding.pairs.append_stats()["compacted_gen"] >= 1
+    assert plain.pairs.append_stats()["compacted_gen"] == 0
+    cols = ["id_a", "id_b", "n_shared_bands", "epoch"]
+    assert _table_set(folding.pairs.read(), cols) == _table_set(plain.pairs.read(), cols)

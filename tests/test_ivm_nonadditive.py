@@ -18,11 +18,13 @@ from data_ingestion_resolution_platform_spark.operators.ivm import (
     maintain_topk,
 )
 from data_ingestion_resolution_platform_spark.operators.similarity import (
+    IVF_KEYS,
     ivf_index,
     maintain_ivf_index,
 )
 from data_ingestion_resolution_platform_spark.sources.lake import (
     LakeTable,
+    PartitionedLakeTable,
     snapshot_diff,
 )
 
@@ -325,12 +327,18 @@ def _vecs(spark):
     return v1, v2
 
 
-def test_maintain_ivf_index_equals_rebuild(spark, tmp_path):
+@pytest.mark.parametrize("kind", ["lake", "bucketed"])
+def test_maintain_ivf_index_equals_rebuild(spark, tmp_path, kind):
     v1, v2 = _vecs(spark)
-    idx = LakeTable(spark, str(tmp_path / "ivf"))
+    root = str(tmp_path / "ivf")
+    idx = (
+        LakeTable(spark, root)
+        if kind == "lake"
+        else PartitionedLakeTable(spark, root, bucket_keys=["cell"], n_buckets=4)
+    )
     idx.merge(
         ivf_index(v1, "embedding", "vec_id", n_cells=4, portable=True),
-        ["neighbor_id"],
+        IVF_KEYS,
         epoch_id="seed",
     )
     changes = snapshot_diff(v1, v2, ["vec_id"], include_preimages=True)
