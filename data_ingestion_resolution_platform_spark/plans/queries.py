@@ -17,13 +17,22 @@ Cross-engine determinism rules used throughout:
 
 from __future__ import annotations
 
+import atexit
 import contextlib
+import datetime as dt
+import functools
+import itertools
 import os
+import re
+import tempfile
 import time
+import uuid
 from collections.abc import Callable
+from shutil import rmtree
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from data_ingestion_resolution_platform_spark.functions.normalize import (
     is_valid_email_format,
@@ -35,45 +44,177 @@ from data_ingestion_resolution_platform_spark.functions.text import (
     PII_EMAIL_RE,
     PII_LONG_NUM_RE,
     PII_PHONE_RE,
+    SAMPLE_PRIME,
     STOPWORDS_EN,
+    detect_language,
     doc_fingerprint_portable,
     quality_features,
+    quality_score,
     redact_pii,
+    split_assign,
     stratified_keep,
     token_count,
 )
+from data_ingestion_resolution_platform_spark.functions.vectors import portable_sign_sql
+from data_ingestion_resolution_platform_spark.operators.asof import asof_join, asof_join_cogroup
 from data_ingestion_resolution_platform_spark.operators.cdc import (
     apply_changes,
+    apply_patches,
     detect_conflicts,
     explode_issues,
+    merge_conflict_state,
+    normalize_contacts,
     resolve_first,
+    resolve_latest,
     resolve_with_choices,
 )
+from data_ingestion_resolution_platform_spark.operators.decontam import decontaminate
 from data_ingestion_resolution_platform_spark.operators.dedup import (
     dedup_exact,
+    dedup_exact_keep,
     embedding_near_dups,
     minhash_candidates,
     ngram_jaccard,
+    plane_salt,
     simhash_near_dups,
 )
+from data_ingestion_resolution_platform_spark.operators.dedup_incremental import (
+    build_minhash_index,
+    incremental_minhash_epoch,
+)
+from data_ingestion_resolution_platform_spark.operators.fuzzy import fuzzy_self_pairs
+from data_ingestion_resolution_platform_spark.operators.graph import (
+    connected_components,
+    pagerank,
+    triangle_count,
+)
+from data_ingestion_resolution_platform_spark.operators.graph_incremental import (
+    build_cluster_state,
+    build_triangle_state,
+    maintain_clusters,
+    maintain_triangle_count,
+)
+from data_ingestion_resolution_platform_spark.operators.ivm import (
+    maintain_aggregate,
+    maintain_distinct,
+    maintain_join,
+    maintain_minmax,
+    maintain_topk,
+    quantiles_from_multiplicity,
+)
+from data_ingestion_resolution_platform_spark.operators.kmeans import kmeans_fit_predict
 from data_ingestion_resolution_platform_spark.operators.multimodal import (
     decode_media,
     multimodal_features,
     synth_media_payloads,
 )
+from data_ingestion_resolution_platform_spark.operators.packing import (
+    global_prefix_sum,
+    pack_shards,
+)
+from data_ingestion_resolution_platform_spark.operators.quality import repetition_stats
 from data_ingestion_resolution_platform_spark.operators.ranges import interval_join
-from data_ingestion_resolution_platform_spark.operators.similarity import brute_force_topk, ivf_topk
+from data_ingestion_resolution_platform_spark.operators.rescan import maintain_group_rescan
+from data_ingestion_resolution_platform_spark.operators.scd import (
+    Scd2HistoryStore,
+    historize_epoch,
+    scd2_as_of,
+    scd2_history,
+)
+from data_ingestion_resolution_platform_spark.operators.search import (
+    BM25_B,
+    BM25_K1,
+    TOKEN_SPLIT_REGEX,
+    bm25_from_index,
+    bm25_topk,
+    maintain_search_index,
+    seed_search_index,
+    vocab_topk,
+)
+from data_ingestion_resolution_platform_spark.operators.sessions import (
+    session_stats,
+    session_window_agg,
+    tumbling_agg,
+)
+from data_ingestion_resolution_platform_spark.operators.similarity import (
+    IVF_KEYS,
+    _cell_salt,
+    brute_force_topk,
+    ivf_index,
+    ivf_kmeans_topk,
+    ivf_probe,
+    ivf_topk,
+    maintain_ivf_index,
+    query_probe_cells,
+)
+from data_ingestion_resolution_platform_spark.operators.sketch import (
+    cms_cells,
+    cms_lookup,
+    cms_seeds,
+    kmv_estimate,
+    kmv_sketch,
+    maintain_cms,
+    maintain_kmv,
+    maintain_qsample,
+    qsample_quantile,
+    qsample_sketch,
+    qsample_values_csv,
+)
+from data_ingestion_resolution_platform_spark.operators.skew import salted_join
 from data_ingestion_resolution_platform_spark.operators.stats import (
     group_percentiles,
     percentile_rank_sql,
 )
-from data_ingestion_resolution_platform_spark.sources.feed import events_as_change_feed
-from data_ingestion_resolution_platform_spark.sources.lake import DELETE_COL
+from data_ingestion_resolution_platform_spark.operators.topk import grouped_topk
+from data_ingestion_resolution_platform_spark.sources.bloom_index import (
+    bloom_pruned_scan,
+    build_bloom_index,
+)
+from data_ingestion_resolution_platform_spark.sources.bucketed import ensure_bucketed
+from data_ingestion_resolution_platform_spark.sources.clustering import write_clustered
+from data_ingestion_resolution_platform_spark.sources.feed import (
+    events_as_change_feed,
+    read_contacts_csv,
+)
+from data_ingestion_resolution_platform_spark.sources.lake import (
+    DELETE_COL,
+    LakeTable,
+    MorLakeTable,
+    PartitionedLakeTable,
+    apply_changelog,
+    snapshot_diff,
+)
+from data_ingestion_resolution_platform_spark.sources.skipping import pruned_scan
+from data_ingestion_resolution_platform_spark.streaming.lineage import status_history
+from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
+from data_ingestion_resolution_platform_spark.streaming.schema_evolution import reconcile_exprs
 from data_ingestion_resolution_platform_spark.util import local_df
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+# --------------------------------------------------------------------------
+# Scratch space: every dir a query writes lives under ONE root per process,
+# made on first use by ``tempfile`` (so it follows $TMPDIR) and removed at
+# exit — concurrent processes never share a path and nothing outlives the
+# run.
+# --------------------------------------------------------------------------
+
+_SCRATCH_ROOT: list[str] = []
+
+
+def _scratch(sf_dir: str, name: str) -> str:
+    """The path ``<name>_<sf tag>`` under this process's scratch root,
+    emptied of whatever an earlier call left there."""
+    if not _SCRATCH_ROOT:
+        _SCRATCH_ROOT.append(tempfile.mkdtemp(prefix="dirp_"))
+        atexit.register(rmtree, _SCRATCH_ROOT[0], True)
+    tag = os.path.basename(os.path.normpath(sf_dir))
+    path = os.path.join(_SCRATCH_ROOT[0], f"{name}_{tag}")
+    rmtree(path, ignore_errors=True)
+    return path
 
 
 # --------------------------------------------------------------------------
@@ -88,20 +229,27 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # sections with ``with fixture_phase():``; bench.py resets the
 # accumulator before each query and reads it after, emitting
 # {total_s, fixture_s, operator_s} per query so a regression in the
-# OPERATOR is distinguishable from fixture/VM noise.
+# OPERATOR is distinguishable from fixture/VM noise.  A shared read-only
+# fixture (``_shared_fixture``) is built once per process and billed to
+# whichever query asks for it first; later callers pay nothing for it.
 
 _FIXTURE_S = [0.0]
+_FIXTURE_DEPTH = [0]
 
 
 @contextlib.contextmanager
 def fixture_phase():
     """Accumulate wall time of a fixture-construction block into the
-    module counter read by bench.py's per-query split."""
+    module counter read by bench.py's per-query split. Only the
+    outermost of nested blocks counts, so no second is billed twice."""
+    _FIXTURE_DEPTH[0] += 1
     t0 = time.time()
     try:
         yield
     finally:
-        _FIXTURE_S[0] += time.time() - t0
+        _FIXTURE_DEPTH[0] -= 1
+        if _FIXTURE_DEPTH[0] == 0:
+            _FIXTURE_S[0] += time.time() - t0
 
 
 def reset_fixture_time() -> None:
@@ -110,6 +258,30 @@ def reset_fixture_time() -> None:
 
 def fixture_time() -> float:
     return _FIXTURE_S[0]
+
+
+_SHARED: dict[tuple, object] = {}
+# one dir name per build, so no build empties another's dir even after a
+# test swaps in a fresh ``_SHARED``
+_SHARED_IDS = itertools.count()
+
+
+def _shared_fixture(build):
+    """Memoize ``build(spark, sf_dir, root, **flags)`` per (session,
+    sf_dir, flags): the first call builds into its own scratch dir inside
+    ``fixture_phase()``, every later call gets the same object back —
+    which its callers only read."""
+
+    @functools.wraps(build)
+    def get(spark: SparkSession, sf_dir: str, **flags):
+        key = (build.__name__, spark, sf_dir, tuple(sorted(flags.items())))
+        if key not in _SHARED:
+            with fixture_phase():
+                root = _scratch(sf_dir, f"{build.__name__.strip('_')}{next(_SHARED_IDS)}")
+                _SHARED[key] = build(spark, sf_dir, root, **flags)
+        return _SHARED[key]
+
+    return get
 
 
 # SQL fragment shared by every CDC oracle: the events→change-feed map
@@ -160,8 +332,6 @@ def q_cdc_apply_patches(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE hash aggregation (operators/cdc.py). The oracle replicates the
     semantics through an independent window-replay formulation.
     """
-    from data_ingestion_resolution_platform_spark.operators.cdc import apply_patches
-
     feed = events_as_change_feed(spark, sf_dir)
     is_u = F.col("op") == "U"
     lsn = F.col("lsn")
@@ -406,8 +576,6 @@ WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderst
 
 def q_latest_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1: latest order per customer (row_number over orderdate, key)."""
-    from data_ingestion_resolution_platform_spark.operators.cdc import resolve_latest
-
     orders = _t(spark, sf_dir, "orders")
     out = resolve_latest(orders, ["o_custkey"], "o_orderdate", tie_breakers=["o_orderkey"])
     return out.select("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
@@ -428,8 +596,6 @@ def q_latest_order_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (key, salt), phase 2 merge of ≤ n_salt partials — the plan that
     bounds reducer state on a 10^7-row hot key. Same oracle as
     ``latest_order_per_customer``: salting must be row-invisible."""
-    from data_ingestion_resolution_platform_spark.operators.cdc import resolve_latest
-
     orders = _t(spark, sf_dir, "orders")
     out = resolve_latest(
         orders,
@@ -817,10 +983,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same components with a recursive transitive-closure CTE —
     exact cross-engine agreement on (cluster id = min doc id of the
     component, cluster size)."""
-    from data_ingestion_resolution_platform_spark.operators.graph import (
-        connected_components,
-    )
-
     docs = _t(spark, sf_dir, "documents")
     pairs = ngram_jaccard(docs, "text", "doc_id", threshold=0.5)
     cc = connected_components(pairs, "id_a", "id_b", id_out="doc_id")
@@ -917,8 +1079,6 @@ FROM e
 
 
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_ingestion_resolution_platform_spark.functions.text import detect_language
-
     docs = _t(spark, sf_dir, "documents")
     return docs.select(
         "doc_id", F.col("lang").alias("actual_lang"), detect_language(F.col("text")).alias("detected_lang")
@@ -1093,14 +1253,6 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the full-corpus recompute restricted to pairs touching a
     changed doc — which is the oracle (full portable MinHash over
     ``documents`` + the changed-id filter)."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.dedup_incremental import (
-        build_minhash_index,
-        incremental_minhash_epoch,
-    )
-    from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
-
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     legacy = F.concat(F.col("text"), F.lit(" legacy legacy rewrite pending"))
     v1 = docs.filter(F.col("doc_id") % 10 != 0).withColumn(
@@ -1110,9 +1262,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ghosts = docs.filter(F.col("doc_id") % 13 == 0).select(
         (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/dirp_lsh_index_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch(sf_dir, "lsh_index")
     index = LakeTable(spark, root)
     build_minhash_index(
         index, v1.unionByName(ghosts), "text", "doc_id", epoch_id="seed", portable=True
@@ -1240,9 +1390,6 @@ def q_asof_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     SURVEY.md §2.4): each purchase matched to the user's most recent
     click at-or-before it. Union+ordered-window plan: one shuffle of
     |L|+|R| rows, never a cross join."""
-    from data_ingestion_resolution_platform_spark.operators.asof import asof_join
-    from data_ingestion_resolution_platform_spark.operators.cdc import resolve_latest
-
     ev = _t(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("p_event_id"), "user_id", F.col("ts").alias("p_ts")
@@ -1263,11 +1410,6 @@ def q_asof_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``cogroup(...).applyInPandas`` + vectorized ``pd.merge_asof``);
     shares the window plan's oracle — identical semantics, different
     physical strategy (operators/asof.py::asof_join_cogroup)."""
-    from data_ingestion_resolution_platform_spark.operators.asof import (
-        asof_join_cogroup,
-    )
-    from data_ingestion_resolution_platform_spark.operators.cdc import resolve_latest
-
     ev = _t(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("p_event_id"), "user_id", F.col("ts").alias("p_ts")
@@ -1301,8 +1443,6 @@ ASOF LEFT JOIN clicks_u c ON p.user_id = c.user_id AND p.p_ts >= c.c_ts
 def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour window counts per event type (streaming-shaped
     agg run in batch; ``F.window`` bucketing)."""
-    from data_ingestion_resolution_platform_spark.operators.sessions import tumbling_agg
-
     ev = _t(spark, sf_dir, "events")
     return tumbling_agg(ev, "ts", 3600, group_cols=["event_type"])
 
@@ -1319,11 +1459,7 @@ def _file_stream(spark: SparkSession, sf_dir: str, name: str, n_files: int = 4):
     """Materialize the events table as an n-file parquet dir and open it
     as a bounded file-stream source (2 files/trigger ⇒ ≥2 micro-batches
     exercise cross-batch state)."""
-    import shutil
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    src = f"/tmp/dirp_stream_src_{name}_{tag}"
-    shutil.rmtree(src, ignore_errors=True)
+    src = _scratch(sf_dir, f"stream_src_{name}")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     ev.repartition(n_files).write.mode("overwrite").parquet(src)
     stream = (
@@ -1334,19 +1470,14 @@ def _file_stream(spark: SparkSession, sf_dir: str, name: str, n_files: int = 4):
     return stream
 
 
-def _run_to_memory(df, name_prefix: str, mode: str):
+def _run_to_memory(df, sf_dir: str, name_prefix: str, mode: str):
     """Drain a bounded stream (availableNow) into a memory-sink table
     and return it as a batch DataFrame. Driver-gate harness only — the
     production sink is ``foreachBatch`` → lake MERGE
     (streaming/pipeline.py); memory sink is valid here because the
     result set is a bounded aggregate/distinct, not the raw feed."""
-    import shutil
-    import uuid
-
-    run = uuid.uuid4().hex[:10]
-    name = f"{name_prefix}_{run}"
-    ckpt = f"/tmp/dirp_stream_ckpt_{name}"
-    shutil.rmtree(ckpt, ignore_errors=True)
+    name = f"{name_prefix}_{uuid.uuid4().hex[:10]}"
+    ckpt = _scratch(sf_dir, f"stream_ckpt_{name_prefix}")
     q = (
         df.writeStream.format("memory")
         .queryName(name)
@@ -1368,8 +1499,6 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceeds the data's time span so no window is dropped regardless of
     file arrival order (late-data *dropping* is pytest-covered where
     arrival order is controlled; the driver gate needs determinism)."""
-    from data_ingestion_resolution_platform_spark.operators.sessions import tumbling_agg
-
     stream = _file_stream(spark, sf_dir, "tumb")
     # watermarks require TIMESTAMP (not NTZ); session TZ is pinned UTC
     # (session.py) so the round-trip cast is value-preserving
@@ -1379,7 +1508,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         group_cols=["event_type"],
     )
     agg = agg.withColumn("w_start", F.col("w_start").cast("timestamp_ntz"))
-    return _run_to_memory(agg, "stream_tumb", "complete")
+    return _run_to_memory(agg, sf_dir, "stream_tumb", "complete")
 
 
 SQL_STREAM_TUMBLING = SQL_TUMBLING
@@ -1395,7 +1524,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = stream.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
-    return _run_to_memory(dd, "stream_dedup", "append")
+    return _run_to_memory(dd, sf_dir, "stream_dedup", "append")
 
 
 SQL_STREAM_DEDUP = """
@@ -1431,7 +1560,7 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return _run_to_memory(agg, "stream_sess", "complete")
+    return _run_to_memory(agg, sf_dir, "stream_sess", "complete")
 
 
 def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1455,7 +1584,7 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = joined.groupBy("segment", "event_type").agg(
         F.count(F.lit(1)).alias("n_events")
     )
-    return _run_to_memory(agg, "stream_enrich", "complete")
+    return _run_to_memory(agg, sf_dir, "stream_enrich", "complete")
 
 
 SQL_STREAM_ENRICH = """
@@ -1507,7 +1636,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("p_ts")),
         "inner",
     ).select("p_event_id", "c_event_id", "user_id")
-    return _run_to_memory(joined, "stream_ssj", "append")
+    return _run_to_memory(joined, sf_dir, "stream_ssj", "append")
 
 
 SQL_STREAM_SSJOIN = """
@@ -1587,8 +1716,6 @@ WINDOW w AS (PARTITION BY event_type ORDER BY day
 def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity gap) per user:
     lag + cumulative-sum composition, one shuffle."""
-    from data_ingestion_resolution_platform_spark.operators.sessions import session_stats
-
     ev = _t(spark, sf_dir, "events")
     return session_stats(ev, ["user_id"], "ts", 1800)
 
@@ -1623,8 +1750,6 @@ def q_events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark-native session windows (``F.session_window``, the operator
     the streaming path uses with a watermark) run in batch; oracle =
     the lag+cumsum gap sessionization with end = last event + gap."""
-    from data_ingestion_resolution_platform_spark.operators.sessions import session_window_agg
-
     ev = _t(spark, sf_dir, "events")
     return session_window_agg(ev, ["user_id"], "ts", 1800)
 
@@ -1697,12 +1822,6 @@ def q_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     content hash), all in one declarative plan — the shape a 100 TB
     pretraining-data job actually runs. Expression-only; the dedup keep
     shuffles (hash, id) never text."""
-    from data_ingestion_resolution_platform_spark.functions.text import (
-        detect_language,
-        quality_score,
-    )
-    from data_ingestion_resolution_platform_spark.operators.dedup import dedup_exact_keep
-
     docs = _t(spark, sf_dir, "documents")
     scored = docs.select(
         "doc_id",
@@ -1763,8 +1882,6 @@ def q_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hash-bucket train/val/test assignment — stable
     across runs and engines, no randomness (replay-safe splits for a
     training pipeline)."""
-    from data_ingestion_resolution_platform_spark.functions.text import split_assign
-
     docs = _t(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -1794,8 +1911,6 @@ def q_shard_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     window) → fixed-budget shard assignment. The oracle expresses the
     identical semantics as a plain ANSI window, which is only viable at
     oracle scale; the Spark plan is the scale path."""
-    from data_ingestion_resolution_platform_spark.operators.packing import pack_shards
-
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", token_count(F.col("text"), "whitespace").cast("long").alias("tokens")
@@ -1835,8 +1950,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stratified_sql() -> str:
-    from data_ingestion_resolution_platform_spark.functions.text import SAMPLE_PRIME
-
     whens = "\n            ".join(
         f"WHEN lang = '{g}' THEN {int(round(r * 10_000))}" for g, r in _STRAT_RATES.items()
     )
@@ -1932,17 +2045,21 @@ _DERIVED_FEED_SQL = """
 """
 
 
-def _replayed_pipeline(spark: SparkSession, sf_dir: str, name: str, **flags):
-    """A fresh ``CDCPipeline(**flags)`` under
-    ``/tmp/dirp_pipeline_<name>_<sf tag>`` that has replayed the derived
-    code feed in 3 LSN-ranged epochs."""
-    import shutil
+def _lww_sql(feed: str = f"({_DERIVED_FEED_SQL})") -> str:
+    """The live state of a derived-code-feed relation as a subquery: per
+    (repo, path) the highest lsn wins, and a winning 'D' drops the key."""
+    return f"""(
+  SELECT * FROM (
+    SELECT *, row_number() OVER (PARTITION BY repo, path ORDER BY lsn DESC) AS rn
+    FROM {feed}
+  ) WHERE rn = 1 AND op <> 'D'
+)"""
 
-    from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    wh = f"/tmp/dirp_pipeline_{name}_{tag}"
-    shutil.rmtree(wh, ignore_errors=True)
+@_shared_fixture
+def _replayed_pipeline(spark: SparkSession, sf_dir: str, wh: str, **flags):
+    """A ``CDCPipeline(**flags)`` that has replayed the derived code feed
+    in 3 LSN-ranged epochs — shared by every query with the same flags."""
     feed = _derived_code_feed(spark, sf_dir)
     pipe = CDCPipeline(spark, feed_dir="unused", warehouse=wh, **flags)
     pipe.replay_bounded(feed, epochs=3)
@@ -1957,20 +2074,14 @@ def q_pipeline_cdc_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. The oracle is the pure-SQL LWW collapse of the same feed; the
     equality IS the north rule's "matches the reference's final table
     state after replay" check at driver scale."""
-    pipe = _replayed_pipeline(spark, sf_dir, "e2e")
+    pipe = _replayed_pipeline(spark, sf_dir)
     return pipe.target.read().select(
         "repo", "path", "lsn", "op", "ts", "commit", "lang", "content"
     )
 
 
 SQL_PIPELINE_E2E = f"""
-WITH feed AS ({_DERIVED_FEED_SQL}),
-w AS (
-  SELECT *, row_number() OVER (PARTITION BY repo, path ORDER BY lsn DESC) AS rn
-  FROM feed
-)
-SELECT repo, path, lsn, op, ts, "commit", lang, content
-FROM w WHERE rn = 1 AND op <> 'D'
+SELECT repo, path, lsn, op, ts, "commit", lang, content FROM {_lww_sql()}
 """
 
 
@@ -1983,14 +2094,7 @@ def q_cdc_bootstrap_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     event double-applies and no tail event is missed. (lsn/op are
     excluded from the compared output: snapshot rows legitimately
     carry the synthetic watermark stamp.)"""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.cdc import apply_changes
-    from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    wh = f"/tmp/dirp_bootstrap_{tag}"
-    shutil.rmtree(wh, ignore_errors=True)
+    wh = _scratch(sf_dir, "bootstrap")
     feed = _derived_code_feed(spark, sf_dir)
     lo, hi = feed.agg(F.min("lsn"), F.max("lsn")).first()  # 1-row scalar
     wm = (lo + hi) // 2
@@ -2007,13 +2111,7 @@ def q_cdc_bootstrap_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_BOOTSTRAP_HANDOFF = f"""
-WITH feed AS ({_DERIVED_FEED_SQL}),
-w AS (
-  SELECT *, row_number() OVER (PARTITION BY repo, path ORDER BY lsn DESC) AS rn
-  FROM feed
-)
-SELECT repo, path, ts, "commit", lang, content
-FROM w WHERE rn = 1 AND op <> 'D'
+SELECT repo, path, ts, "commit", lang, content FROM {_lww_sql()}
 """
 
 
@@ -2022,7 +2120,7 @@ def q_pipeline_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     type-2 history table per epoch alongside the LWW target (own
     exactly-once ledger, O(delta) apply). Oracle: one-shot SCD2 SQL
     over the same derived feed."""
-    pipe = _replayed_pipeline(spark, sf_dir, "hist", maintain_history=True)
+    pipe = _replayed_pipeline(spark, sf_dir, maintain_history=True)
     return pipe.history.read().select(
         "repo", "path", "commit", "lang", "content",
         "valid_from_lsn", "valid_to_lsn", "is_current",
@@ -2067,11 +2165,7 @@ def q_pipeline_epoch_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes each epoch's conflicted-key count (distinct
     (lang, sha256(content)) signatures per (repo, path) within the
     epoch) straight from the feed in SQL."""
-    from data_ingestion_resolution_platform_spark.streaming.lineage import (
-        status_history,
-    )
-
-    pipe = _replayed_pipeline(spark, sf_dir, "status")
+    pipe = _replayed_pipeline(spark, sf_dir)
     return status_history(pipe.lineage.read())
 
 
@@ -2105,22 +2199,15 @@ def q_pipeline_maintained_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates the pure-SQL LWW collapse of the whole feed: the
     maintained table must equal the recomputed truth after 3 epochs of
     inserts, updates, deletes, and ledger-guarded commits."""
-    pipe = _replayed_pipeline(spark, sf_dir, "stats", maintain_stats=True)
+    pipe = _replayed_pipeline(spark, sf_dir, maintain_stats=True)
     return pipe.stats.read().select("repo", "n_paths", "total_bytes")
 
 
 SQL_PIPELINE_STATS = f"""
-WITH feed AS ({_DERIVED_FEED_SQL}),
-w AS (
-  SELECT *, row_number() OVER (PARTITION BY repo, path ORDER BY lsn DESC) AS rn
-  FROM feed
-), s AS (
-  SELECT repo, content FROM w WHERE rn = 1 AND op <> 'D'
-)
 SELECT repo,
        CAST(count(*) AS BIGINT) AS n_paths,
        CAST(sum(length(content)) AS BIGINT) AS total_bytes
-FROM s GROUP BY repo
+FROM {_lww_sql()} GROUP BY repo
 """
 
 
@@ -2134,7 +2221,7 @@ def q_pipeline_maintained_leaderboard(spark: SparkSession, sf_dir: str) -> DataF
     ledger (``operators/ivm.py maintain_topk``). Shares
     ``SQL_IVM_TOPK``'s oracle: the maintained leaderboard must converge
     to the top-3 recomputed from the full-feed LWW state."""
-    pipe = _replayed_pipeline(spark, sf_dir, "lb", maintain_leaderboard=True)
+    pipe = _replayed_pipeline(spark, sf_dir, maintain_leaderboard=True)
     return pipe.leaderboard.read().select(
         "repo", "path", F.col("lb_val").alias("nb")
     )
@@ -2147,16 +2234,7 @@ def q_cdc_conflict_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     don't-reopen-RESOLVED), with deterministic 'human' resolutions at
     epoch 2 (open keys with an even path index). The oracle replays the
     same state machine in pure SQL."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.cdc import (
-        merge_conflict_state,
-    )
-    from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/dirp_confstate_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch(sf_dir, "confstate")
     feed = _derived_code_feed(spark, sf_dir)
     hi = feed.agg(F.max("lsn")).collect()[0][0]
     t1, t2 = hi // 3, (2 * hi) // 3
@@ -2228,14 +2306,7 @@ def q_mor_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     crosses base + post-compaction deltas — then read back through the
     broadcast-reconcile plan. Oracle: identical pure-SQL LWW collapse as
     the COW pipeline (same final state, different physical strategy)."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.cdc import resolve_latest
-    from data_ingestion_resolution_platform_spark.sources.lake import MorLakeTable
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/dirp_mor_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch(sf_dir, "mor")
     feed = _derived_code_feed(spark, sf_dir)
     hi = feed.agg(F.max("lsn")).collect()[0][0]
     cuts = [hi // 3, (2 * hi) // 3]
@@ -2255,15 +2326,11 @@ def q_mor_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_shared_fixture
 def _two_epoch_code_lake(spark: SparkSession, sf_dir: str, root: str):
     """Derived code feed → versioned lake table via TWO lsn-ranged
-    MERGE epochs (shared by the CDF queries)."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.cdc import resolve_latest
-    from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
-
-    shutil.rmtree(root, ignore_errors=True)
+    MERGE epochs — one read-only table shared by the CDF and IVM
+    queries."""
     feed = _derived_code_feed(spark, sf_dir)
     thr = feed.agg(F.max("lsn")).collect()[0][0] // 2
     t = LakeTable(spark, root)
@@ -2282,8 +2349,7 @@ def q_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     both retained snapshots + one full-outer key diff — the Iceberg/
     Delta CDF shape). The oracle rebuilds both snapshot states as pure
     LWW SQL and diffs them with IS DISTINCT FROM."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    t = _two_epoch_code_lake(spark, sf_dir, f"/tmp/dirp_table_changes_{tag}")
+    t = _two_epoch_code_lake(spark, sf_dir)
     return t.changelog(1, 2, ["repo", "path"]).select(
         "repo", "path", "change_type", "lsn", "op", "ts", "commit", "lang", "content"
     )
@@ -2296,17 +2362,8 @@ def q_cdf_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
     change_type marker stays out of the replica schema) — the replica
     must converge to exactly the source's v2 state, which the oracle
     computes as the pure-SQL LWW collapse of the whole feed."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.sources.lake import (
-        LakeTable,
-        apply_changelog,
-    )
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    src = _two_epoch_code_lake(spark, sf_dir, f"/tmp/dirp_cdf_src_{tag}")
-    rep_root = f"/tmp/dirp_cdf_replica_{tag}"
-    shutil.rmtree(rep_root, ignore_errors=True)
+    src = _two_epoch_code_lake(spark, sf_dir)
+    rep_root = _scratch(sf_dir, "cdf_replica")
     replica = LakeTable(spark, rep_root)
     replica.merge(src.read(version=1), ["repo", "path"], epoch_id="seed_v1")
     apply_changelog(
@@ -2323,19 +2380,11 @@ def _table_changes_sql() -> str:
     pick = ",\n         ".join(
         f"CASE WHEN b.repo IS NULL THEN a.{c} ELSE b.{c} END AS {c}" for c in cols
     )
-    state = (
-        "SELECT repo, path, lsn, op, ts, \"commit\", lang, content FROM {w} WHERE rn = 1 AND op <> 'D'"
-    )
+    half = "(SELECT CAST(floor(max(lsn) / 2) AS BIGINT) FROM feed)"
     return f"""
 WITH feed AS ({_DERIVED_FEED_SQL}),
-w1 AS (
-  SELECT *, row_number() OVER (PARTITION BY repo, path ORDER BY lsn DESC) AS rn
-  FROM feed WHERE lsn <= (SELECT CAST(floor(max(lsn) / 2) AS BIGINT) FROM feed)
-), s1 AS ({state.format(w='w1')}),
-w2 AS (
-  SELECT *, row_number() OVER (PARTITION BY repo, path ORDER BY lsn DESC) AS rn
-  FROM feed
-), s2 AS ({state.format(w='w2')})
+s1 AS {_lww_sql(f"(SELECT * FROM feed WHERE lsn <= {half})")},
+s2 AS {_lww_sql("feed")}
 SELECT coalesce(b.repo, a.repo) AS repo,
        coalesce(b.path, a.path) AS path,
        CASE WHEN a.repo IS NULL THEN 'insert'
@@ -2361,17 +2410,8 @@ def q_ivm_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     including groups newly created, moved into (``lang`` changes on
     update, handled by the preimage subtract / postimage add), and
     groups whose count reaches zero."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.ivm import (
-        maintain_aggregate,
-    )
-    from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    src = _two_epoch_code_lake(spark, sf_dir, f"/tmp/dirp_ivm_src_{tag}")
-    agg_root = f"/tmp/dirp_ivm_agg_{tag}"
-    shutil.rmtree(agg_root, ignore_errors=True)
+    src = _two_epoch_code_lake(spark, sf_dir)
+    agg_root = _scratch(sf_dir, "ivm_agg")
     agg = LakeTable(spark, agg_root)
     seed = (
         src.read(version=1)
@@ -2395,17 +2435,10 @@ def q_ivm_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_IVM_AGG = f"""
-WITH feed AS ({_DERIVED_FEED_SQL}),
-w AS (
-  SELECT *, row_number() OVER (PARTITION BY repo, path ORDER BY lsn DESC) AS rn
-  FROM feed
-), s2 AS (
-  SELECT repo, lang, content FROM w WHERE rn = 1 AND op <> 'D'
-)
 SELECT repo, lang,
        CAST(count(*) AS BIGINT) AS n_files,
        CAST(sum(length(content)) AS BIGINT) AS total_bytes
-FROM s2 GROUP BY repo, lang
+FROM {_lww_sql()} GROUP BY repo, lang
 """
 
 
@@ -2448,19 +2481,9 @@ def q_ivm_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     row, and owner updates that rewrite joined attributes. The oracle
     recomputes the v2 join from scratch: maintained-by-delta must equal
     recomputed, row for row."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.ivm import maintain_join
-    from data_ingestion_resolution_platform_spark.sources.lake import (
-        LakeTable,
-        snapshot_diff,
-    )
-
     with fixture_phase():
-        tag = os.path.basename(os.path.normpath(sf_dir))
-        src = _two_epoch_code_lake(spark, sf_dir, f"/tmp/dirp_ivmj_src_{tag}")
-        view_root = f"/tmp/dirp_ivmj_view_{tag}"
-        shutil.rmtree(view_root, ignore_errors=True)
+        src = _two_epoch_code_lake(spark, sf_dir)
+        view_root = _scratch(sf_dir, "ivmj_view")
         r_cols = ["repo", "path", "lang", "commit"]
         r1 = src.read(version=1).select(*r_cols)
         s1, s2 = _repo_dim(spark, 1), _repo_dim(spark, 2)
@@ -2486,13 +2509,7 @@ def q_ivm_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_IVM_JOIN = f"""
-WITH feed AS ({_DERIVED_FEED_SQL}),
-w AS (
-  SELECT *, row_number() OVER (PARTITION BY repo, path ORDER BY lsn DESC) AS rn
-  FROM feed
-), files AS (
-  SELECT repo, path, lang, "commit" FROM w WHERE rn = 1 AND op <> 'D'
-), repos AS (
+WITH repos AS (
   SELECT 'repo_' || CAST(n AS VARCHAR) AS repo,
          CASE WHEN n % 7 = 0 THEN 'org_x'
               ELSE 'org_' || CAST(n % 5 AS VARCHAR) END AS owner,
@@ -2501,7 +2518,7 @@ w AS (
   WHERE n % 11 <> 3
 )
 SELECT f.repo, f.path, f.lang, f."commit", r.owner, r.tier
-FROM files f JOIN repos r USING (repo)
+FROM {_lww_sql()} f JOIN repos r USING (repo)
 """
 
 
@@ -2514,18 +2531,8 @@ def q_ivm_incremental_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``operators/ivm.py delta_join(how="left")``: ΔR▷S₀, R₀⋈Δμ, ΔR⋈Δμ —
     every term still broadcasts only the per-epoch Δ). Oracle is the
     from-scratch LEFT JOIN recompute."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.ivm import maintain_join
-    from data_ingestion_resolution_platform_spark.sources.lake import (
-        LakeTable,
-        snapshot_diff,
-    )
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    src = _two_epoch_code_lake(spark, sf_dir, f"/tmp/dirp_ivmjo_src_{tag}")
-    view_root = f"/tmp/dirp_ivmjo_view_{tag}"
-    shutil.rmtree(view_root, ignore_errors=True)
+    src = _two_epoch_code_lake(spark, sf_dir)
+    view_root = _scratch(sf_dir, "ivmjo_view")
     r_cols = ["repo", "path", "lang", "commit"]
     r1 = src.read(version=1).select(*r_cols)
     s1, s2 = _repo_dim(spark, 1), _repo_dim(spark, 2)
@@ -2548,13 +2555,7 @@ def q_ivm_incremental_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_IVM_JOIN_OUTER = f"""
-WITH feed AS ({_DERIVED_FEED_SQL}),
-w AS (
-  SELECT *, row_number() OVER (PARTITION BY repo, path ORDER BY lsn DESC) AS rn
-  FROM feed
-), files AS (
-  SELECT repo, path, lang, "commit" FROM w WHERE rn = 1 AND op <> 'D'
-), repos AS (
+WITH repos AS (
   SELECT 'repo_' || CAST(n AS VARCHAR) AS repo,
          CASE WHEN n % 7 = 0 THEN 'org_x'
               ELSE 'org_' || CAST(n % 5 AS VARCHAR) END AS owner,
@@ -2563,7 +2564,7 @@ w AS (
   WHERE n % 11 <> 3
 )
 SELECT f.repo, f.path, f.lang, f."commit", r.owner, r.tier
-FROM files f LEFT JOIN repos r USING (repo)
+FROM {_lww_sql()} f LEFT JOIN repos r USING (repo)
 """
 
 
@@ -2578,19 +2579,9 @@ def q_ivm_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero crossings, O(epoch) at both levels, base never rescanned).
     The oracle recomputes COUNT(DISTINCT) from scratch on the v2 LWW
     state."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.ivm import (
-        maintain_distinct,
-    )
-    from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    src = _two_epoch_code_lake(spark, sf_dir, f"/tmp/dirp_ivmd_src_{tag}")
-    mult_root = f"/tmp/dirp_ivmd_mult_{tag}"
-    cnt_root = f"/tmp/dirp_ivmd_cnt_{tag}"
-    shutil.rmtree(mult_root, ignore_errors=True)
-    shutil.rmtree(cnt_root, ignore_errors=True)
+    src = _two_epoch_code_lake(spark, sf_dir)
+    mult_root = _scratch(sf_dir, "ivmd_mult")
+    cnt_root = _scratch(sf_dir, "ivmd_cnt")
     mult, cnt = LakeTable(spark, mult_root), LakeTable(spark, cnt_root)
     v1 = src.read(version=1)
     mult.merge(
@@ -2621,17 +2612,10 @@ def q_ivm_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_IVM_DISTINCT = f"""
-WITH feed AS ({_DERIVED_FEED_SQL}),
-w AS (
-  SELECT *, row_number() OVER (PARTITION BY repo, path ORDER BY lsn DESC) AS rn
-  FROM feed
-), s2 AS (
-  SELECT repo, lang FROM w WHERE rn = 1 AND op <> 'D'
-)
 SELECT repo,
        CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
        CAST(count(*) AS BIGINT) AS n_files
-FROM s2 GROUP BY repo
+FROM {_lww_sql()} GROUP BY repo
 """
 
 
@@ -2646,15 +2630,8 @@ def q_ivm_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly those groups via broadcast semi join — never the full
     table. The oracle recomputes the extremes from scratch on the v2
     LWW state."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.ivm import maintain_minmax
-    from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    src = _two_epoch_code_lake(spark, sf_dir, f"/tmp/dirp_ivmm_src_{tag}")
-    root = f"/tmp/dirp_ivmm_state_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    src = _two_epoch_code_lake(spark, sf_dir)
+    root = _scratch(sf_dir, "ivmm_state")
     state = LakeTable(spark, root)
     v1 = src.read(version=1)
     vexpr = "cast(length(content) as bigint)"
@@ -2683,18 +2660,11 @@ def q_ivm_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_IVM_MINMAX = f"""
-WITH feed AS ({_DERIVED_FEED_SQL}),
-w AS (
-  SELECT *, row_number() OVER (PARTITION BY repo, path ORDER BY lsn DESC) AS rn
-  FROM feed
-), s2 AS (
-  SELECT repo, content FROM w WHERE rn = 1 AND op <> 'D'
-)
 SELECT repo,
        CAST(count(*) AS BIGINT) AS n_files,
        CAST(min(length(content)) AS BIGINT) AS min_bytes,
        CAST(max(length(content)) AS BIGINT) AS max_bytes
-FROM s2 GROUP BY repo
+FROM {_lww_sql()} GROUP BY repo
 """
 
 
@@ -2707,20 +2677,9 @@ def q_ivm_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over |groups × distinct sizes| rows, never the base). The
     oracle recomputes the same percentile_disc definition (smallest
     value whose rank reaches ceil(q·n)) from the expanded v2 LWW rows."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.ivm import (
-        maintain_distinct,
-        quantiles_from_multiplicity,
-    )
-    from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    src = _two_epoch_code_lake(spark, sf_dir, f"/tmp/dirp_ivmp_src_{tag}")
-    mult_root = f"/tmp/dirp_ivmp_mult_{tag}"
-    cnt_root = f"/tmp/dirp_ivmp_cnt_{tag}"
-    shutil.rmtree(mult_root, ignore_errors=True)
-    shutil.rmtree(cnt_root, ignore_errors=True)
+    src = _two_epoch_code_lake(spark, sf_dir)
+    mult_root = _scratch(sf_dir, "ivmp_mult")
+    cnt_root = _scratch(sf_dir, "ivmp_cnt")
     mult, cnt = LakeTable(spark, mult_root), LakeTable(spark, cnt_root)
     nb = F.length("content").cast("long").alias("nb")
     v1 = src.read(version=1).select("repo", "path", nb)
@@ -2747,13 +2706,8 @@ def q_ivm_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_IVM_PERCENTILES = f"""
-WITH feed AS ({_DERIVED_FEED_SQL}),
-w AS (
-  SELECT *, row_number() OVER (PARTITION BY repo, path ORDER BY lsn DESC) AS rn
-  FROM feed
-), s2 AS (
-  SELECT repo, CAST(length(content) AS BIGINT) AS nb
-  FROM w WHERE rn = 1 AND op <> 'D'
+WITH s2 AS (
+  SELECT repo, CAST(length(content) AS BIGINT) AS nb FROM {_lww_sql()}
 ), r AS (
   SELECT repo, nb,
          row_number() OVER (PARTITION BY repo ORDER BY nb) AS rn2,
@@ -2778,17 +2732,9 @@ def q_ivm_topk_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored row back-fill via a rescan pruned to those groups by
     broadcast semi join. The oracle recomputes the top-3 from scratch
     on the v2 LWW state with the same (bytes DESC, path) tie-break."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.ivm import maintain_topk
-    from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
-    from pyspark.sql import Window
-
     with fixture_phase():
-        tag = os.path.basename(os.path.normpath(sf_dir))
-        src = _two_epoch_code_lake(spark, sf_dir, f"/tmp/dirp_ivmt_src_{tag}")
-        root = f"/tmp/dirp_ivmt_view_{tag}"
-        shutil.rmtree(root, ignore_errors=True)
+        src = _two_epoch_code_lake(spark, sf_dir)
+        root = _scratch(sf_dir, "ivmt_view")
         view = LakeTable(spark, root)
         proj = [
             F.col("repo"),
@@ -2821,13 +2767,8 @@ def q_ivm_topk_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_IVM_TOPK = f"""
-WITH feed AS ({_DERIVED_FEED_SQL}),
-w AS (
-  SELECT *, row_number() OVER (PARTITION BY repo, path ORDER BY lsn DESC) AS rn
-  FROM feed
-), s2 AS (
-  SELECT repo, path, CAST(length(content) AS BIGINT) AS nb
-  FROM w WHERE rn = 1 AND op <> 'D'
+WITH s2 AS (
+  SELECT repo, path, CAST(length(content) AS BIGINT) AS nb FROM {_lww_sql()}
 ), r AS (
   SELECT repo, path, nb,
          row_number() OVER (PARTITION BY repo ORDER BY nb DESC, path) AS rn2
@@ -2849,14 +2790,7 @@ def q_pipeline_maintained_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     never rescanned. Shares ``SQL_IVM_JOIN``'s oracle: the maintained
     view must converge to exactly the full-feed LWW state joined with
     the dim's final version, whichever path produced it."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.sources.lake import snapshot_diff
-    from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    wh = f"/tmp/dirp_pipeline_view_{tag}"
-    shutil.rmtree(wh, ignore_errors=True)
+    wh = _scratch(sf_dir, "pipeline_view")
     feed = _derived_code_feed(spark, sf_dir)
     thr = feed.agg(F.max("lsn")).collect()[0][0] // 2
     s1, s2 = _repo_dim(spark, 1), _repo_dim(spark, 2)
@@ -2884,14 +2818,7 @@ def q_contacts_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     read it back via ``read_contacts_csv`` (name-based projection,
     missing ⇒ NULL, 1-based line numbers), run the full P1-P6 pipeline.
     The oracle recomputes the same rows straight from ``customer``."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.cdc import normalize_contacts
-    from data_ingestion_resolution_platform_spark.sources.feed import read_contacts_csv
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    d = f"/tmp/dirp_contacts_csv_{tag}"
-    shutil.rmtree(d, ignore_errors=True)
+    d = _scratch(sf_dir, "contacts_csv")
     cust = _t(spark, sf_dir, "customer")
     src = cust.select(
         F.col("c_custkey").alias("id"),
@@ -2985,8 +2912,6 @@ def _signed_dot_sql(vec: str, salt: int) -> str:
     """Signed dot of a quantized BIGINT list against the ±1 codebook
     vector for ``salt`` — DuckDB twin of the Spark
     zip_with/aggregate + vectors.portable_sign expression."""
-    from data_ingestion_resolution_platform_spark.functions.vectors import portable_sign_sql
-
     sign = portable_sign_sql("(i - 1)", salt)
     return (
         f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
@@ -3012,8 +2937,6 @@ def _ivf_sql(
     seed: int = 42,
     base_sql: str | None = None,
 ) -> str:
-    from data_ingestion_resolution_platform_spark.operators.similarity import _cell_salt
-
     base = base_sql or f"SELECT vec_id, {_QV_SQL} AS qv FROM embeddings"
     # encode (dot, cell) as dot*n_cells + cell: list_max / list_sort on
     # the encoding orders exactly like Spark's struct(dot, cell)
@@ -3057,12 +2980,8 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_cell_table(spark: SparkSession, root: str):
-    """A fresh IVF index table bucketed on ``cell`` (the probe layout)."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.sources.lake import PartitionedLakeTable
-
-    shutil.rmtree(root, ignore_errors=True)
+    """An IVF index table at ``root`` bucketed on ``cell`` (the probe
+    layout)."""
     return PartitionedLakeTable(spark, root, bucket_keys=["cell"], n_buckets=16)
 
 
@@ -3070,11 +2989,6 @@ def _ivf_probe_stored(idx, queries: DataFrame) -> DataFrame:
     """Probe a persisted index: scan only the files that can hold a
     probed cell (the collected probe-cell set is ≤ n_cells ints), then
     score against the broadcast query frame."""
-    from data_ingestion_resolution_platform_spark.operators.similarity import (
-        ivf_probe,
-        query_probe_cells,
-    )
-
     qcells = query_probe_cells(queries, "embedding", "vec_id", portable=True)
     cells = sorted(r.cell for r in qcells.select("cell").distinct().collect())
     return ivf_probe(idx.scan([("cell", "in", cells)]), qcells, k=10)
@@ -3085,13 +2999,7 @@ def q_ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     a table bucketed on ``cell``, probes planned as cell-pruned scans.
     Same oracle as ``ann_ivf``: the storage layout must be
     result-invisible."""
-    from data_ingestion_resolution_platform_spark.operators.similarity import (
-        IVF_KEYS,
-        ivf_index,
-    )
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    idx = _ivf_cell_table(spark, f"/tmp/dirp_ivf_idx_{tag}")
+    idx = _ivf_cell_table(spark, _scratch(sf_dir, "ivf_idx"))
     emb = _t(spark, sf_dir, "embeddings")
     idx.merge(ivf_index(emb, "embedding", "vec_id", portable=True), IVF_KEYS)
     return _ivf_probe_stored(idx, emb.filter(F.col("vec_id") < 5))
@@ -3104,13 +3012,6 @@ def _ann_ivf_maintained(spark: SparkSession, sf_dir: str, idx) -> DataFrame:
     boundaries) via ``maintain_ivf_index``, and probe it. Shared by the
     two maintained-index queries, which differ only in ``idx``'s layout
     and share one oracle (``_EMB_V2_BASE_SQL``)."""
-    from data_ingestion_resolution_platform_spark.operators.similarity import (
-        IVF_KEYS,
-        ivf_index,
-        maintain_ivf_index,
-    )
-    from data_ingestion_resolution_platform_spark.sources.lake import snapshot_diff
-
     with fixture_phase():
         emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
         vid = F.col("vec_id")
@@ -3143,13 +3044,7 @@ def q_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     The index is a plain ``LakeTable``. Probes over the maintained
     index must equal probes over an index rebuilt from scratch on v2,
     which the oracle computes in pure SQL with the portable codebook."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/dirp_ivf_inc_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch(sf_dir, "ivf_inc")
     return _ann_ivf_maintained(spark, sf_dir, LakeTable(spark, root))
 
 
@@ -3161,8 +3056,7 @@ def q_ann_ivf_inc_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell) and probes scan only the probed cells' files. Shares
     ``ann_ivf_incremental``'s oracle: the layout must be
     result-invisible."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    idx = _ivf_cell_table(spark, f"/tmp/dirp_ivf_incp_{tag}")
+    idx = _ivf_cell_table(spark, _scratch(sf_dir, "ivf_incp"))
     return _ann_ivf_maintained(spark, sf_dir, idx)
 
 
@@ -3176,8 +3070,6 @@ _EMB_V2_BASE_SQL = f"""SELECT vec_id,
 def _emb_lsh_sql(
     threshold: float = 0.4, n_planes: int = 6, n_tables: int = 4, seed: int = 42
 ) -> str:
-    from data_ingestion_resolution_platform_spark.operators.dedup import plane_salt
-
     sigs = []
     for t in range(n_tables):
         bits = " + ".join(
@@ -3293,19 +3185,7 @@ def q_cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch-2 winners NULL ``commit``; everything else is plain LWW, which
     the oracle rebuilds in pure SQL (reference analogue: varying CSV
     headers projected onto one logical schema, `worker.py:268,305-319`)."""
-    import shutil
-
-    from pyspark.sql import types as T
-
-    from data_ingestion_resolution_platform_spark.operators.cdc import resolve_latest
-    from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
-    from data_ingestion_resolution_platform_spark.streaming.schema_evolution import (
-        reconcile_exprs,
-    )
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/dirp_schemaevo_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch(sf_dir, "schemaevo")
     feed = _derived_code_feed(spark, sf_dir)
     thr = feed.agg(F.max("lsn")).collect()[0][0] // 2
     keys = ["repo", "path"]
@@ -3334,16 +3214,12 @@ def q_cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_SCHEMA_EVOLUTION = f"""
 WITH feed AS ({_DERIVED_FEED_SQL}),
-thr AS (SELECT CAST(floor(max(lsn) / 2) AS BIGINT) AS t FROM feed),
-w AS (
-  SELECT f.*, row_number() OVER (PARTITION BY repo, path ORDER BY lsn DESC) AS rn
-  FROM feed f
-)
+thr AS (SELECT CAST(floor(max(lsn) / 2) AS BIGINT) AS t FROM feed)
 SELECT repo, path, lsn, op, ts,
        CASE WHEN lsn <= (SELECT t FROM thr) THEN "commit" END AS "commit",
        lang, content,
        CASE WHEN lsn > (SELECT t FROM thr) THEN length(content) % 50 END AS stars
-FROM w WHERE rn = 1 AND op <> 'D'
+FROM {_lww_sql("feed")}
 """
 
 
@@ -3361,15 +3237,7 @@ def q_pipeline_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH epochs; the result joins target ⋈ maintained-view ⋈ maintained-
     stats so one hash verifies all three stayed exact across the
     boundary. The oracle rebuilds everything from scratch in pure SQL."""
-    import shutil
-
-    from pyspark.sql import types as T
-
-    from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    wh = f"/tmp/dirp_pipeline_evo_{tag}"
-    shutil.rmtree(wh, ignore_errors=True)
+    wh = _scratch(sf_dir, "pipeline_evo")
     feed = _derived_code_feed(spark, sf_dir)
     thr = feed.agg(F.max("lsn")).collect()[0][0] // 2
     pipe = CDCPipeline(
@@ -3402,16 +3270,12 @@ def q_pipeline_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_PIPELINE_SCHEMA_EVOLUTION = f"""
 WITH feed AS ({_DERIVED_FEED_SQL}),
 thr AS (SELECT CAST(floor(max(lsn) / 2) AS BIGINT) AS t FROM feed),
-w AS (
-  SELECT f.*, row_number() OVER (PARTITION BY repo, path ORDER BY lsn DESC) AS rn
-  FROM feed f
-),
 tgt AS (
   SELECT repo, path, lsn,
          CASE WHEN lsn <= (SELECT t FROM thr) THEN "commit" END AS "commit",
          lang, content,
          CASE WHEN lsn > (SELECT t FROM thr) THEN length(content) % 50 END AS stars
-  FROM w WHERE rn = 1 AND op <> 'D'
+  FROM {_lww_sql("feed")}
 ),
 repos AS (
   SELECT 'repo_' || CAST(n AS VARCHAR) AS repo,
@@ -3440,19 +3304,11 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/quality.py): distinct-token ratio, top-token and
     top-bigram fractions — exact integer counts divided once, so the
     oracle agrees bit-for-bit."""
-    from data_ingestion_resolution_platform_spark.operators.quality import (
-        repetition_stats,
-    )
-
     docs = _t(spark, sf_dir, "documents")
     return repetition_stats(docs)
 
 
 def _repetition_sql() -> str:
-    from data_ingestion_resolution_platform_spark.operators.search import (
-        TOKEN_SPLIT_REGEX,
-    )
-
     split = f"list_filter(string_split_regex(lower(text), '{TOKEN_SPLIT_REGEX}'), x -> x <> '')"
     return f"""
 WITH d AS (SELECT doc_id, {split} AS t FROM documents),
@@ -3495,10 +3351,6 @@ def q_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE reducer; this plan keeps the sort range-parallel at any scale.
     Decile boundaries use pure integer arithmetic (``(10·rank) div N``)
     so both engines agree bit-for-bit."""
-    from data_ingestion_resolution_platform_spark.operators.packing import (
-        global_prefix_sum,
-    )
-
     orders = _t(spark, sf_dir, "orders")
     spend = orders.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
@@ -3549,8 +3401,6 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     mod N``). 5 fixed iterations, dangling mass redistributed; each
     iteration one shuffle (operators/graph.py). Oracle = the same
     recurrence unrolled as chained CTEs."""
-    from data_ingestion_resolution_platform_spark.operators.graph import pagerank
-
     cust = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders")
     nodes = cust.select(F.col("c_custkey").alias("node"))
@@ -3614,16 +3464,7 @@ def q_bloom_prune_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same predicate over the raw view — the hash proves pruning
     never changes results; the report (asserted in tests) proves files
     were actually skipped."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.sources.bloom_index import (
-        bloom_pruned_scan,
-        build_bloom_index,
-    )
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/dirp_bloom_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch(sf_dir, "bloom")
     os.makedirs(root)
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     data_dir = os.path.join(root, "data")
@@ -3651,14 +3492,7 @@ def q_lake_prune_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter (``sources/skipping.py``). The oracle is the same predicate
     over the raw events view, so the value-hash proves pruning never
     changes results."""
-    import datetime as dt
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/dirp_prune_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch(sf_dir, "prune")
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     t = LakeTable(spark, root)
     t.overwrite(ev.repartitionByRange(16, "ts"))
@@ -3691,14 +3525,7 @@ def q_zorder_prune_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout cannot prune at all (tests/test_clustering.py proves the
     pruning differential; this query's oracle proves results are
     unchanged)."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.sources.clustering import write_clustered
-    from data_ingestion_resolution_platform_spark.sources.skipping import pruned_scan
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/dirp_zorder_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch(sf_dir, "zorder")
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     write_clustered(ev, root, ["ts", "value"], n_files=16)
     scanned, _report = pruned_scan(spark, root, [root], [("value", ">=", 95.0)])
@@ -3785,8 +3612,6 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     other doc sharing >= 2 distinct lowercased 8-gram(s) with it is
     flagged with its overlap count — the rows a training pipeline
     drops before tokenization."""
-    from data_ingestion_resolution_platform_spark.operators.decontam import decontaminate
-
     docs = _t(spark, sf_dir, "documents").withColumn("text", F.lower(F.col("text")))
     bench = docs.filter(F.col("doc_id") % 20 == 0)
     corpus = docs.filter(F.col("doc_id") % 20 != 0)
@@ -3821,8 +3646,6 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``skew.salted_join`` — big side salted deterministically, small
     side replicated per salt, join on (key, salt). The oracle is the
     plain SQL join, proving row-identity of the salted plan."""
-    from data_ingestion_resolution_platform_spark.operators.skew import salted_join
-
     events = _t(spark, sf_dir, "events")
     cust = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
@@ -3852,31 +3675,26 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     either side (asserted in tests/test_bucketed.py); only the tiny
     final aggregation shuffles. Result: order stats per market segment
     for high-value open orders."""
-    from data_ingestion_resolution_platform_spark.sources.bucketed import ensure_bucketed
-
-    # cache keyed by source identity: regenerated testdata → fresh write
-    st_o = os.stat(f"{sf_dir}/orders.parquet")
-    st_c = os.stat(f"{sf_dir}/customer.parquet")
-    tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{st_o.st_size}_{st_o.st_mtime_ns}_{st_c.st_size}_{st_c.st_mtime_ns}"
-    root = f"/tmp/dirp_bucketed/{tag}"
-    orders = ensure_bucketed(
-        spark,
-        "dirp_b_orders",
-        f"{root}/orders",
-        ["o_custkey"],
-        8,
-        lambda: _t(spark, sf_dir, "orders"),
-        sort_cols=["o_custkey"],
-    )
-    customer = ensure_bucketed(
-        spark,
-        "dirp_b_customer",
-        f"{root}/customer",
-        ["c_custkey"],
-        8,
-        lambda: _t(spark, sf_dir, "customer"),
-        sort_cols=["c_custkey"],
-    )
+    root = _scratch(sf_dir, "bucketed")
+    with fixture_phase():
+        orders = ensure_bucketed(
+            spark,
+            "dirp_b_orders",
+            f"{root}/orders",
+            ["o_custkey"],
+            8,
+            lambda: _t(spark, sf_dir, "orders"),
+            sort_cols=["o_custkey"],
+        )
+        customer = ensure_bucketed(
+            spark,
+            "dirp_b_customer",
+            f"{root}/customer",
+            ["c_custkey"],
+            8,
+            lambda: _t(spark, sf_dir, "customer"),
+            sort_cols=["c_custkey"],
+        )
     joined = orders.filter(
         (F.col("o_orderstatus") == "O") & (F.col("o_totalprice") > 100000.0)
     ).join(customer, orders.o_custkey == customer.c_custkey)
@@ -3921,25 +3739,15 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation — shuffle volume is proportional to query-term hits,
     not corpus size (operators/search.py).
     """
-    from data_ingestion_resolution_platform_spark.operators.search import bm25_topk
-
     docs = _t(spark, sf_dir, "documents")
     return bm25_topk(docs, BM25_QUERIES, k=BM25_K)
 
 
 def _bm25_sql() -> str:
-    import re as _re
-
-    from data_ingestion_resolution_platform_spark.operators.search import (
-        BM25_B,
-        BM25_K1,
-        TOKEN_SPLIT_REGEX,
-    )
-
     rows = []
     for qid, qtext in BM25_QUERIES:
         seen = set()
-        for t in _re.split(TOKEN_SPLIT_REGEX, qtext.lower()):
+        for t in re.split(TOKEN_SPLIT_REGEX, qtext.lower()):
             if t and t not in seen:
                 seen.add(t)
                 rows.append(f"({qid}, '{t}')")
@@ -3991,17 +3799,11 @@ SQL_BM25_SEARCH = _bm25_sql()
 
 def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus vocabulary head: top-100 terms by collection frequency."""
-    from data_ingestion_resolution_platform_spark.operators.search import vocab_topk
-
     docs = _t(spark, sf_dir, "documents")
     return vocab_topk(docs, k=100)
 
 
 def _vocab_sql() -> str:
-    from data_ingestion_resolution_platform_spark.operators.search import (
-        TOKEN_SPLIT_REGEX,
-    )
-
     split = f"list_filter(string_split_regex(lower(text), '{TOKEN_SPLIT_REGEX}'), x -> x <> '')"
     return f"""
 WITH toks AS (
@@ -4034,10 +3836,6 @@ def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment against literal centroids, one k×(dim+1)-long shuffle
     per update — the IVF codebook-training path. The oracle unrolls
     the identical iterations as SQL CTEs."""
-    from data_ingestion_resolution_platform_spark.operators.kmeans import (
-        kmeans_fit_predict,
-    )
-
     emb = _t(spark, sf_dir, "embeddings")
     return kmeans_fit_predict(
         emb, "embedding", "vec_id", k=_KM_K, iters=_KM_ITERS
@@ -4051,10 +3849,6 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes: 0.60 vs the modular seeding's 0.45 (pinned by
     tests/test_ivf_kmeans.py against brute force). Oracle retrains the
     identical codebook through the shared Lloyd CTE chain."""
-    from data_ingestion_resolution_platform_spark.operators.similarity import (
-        ivf_kmeans_topk,
-    )
-
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     return ivf_kmeans_topk(
@@ -4177,8 +3971,6 @@ def q_events_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     per distinct consecutive (event_type, value) state per user —
     the warehouse-facing twin of `cdc_apply_changes` (which keeps only
     the final state; reference `worker.py` upsert loop)."""
-    from data_ingestion_resolution_platform_spark.operators.scd import scd2_history
-
     feed = events_as_change_feed(spark, sf_dir)
     return scd2_history(feed, ["user_id"], "lsn", ["event_type", "value"])
 
@@ -4221,8 +4013,6 @@ def q_events_scd2_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time read of the SCD2 history: the version of each key
     visible at LSN 5000. Plans as two range predicates over the
     history — pruning-friendly when stored by valid_from_lsn."""
-    from data_ingestion_resolution_platform_spark.operators.scd import scd2_as_of
-
     return scd2_as_of(q_events_scd2(spark, sf_dir), _SCD2_ASOF_LSN)
 
 
@@ -4242,13 +4032,6 @@ def q_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     versions append (immutable), only the open-versions snapshot is
     read and rewritten per epoch — flat epoch cost as history grows
     (BENCH_SCD2_GROWTH.json)."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.scd import (
-        Scd2HistoryStore,
-        historize_epoch,
-    )
-
     with fixture_phase():
         # materialize the feed once: a real CDC feed arrives as stored
         # epochs; re-deriving it from events.parquet inside every
@@ -4256,9 +4039,7 @@ def q_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         feed = events_as_change_feed(spark, sf_dir).persist()
         hi = feed.agg(F.max("lsn")).collect()[0][0]  # 1-row scalar
         cuts = [hi // 3, 2 * hi // 3]
-        tag = os.path.basename(os.path.normpath(sf_dir))
-        root = f"/tmp/dirp_scd2_hist_{tag}"
-        shutil.rmtree(root, ignore_errors=True)
+        root = _scratch(sf_dir, "scd2_hist")
         hist = Scd2HistoryStore(spark, root, ["user_id"])
         slices = [
             feed.filter(F.col("lsn") <= cuts[0]),
@@ -4295,8 +4076,6 @@ def q_fuzzy_part_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     are long/high-entropy). The oracle deliberately stays the plain
     p_size-blocked quadratic form — an independent formulation, so the
     value-hash gate itself proves neither refinement loses a pair."""
-    from data_ingestion_resolution_platform_spark.operators.fuzzy import fuzzy_self_pairs
-
     part = _t(spark, sf_dir, "part").select("p_partkey", "p_name", "p_size")
     return fuzzy_self_pairs(
         part, "p_partkey", "p_name", ["p_size"], max_dist=3,
@@ -4319,8 +4098,6 @@ def q_topk_orders_per_cust(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-3 orders per customer by (totalprice DESC, orderkey
     ASC) via the two-phase salted grouped top-k — bounded reducer
     state, no full per-key sort (operators/topk.py)."""
-    from data_ingestion_resolution_platform_spark.operators.topk import grouped_topk
-
     orders = _t(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_totalprice"
     )
@@ -4372,11 +4149,6 @@ def q_sketch_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin is `ivm_distinct_count`'s multiplicity table). Emits the
     sketch fill, the k-th minimum, and the (k-1)·M div v_k estimate —
     integer arithmetic, engine-exact."""
-    from data_ingestion_resolution_platform_spark.operators.sketch import (
-        kmv_estimate,
-        kmv_sketch,
-    )
-
     orders = _t(spark, sf_dir, "orders")
     sk = kmv_sketch(orders, ["o_orderpriority"], "o_custkey", k=256)
     return sk.select(
@@ -4442,19 +4214,9 @@ def q_sketch_kmv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     per the table's epoch ledger. Final sketch must equal the one-shot
     build over the whole feed, which is the oracle (the full sketch
     content is compared via ``kmv_csv``, not just the estimate)."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.sketch import (
-        kmv_estimate,
-        maintain_kmv,
-    )
-    from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
-
     feed = _derived_code_feed(spark, sf_dir)
     thr = feed.agg(F.max("lsn")).collect()[0][0] // 2
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/dirp_kmvinc_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch(sf_dir, "kmvinc")
     t = LakeTable(spark, root)
     for e, part in enumerate(
         [feed.filter(F.col("lsn") <= thr), feed.filter(F.col("lsn") > thr)], start=1
@@ -4491,8 +4253,6 @@ SQL_SKETCH_KMV_INC = _kmv_sql(
 
 def _cms_sql_cells(depth: int, width: int) -> str:
     """UNION ALL of per-depth cell builds over a CTE ``hh(item, p)``."""
-    from data_ingestion_resolution_platform_spark.operators.sketch import cms_seeds
-
     parts = [
         f"SELECT {d} AS d, ((p * {a} + {b}) % {_M31_SQL}) % {width} AS bucket, "
         f"CAST(count(*) AS BIGINT) AS cnt FROM hh GROUP BY 1, 2"
@@ -4503,8 +4263,6 @@ def _cms_sql_cells(depth: int, width: int) -> str:
 
 def _cms_sql_probe(depth: int, width: int) -> str:
     """Per-depth probe coordinates over a CTE ``cand(item, p)``."""
-    from data_ingestion_resolution_platform_spark.operators.sketch import cms_seeds
-
     parts = [
         f"SELECT item, {d} AS d, ((p * {a} + {b}) % {_M31_SQL}) % {width} AS bucket "
         f"FROM cand"
@@ -4520,11 +4278,6 @@ def q_sketch_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     combining shuffle of ≤ depth·width keys. Emits every item whose CM
     estimate clears the φN threshold (N div 55); CM never undercounts,
     so no true heavy hitter is missed."""
-    from data_ingestion_resolution_platform_spark.operators.sketch import (
-        cms_cells,
-        cms_lookup,
-    )
-
     ev = _t(spark, sf_dir, "events")
     item = F.concat(
         F.col("event_type"), F.lit("/"), F.pmod(F.col("user_id"), F.lit(10)).cast("string")
@@ -4571,19 +4324,8 @@ def q_ivm_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     and updates included; only the epoch's delta ever shuffles). The
     oracle rebuilds the sketch from the v2 LWW state and probes the
     same candidates."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.sketch import (
-        cms_cells,
-        cms_lookup,
-        maintain_cms,
-    )
-    from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    src = _two_epoch_code_lake(spark, sf_dir, f"/tmp/dirp_cmss_src_{tag}")
-    root = f"/tmp/dirp_cmss_cells_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    src = _two_epoch_code_lake(spark, sf_dir)
+    root = _scratch(sf_dir, "cmss_cells")
     cells_t = LakeTable(spark, root)
     v1 = src.read(version=1)
     cells_t.merge(
@@ -4598,14 +4340,8 @@ def q_ivm_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_IVM_CMS = f"""
-WITH feed AS ({_DERIVED_FEED_SQL}),
-w AS (
-  SELECT *, row_number() OVER (PARTITION BY repo, path ORDER BY lsn DESC) AS rn
-  FROM feed
-), s2 AS (
-  SELECT repo FROM w WHERE rn = 1 AND op <> 'D'
-), hh AS (
-  SELECT repo AS item, {_poly_scalar_sql('repo')} AS p FROM s2
+WITH hh AS (
+  SELECT repo AS item, {_poly_scalar_sql('repo')} AS p FROM {_lww_sql()}
 ), cells AS (
   {_cms_sql_cells(4, 64)}
 ), cand AS (
@@ -4630,12 +4366,8 @@ def q_dpp_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     whenever the selective predicate lives on the dimension.
     ``tests/test_dpp.py`` pins the plan (``dynamicpruning`` in the
     fact scan's partition filters); the oracle is the plain join."""
-    import shutil
-
     ev = _t(spark, sf_dir, "events")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/dirp_dpp_fact_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch(sf_dir, "dpp_fact")
     ev.withColumn("day", F.to_date(F.date_trunc("DAY", F.col("ts")))).write.partitionBy(
         "day"
     ).mode("overwrite").parquet(root)
@@ -4715,8 +4447,6 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB where the naive 3-way self-join dies. The oracle is the
     textbook a<b<c three-way SQL self-join (orientation-free — same
     count, exponentially worse hub behavior, fine at oracle scale)."""
-    from data_ingestion_resolution_platform_spark.operators.graph import triangle_count
-
     cust = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders")
     n_df = cust.agg(F.count("*").alias("__n"))
@@ -4818,22 +4548,14 @@ def q_pipeline_maintained_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang in the final state; the oracle rebuilds the cells from the
     pure-SQL LWW collapse and probes identically — exact equality
     because CM counters are additive under signed deltas."""
-    from data_ingestion_resolution_platform_spark.operators.sketch import cms_lookup
-
-    pipe = _replayed_pipeline(spark, sf_dir, "freq", maintain_freq=True, freq_width=32)
+    pipe = _replayed_pipeline(spark, sf_dir, maintain_freq=True, freq_width=32)
     cand = pipe.target.read().select("lang").distinct()
     return cms_lookup(pipe.freq.read(), cand, "lang", depth=4, width=32)
 
 
 SQL_PIPELINE_FREQ = f"""
-WITH feed AS ({_DERIVED_FEED_SQL}),
-w AS (
-  SELECT *, row_number() OVER (PARTITION BY repo, path ORDER BY lsn DESC) AS rn
-  FROM feed
-), s2 AS (
-  SELECT lang FROM w WHERE rn = 1 AND op <> 'D'
-), hh AS (
-  SELECT lang AS item, {_poly_scalar_sql('lang')} AS p FROM s2
+WITH hh AS (
+  SELECT lang AS item, {_poly_scalar_sql('lang')} AS p FROM {_lww_sql()}
 ), cells AS (
   {_cms_sql_cells(4, 32)}
 ), cand AS (
@@ -4887,11 +4609,6 @@ FROM ordv GROUP BY g
 
 
 def _qsample_select(sk: DataFrame, group_out: str) -> DataFrame:
-    from data_ingestion_resolution_platform_spark.operators.sketch import (
-        qsample_quantile,
-        qsample_values_csv,
-    )
-
     return sk.select(
         group_out,
         F.size("qs").cast("long").alias("n_sample"),
@@ -4914,10 +4631,6 @@ def q_sketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     order statistics (integer index arithmetic, engine-exact) AND the
     full sorted sample as a CSV so the gate compares the entire sketch
     content, not just three points."""
-    from data_ingestion_resolution_platform_spark.operators.sketch import (
-        qsample_sketch,
-    )
-
     orders = _t(spark, sf_dir, "orders")
     src = orders.select(
         "o_orderpriority",
@@ -4948,18 +4661,9 @@ def q_sketch_quantiles_incremental(spark: SparkSession, sf_dir: str) -> DataFram
     shuffles), exactly-once per the epoch ledger. The merge homomorphism
     is EXACT, so the final sketch equals the one-shot build over the
     whole feed — which is the oracle, compared on the full sample CSV."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.sketch import (
-        maintain_qsample,
-    )
-    from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
-
     feed = _derived_code_feed(spark, sf_dir)
     thr = feed.agg(F.max("lsn")).collect()[0][0] // 2
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/dirp_qsinc_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch(sf_dir, "qsinc")
     t = LakeTable(spark, root)
     src_cols = [
         F.col("repo"),
@@ -5008,21 +4712,17 @@ def q_pipeline_maintained_quantiles(spark: SparkSession, sf_dir: str) -> DataFra
     paths/repo of the derived feed against k = 8 keep the truncation and
     back-fill paths genuinely exercised (a k ≥ group size sample would
     pass vacuously)."""
-    pipe = _replayed_pipeline(spark, sf_dir, "qs", maintain_quantiles=True, quantile_k=8)
+    pipe = _replayed_pipeline(spark, sf_dir, maintain_quantiles=True, quantile_k=8)
     return pipe.qsample.read().select(
         "repo", "path", F.col("qs_val").alias("clen")
     )
 
 
 SQL_PIPELINE_QUANTILES = f"""
-WITH feed AS ({_DERIVED_FEED_SQL}),
-w AS (
-  SELECT *, row_number() OVER (PARTITION BY repo, path ORDER BY lsn DESC) AS rn
-  FROM feed
-), s AS (
+WITH s AS (
   SELECT repo, path, CAST(length(content) AS BIGINT) AS clen,
          repo || chr(31) || path AS ck
-  FROM w WHERE rn = 1 AND op <> 'D'
+  FROM {_lww_sql()}
 ), h0 AS (
   SELECT repo, path, clen, {_poly_scalar_sql('ck')} AS p FROM s
 ), h AS (
@@ -5045,14 +4745,6 @@ def _maintained_search_tables(spark: SparkSession, sf_dir: str):
     ONE invertible change epoch whose post-state is exactly the
     ``documents`` table, so every oracle is plain SQL over
     ``documents``. Same fixture geometry as ``dedup_incremental``."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.search import (
-        maintain_search_index,
-        seed_search_index,
-    )
-    from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
-
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     legacy = F.concat(F.col("text"), F.lit(" legacy legacy rewrite pending"))
     is_upd = (F.col("doc_id") % 7 == 0) & (F.col("doc_id") % 10 != 0)
@@ -5063,9 +4755,7 @@ def _maintained_search_tables(spark: SparkSession, sf_dir: str):
         (F.col("doc_id") + 1_000_000).alias("doc_id"),
         F.col("text").alias("text"),
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/dirp_search_idx_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch(sf_dir, "search_idx")
     tables = tuple(
         LakeTable(spark, f"{root}/{name}")
         for name in ("postings", "termstats", "doclen", "stats")
@@ -5115,10 +4805,6 @@ def q_search_index_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _search_index_sql() -> str:
-    from data_ingestion_resolution_platform_spark.operators.search import (
-        TOKEN_SPLIT_REGEX,
-    )
-
     split = f"list_filter(string_split_regex(lower(text), '{TOKEN_SPLIT_REGEX}'), x -> x <> '')"
     return f"""
 WITH toks AS (
@@ -5145,10 +4831,6 @@ def q_bm25_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup when postings are bucketed by term at scale). Must equal,
     exactly, BM25 over the live corpus — the oracle is the same SQL the
     from-scratch ``bm25_search`` query is gated on."""
-    from data_ingestion_resolution_platform_spark.operators.search import (
-        bm25_from_index,
-    )
-
     p, ts, dl, st = _maintained_search_tables(spark, sf_dir)
     return bm25_from_index(spark, p, ts, dl, st, BM25_QUERIES, k=BM25_K)
 
@@ -5165,14 +4847,6 @@ def q_dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     MERGEs ride the exactly-once ledger. The final labels table must
     equal the batch full recompute over the post-epoch corpus — which
     is exactly `dedup_clusters`'s recursive-CTE oracle."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.graph_incremental import (
-        build_cluster_state,
-        maintain_clusters,
-    )
-    from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
-
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     legacy = F.concat(F.col("text"), F.lit(" legacy legacy rewrite pending"))
     v1 = docs.filter(F.col("doc_id") % 10 != 0).withColumn(
@@ -5184,9 +4858,7 @@ def q_dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     seed_corpus = v1.unionByName(ghosts)
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/dirp_cc_state_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch(sf_dir, "cc_state")
     labels = LakeTable(spark, os.path.join(root, "labels"))
     edges = LakeTable(spark, os.path.join(root, "edges"))
     with fixture_phase():
@@ -5253,14 +4925,6 @@ def q_triangle_count_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     destroyed term), the epoch lands the delta, and the maintained
     (n_triangles, n_edges) must equal the batch `triangle_count`
     oracle over the live orders graph — SQL_TRIANGLES verbatim."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.graph_incremental import (
-        build_triangle_state,
-        maintain_triangle_count,
-    )
-    from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
-
     cust = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders")
     n_df = cust.agg(F.count("*").alias("__n"))
@@ -5277,9 +4941,7 @@ def q_triangle_count_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id_a", "id_b"
     ).unionByName(ghosts)
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/dirp_tri_state_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch(sf_dir, "tri_state")
     edges = LakeTable(spark, os.path.join(root, "edges"))
     stats = LakeTable(spark, os.path.join(root, "stats"))
     with fixture_phase():
@@ -5303,13 +4965,6 @@ def q_funnel_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercising stage retraction on BOTH edges), one epoch lands the
     delta in the lake and rescans the affected users; the aggregated
     store must equal the batch funnel — SQL_FUNNEL verbatim."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.rescan import (
-        maintain_group_rescan,
-    )
-    from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
-
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
@@ -5321,9 +4976,7 @@ def q_funnel_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     v1 = ev.filter(F.col("event_id") % 10 != 0).unionByName(ghosts)
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/dirp_funnel_state_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch(sf_dir, "funnel_state")
     lake = LakeTable(spark, os.path.join(root, "events"))
     store = LakeTable(spark, os.path.join(root, "funnel"))
 
@@ -5362,13 +5015,6 @@ def q_cohort_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fixture mirrors `funnel_incremental` (missing events = inserts,
     ghost 1000-day-early views = deletes that retract cohorts); the
     final aggregate must equal the batch oracle — SQL_COHORT verbatim."""
-    import shutil
-
-    from data_ingestion_resolution_platform_spark.operators.rescan import (
-        maintain_group_rescan,
-    )
-    from data_ingestion_resolution_platform_spark.sources.lake import LakeTable
-
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
@@ -5380,9 +5026,7 @@ def q_cohort_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     v1 = ev.filter(F.col("event_id") % 10 != 0).unionByName(ghosts)
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/dirp_cohort_state_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch(sf_dir, "cohort_state")
     lake = LakeTable(spark, os.path.join(root, "events"))
     store = LakeTable(spark, os.path.join(root, "cohort"))
 

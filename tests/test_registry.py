@@ -11,8 +11,15 @@ returning HUGEINT/int128, which canonicalizes differently from BIGINT).
 
 from __future__ import annotations
 
+import ast
+import os
 import re
+import subprocess
+import sys
+import time
+from pathlib import Path
 
+from data_ingestion_resolution_platform_spark.plans import queries as Q
 from data_ingestion_resolution_platform_spark.plans.queries import ORACLES, QUERIES
 
 GATE_WINDOW = 50
@@ -183,3 +190,85 @@ def test_no_uncast_sum_in_compared_oracle_columns():
         "oracle SQL with un-reviewed uncast sum() — DuckDB returns HUGEINT "
         f"and the driver hash will mismatch Spark BIGINT: {offenders}"
     )
+
+
+# --- registry shape guards -------------------------------------------------
+#
+# Scratch dirs, the LWW oracle prelude and module imports each live in ONE
+# place in plans/queries.py; these pin that the copies stay deleted.
+
+def _registry_tree():
+    return ast.parse(Path(Q.__file__).read_text())
+
+
+def test_registry_has_no_tmp_paths_and_one_rmtree_site():
+    tree = _registry_tree()
+    tmp = [
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Constant) and isinstance(n.value, str) and "/tmp/" in n.value
+    ]
+    assert not tmp, f"hard-coded /tmp/ paths at lines {tmp}: use _scratch()"
+    assert not [n for n in ast.walk(tree) if isinstance(n, ast.Name) and n.id == "shutil"]
+    rmtree_users = {
+        fn.name
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef)
+        for n in ast.walk(fn)
+        if isinstance(n, ast.Name) and n.id == "rmtree"
+    }
+    assert rmtree_users == {"_scratch"}, rmtree_users
+
+
+def test_registry_imports_only_at_module_level():
+    local = [
+        (fn.name, n.lineno)
+        for fn in ast.walk(_registry_tree())
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+        for n in ast.walk(fn)
+        if isinstance(n, (ast.Import, ast.ImportFrom))
+    ]
+    assert not local, f"function-local imports: {local}"
+
+
+def test_lww_prelude_written_once():
+    src = Path(Q.__file__).read_text()
+    assert src.count("PARTITION BY repo, path ORDER BY lsn DESC") == 1
+
+
+def test_nested_fixture_phase_counts_once():
+    Q.reset_fixture_time()
+    with Q.fixture_phase():
+        with Q.fixture_phase():
+            time.sleep(0.2)
+    assert 0.2 <= Q.fixture_time() < 0.35
+
+
+_SCRATCH_PROBE = """
+import os
+from data_ingestion_resolution_platform_spark.plans.queries import _scratch
+p = _scratch("/x/sf0.001", "t")
+os.makedirs(p)
+print(p, flush=True)
+"""
+
+
+def test_scratch_root_is_per_process_and_removed_at_exit(tmp_path):
+    repo = Path(__file__).resolve().parents[1]
+    env = {**os.environ, "TMPDIR": str(tmp_path), "PYTHONPATH": str(repo)}
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-c", _SCRATCH_PROBE], env=env, cwd=repo,
+            stdout=subprocess.PIPE, text=True,
+        )
+        for _ in range(2)
+    ]
+    paths = [p.communicate(timeout=120)[0].strip() for p in procs]
+    assert all(p.returncode == 0 for p in procs)
+    roots = [os.path.dirname(p) for p in paths]
+    assert roots[0] != roots[1]
+    for path, root in zip(paths, roots):
+        assert os.path.basename(path) == "t_sf0.001"
+        assert os.path.dirname(root) == str(tmp_path)
+        assert os.path.basename(root).startswith("dirp_")
+    assert not list(tmp_path.iterdir()), "a scratch root outlived its process"
