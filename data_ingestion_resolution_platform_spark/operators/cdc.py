@@ -253,7 +253,11 @@ class ResolvedBatch:
     def conflict_key_count(self) -> int:
         """Number of conflicted keys, read straight from the persisted
         per-key aggregate — unlike ``conflicts.count()`` this never
-        re-executes the candidate semi-join/aggregation."""
+        re-executes the candidate semi-join/aggregation. Two jobs of
+        its own: ``CDCPipeline.process_batch`` observes the count on the
+        conflicts append instead, and calls this only on a retry whose
+        conflicts append had already committed (nothing left to
+        observe)."""
         return self._agg.filter(F.col("n_signatures") > 1).count()
 
     def unpersist(self) -> None:

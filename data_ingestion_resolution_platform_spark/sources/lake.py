@@ -50,7 +50,7 @@ import shutil
 import time
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 #: The change-data feed (CDF) contract every maintainer reads, defined
@@ -1092,10 +1092,14 @@ class PartitionedLakeTable(_MergeTable):
     ``pmod(xxhash64(*bucket_keys), 2^L) == b``; the directory always
     holds a prefix-free covering of the hash space (classic linear
     hashing), so buckets may sit at different levels — hot buckets
-    split deeper, cold ones stay coarse. When a touched bucket's
-    post-merge bytes exceed the threshold, its staged files (written at
-    ``max_level + 1`` granularity) are committed as the two child
-    buckets instead of one — a split costs zero extra data movement.
+    split deeper, cold ones stay coarse. A MERGE stages at the deepest
+    live level, so each touched bucket at that level is written as one
+    file and a coarser one as one file per deepest-level residue under
+    it. When a touched bucket's post-merge bytes exceed the threshold,
+    it is committed as its two children instead: a coarser bucket's
+    staged files are shared out between them, and a deepest-level
+    bucket's one staged file is re-partitioned one level finer before
+    the commit — in the epoch it splits, and only for that bucket.
 
     Commit protocol: stage → move files into per-bucket version dirs →
     ONE atomic ``_DIR`` replace (all touched buckets flip together) →
@@ -1105,7 +1109,7 @@ class PartitionedLakeTable(_MergeTable):
     (SURVEY.md §7.4).
     """
 
-    BUCKET_COL = "__rb"  # staging residue column (max_level+1 granularity)
+    BUCKET_COL = "__rb"  # staging residue column (deepest-level granularity)
 
     def __init__(
         self,
@@ -1242,23 +1246,29 @@ class PartitionedLakeTable(_MergeTable):
     # -- merge: bucket-pruned COW with size-triggered splits --------------
     def _stage(self, batch: DataFrame, keys: list[str], epoch_id) -> tuple:
         """Rewrite only the buckets the batch touches into one
-        ``_staging_<epoch>`` dir, partitioned by stage-level residue;
-        nothing moves into the bucket dirs until :meth:`_commit`."""
+        ``_staging_<epoch>`` dir, one residue dir per deepest-level
+        residue, and place each touched bucket's files (see
+        :meth:`_place`); nothing moves into the bucket dirs until
+        :meth:`_commit`."""
         d = self._read_dir()
-        lmax = max(lv for _, lv in d)
-        # stage one level finer than the deepest bucket: every touched
-        # bucket can split once per epoch with zero re-reads
-        lstage = lmax + 1
+        # stage at the deepest live level: a bucket at that level is one
+        # residue (one file), a coarser bucket the residues under it
+        lstage = max(lv for _, lv in d)
         rcol = self.BUCKET_COL
         cols = [c for c in batch.columns if c != DELETE_COL]
-        # staged is consumed three times (touched probe, anti-join build
-        # side, staging write) — persist so the upstream plan runs once
+        # staged is read twice (anti-join build side, staging write):
+        # persist it, and fill the cache with one noop write that
+        # observes the touched residues — one pass, no shuffle
         staged = batch.withColumn(rcol, self._residue_expr(lstage)).persist()
         try:
+            seen = Observation()
+            staged.observe(seen, F.collect_set(rcol).alias("res")).write.format(
+                "noop"
+            ).mode("overwrite").save()
             # driver-side planning on residues: ≤ min(2^lstage, distinct
             # batch keys) small ints — the Iceberg-manifest-sized
             # metadata op, never data
-            touched_res = sorted(r[0] for r in staged.select(rcol).distinct().collect())
+            touched_res = sorted(seen.get["res"])
             touched = sorted({self._owner(r, d, lstage) for r in touched_res})
             upserts = self._upserts(staged)
             touched_live = [bk for bk in touched if d[bk] > 0]
@@ -1281,85 +1291,109 @@ class PartitionedLakeTable(_MergeTable):
             # column order so every bucket file shares one schema layout
             merged = merged.select(*out_cols, rcol)
             out_schema = merged.drop(rcol).schema
-            # one staging write partitioned by residue; repartition on
-            # the residue first so each residue is written by exactly one
-            # task (~1 file per residue — file-count hygiene that keeps
-            # survivor scans cheap across epochs)
             staging = os.path.join(
                 self.root, f"_staging_{epoch_id if epoch_id is not None else 'adhoc'}"
             )
             shutil.rmtree(staging, ignore_errors=True)
-            n_tasks = max(1, min(len(touched_res), self.spark.sparkContext.defaultParallelism))
-            staged_out = merged.repartition(n_tasks, F.col(rcol))
-            if self.sort_within:
-                staged_out = staged_out.sortWithinPartitions(rcol, *self.sort_within)
-            staged_out.write.mode("overwrite").partitionBy(rcol).parquet(staging)
+            self._write_staged(merged, staging, len(touched_res))
         finally:
             staged.unpersist()
-        return staging, d, touched, lstage, out_schema
+        place = self._place(staging, d, touched, lstage, out_schema)
+        return staging, d, place, out_schema
+
+    def _write_staged(self, df: DataFrame, path: str, n_residues: int) -> None:
+        """One write partitioned by residue; repartition on the residue
+        first so each residue is written by exactly one task (one file
+        per residue — file-count hygiene that keeps survivor scans cheap
+        across epochs)."""
+        rcol = self.BUCKET_COL
+        n_tasks = max(1, min(n_residues, self.spark.sparkContext.defaultParallelism))
+        out = df.repartition(n_tasks, F.col(rcol))
+        if self.sort_within:
+            out = out.sortWithinPartitions(rcol, *self.sort_within)
+        out.write.mode("overwrite").partitionBy(rcol).parquet(path)
+
+    def _place(self, staging: str, d, touched, lstage: int, schema) -> dict:
+        """``{touched bucket: [(bucket to write, [staged residue dirs])]}``.
+        A bucket whose staged bytes fit ``max_bucket_bytes`` keeps its
+        residue dirs; one that outgrows them splits into its two
+        children during the rewrite it was already paying for. A coarser
+        bucket hands each child the residue dirs under it; a bucket at
+        the stage level is one residue, so every such bucket that splits
+        this epoch is re-partitioned one level finer here, in one write,
+        and the commit stays file moves plus one ``_DIR`` flip. A
+        delete-only batch for a bucket that never had data places
+        nothing."""
+        rcol = self.BUCKET_COL
+
+        def res_dirs(root: str, residues) -> list[str]:
+            paths = (os.path.join(root, f"{rcol}={r}") for r in residues)
+            return [p for p in paths if os.path.isdir(p)]
+
+        def children(root: str, b: int, lv: int) -> list:
+            # each child's residues in ``root``: every 2^(lv+1)-th from it
+            top, step = 1 << max(lstage, lv + 1), 1 << (lv + 1)
+            return [
+                ((k, lv + 1), res_dirs(root, range(k, top, step)))
+                for k in (b, b + (1 << lv))
+            ]
+
+        place, deep_splits = {}, []
+        for b, lv in touched:
+            present = res_dirs(staging, range(b, 1 << lstage, 1 << lv))
+            size = sum(_dir_stats(p)[0] for p in present)
+            if size == 0 and d[(b, lv)] == 0:
+                place[(b, lv)] = []
+            elif size <= self.max_bucket_bytes:
+                place[(b, lv)] = [((b, lv), present)]
+            elif lv < lstage:
+                place[(b, lv)] = children(staging, b, lv)
+            else:
+                deep_splits.append((b, present))
+        if deep_splits:
+            root = os.path.join(staging, "_split")
+            rows = self.spark.read.schema(schema).parquet(
+                *[p for _, present in deep_splits for p in present]
+            )
+            self._write_staged(
+                rows.withColumn(rcol, self._residue_expr(lstage + 1)),
+                root,
+                2 * len(deep_splits),
+            )
+            for b, _ in deep_splits:
+                place[(b, lstage)] = children(root, b, lstage)
+        return place
 
     def _discard(self, token: tuple) -> None:
         shutil.rmtree(token[0], ignore_errors=True)
 
     def _commit(self, token: tuple, epoch_id) -> dict:
-        """Move the staged residue files into per-bucket version dirs,
+        """Move the placed residue files into per-bucket version dirs,
         then ONE atomic ``_DIR`` flip, vacuum, ledger record."""
-        staging, d, touched, lstage, out_schema = token
-        rcol = self.BUCKET_COL
-
-        def res_dir(r: int) -> str:
-            return os.path.join(staging, f"{rcol}={r}")
-
-        def res_bytes(r: int) -> int:
-            p = res_dir(r)
-            if not os.path.isdir(p):
-                return 0
-            return sum(
-                e.stat().st_size for e in os.scandir(p) if e.name.endswith(".parquet")
-            )
-
-        def commit_version(b: int, lv: int, residues: list[int], dirmap) -> int:
-            """Move staged residue files into a fresh version dir for
-            (b, lv); returns the new version (0 if the bucket is empty)."""
-            present = [r for r in residues if os.path.isdir(res_dir(r))]
-            prev = dirmap.get((b, lv), 0)
-            if not present:
-                dirmap[(b, lv)] = 0
-                return 0
-            v = prev + 1
-            dst = self._bucket_dir(b, lv, v)
-            shutil.rmtree(dst, ignore_errors=True)
-            os.makedirs(dst)
-            for r in present:
-                for name in os.listdir(res_dir(r)):
-                    if name.endswith(".parquet"):
-                        shutil.move(
-                            os.path.join(res_dir(r), name),
-                            os.path.join(dst, f"r{r}_{name}"),
-                        )
-            dirmap[(b, lv)] = v
-            return v
-
+        staging, d, place, out_schema = token
         new_dir = dict(d)
         n_written = n_splits = 0
-        for b, lv in touched:
-            # all stage-level residues owned by this bucket
-            residues = list(range(b, 1 << lstage, 1 << lv))
-            size = sum(res_bytes(r) for r in residues)
-            if size == 0 and d[(b, lv)] == 0:
-                continue  # delete-only batch for a bucket that never had data
-            if size > self.max_bucket_bytes and lv < lstage:
-                # split during the rewrite we already paid for: commit
-                # the staged files as the two children
-                del new_dir[(b, lv)]
-                for child in (b, b + (1 << lv)):
-                    child_res = [r for r in residues if r % (1 << (lv + 1)) == child]
-                    if commit_version(child, lv + 1, child_res, new_dir):
-                        n_written += 1
+        for parent, parts in place.items():
+            if len(parts) == 2:  # split: the two children replace it
+                del new_dir[parent]
                 n_splits += 1
-            else:
-                if commit_version(b, lv, residues, new_dir):
-                    n_written += 1
+            for bk, srcs in parts:
+                if not srcs:
+                    new_dir[bk] = 0  # emptied by this epoch's deletes
+                    continue
+                v = new_dir.get(bk, 0) + 1
+                dst = self._bucket_dir(*bk, v)
+                shutil.rmtree(dst, ignore_errors=True)
+                os.makedirs(dst)
+                # one write names its files alike in every residue dir
+                for i, src in enumerate(srcs):
+                    for name in os.listdir(src):
+                        if name.endswith(".parquet"):
+                            shutil.move(
+                                os.path.join(src, name), os.path.join(dst, f"{i}_{name}")
+                            )
+                new_dir[bk] = v
+                n_written += 1
         # persist the (possibly evolved) unified schema, then one atomic
         # flip of every touched bucket. A crash in between leaves a
         # schema that is a superset of the files — reads NULL-fill.
@@ -1379,7 +1413,7 @@ class PartitionedLakeTable(_MergeTable):
         shutil.rmtree(staging, ignore_errors=True)
         stats = {
             "mode": "merge",
-            "touched_buckets": len(touched),
+            "touched_buckets": len(place),
             "written_buckets": n_written,
             "splits": n_splits,
             "n_buckets": len(new_dir),

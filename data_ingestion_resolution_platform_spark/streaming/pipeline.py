@@ -27,7 +27,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
@@ -115,8 +115,11 @@ class EpochChange:
     ``pre`` holds the current target rows for the batch keys (every one
     is replaced or deleted → sign -1), ``post`` the surviving winners
     (sign +1). The target is touched by ONE broadcast semi-join on the
-    (small) winner key set — never a full rescan, never a target
-    shuffle — and ``pre`` is persisted, so N views cost one probe.
+    (small) winner key set — never a target shuffle — and ``pre`` is
+    persisted, so N views cost one probe. That probe prunes no bucket,
+    though: the semi-join reads every live bucket's files, so each
+    view-enabled epoch still reads the whole target (a key-probe
+    ``lookup`` on the MERGE contract is ROADMAP direction 3).
     ``base_after`` is the LOGICAL post-epoch state (target minus batch
     keys, plus surviving winners), left lazy: the top-k back-fill only
     evaluates it for the groups a retraction dirtied. ``batch`` is the
@@ -420,18 +423,26 @@ class CDCPipeline:
 
             def audit_conflicts() -> None:
                 nonlocal n_conf
-                self.conflicts.append(conflicts, f"c{epoch}")
-                # A7/M7 status input, counted from the persisted per-key
-                # aggregate the append has materialized — counting the
-                # conflicts frame would re-run the candidate semi-join
-                n_conf = resolved.conflict_key_count()
+                # A7/M7 status input: the appended frame holds one row
+                # per conflicted key, so an observed count(1) on its own
+                # write counts them with no job of its own
+                if self.conflicts.epoch_committed(f"c{epoch}"):
+                    # a retry after the target commit failed: the append
+                    # is a no-op, so no action would fill an observation
+                    n_conf = resolved.conflict_key_count()
+                    return
+                seen = Observation()
+                self.conflicts.append(
+                    conflicts.observe(seen, F.count(F.lit(1)).alias("n")), f"c{epoch}"
+                )
+                n_conf = seen.get["n"]
 
             # write order: audit data and views first, target + its
             # ledger marker last (a crash in between leaves an
             # uncommitted epoch that replays idempotently; every other
             # step is ledger-guarded too). Only the COMMIT is ordered:
             # the audit appends, the views and the target MERGE's
-            # residue collect and staging write read nothing of each
+            # residue fill and staging write read nothing of each
             # other's output, so they all run at once. The target's staged files stay invisible until its
             # gated commit, so the views read their pre-images from the
             # pre-merge target; and if some view MERGEs commit but

@@ -4,6 +4,9 @@ across mixed levels; replay stays exactly-once/convergent."""
 
 from __future__ import annotations
 
+import glob
+import os
+
 from pyspark.sql import functions as F
 
 from data_ingestion_resolution_platform_spark.sources.lake import DELETE_COL, PartitionedLakeTable
@@ -94,3 +97,58 @@ def test_split_cost_stays_bounded(spark, tmp_path):
     assert st["touched_buckets"] == 1
     assert st["written_buckets"] <= 2  # the one bucket (or its 2 children)
     assert tbl.n_live_buckets() >= n_buckets_grown
+
+
+def _bucket_files(tbl) -> dict:
+    """{(bucket, level): parquet files of its live version}."""
+    return {
+        (b, lv): glob.glob(os.path.join(tbl._bucket_dir(b, lv, v), "*.parquet"))
+        for (b, lv), v in tbl._read_dir().items()
+        if v > 0
+    }
+
+
+def test_one_staged_file_per_bucket_when_all_buckets_share_a_level(spark, tmp_path):
+    tbl = PartitionedLakeTable(
+        spark, str(tmp_path / "t"), bucket_keys=["repo"], n_buckets=4,
+        max_bucket_bytes=1 << 30,
+    )
+    st = tbl.merge(_batch(spark, 2000, repos=32), ["repo", "path"], epoch_id=0)
+    files = _bucket_files(tbl)
+    assert len(files) == st["written_buckets"] == 4
+    assert all(len(f) == 1 for f in files.values()), files
+    # the next epoch merges into the survivors: still one file a bucket
+    tbl.merge(_batch(spark, 500, offset=10_000, repos=32), ["repo", "path"], epoch_id=1)
+    assert all(len(f) == 1 for f in _bucket_files(tbl).values())
+    assert tbl.read().count() == 2500
+
+
+def test_deepest_bucket_split_repartitions_one_level_finer(spark, tmp_path):
+    root = str(tmp_path / "t")
+    keys = ["repo", "path"]
+    PartitionedLakeTable(
+        spark, root, bucket_keys=["repo"], n_buckets=2, max_bucket_bytes=1 << 30
+    ).merge(_batch(spark, 3000, repos=16), keys, epoch_id=0)
+    # the same table under a threshold both level-1 buckets now exceed:
+    # a one-row epoch into each makes it split, one level finer
+    tbl = PartitionedLakeTable(
+        spark, root, bucket_keys=["repo"], n_buckets=2, max_bucket_bytes=1000
+    )
+    assert sorted(tbl._read_dir()) == [(0, 1), (1, 1)]
+    st = tbl.merge(
+        _batch(spark, 16, offset=50_000, repos=16), keys, epoch_id=1
+    )
+    assert st["splits"] == 2
+    files = _bucket_files(tbl)
+    assert sorted(files) == [(0, 2), (1, 2), (2, 2), (3, 2)]
+    assert all(len(f) == 1 for f in files.values())
+    # each child holds only rows of its own residue
+    for (b, lv), paths in files.items():
+        rows = spark.read.parquet(*paths)
+        residue = F.pmod(F.xxhash64("repo"), F.lit(1 << lv))
+        assert rows.count() > 0
+        assert rows.filter(residue != b).count() == 0
+    # no row lost, none doubled, and no staging dir left behind
+    assert tbl.read().count() == 3016
+    assert tbl.read().select(*keys).distinct().count() == 3016
+    assert not glob.glob(os.path.join(root, "_staging_*"))
