@@ -116,8 +116,12 @@ def run_cdc_replay(parallelism: int, n_events: int) -> dict:
       an os.sync between them (async writeback of a prior rep otherwise
       poisons the next),
     - report the MEDIAN rep.
+
+    ``codegen_compiles_per_rep`` counts, per timed rep in run order, the
+    classes Janino compiled during it: the misses of the generated-code
+    cache (``session.py``), so a cache regression shows up here.
     """
-    from data_ingestion_resolution_platform_spark.session import get_spark
+    from data_ingestion_resolution_platform_spark.session import codegen_compiles, get_spark
     from data_ingestion_resolution_platform_spark.sources.feed import synth_change_feed
     from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
 
@@ -151,15 +155,17 @@ def run_cdc_replay(parallelism: int, n_events: int) -> dict:
                 spark, feed_dir="unused", warehouse=wh, target_mode=target_mode
             )
             os.sync()  # drain dirty pages so timing is apply-only
+            compiles0 = codegen_compiles(spark)
             epoch_stats, elapsed = _timed(lambda: pipe.replay_bounded(feed_df, epochs=epochs))
+            compiles = codegen_compiles(spark) - compiles0
             n_final = pipe.target.read().count()
             phases: dict[str, float] = {}
             for st in epoch_stats:
                 for k, v in st.get("phase_seconds", {}).items():
                     phases[k] = round(phases.get(k, 0.0) + v, 3)
-            runs.append((elapsed, n_final, phases))
+            runs.append((elapsed, n_final, phases, compiles))
             shutil.rmtree(wh, ignore_errors=True)
-        elapsed, n_final, phases = _median(runs, key=lambda r: r[0])
+        elapsed, n_final, phases, _ = _median(runs, key=lambda r: r[0])
         return {
             "parallelism": parallelism,
             "events": n_events,
@@ -168,6 +174,7 @@ def run_cdc_replay(parallelism: int, n_events: int) -> dict:
             "seconds": elapsed,
             "seconds_all_reps": sorted(r[0] for r in runs),
             "phase_seconds": phases,
+            "codegen_compiles_per_rep": [r[3] for r in runs],
             "events_per_sec": round(n_events / elapsed, 1),
             "final_rows": n_final,
         }
@@ -1839,6 +1846,7 @@ def _cdc_median_of_reps(parallelism: int, n_events: int, reps: int = 3) -> dict:
     med = dict(_median(runs, key=lambda r: r["events_per_sec"]))
     med["reps"] = reps
     med["events_per_sec_all_reps"] = sorted(r["events_per_sec"] for r in runs)
+    med["codegen_compiles_per_rep"] = [n for r in runs for n in r["codegen_compiles_per_rep"]]
     return med
 
 

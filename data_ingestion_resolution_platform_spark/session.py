@@ -22,6 +22,30 @@ The epoch-ledger / versioned-pointer commit protocol in
 ``sources/lake.py`` assumes only atomic single-object PUT (rename-free
 on the data path; the ``_DIR``/``_LATEST`` pointer swap maps to an
 S3 conditional PUT or a DynamoDB-style pointer on a real deployment).
+
+Generated-code cache. Spark compiles every whole-stage and expression
+class with Janino and keeps the compiled classes in an LRU cache capped
+by ``spark.sql.codegen.cache.maxEntries`` (Spark's default, 100). A
+micro-batch engine re-runs the same plan shapes every epoch, so a cache
+smaller than its working set evicts each epoch's classes before the
+next epoch asks for them again and every warm epoch recompiles. Counted
+with :func:`codegen_compiles` on 4 vCPU (perfbench seed 11, uncapped
+cache): a whole ``replay_hot`` run generates 178 distinct classes and a
+whole ``stream_views`` run 561. At the cap of 100 a warm ``replay_hot``
+epoch recompiled 63-74 classes; with the whole set cached the four
+timed epochs compiled 25, 14, 4 and 4. What is still compiled is source
+that changes between epochs: classes that inline the epoch number as a
+constant, and classes that AQE numbers differently (whole-stage codegen
+id, fresh-variable counters). ``get_spark`` sets the cap to 2048, the
+smallest power of two at least twice the largest measured working set.
+
+The cache is a JVM-wide singleton, sized from the session conf active
+at the JVM's first code generation, and the cap is a static conf. A
+later ``get_spark(extra_conf={"spark.sql.codegen.cache.maxEntries":
+...})`` (or ``SPARK_GRAFT_EXTRA_CONF``) that reuses the running session
+ignores it; one that builds a new session on the same JVM (after
+``spark.stop()``) reports the new value while the cache keeps its first
+size. Start a fresh JVM to resize it. A cap of 0 disables the cache.
 """
 
 from __future__ import annotations
@@ -60,6 +84,13 @@ def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     except (OSError, StopIteration, IndexError, ValueError):
         return "16g"
     return f"{min(cap_mb, total_kb // 2048)}m"
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM so far (cache misses of
+    the generated-code cache): ``CodegenMetrics`` compilation count."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def get_spark(
@@ -113,6 +144,10 @@ def get_spark(
         # blinds both row-group pushdown and the manifest-style file
         # pruning in sources/skipping.py (and Iceberg forbids INT96)
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        # hold the whole generated-code working set (module docstring):
+        # 178 classes per replay_hot run, 561 per stream_views run,
+        # against Spark's default cap of 100
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
     )
     # env-driven conf overrides (e.g. codec experiments through bench
     # subprocesses): SPARK_GRAFT_EXTRA_CONF="k=v;k=v". Explicit

@@ -38,3 +38,19 @@ def test_default_driver_memory_fits_host(tmp_path):
     assert _default_driver_memory(str(big)) == "16384m"
     # unreadable meminfo (non-Linux host): the historical 16g default
     assert _default_driver_memory(str(tmp_path / "missing")) == "16g"
+
+
+# the largest generated-code working set measured: the distinct classes
+# of one whole stream_views perfbench run (session.py's docstring)
+MEASURED_CODEGEN_WORKING_SET = 561
+
+
+def test_codegen_cache_holds_the_working_set(spark):
+    # Spark's default cap of 100 evicts an epoch's classes before the
+    # next epoch asks for them again; a cap of 0 disables the cache. The
+    # cache is a JVM-wide singleton sized at the JVM's first code
+    # generation, so a later get_spark(extra_conf=...) on this running
+    # JVM could not resize it: what get_spark sets here is what the
+    # whole process runs with.
+    cap = int(spark.conf.get("spark.sql.codegen.cache.maxEntries"))
+    assert cap >= MEASURED_CODEGEN_WORKING_SET
