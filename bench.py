@@ -111,7 +111,18 @@ def run_cdc_replay(parallelism: int, n_events: int) -> dict:
     ``python bench.py`` reproduces):
     - feed materialized to parquet first (synthesis excluded),
     - one small warmup replay on a throwaway warehouse (JVM/codegen/
-      shuffle-service warmup excluded from the timed window),
+      shuffle-service warmup excluded from the timed window): a
+      ~100k-event subset of the feed, materialized the same way and
+      spanning the same LSN range, replayed in the same number of
+      epochs. Its epochs then plan the timed epochs' shapes with the
+      same literals — the first on an empty target, the later ones on
+      a populated one. (A 1-epoch ``limit`` warm-up changed every scan
+      stage's plan shape and left ~80 compiles per timed rep.) What a
+      timed rep still compiles is size-dependent: at 6M events AQE
+      plans a join of the feed-scan stages as a shuffle where the
+      warm-up's 100k events broadcast it, so those scan + LSN-filter
+      stages fuse differently and get new codegen stage ids (~19
+      classes per rep; none at 1M events),
     - ``$SPARK_GRAFT_CDC_REPS`` timed replays on fresh warehouses with
       an os.sync between them (async writeback of a prior rep otherwise
       poisons the next),
@@ -121,6 +132,8 @@ def run_cdc_replay(parallelism: int, n_events: int) -> dict:
     classes Janino compiled during it: the misses of the generated-code
     cache (``session.py``), so a cache regression shows up here.
     """
+    from pyspark.sql import functions as F
+
     from data_ingestion_resolution_platform_spark.session import codegen_compiles, get_spark
     from data_ingestion_resolution_platform_spark.sources.feed import synth_change_feed
     from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
@@ -147,7 +160,12 @@ def run_cdc_replay(parallelism: int, n_events: int) -> dict:
             spark, feed_dir="unused", warehouse=os.path.join(base, "warm"),
             target_mode=target_mode,
         )
-        warm.replay_bounded(feed_df.limit(100_000), epochs=1)
+        stride = max(1, n_events // 100_000)
+        warm_dir = os.path.join(base, "warm_feed")
+        feed_df.filter(
+            (F.col("lsn") % stride == 0) | (F.col("lsn") == n_events - 1)
+        ).write.parquet(warm_dir)
+        warm.replay_bounded(spark.read.parquet(warm_dir), epochs=epochs)
         runs = []
         for rep in range(reps):
             wh = os.path.join(base, f"wh{rep}")

@@ -23,15 +23,19 @@ so ``Δagg = changes.groupBy(group_keys).agg(sum(sign), sum(sign*m)…)``
 and ``new_state = state ⊕ Δagg`` (pointwise add, drop groups whose
 row count reaches 0). Updates that MOVE a row between groups (a
 group-key column changed) are handled for free: the preimage subtracts
-from the old group, the postimage adds to the new one.
+from the old group, the postimage adds to the new one. Every maintainer
+here applies ``state ⊕ Δ`` through the one :func:`add_stored`, and
+reads the stored rows of its touched keys through the tables' one
+key-probe, ``sources/lake._MergeTable.lookup``.
 
 Plan shape / scale:
 - the delta aggregation shuffles ONLY the change batch (|Δ| rows, with
   map-side partial aggregation — sums and counts combine), never the
   base table and never the aggregate state;
-- applying the delta is a join on the group key where one side is the
-  per-epoch delta (small ⇒ broadcast) — with a bucketed state table the
-  rewrite touches only the buckets holding changed groups.
+- applying the delta (:func:`add_stored`) is a join on the group key
+  where one side is the per-epoch delta (small ⇒ broadcast) — with a
+  bucketed state table the rewrite touches only the buckets holding
+  changed groups.
 Non-additive aggregates get their own maintainers instead of the
 naive full-rescan:
 
@@ -62,9 +66,9 @@ from data_ingestion_resolution_platform_spark.sources.lake import (
     DELETE,
     DELETE_COL,
     INSERT,
-    change_sign,
     is_positive,
     is_retraction,
+    signed,
 )
 
 
@@ -84,7 +88,7 @@ def delta_aggregate(
     recomputed aggregate).
     """
     sum_cols = dict(sum_cols or {})
-    base = changes.withColumn("_sign", change_sign()).filter(F.col("_sign").isNotNull())
+    base = signed(changes)
     aggs = [F.sum("_sign").cast("long").alias(count_alias)]
     for alias, expr in sum_cols.items():
         aggs.append(
@@ -93,42 +97,36 @@ def delta_aggregate(
     return base.groupBy(*group_keys).agg(*aggs)
 
 
-def merge_delta(
-    state: DataFrame | None,
-    delta: DataFrame,
-    group_keys: Sequence[str],
-    count_alias: str = "n_rows",
+def add_stored(
+    table, delta: DataFrame, keys: Sequence[str], measures: Sequence[str]
 ) -> DataFrame:
-    """``state ⊕ delta``: pointwise-add every measure column, keep
-    untouched groups as-is, drop groups whose row count reaches 0.
+    """``state ⊕ Δ`` for the touched keys: ``delta`` with each long
+    measure in ``measures`` replaced by its stored value + Δ (a key with
+    no stored row, or a table not yet committed, adds Δ to 0); every
+    other column of ``delta`` passes through. ``delta`` is key-unique
+    and names each measure as ``table`` stores it.
 
-    One full-outer equi-join on the group key (delta side is per-epoch
-    small ⇒ AQE broadcasts it); measure columns are everything that is
-    not a group key, and must match between ``state`` and ``delta``.
-    ``state=None`` bootstraps from an empty aggregate.
+    Two broadcast-shaped steps so the (big) state never shuffles:
+    ``table.lookup`` semi-joins the state down to the touched keys (the
+    delta keys are the small broadcast side), then the delta left-joins
+    that now-small touched set (broadcastable as the right side). A
+    direct ``delta LEFT JOIN state`` could NOT broadcast — Spark only
+    broadcasts the non-preserved side, which there is the full state.
     """
-    key_list = list(group_keys)
-    measures = [c for c in delta.columns if c not in key_list]
-    if state is None:
-        return delta.filter(F.col(count_alias) > 0)
-    if sorted(state.columns) != sorted(delta.columns):
-        raise ValueError(
-            f"state columns {sorted(state.columns)} != delta columns {sorted(delta.columns)}"
-        )
-    s = state.select(*key_list, *[F.col(c).alias(f"_s_{c}") for c in measures])
-    d = delta.select(*key_list, *[F.col(c).alias(f"_d_{c}") for c in measures])
-    j = s.join(d, on=key_list, how="full_outer")
-    out = j.select(
-        *key_list,
+    key_list = list(keys)
+    stored = table.lookup(delta.select(*key_list))
+    if stored is None:
+        return delta
+    touched = stored.select(*key_list, *[F.col(c).alias(f"_s_{c}") for c in measures])
+    joined = delta.join(F.broadcast(touched), on=key_list, how="left")
+    return joined.select(
         *[
-            (
-                F.coalesce(F.col(f"_s_{c}"), F.lit(0))
-                + F.coalesce(F.col(f"_d_{c}"), F.lit(0))
-            ).cast("long").alias(c)
-            for c in measures
-        ],
+            (F.coalesce(F.col(f"_s_{c}"), F.lit(0)) + F.col(c)).cast("long").alias(c)
+            if c in measures
+            else F.col(c)
+            for c in delta.columns
+        ]
     )
-    return out.filter(F.col(count_alias) > 0)
 
 
 def maintain_aggregate(
@@ -142,10 +140,11 @@ def maintain_aggregate(
     """Maintain a persisted grouped-aggregate ``LakeTable`` from one
     change-feed epoch, exactly-once.
 
-    The MERGE batch contains ONLY groups the epoch touched (delta LEFT
-    JOIN current state — the delta side stays the driver of batch
-    size), so with a bucketed target the rewrite cost is O(|delta| +
-    touched buckets), independent of how many groups exist. Groups
+    The MERGE batch contains ONLY groups the epoch touched
+    (:func:`add_stored`: the delta LEFT JOIN its keys' stored rows —
+    the delta side stays the driver of batch size), so with a bucketed
+    target the rewrite cost is O(|delta| + touched buckets),
+    independent of how many groups exist. Groups
     whose row count reaches 0 are deleted via the MERGE delete clause.
     Rides the table's epoch ledger: re-delivering the same epoch is a
     no-op, which is what makes signed deltas safe under at-least-once
@@ -155,38 +154,13 @@ def maintain_aggregate(
         return {"skipped": True, "epoch": str(epoch_id)}
     key_list = list(group_keys)
     delta = delta_aggregate(changes, key_list, sum_cols, count_alias=count_alias)
-    # delta feeds both the semi-join key side and the batch body —
+    # delta feeds both the lookup's key side and the batch body —
     # persist so the |changes| aggregation runs once (unpersisted in
     # the finally below; same pattern as LakeTable.merge itself)
     delta = delta.persist()
     measures = [c for c in delta.columns if c not in key_list]
-    if table.exists():
-        # two broadcast-shaped steps so the (big) state never shuffles:
-        # 1) semi-join state down to the touched groups (delta keys are
-        #    the small broadcast side), 2) left-join delta against that
-        #    now-small touched set (broadcastable as the right side).
-        # A direct `delta LEFT JOIN state` could NOT broadcast — Spark
-        # only broadcasts the non-preserved side, which here is the
-        # full state.
-        cur = table.read().select(
-            *key_list, *[F.col(c).alias(f"_s_{c}") for c in measures]
-        )
-        touched = cur.join(
-            F.broadcast(delta.select(*key_list)), on=key_list, how="left_semi"
-        )
-        joined = delta.join(F.broadcast(touched), on=key_list, how="left")
-        batch = joined.select(
-            *key_list,
-            *[
-                (F.coalesce(F.col(f"_s_{c}"), F.lit(0)) + F.col(c))
-                .cast("long")
-                .alias(c)
-                for c in measures
-            ],
-        )
-    else:
-        batch = delta
     try:
+        batch = add_stored(table, delta, key_list, measures)
         return table.merge(
             batch.withColumn(DELETE_COL, F.col(count_alias) <= 0),
             key_list,
@@ -220,12 +194,14 @@ def maintain_distinct(
         Δdistinct(group) = Σ_values [new_mult > 0] - [old_mult > 0]
 
     Plan shape / scale: the multiplicity delta shuffles only the
-    change batch; old multiplicities come from a broadcast-semi-pruned
-    read of the side table (only touched (group, value) pairs — the
-    side table never shuffles); the second-level delta is a groupBy of
-    the already-epoch-sized frame. Both MERGEs touch only changed
-    buckets. Epoch cost is O(|Δ|), independent of group count,
-    value cardinality, and base size.
+    change batch; both levels apply through :func:`add_stored`, so
+    stored rows come from a broadcast-semi-pruned read of only the
+    touched keys (no side table ever shuffles). The first level carries
+    its Δ through as ``_dmult``, so the old multiplicity is new − Δ;
+    the second-level delta is a groupBy of the already-epoch-sized
+    frame. Both MERGEs touch only changed buckets. Epoch cost is
+    O(|Δ|), independent of group count, value cardinality, and base
+    size.
 
     Crash contract: ``count_table`` commits FIRST. On redelivery the
     count merge no-ops via its ledger while the multiplicity pre-state
@@ -248,53 +224,23 @@ def maintain_distinct(
     mkeys = key_list + [value_col]
     mdelta = delta_aggregate(changes, mkeys, None, count_alias="_dmult").persist()
     try:
-        if mult_table.exists():
-            cur = mult_table.read().select(*mkeys, F.col("_mult").alias("_old"))
-            touched = cur.join(
-                F.broadcast(mdelta.select(*mkeys)), on=mkeys, how="left_semi"
-            )
-            j = mdelta.join(F.broadcast(touched), on=mkeys, how="left")
-        else:
-            j = mdelta.withColumn("_old", F.lit(None).cast("long"))
-        j = j.withColumn(
-            "_new", (F.coalesce(F.col("_old"), F.lit(0)) + F.col("_dmult")).cast("long")
+        j = add_stored(
+            mult_table, mdelta.withColumn("_mult", F.col("_dmult")), mkeys, ["_mult"]
         ).persist()
         try:
             # SQL COUNT(DISTINCT) ignores NULL values: a NULL-valued
-            # multiplicity row still contributes to the row count (_dc)
-            # but never to the distinct count's zero crossings (_dd)
-            crossing = (F.col("_new") > 0).cast("int") - (
-                F.coalesce(F.col("_old"), F.lit(0)) > 0
+            # multiplicity row still contributes to the row count but
+            # never to the distinct count's zero crossings
+            crossing = (F.col("_mult") > 0).cast("int") - (
+                F.col("_mult") - F.col("_dmult") > 0
             ).cast("int")
             cdelta = j.groupBy(*key_list).agg(
                 F.sum(
                     F.when(F.col(value_col).isNotNull(), crossing).otherwise(F.lit(0))
-                ).cast("long").alias("_dd"),
-                F.sum("_dmult").cast("long").alias("_dc"),
+                ).cast("long").alias(distinct_alias),
+                F.sum("_dmult").cast("long").alias(count_alias),
             )
-            if count_table.exists():
-                ccur = count_table.read().select(
-                    *key_list,
-                    F.col(distinct_alias).alias("_sd"),
-                    F.col(count_alias).alias("_sc"),
-                )
-                ctouched = ccur.join(
-                    F.broadcast(cdelta.select(*key_list)), on=key_list, how="left_semi"
-                )
-                cj = cdelta.join(F.broadcast(ctouched), on=key_list, how="left")
-            else:
-                cj = cdelta.withColumn("_sd", F.lit(None).cast("long")).withColumn(
-                    "_sc", F.lit(None).cast("long")
-                )
-            cbatch = cj.select(
-                *key_list,
-                (F.coalesce(F.col("_sd"), F.lit(0)) + F.col("_dd"))
-                .cast("long")
-                .alias(distinct_alias),
-                (F.coalesce(F.col("_sc"), F.lit(0)) + F.col("_dc"))
-                .cast("long")
-                .alias(count_alias),
-            )
+            cbatch = add_stored(count_table, cdelta, key_list, [distinct_alias, count_alias])
             counts = count_table.merge(
                 cbatch.withColumn(DELETE_COL, F.col(count_alias) <= 0),
                 key_list,
@@ -303,10 +249,8 @@ def maintain_distinct(
             # NULL values stay OUT of the multiplicity table: they never
             # move the distinct count, and a NULL inside a MERGE key
             # would never equi-match its own row on redelivery (their
-            # row-count contribution already flowed through _dc above)
-            mbatch = j.filter(F.col(value_col).isNotNull()).select(
-                *mkeys, F.col("_new").alias("_mult")
-            )
+            # row-count contribution already flowed into cdelta above)
+            mbatch = j.filter(F.col(value_col).isNotNull()).select(*mkeys, "_mult")
             mult = mult_table.merge(
                 mbatch.withColumn(DELETE_COL, F.col("_mult") <= 0),
                 mkeys,
@@ -361,8 +305,7 @@ def maintain_minmax(
         return {"skipped": True, "epoch": str(epoch_id)}
     key_list = list(group_keys)
     v = F.expr(value_expr)
-    signed = changes.withColumn("_sign", change_sign()).filter(F.col("_sign").isNotNull())
-    delta = signed.groupBy(*key_list).agg(
+    delta = signed(changes).groupBy(*key_list).agg(
         F.sum("_sign").cast("long").alias("_dn"),
         F.min(F.when(F.col("_sign") > 0, v)).alias("_pos_min"),
         F.max(F.when(F.col("_sign") > 0, v)).alias("_pos_max"),
@@ -370,15 +313,13 @@ def maintain_minmax(
         F.max(F.when(F.col("_sign") < 0, v)).alias("_neg_max"),
     ).persist()
     try:
-        if table.exists():
-            cur = table.read().select(
+        stored = table.lookup(delta.select(*key_list))
+        if stored is not None:
+            touched = stored.select(
                 *key_list,
                 F.col(count_alias).alias("_sn"),
                 F.col(min_alias).alias("_smin"),
                 F.col(max_alias).alias("_smax"),
-            )
-            touched = cur.join(
-                F.broadcast(delta.select(*key_list)), on=key_list, how="left_semi"
             )
             j = delta.join(F.broadcast(touched), on=key_list, how="left")
         else:
@@ -541,15 +482,8 @@ def maintain_topk(
     try:
         pos = changes.filter(is_positive()).select(*cols)
         neg_keys = changes.filter(is_retraction()).select(*keys)
-        touched = changes.select(*gk).distinct()
-        if view.exists():
-            vtouched = (
-                view.read()
-                .join(F.broadcast(touched), on=gk, how="left_semi")
-                .localCheckpoint(eager=False)
-            )
-        else:
-            vtouched = pos.limit(0)
+        stored = view.lookup(changes.select(*gk).distinct())
+        vtouched = pos.limit(0) if stored is None else stored.localCheckpoint(eager=False)
         # dirty = a retraction key matches a stored row (exact key match,
         # not a value compare — ties make value compares ambiguous)
         dirty_groups = (
@@ -669,14 +603,7 @@ def delta_join(
     if overlap:
         raise ValueError(f"non-join columns shared by both sides: {sorted(overlap)}")
 
-    def signed(ch: DataFrame) -> DataFrame:
-        return (
-            ch.withColumn("_sign", change_sign())
-            .filter(F.col("_sign").isNotNull())
-            .drop(CHANGE_COL)
-        )
-
-    dr, ds = signed(r_changes), signed(s_changes)
+    dr, ds = signed(r_changes).drop(CHANGE_COL), signed(s_changes).drop(CHANGE_COL)
     r0 = r_before.withColumn("_sign", F.lit(1))
     s0 = s_before.withColumn("_sign", F.lit(1))
 

@@ -39,8 +39,8 @@ from data_ingestion_resolution_platform_spark.sources.lake import (
     CHANGE_COL,
     DELETE,
     DELETE_COL,
-    change_sign,
     is_positive,
+    signed,
 )
 from data_ingestion_resolution_platform_spark.util import local_df
 
@@ -339,39 +339,23 @@ def maintain_search_index(
     termstats-then-postings ordering inside maintain_distinct enforces
     its own recoverability invariant.
     """
-    from data_ingestion_resolution_platform_spark.operators.ivm import maintain_distinct
+    from data_ingestion_resolution_platform_spark.operators.ivm import (
+        add_stored,
+        maintain_distinct,
+    )
 
     dl_expr = F.size(_tokens(F.col(text_col)))
-    # global scalar: Δn_docs = Σ sign over doc images, Δsum_dl likewise
+    # global scalar: Δn_docs = Σ sign over doc images, Δsum_dl likewise.
+    # A plain MERGE, not maintain_aggregate: the one _id = 0 row stays
+    # at n_docs = 0 rather than being deleted as an empty group.
     if epoch_id is None or not stats_table.epoch_committed(epoch_id):
-        d = (
-            changes.withColumn("_sign", change_sign())
-            .filter(F.col("_sign").isNotNull())
-            .agg(
-                F.coalesce(F.sum("_sign"), F.lit(0)).cast("long").alias("_dn"),
-                F.coalesce(F.sum(F.col("_sign") * dl_expr), F.lit(0))
-                .cast("long")
-                .alias("_ddl"),
-            )
-            .withColumn("_id", F.lit(0))
+        d = signed(changes).agg(
+            F.lit(0).alias("_id"),
+            F.coalesce(F.sum("_sign"), F.lit(0)).cast("long").alias("n_docs"),
+            F.coalesce(F.sum(F.col("_sign") * dl_expr), F.lit(0)).cast("long").alias("sum_dl"),
         )
-        if stats_table.exists():
-            cur = stats_table.read()
-            d = d.join(F.broadcast(cur), on="_id", how="left")
-        else:
-            d = d.withColumn("n_docs", F.lit(None).cast("long")).withColumn(
-                "sum_dl", F.lit(None).cast("long")
-            )
         stats_table.merge(
-            d.select(
-                "_id",
-                (F.coalesce(F.col("n_docs"), F.lit(0)) + F.col("_dn"))
-                .cast("long")
-                .alias("n_docs"),
-                (F.coalesce(F.col("sum_dl"), F.lit(0)) + F.col("_ddl"))
-                .cast("long")
-                .alias("sum_dl"),
-            ),
+            add_stored(stats_table, d, ["_id"], ["n_docs", "sum_dl"]),
             ["_id"],
             epoch_id=epoch_id,
         )
@@ -431,9 +415,7 @@ def bm25_from_index(
     hits = postings_table.read().select(
         "term", "doc_id", F.col("_mult").alias("tf")
     ).join(F.broadcast(qdf), on="term")
-    dfreq = termstats_table.read().select("term", "df").join(
-        F.broadcast(qdf.select("term").distinct()), on="term", how="left_semi"
-    )
+    dfreq = termstats_table.lookup(qdf.select("term").distinct()).select("term", "df")
     stats = F.broadcast(
         stats_table.read().select(
             F.col("n_docs"),

@@ -112,12 +112,17 @@ def kmv_sketch(
     """
     if k < 2:
         raise ValueError("KMV needs k >= 2 (v_k drives the estimator)")
+    keys = list(group_cols)
+    pairs = df.select(*keys, kmv_hash(F.col(value_col)).alias("_h")).distinct()
+    return _kmv_build(pairs, keys, k, n_salt)
+
+
+def _kmv_build(pairs: DataFrame, keys: list[str], k: int, n_salt: int) -> DataFrame:
+    """Group cols + ``kmv``: the sorted ``k`` smallest hashes of the
+    distinct (group, ``_h``) ``pairs`` — the one builder behind both
+    :func:`kmv_sketch` and :func:`maintain_kmv`."""
     from data_ingestion_resolution_platform_spark.operators.topk import grouped_topk
 
-    keys = list(group_cols)
-    pairs = df.select(
-        *keys, kmv_hash(F.col(value_col)).alias("_h")
-    ).distinct()
     bottom = grouped_topk(pairs, keys, [F.col("_h") * -1], k, n_salt=n_salt, rank_col="_rk")
     return bottom.groupBy(*keys).agg(F.sort_array(F.collect_list("_h")).alias("kmv"))
 
@@ -163,8 +168,9 @@ def maintain_kmv(
     cols + ``kmv``) by one APPEND-ONLY feed epoch, exactly-once.
 
     Inserts merge into the stored sketch (union + re-truncate): the
-    epoch reads only the touched groups' state (broadcast semi-join —
-    the table never shuffles) and its cost is O(|Δ| + touched·k).
+    epoch reads only the touched groups' state (``table.lookup``, a
+    broadcast semi-join — the table never shuffles) and its cost is
+    O(|Δ| + touched·k).
     Retractions are REFUSED: a KMV minimum cannot be unseen (the
     sketch holds no multiplicity), so a feed with deletes or
     update_preimages must use ``ivm.maintain_distinct``'s exact
@@ -172,26 +178,16 @@ def maintain_kmv(
     """
     if epoch_id is not None and table.epoch_committed(epoch_id):
         return {"skipped": True, "epoch": str(epoch_id)}
-    from data_ingestion_resolution_platform_spark.operators.topk import grouped_topk
-
     keys = list(group_cols)
     _refuse_retractions(
         changes, "maintain_kmv", "KMV cannot retract a minimum", "ivm.maintain_distinct"
     )
-    delta = changes.select(
-        *keys, kmv_hash(F.col(value_col)).alias("_h")
-    ).distinct()
-    if table.exists():
-        touched = delta.select(*keys).distinct()
-        old = (
-            table.read()
-            .join(F.broadcast(touched), on=keys, how="left_semi")
-            .select(*keys, F.explode("kmv").alias("_h"))
-        )
-        delta = delta.unionByName(old).distinct()
-    bottom = grouped_topk(delta, keys, [F.col("_h") * -1], k, n_salt=n_salt, rank_col="_rk")
-    batch = bottom.groupBy(*keys).agg(F.sort_array(F.collect_list("_h")).alias("kmv"))
-    return table.merge(batch, keys, epoch_id=epoch_id)
+    pairs = changes.select(*keys, kmv_hash(F.col(value_col)).alias("_h")).distinct()
+    stored = table.lookup(pairs.select(*keys).distinct())
+    if stored is not None:
+        old = stored.select(*keys, F.explode("kmv").alias("_h"))
+        pairs = pairs.unionByName(old).distinct()
+    return table.merge(_kmv_build(pairs, keys, k, n_salt), keys, epoch_id=epoch_id)
 
 
 # ---------------------------------------------------------------------------
@@ -350,15 +346,26 @@ def qsample_sketch(
     """
     if k < 2:
         raise ValueError("quantile sample needs k >= 2")
-    from data_ingestion_resolution_platform_spark.operators.topk import grouped_topk
-
     keys = list(group_cols)
-    rows = df.select(
+    return _qsample_build(_qsample_rows(df, keys, value_col, id_col), keys, k, n_salt)
+
+
+def _qsample_rows(df: DataFrame, keys: list[str], value_col: str, id_col: str) -> DataFrame:
+    """``df`` as sample candidates: group cols + (``_h``, ``_i``, ``_v``)."""
+    return df.select(
         *keys,
         kmv_hash(F.col(id_col)).alias("_h"),
         F.col(id_col).cast("long").alias("_i"),
         F.col(value_col).cast("long").alias("_v"),
     )
+
+
+def _qsample_build(rows: DataFrame, keys: list[str], k: int, n_salt: int) -> DataFrame:
+    """Group cols + ``qs``: the ``k`` candidate ``rows`` smallest by
+    (h, i) as the sorted struct array — the one builder behind both
+    :func:`qsample_sketch` and :func:`maintain_qsample`."""
+    from data_ingestion_resolution_platform_spark.operators.topk import grouped_topk
+
     bottom = grouped_topk(
         rows, keys, [F.col("_h") * -1, F.col("_i") * -1], k, n_salt=n_salt, rank_col="_rk"
     )
@@ -415,11 +422,12 @@ def maintain_qsample(
     exactly-once.
 
     Inserts merge via union + re-truncate, reading only the touched
-    groups' state (broadcast semi-join — the table never shuffles):
-    cost O(|Δ| + touched·k), flat as the corpus grows. Retractions are
-    REFUSED, same contract as :func:`maintain_kmv`: a bottom-k sample
-    cannot re-admit the row the deleted one displaced, so the
-    maintained sketch would silently stop equaling the one-shot build —
+    groups' state (``table.lookup``, a broadcast semi-join — the table
+    never shuffles): cost O(|Δ| + touched·k), flat as the corpus grows.
+    Retractions are REFUSED, same contract as :func:`maintain_kmv`: a
+    bottom-k sample cannot re-admit the row the deleted one displaced,
+    so the maintained sketch would silently stop equaling the one-shot
+    build —
     invertible feeds belong to the exact multiplicity histogram
     (``ivm.maintain_distinct`` + ``ivm.quantiles_from_multiplicity``)
     or to the pipeline's ``maintain_quantiles`` sample, which stays
@@ -429,8 +437,6 @@ def maintain_qsample(
     """
     if epoch_id is not None and table.epoch_committed(epoch_id):
         return {"skipped": True, "epoch": str(epoch_id)}
-    from data_ingestion_resolution_platform_spark.operators.topk import grouped_topk
-
     keys = list(group_cols)
     _refuse_retractions(
         changes,
@@ -440,38 +446,16 @@ def maintain_qsample(
         "histogram) or CDCPipeline(maintain_quantiles=True) (a sample that "
         "stays exact under retractions)",
     )
-    delta = changes.select(
-        *keys,
-        kmv_hash(F.col(id_col)).alias("_h"),
-        F.col(id_col).cast("long").alias("_i"),
-        F.col(value_col).cast("long").alias("_v"),
-    )
-    if table.exists():
-        touched = delta.select(*keys).distinct()
-        old = (
-            table.read()
-            .join(F.broadcast(touched), on=keys, how="left_semi")
-            .select(*keys, F.explode("qs").alias("_s"))
-            .select(
-                *keys,
-                F.col("_s.h").alias("_h"),
-                F.col("_s.i").alias("_i"),
-                F.col("_s.v").alias("_v"),
-            )
+    rows = _qsample_rows(changes, keys, value_col, id_col)
+    stored = table.lookup(rows.select(*keys).distinct())
+    if stored is not None:
+        old = stored.select(*keys, F.explode("qs").alias("_s")).select(
+            *keys,
+            F.col("_s.h").alias("_h"),
+            F.col("_s.i").alias("_i"),
+            F.col("_s.v").alias("_v"),
         )
         # distinct on the full row: a redelivered insert that also sits
         # in the stored sketch must not count twice in the bottom-k
-        delta = delta.unionByName(old).distinct()
-    bottom = grouped_topk(
-        delta, keys, [F.col("_h") * -1, F.col("_i") * -1], k, n_salt=n_salt, rank_col="_rk"
-    )
-    batch = bottom.groupBy(*keys).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col("_h").alias("h"), F.col("_i").alias("i"), F.col("_v").alias("v")
-                )
-            )
-        ).alias("qs")
-    )
-    return table.merge(batch, keys, epoch_id=epoch_id)
+        rows = rows.unionByName(old).distinct()
+    return table.merge(_qsample_build(rows, keys, k, n_salt), keys, epoch_id=epoch_id)

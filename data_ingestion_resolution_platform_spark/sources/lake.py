@@ -40,6 +40,10 @@ One MERGE contract, the same on all three tables (``LakeTable``,
   before anything becomes visible; if it raises, the staged files
   are discarded, the table and its ledger stay as they were, and the
   error propagates.
+
+Every layout's ``lookup(keys)`` is the one read of "the stored rows for
+these keys" (``None`` before the first commit); the maintainers read
+their touched state through it.
 """
 
 from __future__ import annotations
@@ -52,6 +56,7 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 #: The change-data feed (CDF) contract every maintainer reads, defined
 #: once beside :func:`snapshot_diff`, which produces it: each change
@@ -76,6 +81,12 @@ def change_sign() -> Column:
     ]
 
 
+def signed(changes: DataFrame) -> DataFrame:
+    """``changes`` with its :func:`change_sign` as ``_sign``; rows of an
+    unknown change type are dropped."""
+    return changes.withColumn("_sign", change_sign()).filter(F.col("_sign").isNotNull())
+
+
 def is_positive() -> Column:
     """The rows that carry an after-image (insert / update_postimage)."""
     return F.col(CHANGE_COL).isin(INSERT, POSTIMAGE)
@@ -84,6 +95,24 @@ def is_positive() -> Column:
 def is_retraction() -> Column:
     """The rows that retract a before-image (delete / update_preimage)."""
     return F.col(CHANGE_COL).isin(DELETE, PREIMAGE)
+
+
+def _write_json(path: str, obj) -> None:
+    """Replace ``path`` with ``obj`` as JSON atomically: a reader sees
+    the old file or the new one, never a partial write."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
+def _read_json(path: str, default):
+    """``path``'s JSON, or ``default`` when the file does not exist."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return default
 
 
 def _dir_stats(path: str) -> tuple[int, int]:
@@ -216,11 +245,10 @@ class _EpochLedger:
         return os.path.exists(os.path.join(self.dir, f"{epoch_id}.json"))
 
     def record(self, epoch_id: str | int, stats: dict) -> None:
-        path = os.path.join(self.dir, f"{epoch_id}.json")
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"epoch": str(epoch_id), "ts": time.time(), **stats}, f)
-        os.replace(tmp, path)
+        _write_json(
+            os.path.join(self.dir, f"{epoch_id}.json"),
+            {"epoch": str(epoch_id), "ts": time.time(), **stats},
+        )
 
     def all(self) -> list[str]:
         return sorted(
@@ -374,9 +402,22 @@ class _MergeTable:
     layout's three steps: ``_stage(batch, keys, epoch_id)`` writes the
     epoch where no reader sees it and returns a token, ``_discard``
     removes those files, ``_commit`` makes them visible, records the
-    ledger and returns the MERGE stats."""
+    ledger and returns the MERGE stats. Each layout also provides
+    ``exists()`` and ``read()``, on which :meth:`lookup` is built."""
 
     ledger: _EpochLedger
+
+    def lookup(self, keys: DataFrame) -> DataFrame | None:
+        """The stored rows whose ``keys.columns`` match a row of the
+        small ``keys`` frame, or ``None`` before the first commit.
+
+        The one key-probe of a stored table: the current snapshot
+        LEFT SEMI JOIN the broadcast ``keys``, so the stored side never
+        shuffles. ``keys`` may name any subset of the columns (a group
+        prefix of a composite key probes whole groups)."""
+        if not self.exists():
+            return None
+        return self.read().join(F.broadcast(keys), on=keys.columns, how="left_semi")
 
     def epoch_committed(self, epoch_id: str | int) -> bool:
         return self.ledger.committed(epoch_id)
@@ -487,11 +528,7 @@ class LakeTable(_MergeTable):
         return os.path.join(self.root, "_APPENDS")
 
     def _appends_manifest(self) -> dict:
-        try:
-            with open(self._appends_manifest_path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"gen": 0, "folded": []}
+        return _read_json(self._appends_manifest_path, {"gen": 0, "folded": []})
 
     def _compact_gen_dir(self, gen: int) -> str:
         return os.path.join(self.root, "_compacted", f"g{gen}")
@@ -577,9 +614,7 @@ class LakeTable(_MergeTable):
             # basePath), and compacted files carry e as a data column —
             # pin the scan schema to data columns so both file kinds
             # project identically
-            from pyspark.sql.types import StructType
-
-            schema = StructType([f for f in self.read().schema.fields if f.name != "e"])
+            schema = T.StructType([f for f in self.read().schema.fields if f.name != "e"])
         df, self.last_scan_report = pruned_scan(
             self.spark, self.root, dirs, predicates, schema=schema
         )
@@ -725,10 +760,7 @@ class LakeTable(_MergeTable):
         snapshot.coalesce(target_files).write.mode("overwrite").parquet(tmp)
         os.rename(tmp, dest)
         folded = sorted(set(m["folded"]) | {os.path.basename(d) for d in dirs})
-        tmp_m = self._appends_manifest_path + ".tmp"
-        with open(tmp_m, "w") as f:
-            json.dump({"gen": gen, "folded": folded}, f)
-        os.replace(tmp_m, self._appends_manifest_path)
+        _write_json(self._appends_manifest_path, {"gen": gen, "folded": folded})
         # visible flip done — everything below is best-effort cleanup
         for d in dirs:
             shutil.rmtree(d, ignore_errors=True)
@@ -892,17 +924,7 @@ class MorLakeTable(_MergeTable):
         return os.path.join(self.root, "_MANIFEST")
 
     def _read_manifest(self) -> dict:
-        try:
-            with open(self._manifest_path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"base_v": 0, "deltas": [], "next_seq": 1}
-
-    def _write_manifest(self, m: dict) -> None:
-        tmp = self._manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, self._manifest_path)
+        return _read_json(self._manifest_path, {"base_v": 0, "deltas": [], "next_seq": 1})
 
     def _base_dir(self, v: int) -> str:
         return os.path.join(self.root, "base", f"v={v}")
@@ -940,7 +962,7 @@ class MorLakeTable(_MergeTable):
         m["next_seq"] = seq + 1
         dbytes, _ = _dir_stats(self._delta_dir(seq))
         m.setdefault("delta_bytes", {})[str(seq)] = dbytes
-        self._write_manifest(m)
+        _write_json(self._manifest_path, m)
         stats = {"mode": "mor_merge", "delta_seq": seq, "n_deltas": len(m["deltas"])}
         if epoch_id is not None:
             self.ledger.record(epoch_id, stats)
@@ -1056,7 +1078,7 @@ class MorLakeTable(_MergeTable):
             "base_bytes": _dir_stats(self._base_dir(v))[0],
             "delta_bytes": {},
         }
-        self._write_manifest(new_m)
+        _write_json(self._manifest_path, new_m)
         for s in retired:
             shutil.rmtree(self._delta_dir(s), ignore_errors=True)
         if m["base_v"] > 0:
@@ -1144,45 +1166,32 @@ class PartitionedLakeTable(_MergeTable):
         return os.path.join(self.root, "_SCHEMA")
 
     def _read_schema(self):
-        try:
-            with open(self._schema_path) as f:
-                from pyspark.sql import types as T
-
-                return T.StructType.fromJson(json.load(f))
-        except FileNotFoundError:
-            return None
+        raw = _read_json(self._schema_path, None)
+        return None if raw is None else T.StructType.fromJson(raw)
 
     def _write_schema(self, schema) -> None:
         # union with the saved schema: an epoch touching only fresh
         # buckets must not narrow the table schema for untouched ones
         saved = self._read_schema()
         if saved is not None:
-            from pyspark.sql import types as T
-
             names = {f.name for f in schema.fields}
             schema = T.StructType(
                 list(schema.fields) + [f for f in saved.fields if f.name not in names]
             )
-        tmp = self._schema_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(schema.jsonValue(), f)
-        os.replace(tmp, self._schema_path)
+        _write_json(self._schema_path, schema.jsonValue())
 
     def _read_dir(self) -> dict[tuple[int, int], int]:
         """{(bucket, level): version}; version 0 = live but empty."""
-        try:
-            with open(self._dir_path) as f:
-                raw = json.load(f)
-            return {(b, lv): v for b, lv, v in raw["buckets"]}
-        except FileNotFoundError:
+        raw = _read_json(self._dir_path, None)
+        if raw is None:
             lv = self.initial_level
             return {(b, lv): 0 for b in range(1 << lv)}
+        return {(b, lv): v for b, lv, v in raw["buckets"]}
 
     def _write_dir(self, d: dict[tuple[int, int], int]) -> None:
-        tmp = self._dir_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"buckets": sorted([b, lv, v] for (b, lv), v in d.items())}, f)
-        os.replace(tmp, self._dir_path)
+        _write_json(
+            self._dir_path, {"buckets": sorted([b, lv, v] for (b, lv), v in d.items())}
+        )
 
     def _bucket_dir(self, b: int, level: int, v: int) -> str:
         return os.path.join(self.root, f"b={b}.{level}", f"v={v}")

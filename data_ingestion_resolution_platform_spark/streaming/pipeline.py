@@ -114,12 +114,12 @@ class EpochChange:
     The CDF is synthesized from what the target MERGE is about to do:
     ``pre`` holds the current target rows for the batch keys (every one
     is replaced or deleted → sign -1), ``post`` the surviving winners
-    (sign +1). The target is touched by ONE broadcast semi-join on the
-    (small) winner key set — never a target shuffle — and ``pre`` is
-    persisted, so N views cost one probe. That probe prunes no bucket,
-    though: the semi-join reads every live bucket's files, so each
-    view-enabled epoch still reads the whole target (a key-probe
-    ``lookup`` on the MERGE contract is ROADMAP direction 3).
+    (sign +1). The target is probed ONCE, through its ``lookup`` on the
+    (small) winner key set — a broadcast semi-join, never a target
+    shuffle — and ``pre`` is persisted, so N views cost one probe. That
+    probe prunes no bucket yet: ``lookup`` reads every live bucket's
+    files, so each view-enabled epoch still reads the whole target
+    (bucket pruning inside ``lookup`` is ROADMAP direction 3).
     ``base_after`` is the LOGICAL post-epoch state (target minus batch
     keys, plus surviving winners), left lazy: the top-k back-fill only
     evaluates it for the groups a retraction dirtied. ``batch`` is the
@@ -140,19 +140,16 @@ class EpochChange:
         keys = list(keys)
         self.batch = batch
         self.post = winners.filter(F.col("op") != "D")
-        if target.exists():
-            batch_keys = F.broadcast(winners.select(*keys))
-            self.pre = (
-                target.read().join(batch_keys, on=keys, how="left_semi").persist()
-            )
+        self.pre = target.lookup(winners.select(*keys))
+        if self.pre is None:
+            self.base_after = self.post
+        else:
+            self.pre = self.pre.persist()
             self.base_after = (
                 target.read()
-                .join(batch_keys, on=keys, how="left_anti")
+                .join(F.broadcast(winners.select(*keys)), on=keys, how="left_anti")
                 .unionByName(self.post, allowMissingColumns=True)
             )
-        else:
-            self.pre = None
-            self.base_after = self.post
 
     def changes(self, proj) -> DataFrame:
         """The signed pre/post mini-CDF projected onto ``proj`` (column
@@ -610,26 +607,23 @@ class CDCPipeline:
         """Advance the maintained ``target ⋈ dim`` view by this feed
         epoch's R-side delta (ΔS is empty here; dim changes arrive via
         :meth:`apply_dim_changes`). ``maintain_join`` broadcasts the
-        delta against the dim, so epoch cost is O(|batch|)."""
+        delta against the dim, so epoch cost is O(|batch|). With ΔS
+        empty, R₀ ⋈ ΔS is empty too, so R₀ is passed empty, for its
+        columns only: the view takes no target snapshot of its own."""
         from data_ingestion_resolution_platform_spark.operators.ivm import maintain_join
 
         if not self.dim.exists():
             raise ValueError(
                 "maintain_view=True but the dim table is unseeded — call seed_dim() first"
             )
-        cols = [*self.keys, *self.view_attrs]
-        r_changes = change.changes(cols)
-        if change.pre is not None:
-            r_before = self.target.read().select(*cols)
-        else:
-            r_before = r_changes.drop("change_type").limit(0)
+        r_changes = change.changes([*self.keys, *self.view_attrs])
         s_before = self.dim.read()
         s_changes = s_before.limit(0).withColumn(CHANGE_COL, F.lit(INSERT))
         maintain_join(
             self.view,
             r_changes,
             s_changes,
-            r_before=r_before,
+            r_before=r_changes.drop(CHANGE_COL).limit(0),
             s_before=s_before,
             join_keys=[self.view_join_key],
             out_keys=list(self.keys),

@@ -7,9 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from data_ingestion_resolution_platform_spark.operators.ivm import (
-    delta_aggregate,
     maintain_aggregate,
-    merge_delta,
 )
 from data_ingestion_resolution_platform_spark.sources.lake import (
     LakeTable,
@@ -70,33 +68,19 @@ def test_preimage_changelog_shape(spark):
     assert pre[("r1", "c.md")] == "md" and post[("r1", "c.md")] == "py"
 
 
-def test_merge_delta_equals_recompute(spark):
-    before, after = _snapshots(spark)
-    changes = snapshot_diff(before, after, ["repo", "path"], include_preimages=True)
-    delta = delta_aggregate(
-        changes, ["repo", "lang"], {"total_bytes": "length(content)"}
-    )
-    maintained = merge_delta(_direct_agg(before), delta, ["repo", "lang"])
-    assert _as_dict(maintained) == _as_dict(_direct_agg(after))
-    # the vanished group (r2, go) must be gone, not present with 0
-    assert ("r2", "go") not in _as_dict(maintained)
-
-
-def test_merge_delta_bootstrap_from_none(spark):
-    before, after = _snapshots(spark)
-    # bootstrapping: the "changes" are all inserts (diff vs empty)
-    empty = before.limit(0)
-    changes = snapshot_diff(empty, after, ["repo", "path"], include_preimages=True)
-    delta = delta_aggregate(
-        changes, ["repo", "lang"], {"total_bytes": "length(content)"}
-    )
-    assert _as_dict(merge_delta(None, delta, ["repo", "lang"])) == _as_dict(
-        _direct_agg(after)
-    )
-
-
 def test_maintain_aggregate_lake_roundtrip(spark, tmp_path):
     before, after = _snapshots(spark)
+    # an epoch that bootstraps an empty table: the changes are all
+    # inserts (diff vs empty)
+    boot = LakeTable(spark, str(tmp_path / "boot"))
+    maintain_aggregate(
+        boot,
+        snapshot_diff(before.limit(0), after, ["repo", "path"], include_preimages=True),
+        ["repo", "lang"],
+        {"total_bytes": "length(content)"},
+        epoch_id="e1",
+    )
+    assert _as_dict(boot.read()) == _as_dict(_direct_agg(after))
     t = LakeTable(spark, str(tmp_path / "agg"))
     t.merge(_direct_agg(before), ["repo", "lang"], epoch_id="seed")
     changes = snapshot_diff(before, after, ["repo", "path"], include_preimages=True)
@@ -108,6 +92,8 @@ def test_maintain_aggregate_lake_roundtrip(spark, tmp_path):
         epoch_id="e2",
     )
     assert _as_dict(t.read()) == _as_dict(_direct_agg(after))
+    # the vanished group (r2, go) is deleted, not kept at 0
+    assert ("r2", "go") not in _as_dict(t.read())
     # exactly-once: re-delivering the same epoch must not double-apply
     out = maintain_aggregate(
         t,
