@@ -436,32 +436,6 @@ def apply_patches(
     return g.filter(alive).select(*out_cols)
 
 
-def open_conflicts(
-    conflict_log: DataFrame,
-    resolutions: DataFrame | None,
-    keys: Sequence[str],
-    epoch_col: str = "epoch",
-) -> DataFrame:
-    """The reference's don't-reopen-resolved rule (`worker.py:108-110,
-    124-127`) over an append-only conflict log.
-
-    The log holds one row per (epoch, key) re-detection; the *open* set
-    is the latest detection per key minus keys present in
-    ``resolutions``. A re-delivered conflict therefore refreshes its
-    candidate payload (latest row wins) without reviving a resolved
-    one — the MERGE-condition nuance of M1 expressed as
-    latest-per-key + anti-join.
-    """
-    latest = resolve_latest(conflict_log, keys, epoch_col)
-    if resolutions is None:
-        return latest
-    return latest.join(
-        F.broadcast(resolutions.select(*keys).distinct()),
-        on=list(keys),
-        how="left_anti",
-    )
-
-
 def merge_conflict_state(
     table,
     detected: DataFrame,
@@ -475,7 +449,7 @@ def merge_conflict_state(
     (`worker.py:108-110,124-127`, M1-M3) applied as ONE MERGE per epoch,
     so "what is open right now" is a plain filtered read of current
     state instead of a latest-per-key scan over an ever-growing append
-    log (:func:`open_conflicts`, kept as the audit-trail variant).
+    log.
 
     Per epoch:
     - detection of an untracked key      ⇒ INSERT as ``OPEN``

@@ -32,8 +32,6 @@ only touched buckets; the read side is a scan + broadcast-hash join
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 

@@ -200,45 +200,3 @@ def _collapsed_self_pairs(
             "edit_dist",
         )
     )
-
-
-def fuzzy_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_text: str,
-    right_text: str,
-    block_cols: Sequence[str],
-    max_dist: int,
-    length_bucket_width: int | None = None,
-) -> DataFrame:
-    """Two-table blocked fuzzy join: every (left, right) pair sharing
-    the block key with edit distance ≤ ``max_dist``, plus the distance
-    as ``edit_dist``. Caller projects/aliases columns; both inputs must
-    carry ``block_cols`` and disjoint non-block column names — enforced
-    up front, because a silent duplicate column would make every
-    downstream reference ambiguous (and ``edit_dist`` is reserved)."""
-    overlap = (set(left.columns) & set(right.columns)) - set(block_cols)
-    if overlap:
-        raise ValueError(
-            f"fuzzy_join requires disjoint non-block column names; "
-            f"colliding: {sorted(overlap)}"
-        )
-    if "edit_dist" in (*left.columns, *right.columns):
-        raise ValueError("'edit_dist' is reserved for the output distance")
-    join_cols = list(block_cols)
-    if length_bucket_width is not None:
-        left, right = _banded(
-            left, right, left_text, right_text, length_bucket_width, max_dist
-        )
-        join_cols.append(_LB)
-    dist = F.levenshtein(F.col(left_text), F.col(right_text))
-    out = (
-        left.join(right, on=join_cols)
-        .filter(
-            F.abs(F.length(F.col(left_text)) - F.length(F.col(right_text)))
-            <= F.lit(max_dist)
-        )
-        .filter(dist <= F.lit(max_dist))
-        .withColumn("edit_dist", dist)
-    )
-    return out.drop(_LB) if length_bucket_width is not None else out

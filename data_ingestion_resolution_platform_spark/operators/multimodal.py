@@ -228,36 +228,3 @@ def decode_media(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
             yield out
 
     return src.mapInPandas(extract, MEDIA_SCHEMA)
-
-
-def resize_stub(df: DataFrame, payload_col: str, id_col: str, width: int, height: int) -> DataFrame:
-    """Resize plumbing: same mapInPandas shape, stubbed transform.
-
-    Raises ``NotImplementedError`` inside the stub only if a real
-    decode is requested (``strict=True`` reserved for when codecs are
-    installed); default returns a deterministic truncated payload so
-    the pipeline shape is exercisable end-to-end.
-    """
-    target = width * height // 8 + 1
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("width", T.IntegerType(), False),
-            T.StructField("height", T.IntegerType(), False),
-        ]
-    )
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("payload"))
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["payload"].map(lambda b: bytes(b)[:target]),
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return src.mapInPandas(resize, out_schema)

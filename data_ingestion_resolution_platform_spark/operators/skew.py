@@ -63,16 +63,6 @@ def salted_latest(
     return final.select(*[F.col(f"__p.{c}").alias(c) for c in payload_cols])
 
 
-def salted_count(
-    df: DataFrame, keys: Sequence[str], n_salt: int = 16
-) -> DataFrame:
-    """Two-phase count per key under explicit salt (sum of partial
-    counts) — template for any algebraic aggregate."""
-    salted = with_salt(df, n_salt)
-    partial = salted.groupBy(*keys, SALT_COL).agg(F.count(F.lit(1)).alias("__c"))
-    return partial.groupBy(*keys).agg(F.sum("__c").alias("n_rows"))
-
-
 def salted_join(
     big: DataFrame,
     small: DataFrame,
@@ -108,12 +98,3 @@ def salted_join(
     )
     joined = big_salted.join(replicas, on=[*key_list, SALT_COL], how=how)
     return joined.drop(SALT_COL)
-
-
-def top_hot_keys(df: DataFrame, keys: Sequence[str], k: int = 20) -> DataFrame:
-    """Diagnostic: the k heaviest keys (drives salting decisions)."""
-    return (
-        salted_count(df, keys)
-        .orderBy(F.col("n_rows").desc(), *[F.col(c) for c in keys])
-        .limit(k)
-    )

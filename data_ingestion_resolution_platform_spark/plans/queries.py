@@ -1497,8 +1497,9 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     tumbling-window count aggregation, availableNow drain — whose final
     state must equal the batch SQL oracle exactly. Watermark delay
     exceeds the data's time span so no window is dropped regardless of
-    file arrival order (late-data *dropping* is pytest-covered where
-    arrival order is controlled; the driver gate needs determinism)."""
+    file arrival order. Late-data dropping under a tight watermark is
+    Spark's state-store contract and is not gated here (the driver gate
+    needs determinism)."""
     stream = _file_stream(spark, sf_dir, "tumb")
     # watermarks require TIMESTAMP (not NTZ); session TZ is pinned UTC
     # (session.py) so the round-trip cast is value-preserving
@@ -1540,9 +1541,9 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     over batches and must coalesce in the state store, not in a window
     function). availableNow drain, complete mode; watermark delay
     exceeds the data span so no session is evicted regardless of file
-    arrival order (eviction under controlled arrival is pytest-covered
-    by the stream-stream join suite). Final state must equal the batch
-    gaps-and-islands oracle exactly — the same SQL the batch
+    arrival order; eviction under a tight watermark is Spark's
+    state-store contract and is not gated here. Final state must equal
+    the batch gaps-and-islands oracle exactly — the same SQL the batch
     ``events_session_window`` query is gated on."""
     stream = _file_stream(spark, sf_dir, "sess")
     stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
@@ -1606,9 +1607,10 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     its join window (state ∝ rate × (delay + range), never the stream
     length). Here the delay exceeds the data span so nothing is
     dropped and the availableNow drain equals the batch join exactly —
-    which is the oracle. Eviction-under-tight-watermark is pytest
-    territory (arrival order is controlled there; the gate needs
-    determinism)."""
+    which is the oracle. Eviction under a tight watermark is Spark's
+    state-store contract and is not gated here (the gate needs
+    determinism; ``tests/test_stream_stream.py`` drives it on an inline
+    join under controlled arrival order)."""
     purchases = (
         _file_stream(spark, sf_dir, "ssj_p")
         .filter(F.col("event_type") == "purchase")

@@ -1,12 +1,8 @@
-"""As-of join + sessionization/tumbling operators, and the stateful
-streaming dedup (cross-batch keyed state)."""
+"""As-of join + sessionization/tumbling operators."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from data_ingestion_resolution_platform_spark.operators.asof import asof_join
@@ -168,267 +164,3 @@ def test_tumbling(spark):
         ("2024-01-01 11:00:00", "a"): 1,
         ("2024-01-01 10:00:00", "b"): 1,
     }
-
-
-def test_running_dedup_stream(spark, tmp_path):
-    """Cross-batch keyed state: a key emitted in batch 1 is suppressed
-    in batch 2 (state survives via the checkpoint across restarts)."""
-    from data_ingestion_resolution_platform_spark.streaming.stateful import (
-        running_dedup_stream,
-    )
-
-    feed = str(tmp_path / "feed")
-    ckpt = str(tmp_path / "ckpt")
-    sink = str(tmp_path / "sink")
-    os.makedirs(feed, exist_ok=True)
-    schema = "k string, v long"
-
-    def run_once():
-        stream = spark.readStream.schema(schema).parquet(feed)
-        dedup = running_dedup_stream(stream, ["k"])
-        q = (
-            dedup.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start()
-        )
-        q.awaitTermination(120)
-
-    spark.createDataFrame([("a", 1), ("b", 2)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(feed)
-    run_once()
-    spark.createDataFrame([("a", 99), ("c", 3)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(feed)
-    run_once()
-
-    out = spark.read.parquet(sink)
-    got = {r.k: r.v for r in out.collect()}
-    # 'a' kept from batch 1 only; duplicate in batch 2 suppressed
-    assert got == {"a": 1, "b": 2, "c": 3}
-
-
-def test_windowed_counts_stream_watermark(spark, tmp_path):
-    """Watermarked tumbling windows over a file stream finalize in
-    append mode once the watermark passes the window end."""
-    from data_ingestion_resolution_platform_spark.streaming.stateful import (
-        windowed_counts_stream,
-    )
-
-    feed = str(tmp_path / "wfeed")
-    ckpt = str(tmp_path / "wckpt")
-    sink = str(tmp_path / "wsink")
-    os.makedirs(feed, exist_ok=True)
-    schema = "ts timestamp, k string"
-
-    def emit(rows):
-        spark.createDataFrame(rows, "ts string, k string").select(
-            F.col("ts").cast("timestamp").alias("ts"), "k"
-        ).coalesce(1).write.mode("append").parquet(feed)
-
-    def run_once():
-        stream = spark.readStream.schema(schema).parquet(feed)
-        agg = windowed_counts_stream(
-            stream, "ts", window="10 minutes", watermark="5 minutes", group_cols=["k"]
-        )
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start()
-        )
-        q.awaitTermination(120)
-
-    emit([("2024-01-01 10:01:00", "a"), ("2024-01-01 10:02:00", "a")])
-    run_once()
-    # advance the watermark far past the first window, adding one late
-    # (dropped) row and one fresh row
-    emit([("2024-01-01 10:03:00", "a"),          # late but within no finalized window yet
-          ("2024-01-01 11:00:00", "a")])
-    run_once()
-    emit([("2024-01-01 12:00:00", "a")])          # pushes watermark past 11:10
-    run_once()
-    out = spark.read.parquet(sink)
-    got = {str(r.w_start): r.n_events for r in out.filter(F.col("k") == "a").collect()}
-    # the 10:00 window finalized with ALL three rows counted (the third
-    # arrived before the watermark passed 10:10)
-    assert got.get("2024-01-01 10:00:00") == 3
-    assert got.get("2024-01-01 11:00:00") == 1
-
-
-def test_session_counts_stream(spark, tmp_path):
-    """Streaming session windows: sessions merge across micro-batches in
-    the state store and finalize once the watermark passes last+gap."""
-    from data_ingestion_resolution_platform_spark.streaming.stateful import (
-        session_counts_stream,
-    )
-
-    feed = str(tmp_path / "sfeed")
-    ckpt = str(tmp_path / "sckpt")
-    sink = str(tmp_path / "ssink")
-    os.makedirs(feed, exist_ok=True)
-    schema = "ts timestamp, k string"
-
-    def emit(rows):
-        spark.createDataFrame(rows, "ts string, k string").select(
-            F.col("ts").cast("timestamp").alias("ts"), "k"
-        ).coalesce(1).write.mode("append").parquet(feed)
-
-    def run_once():
-        stream = spark.readStream.schema(schema).parquet(feed)
-        agg = session_counts_stream(
-            stream, "ts", ["k"], gap="10 minutes", watermark="5 minutes"
-        )
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # batch 1: two events 6 min apart — ONE session (gap 10m)
-    emit([("2024-01-01 10:00:00", "a"), ("2024-01-01 10:06:00", "a")])
-    run_once()
-    # batch 2: extends the same session (within gap of 10:06)
-    emit([("2024-01-01 10:12:00", "a")])
-    run_once()
-    # batch 3: far-future event finalizes the first session
-    emit([("2024-01-01 13:00:00", "a")])
-    run_once()
-    emit([("2024-01-01 15:00:00", "a")])          # finalize the 13:00 session
-    run_once()
-    out = spark.read.parquet(sink)
-    got = {
-        (str(r.w_start), str(r.w_end)): r.n_events
-        for r in out.filter(F.col("k") == "a").collect()
-    }
-    # one merged 3-event session [10:00, 10:22), one singleton at 13:00
-    assert got.get(("2024-01-01 10:00:00", "2024-01-01 10:22:00")) == 3
-    assert got.get(("2024-01-01 13:00:00", "2024-01-01 13:10:00")) == 1
-
-
-def test_interval_join_streams_matches_batch(spark, tmp_path):
-    """Stream-stream interval join equals the batch join over the same
-    data, including matches that span micro-batch boundaries."""
-    from data_ingestion_resolution_platform_spark.streaming.stateful import (
-        interval_join_streams,
-    )
-
-    lfeed = str(tmp_path / "lfeed")
-    rfeed = str(tmp_path / "rfeed")
-    ckpt = str(tmp_path / "jckpt")
-    sink = str(tmp_path / "jsink")
-    os.makedirs(lfeed, exist_ok=True)
-    os.makedirs(rfeed, exist_ok=True)
-
-    def emit(path, rows, schema):
-        cols = [s.strip().split()[0] for s in schema.split(",")]
-        spark.createDataFrame(rows, schema).select(
-            F.col("ts").cast("timestamp").alias("ts"), *cols[1:]
-        ).coalesce(1).write.mode("append").parquet(path)
-
-    def drain():
-        l = spark.readStream.schema("ts timestamp, k string, amount double").parquet(lfeed)
-        r = spark.readStream.schema("ts timestamp, k string, page string").parquet(rfeed)
-        j = interval_join_streams(
-            l, r, ["k"], "ts", "ts", lookback="10 minutes", watermark="20 minutes"
-        )
-        q = (
-            j.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start()
-        )
-        q.awaitTermination(180)
-
-    lschema = "ts string, k string, amount double"
-    rschema = "ts string, k string, page string"
-    # micro-batch 1: clicks before any purchase
-    emit(rfeed, [("2024-01-01 10:00:00", "a", "home"),
-                 ("2024-01-01 10:04:00", "a", "item"),
-                 ("2024-01-01 09:00:00", "a", "old")], rschema)
-    drain()
-    # micro-batch 2: the purchase arrives later — must still join the
-    # batch-1 clicks buffered in state (within 10 min lookback)
-    emit(lfeed, [("2024-01-01 10:08:00", "a", 9.99),
-                 ("2024-01-01 10:30:00", "b", 1.00)], lschema)
-    emit(rfeed, [("2024-01-01 10:25:00", "b", "promo")], rschema)
-    drain()
-
-    got = {(str(r.ts), r.k, r.r_page) for r in spark.read.parquet(sink).collect()}
-    # purchase a@10:08 joins clicks at 10:00 and 10:04 (not 09:00 — outside
-    # lookback); purchase b@10:30 joins promo@10:25
-    assert got == {
-        ("2024-01-01 10:08:00", "a", "home"),
-        ("2024-01-01 10:08:00", "a", "item"),
-        ("2024-01-01 10:30:00", "b", "promo"),
-    }
-
-
-def test_interval_join_streams_left_outer_emits_unmatched(spark, tmp_path):
-    """Left-outer variant: a purchase with no in-window click is emitted
-    with NULL right columns once the watermark closes its window."""
-    from data_ingestion_resolution_platform_spark.streaming.stateful import (
-        interval_join_streams,
-    )
-
-    lfeed = str(tmp_path / "lfeed")
-    rfeed = str(tmp_path / "rfeed")
-    ckpt = str(tmp_path / "jckpt")
-    sink = str(tmp_path / "jsink")
-    os.makedirs(lfeed, exist_ok=True)
-    os.makedirs(rfeed, exist_ok=True)
-
-    def emit(path, rows, schema):
-        cols = [s.strip().split()[0] for s in schema.split(",")]
-        spark.createDataFrame(rows, schema).select(
-            F.col("ts").cast("timestamp").alias("ts"), *cols[1:]
-        ).coalesce(1).write.mode("append").parquet(path)
-
-    def drain():
-        l = spark.readStream.schema("ts timestamp, k string, amount double").parquet(lfeed)
-        r = spark.readStream.schema("ts timestamp, k string, page string").parquet(rfeed)
-        j = interval_join_streams(
-            l, r, ["k"], "ts", "ts",
-            lookback="10 minutes", watermark="10 minutes", how="left_outer",
-        )
-        q = (
-            j.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start()
-        )
-        q.awaitTermination(180)
-
-    lschema = "ts string, k string, amount double"
-    rschema = "ts string, k string, page string"
-    emit(lfeed, [("2024-01-01 10:00:00", "a", 5.0),     # will match
-                 ("2024-01-01 10:00:00", "b", 7.0)], lschema)  # never matches
-    emit(rfeed, [("2024-01-01 09:55:00", "a", "home")], rschema)
-    drain()
-    # advance both watermarks far past 10:00 + lookback so the unmatched
-    # left row finalizes
-    emit(lfeed, [("2024-01-01 12:00:00", "c", 1.0)], lschema)
-    emit(rfeed, [("2024-01-01 12:00:00", "c", "late")], rschema)
-    drain()
-    drain()  # extra pass lets the outer state flush after watermark moves
-
-    rows = spark.read.parquet(sink).collect()
-    by_k = {}
-    for r in rows:
-        by_k.setdefault(r.k, set()).add(r.r_page)
-    assert by_k["a"] == {"home"}          # matched normally
-    assert by_k["b"] == {None}            # emitted with NULL right side
-

@@ -12,7 +12,7 @@ from data_ingestion_resolution_platform_spark.operators.dedup import (
     simhash_near_dups,
 )
 from data_ingestion_resolution_platform_spark.operators.similarity import brute_force_topk, ivf_topk
-from data_ingestion_resolution_platform_spark.operators.skew import salted_latest, top_hot_keys
+from data_ingestion_resolution_platform_spark.operators.skew import salted_latest
 from data_ingestion_resolution_platform_spark.operators.cdc import resolve_latest
 from data_ingestion_resolution_platform_spark.sources.feed import synth_change_feed
 
@@ -82,10 +82,3 @@ def test_salted_latest_matches_unsalted(spark):
     a = sorted(map(tuple, salted_latest(feed, ["repo", "path"], "lsn", n_salt=8).collect()))
     b = sorted(map(tuple, resolve_latest(feed, ["repo", "path"], "lsn").collect()))
     assert a == b
-
-
-def test_top_hot_keys(spark):
-    feed = synth_change_feed(spark, 2000, n_repos=5, skew=4.0, seed=13)
-    hot = top_hot_keys(feed, ["repo"], k=3).collect()
-    assert len(hot) == 3
-    assert hot[0]["n_rows"] >= hot[-1]["n_rows"]

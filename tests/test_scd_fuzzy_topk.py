@@ -6,10 +6,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from data_ingestion_resolution_platform_spark.operators.fuzzy import (
-    fuzzy_join,
-    fuzzy_self_pairs,
-)
+from data_ingestion_resolution_platform_spark.operators.fuzzy import fuzzy_self_pairs
 from data_ingestion_resolution_platform_spark.operators.scd import (
     scd2_as_of,
     scd2_history,
@@ -163,13 +160,6 @@ def test_fuzzy_self_pairs_matches_unblocked_within_blocks(spark):
     assert got == {(1, 2, 1), (1, 3, 2), (2, 3, 1)}
 
 
-def test_fuzzy_join_two_tables(spark):
-    left = spark.createDataFrame([(1, "alpha", 0), (2, "omega", 0)], ["lid", "lname", "blk"])
-    right = spark.createDataFrame([(7, "alphas", 0), (8, "delta", 0)], ["rid", "rname", "blk"])
-    got = fuzzy_join(left, right, "lname", "rname", ["blk"], max_dist=1).collect()
-    assert [(r["lid"], r["rid"], r["edit_dist"]) for r in got] == [(1, 7, 1)]
-
-
 def test_fuzzy_banded_exact_recall_on_part(spark, sf_dir):
     """Length-bucket banding must be result-invisible: banded pairs ==
     plain-blocked pairs on the real part table (the registered query's
@@ -248,13 +238,6 @@ def test_fuzzy_banded_rejects_narrow_width(spark):
         fuzzy_self_pairs(
             df, "id", "name", ["blk"], max_dist=4, length_bucket_width=3
         ).collect()
-
-
-def test_fuzzy_join_rejects_colliding_columns(spark):
-    left = spark.createDataFrame([(1, "a", 0)], ["name", "extra", "blk"])
-    right = spark.createDataFrame([(2, "b", 0)], ["rname", "extra", "blk"])
-    with pytest.raises(ValueError, match="colliding.*extra"):
-        fuzzy_join(left, right, "name", "rname", ["blk"], max_dist=1)
 
 
 # ---------------------------------------------------------------- topk ----

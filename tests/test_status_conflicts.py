@@ -1,11 +1,10 @@
-"""Epoch status state machine (M7/A7) + don't-reopen-resolved guard."""
+"""Epoch status state machine (M7/A7)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from data_ingestion_resolution_platform_spark.operators.cdc import open_conflicts
 from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
 
 
@@ -81,23 +80,3 @@ def test_failed_epoch_recovers_on_retry(spark, tmp_path, monkeypatch):
     assert st["status"] == "COMPLETED"
     hist = {r.epoch: r.status for r in status_history(pipe.lineage.read()).collect()}
     assert hist == {0: "COMPLETED"}
-
-
-def test_open_conflicts_excludes_resolved_keeps_latest(spark):
-    log = spark.createDataFrame(
-        [
-            ("r1", "a.py", 0, 2),
-            ("r1", "a.py", 1, 3),   # re-detected with refreshed payload
-            ("r2", "b.py", 0, 2),
-        ],
-        "repo string, path string, epoch long, n_signatures long",
-    )
-    resolutions = spark.createDataFrame(
-        [("r2", "b.py")], "repo string, path string"
-    )
-    out = open_conflicts(log, resolutions, ["repo", "path"])
-    rows = out.collect()
-    assert len(rows) == 1
-    r = rows[0]
-    # resolved r2 stays closed; r1 shows the LATEST detection (epoch 1)
-    assert (r.repo, r.path, r.epoch, r.n_signatures) == ("r1", "a.py", 1, 3)

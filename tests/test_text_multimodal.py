@@ -11,10 +11,7 @@ from data_ingestion_resolution_platform_spark.functions.text import (
     quality_score,
     token_count,
 )
-from data_ingestion_resolution_platform_spark.operators.multimodal import (
-    multimodal_features,
-    resize_stub,
-)
+from data_ingestion_resolution_platform_spark.operators.multimodal import multimodal_features
 
 
 def test_detect_language(spark):
@@ -75,13 +72,6 @@ def test_multimodal_features_contract(spark):
     assert out[1]["fake_width"] == 16 + 21 % 64
     assert out[2]["n_bytes"] == 0
     assert out[2]["header_hex"] is None
-
-
-def test_resize_stub_shapes(spark):
-    df = spark.createDataFrame([(1, bytearray(b"x" * 1000))], "doc_id long, payload binary")
-    row = resize_stub(df, "payload", "doc_id", 32, 32).first()
-    assert row["width"] == 32 and row["height"] == 32
-    assert len(row["payload"]) == 32 * 32 // 8 + 1
 
 
 def test_decode_media_ppm_wav_roundtrip(spark):
