@@ -108,21 +108,18 @@ def incremental_minhash_epoch(
 
     # changed × existing-unchanged: the big exploded index never
     # shuffles — Δ bands are the broadcast build side
-    pre = index.read() if index.exists() else None
-    pairs = None
-    if pre is not None:
-        unchanged = _explode(
-            pre.join(F.broadcast(changed_ids), on="doc", how="left_anti")
-        ).alias("r")
-        l = F.broadcast(new_bands).alias("l")
-        pairs = l.join(
-            unchanged,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket")),
-        ).select(
-            F.least("l.doc", "r.doc").alias("id_a"),
-            F.greatest("l.doc", "r.doc").alias("id_b"),
-        )
+    index.create(_pack(new_bands).schema)
+    unchanged = _explode(
+        index.read().join(F.broadcast(changed_ids), on="doc", how="left_anti")
+    ).alias("r")
+    l = F.broadcast(new_bands).alias("l")
+    pairs = l.join(
+        unchanged,
+        (F.col("l.band") == F.col("r.band")) & (F.col("l.bucket") == F.col("r.bucket")),
+    ).select(
+        F.least("l.doc", "r.doc").alias("id_a"),
+        F.greatest("l.doc", "r.doc").alias("id_b"),
+    )
     # changed × changed: ordinary banded self-join over the small Δ
     l2, r2 = new_bands.alias("l"), new_bands.alias("r")
     cc = l2.join(
@@ -131,7 +128,7 @@ def incremental_minhash_epoch(
         & (F.col("l.bucket") == F.col("r.bucket"))
         & (F.col("l.doc") < F.col("r.doc")),
     ).select(F.col("l.doc").alias("id_a"), F.col("r.doc").alias("id_b"))
-    pairs = cc if pairs is None else pairs.unionByName(cc)
+    pairs = pairs.unionByName(cc)
     out = pairs.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n_shared_bands"))
 
     # advance the index: upsert Δ band arrays, drop tombstoned docs

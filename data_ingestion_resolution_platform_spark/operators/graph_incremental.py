@@ -198,32 +198,29 @@ def maintain_clusters(
     # id_b of an edge whose id_a partner is out of scope); drop every
     # pair touching a changed doc — its current pairs, if any, are in delta.
     stale_ends = up.unionByName(rm).localCheckpoint(eager=False)
-    old_edges = edges.read().select("id_a", "id_b") if edges.exists() else None
-    if old_edges is not None:
-        scoped_old = old_edges.join(
-            F.broadcast(scan_nodes.select(F.col("id").alias("id_a"))), on="id_a"
-        ).unionByName(
-            old_edges.join(
-                F.broadcast(scan_nodes.select(F.col("id").alias("id_b"))), on="id_b"
-            ).select("id_a", "id_b")
-        ).distinct()
-        stale = scoped_old.join(
-            F.broadcast(stale_ends.select(F.col("id").alias("id_a"))),
-            on="id_a",
+    edges.create(delta.schema)
+    old_edges = edges.read().select("id_a", "id_b")
+    scoped_old = old_edges.join(
+        F.broadcast(scan_nodes.select(F.col("id").alias("id_a"))), on="id_a"
+    ).unionByName(
+        old_edges.join(
+            F.broadcast(scan_nodes.select(F.col("id").alias("id_b"))), on="id_b"
+        ).select("id_a", "id_b")
+    ).distinct()
+    stale = scoped_old.join(
+        F.broadcast(stale_ends.select(F.col("id").alias("id_a"))),
+        on="id_a",
+        how="left_semi",
+    ).unionByName(
+        scoped_old.join(
+            F.broadcast(stale_ends.select(F.col("id").alias("id_b"))),
+            on="id_b",
             how="left_semi",
-        ).unionByName(
-            scoped_old.join(
-                F.broadcast(stale_ends.select(F.col("id").alias("id_b"))),
-                on="id_b",
-                how="left_semi",
-            ).select("id_a", "id_b")
-        ).distinct().localCheckpoint(eager=False)
-        surviving = scoped_old.join(
-            stale.hint("broadcast"), on=["id_a", "id_b"], how="left_anti"
-        )
-    else:
-        stale = delta.limit(0)
-        surviving = delta.limit(0)
+        ).select("id_a", "id_b")
+    ).distinct().localCheckpoint(eager=False)
+    surviving = scoped_old.join(
+        stale.hint("broadcast"), on=["id_a", "id_b"], how="left_anti"
+    )
 
     scope_edges = surviving.unionByName(delta).distinct()
 

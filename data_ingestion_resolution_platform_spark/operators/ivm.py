@@ -102,9 +102,10 @@ def add_stored(
 ) -> DataFrame:
     """``state ⊕ Δ`` for the touched keys: ``delta`` with each long
     measure in ``measures`` replaced by its stored value + Δ (a key with
-    no stored row, or a table not yet committed, adds Δ to 0); every
-    other column of ``delta`` passes through. ``delta`` is key-unique
-    and names each measure as ``table`` stores it.
+    no stored row adds Δ to 0); every other column of ``delta`` passes
+    through. ``delta`` is key-unique and names each measure as
+    ``table`` stores it; a table not yet created is created with
+    ``delta``'s keys and measures as its schema.
 
     Two broadcast-shaped steps so the (big) state never shuffles:
     ``table.lookup`` semi-joins the state down to the touched keys (the
@@ -114,9 +115,8 @@ def add_stored(
     broadcasts the non-preserved side, which there is the full state.
     """
     key_list = list(keys)
+    table.create(delta.select(*key_list, *measures).schema)
     stored = table.lookup(delta.select(*key_list))
-    if stored is None:
-        return delta
     touched = stored.select(*key_list, *[F.col(c).alias(f"_s_{c}") for c in measures])
     joined = delta.join(F.broadcast(touched), on=key_list, how="left")
     return joined.select(
@@ -313,21 +313,15 @@ def maintain_minmax(
         F.max(F.when(F.col("_sign") < 0, v)).alias("_neg_max"),
     ).persist()
     try:
-        stored = table.lookup(delta.select(*key_list))
-        if stored is not None:
-            touched = stored.select(
-                *key_list,
-                F.col(count_alias).alias("_sn"),
-                F.col(min_alias).alias("_smin"),
-                F.col(max_alias).alias("_smax"),
-            )
-            j = delta.join(F.broadcast(touched), on=key_list, how="left")
-        else:
-            j = (
-                delta.withColumn("_sn", F.lit(None).cast("long"))
-                .withColumn("_smin", F.lit(None).cast(delta.schema["_pos_min"].dataType))
-                .withColumn("_smax", F.lit(None).cast(delta.schema["_pos_max"].dataType))
-            )
+        extremes = [F.col("_pos_min").alias(min_alias), F.col("_pos_max").alias(max_alias)]
+        table.create(delta.select(*key_list, F.col("_dn").alias(count_alias), *extremes).schema)
+        touched = table.lookup(delta.select(*key_list)).select(
+            *key_list,
+            F.col(count_alias).alias("_sn"),
+            F.col(min_alias).alias("_smin"),
+            F.col(max_alias).alias("_smax"),
+        )
+        j = delta.join(F.broadcast(touched), on=key_list, how="left")
         has_neg = F.col("_neg_min").isNotNull()
         # a retraction is dangerous iff it reaches a stored extreme; a
         # retraction against an unknown group (no stored state) is a feed/
@@ -482,8 +476,8 @@ def maintain_topk(
     try:
         pos = changes.filter(is_positive()).select(*cols)
         neg_keys = changes.filter(is_retraction()).select(*keys)
-        stored = view.lookup(changes.select(*gk).distinct())
-        vtouched = pos.limit(0) if stored is None else stored.localCheckpoint(eager=False)
+        view.create(pos.schema)
+        vtouched = view.lookup(changes.select(*gk).distinct()).localCheckpoint(eager=False)
         # dirty = a retraction key matches a stored row (exact key match,
         # not a value compare — ties make value compares ambiguous)
         dirty_groups = (

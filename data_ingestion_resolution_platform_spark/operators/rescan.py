@@ -81,13 +81,12 @@ def maintain_group_rescan(
     if group_keys is None:
         gone = aff.join(rows.hint("broadcast"), on=key_list, how="left_anti")
     else:
-        current = store.lookup(aff)
-        if current is None:
-            gone = rows.select(*key_list).limit(0)
-        else:
-            gone = current.select(*key_list).join(
-                rows.hint("broadcast"), on=key_list, how="left_anti"
-            )
+        store.create(rows.schema)
+        gone = (
+            store.lookup(aff)
+            .select(*key_list)
+            .join(rows.hint("broadcast"), on=key_list, how="left_anti")
+        )
     batch = rows.withColumn(DELETE_COL, F.lit(False)).unionByName(
         gone.withColumn(DELETE_COL, F.lit(True)), allowMissingColumns=True
     )

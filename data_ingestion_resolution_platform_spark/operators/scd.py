@@ -114,35 +114,30 @@ def scd2_apply_increment(
     refuses to corrupt the table.
     """
     dv = scd2_history(delta, keys, lsn_col, attr_cols)
-    first_ev = F.struct(F.col(lsn_col), F.col("op"), *[F.col(c) for c in attr_cols])
-    firsts = (
-        delta.groupBy(*keys)
-        .agg(F.min_by(first_ev, F.col(lsn_col)).alias("__f"))
-        .select(
-            *keys,
-            F.col(f"__f.{lsn_col}").alias("__f_lsn"),
-            F.col("__f.op").alias("__f_op"),
-            *[F.col(f"__f.{c}").alias(f"__f_{c}") for c in attr_cols],
-        )
-    )
+    # the delta's first event opens its first version unless it is a
+    # tombstone, so a continuation is a first version that starts at the
+    # first event's LSN and repeats the open version's attributes: only
+    # the first LSN is aggregated from the raw delta
+    firsts = delta.groupBy(*keys).agg(F.min(lsn_col).alias("__f_lsn"))
     v1 = (
         dv.groupBy(*keys)
         .agg(
             F.min_by(
-                F.struct("valid_from_lsn", "valid_to_lsn"), F.col("valid_from_lsn")
+                F.struct("valid_from_lsn", "valid_to_lsn", *attr_cols), F.col("valid_from_lsn")
             ).alias("__v1")
         )
         .select(
             *keys,
             F.col("__v1.valid_from_lsn").alias("__v1_from"),
             F.col("__v1.valid_to_lsn").alias("__v1_to"),
+            *[F.col(f"__v1.{c}").alias(f"__v1_{c}") for c in attr_cols],
         )
     )
     fixup = firsts.join(v1, on=list(keys), how="left")
     touched = open_versions.join(F.broadcast(fixup), on=list(keys), how="inner")
-    cont = F.col("__f_op") != F.lit("D")
+    cont = F.col("__v1_from") == F.col("__f_lsn")
     for c in attr_cols:
-        cont = cont & F.col(c).eqNullSafe(F.col(f"__f_{c}"))
+        cont = cont & F.col(c).eqNullSafe(F.col(f"__v1_{c}"))
     updated = touched.select(
         *keys,
         *attr_cols,
@@ -190,7 +185,7 @@ class Scd2HistoryStore:
     the two writes replays convergently (batches are deterministic).
 
     Duck-type compatible with what :func:`historize_epoch` needs
-    (``epoch_committed / exists / read / merge``) plus the pruned
+    (``epoch_committed / create / merge``) plus the pruned
     ``open_versions`` fast path it prefers when present.
     """
 
@@ -212,10 +207,9 @@ class Scd2HistoryStore:
     def epoch_committed(self, epoch_id) -> bool:
         return self._open.epoch_committed(epoch_id)
 
-    def exists(self) -> bool:
-        # open is written last and carries the commit ledger — a closed
-        # append without it is an uncommitted epoch that will replay
-        return self._open.exists()
+    def create(self, schema) -> None:
+        """Create the open-versions table empty (``_MergeTable.create``)."""
+        self._open.create(schema)
 
     def open_versions(self) -> DataFrame:
         """The pruned epoch read: current versions only, never touching
@@ -225,8 +219,6 @@ class Scd2HistoryStore:
     def read(self) -> DataFrame:
         """The full logical history (closed ∪ open) — for consumers;
         epochs never call this."""
-        if not self.exists():
-            raise FileNotFoundError(f"scd2 history {self.root} has no data")
         opn = self._open.read()
         if not self._closed.exists():
             return opn
@@ -281,7 +273,8 @@ def historize_epoch(
     """Exactly-once epoch apply of a feed delta to a LakeTable-backed
     SCD2 history (MERGE ON (keys, valid_from_lsn); a committed
     ``epoch_id`` short-circuits, so at-least-once redelivery is safe).
-    Seeds the table from scratch on first call.
+    The first call creates the history (empty, ``history.create``) and
+    then applies its delta like any later epoch.
 
     Guards the replay contract (delta LSNs strictly after the
     history's): an out-of-order delta produces a refitted open version
@@ -296,47 +289,47 @@ def historize_epoch(
     """
     if history.epoch_committed(epoch_id):
         return {"skipped": True, "epoch": str(epoch_id)}
-    if not history.exists():
-        batch = scd2_history(delta, keys, lsn_col, attr_cols)
-    else:
-        # Scd2HistoryStore serves the open set from its own snapshot —
-        # O(open), independent of accumulated history; a plain LakeTable
-        # history falls back to the filtered full scan
-        open_v = (
-            history.open_versions()
-            if hasattr(history, "open_versions")
-            else history.read().filter(F.col("is_current") == 1)
-        )
-        batch = scd2_apply_increment(open_v, delta, keys, lsn_col, attr_cols)
-        # <= not <: a delta whose first LSN EQUALS an open version's
-        # valid_from_lsn would produce a zero-length version plus two
-        # batch rows sharing the MERGE key (keys, valid_from_lsn) —
-        # legitimate in-order deltas always close strictly after
-        # valid_from_lsn, so equality is a contract violation too.
-        # Folded into the merge action (r4 advice): no separate
-        # .count() job — the condition rides the MERGE-key column, so
-        # whichever write first evaluates a violating row raises before
-        # that table's commit point (open rows have NULL valid_to_lsn
-        # and never trip it; dels/key-only projections prune the guard
-        # but every actual write evaluates the full row).
-        batch = batch.withColumn(
-            "valid_from_lsn",
-            F.when(
-                F.col("valid_to_lsn") <= F.col("valid_from_lsn"),
-                F.raise_error(
-                    F.concat(
-                        F.lit(_CONTRACT_MARKER + " key=("),
-                        F.concat_ws(
-                            ",", *[F.col(k).cast("string") for k in keys]
-                        ),
-                        F.lit(") valid_from="),
-                        F.col("valid_from_lsn").cast("string"),
-                        F.lit(" valid_to="),
-                        F.col("valid_to_lsn").cast("string"),
-                    )
-                ).cast("long"),
-            ).otherwise(F.col("valid_from_lsn")),
-        )
+    # the first epoch refits nothing: over an empty open set the
+    # increment IS the delta's own history
+    history.create(scd2_history(delta, keys, lsn_col, attr_cols).schema)
+    # Scd2HistoryStore serves the open set from its own snapshot —
+    # O(open), independent of accumulated history; a plain LakeTable
+    # history falls back to the filtered full scan
+    open_v = (
+        history.open_versions()
+        if hasattr(history, "open_versions")
+        else history.read().filter(F.col("is_current") == 1)
+    )
+    batch = scd2_apply_increment(open_v, delta, keys, lsn_col, attr_cols)
+    # <= not <: a delta whose first LSN EQUALS an open version's
+    # valid_from_lsn would produce a zero-length version plus two
+    # batch rows sharing the MERGE key (keys, valid_from_lsn) —
+    # legitimate in-order deltas always close strictly after
+    # valid_from_lsn, so equality is a contract violation too.
+    # Folded into the merge action (r4 advice): no separate
+    # .count() job — the condition rides the MERGE-key column, so
+    # whichever write first evaluates a violating row raises before
+    # that table's commit point (open rows have NULL valid_to_lsn
+    # and never trip it; dels/key-only projections prune the guard
+    # but every actual write evaluates the full row).
+    batch = batch.withColumn(
+        "valid_from_lsn",
+        F.when(
+            F.col("valid_to_lsn") <= F.col("valid_from_lsn"),
+            F.raise_error(
+                F.concat(
+                    F.lit(_CONTRACT_MARKER + " key=("),
+                    F.concat_ws(
+                        ",", *[F.col(k).cast("string") for k in keys]
+                    ),
+                    F.lit(") valid_from="),
+                    F.col("valid_from_lsn").cast("string"),
+                    F.lit(" valid_to="),
+                    F.col("valid_to_lsn").cast("string"),
+                )
+            ).cast("long"),
+        ).otherwise(F.col("valid_from_lsn")),
+    )
     try:
         return history.merge(batch, [*keys, "valid_from_lsn"], epoch_id=epoch_id)
     except Exception as e:

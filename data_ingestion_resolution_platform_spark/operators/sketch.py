@@ -183,10 +183,11 @@ def maintain_kmv(
         changes, "maintain_kmv", "KMV cannot retract a minimum", "ivm.maintain_distinct"
     )
     pairs = changes.select(*keys, kmv_hash(F.col(value_col)).alias("_h")).distinct()
-    stored = table.lookup(pairs.select(*keys).distinct())
-    if stored is not None:
-        old = stored.select(*keys, F.explode("kmv").alias("_h"))
-        pairs = pairs.unionByName(old).distinct()
+    table.create(_kmv_build(pairs, keys, k, n_salt).schema)
+    old = table.lookup(pairs.select(*keys).distinct()).select(
+        *keys, F.explode("kmv").alias("_h")
+    )
+    pairs = pairs.unionByName(old).distinct()
     return table.merge(_kmv_build(pairs, keys, k, n_salt), keys, epoch_id=epoch_id)
 
 
@@ -447,15 +448,18 @@ def maintain_qsample(
         "stays exact under retractions)",
     )
     rows = _qsample_rows(changes, keys, value_col, id_col)
-    stored = table.lookup(rows.select(*keys).distinct())
-    if stored is not None:
-        old = stored.select(*keys, F.explode("qs").alias("_s")).select(
+    table.create(_qsample_build(rows, keys, k, n_salt).schema)
+    old = (
+        table.lookup(rows.select(*keys).distinct())
+        .select(*keys, F.explode("qs").alias("_s"))
+        .select(
             *keys,
             F.col("_s.h").alias("_h"),
             F.col("_s.i").alias("_i"),
             F.col("_s.v").alias("_v"),
         )
-        # distinct on the full row: a redelivered insert that also sits
-        # in the stored sketch must not count twice in the bottom-k
-        rows = rows.unionByName(old).distinct()
+    )
+    # distinct on the full row: a redelivered insert that also sits in
+    # the stored sketch must not count twice in the bottom-k
+    rows = rows.unionByName(old).distinct()
     return table.merge(_qsample_build(rows, keys, k, n_salt), keys, epoch_id=epoch_id)

@@ -35,9 +35,23 @@ whole ``stream_views`` run 561. At the cap of 100 a warm ``replay_hot``
 epoch recompiled 63-74 classes; with the whole set cached the four
 timed epochs compiled 25, 14, 4 and 4. What is still compiled is source
 that changes between epochs: classes that inline the epoch number as a
-constant, and classes that AQE numbers differently (whole-stage codegen
-id, fresh-variable counters). ``get_spark`` sets the cap to 2048, the
-smallest power of two at least twice the largest measured working set.
+constant, and classes that AQE numbers differently (fresh-variable
+counters). ``get_spark`` sets the cap to 2048, the smallest power of two
+at least twice the largest measured working set.
+
+Whole-stage classes are named after their codegen stage id by default,
+and AQE numbers stages in the order it plans them, so two stages of one
+shape in plans of different length missed each other in the cache;
+``get_spark`` sets ``spark.sql.codegen.useIdInClassName=false``. The
+cache key also holds the thread's context class loader, so in local
+mode each whole-stage class compiles twice (the driver's compile check,
+then the first task). A bootstrap runs the plans a feed epoch runs, so
+the first epoch after it finds them cached: all six views on, the
+``tests/test_codegen_cache.py`` toy's first epoch compiled 293 classes
+when every view took a "no state yet" branch on the bootstrap, 100 with
+empty-state tables, 84 with id-free class names (4 vCPU); perfbench's
+``stream_views`` timed epoch (seed 77) went 316 classes in 5.56-5.59 s
+to 105 in 4.9 s, and its bootstrap pays the difference.
 
 The cache is a JVM-wide singleton, sized from the session conf active
 at the JVM's first code generation, and the cap is a static conf. A
@@ -148,6 +162,9 @@ def get_spark(
         # 178 classes per replay_hot run, 561 per stream_views run,
         # against Spark's default cap of 100
         .config("spark.sql.codegen.cache.maxEntries", "2048")
+        # leave the whole-stage codegen id out of generated class names
+        # (module docstring): stages of one shape then share one class
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     # env-driven conf overrides (e.g. codec experiments through bench
     # subprocesses): SPARK_GRAFT_EXTRA_CONF="k=v;k=v". Explicit

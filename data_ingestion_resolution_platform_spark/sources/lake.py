@@ -41,9 +41,12 @@ One MERGE contract, the same on all three tables (``LakeTable``,
   are discarded, the table and its ledger stay as they were, and the
   error propagates.
 
+- **empty state**: a table gets its schema before it holds data
+  (:meth:`_MergeTable.create`, Iceberg's CREATE TABLE; a MERGE creates
+  its table from the batch): ``read()`` is then a zero-row file scan.
+
 Every layout's ``lookup(keys)`` is the one read of "the stored rows for
-these keys" (``None`` before the first commit); the maintainers read
-their touched state through it.
+these keys"; the maintainers read their touched state through it.
 """
 
 from __future__ import annotations
@@ -54,9 +57,12 @@ import shutil
 import time
 from collections.abc import Callable, Sequence
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 #: The change-data feed (CDF) contract every maintainer reads, defined
 #: once beside :func:`snapshot_diff`, which produces it: each change
@@ -403,20 +409,51 @@ class _MergeTable:
     epoch where no reader sees it and returns a token, ``_discard``
     removes those files, ``_commit`` makes them visible, records the
     ledger and returns the MERGE stats. Each layout also provides
-    ``exists()`` and ``read()``, on which :meth:`lookup` is built."""
+    ``exists()`` (the table holds committed data) and ``read()``, which
+    falls back to :meth:`_read_empty`; :meth:`lookup` is built on it."""
 
     ledger: _EpochLedger
 
-    def lookup(self, keys: DataFrame) -> DataFrame | None:
+    @property
+    def _empty_dir(self) -> str:
+        # not "_"-prefixed: Spark's file listing skips such paths
+        return os.path.join(self.root, "empty")
+
+    def create(self, schema: T.StructType) -> None:
+        """Give the table its empty state: one zero-row parquet file of
+        ``schema`` (a local footer-only write, no Spark job) that
+        ``read()`` scans while no data is live. Idempotent, and writes
+        no ledger entry. An in-memory empty frame would not do: the
+        optimizer folds it away, so the first epoch would plan, and
+        compile, other code than every later one."""
+        if os.path.isdir(self._empty_dir):
+            return
+        tmp = os.path.join(self.root, f"_tmp_empty_{os.getpid()}_{time.time_ns()}")
+        os.makedirs(tmp)
+        pq.write_table(
+            pa.Table.from_pylist([], schema=to_arrow_schema(schema)),
+            os.path.join(tmp, "part-00000.parquet"),
+        )
+        try:
+            os.rename(tmp, self._empty_dir)
+        except OSError:  # a concurrent creator won
+            shutil.rmtree(tmp, ignore_errors=True)
+
+    def _read_empty(self, schema: T.StructType | None = None) -> DataFrame:
+        if not os.path.isdir(self._empty_dir):
+            raise FileNotFoundError(f"lake table {self.root} has no data")
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self._empty_dir)
+
+    def lookup(self, keys: DataFrame) -> DataFrame:
         """The stored rows whose ``keys.columns`` match a row of the
-        small ``keys`` frame, or ``None`` before the first commit.
+        small ``keys`` frame (a zero-row file scan while the table is
+        empty, so its first probe plans like every later one).
 
         The one key-probe of a stored table: the current snapshot
         LEFT SEMI JOIN the broadcast ``keys``, so the stored side never
         shuffles. ``keys`` may name any subset of the columns (a group
         prefix of a composite key probes whole groups)."""
-        if not self.exists():
-            return None
         return self.read().join(F.broadcast(keys), on=keys.columns, how="left_semi")
 
     def epoch_committed(self, epoch_id: str | int) -> bool:
@@ -442,6 +479,7 @@ class _MergeTable:
         """
         if epoch_id is not None and self.ledger.committed(epoch_id):
             return {"skipped": True, "epoch": str(epoch_id)}
+        self.create(batch.drop(DELETE_COL).schema)
         # normalize the marker to a non-NULL boolean: NULL deletes
         marker = (
             F.coalesce(F.col(DELETE_COL).cast("boolean"), F.lit(True))
@@ -580,7 +618,7 @@ class LakeTable(_MergeTable):
             return a.unionByName(b, allowMissingColumns=True)
         v = self.versions.current() if version is None else version
         if v == 0:
-            raise FileNotFoundError(f"lake table {self.root} has no committed version")
+            return self._read_empty()
         d = self.versions.dir_for(v)
         if not os.path.isdir(d):
             raise FileNotFoundError(
@@ -798,24 +836,19 @@ class LakeTable(_MergeTable):
         batch = batch.persist()
         try:
             upserts = self._upserts(batch)
-            if self.exists():
-                current = self.read()
-                survivors = current.join(
-                    F.broadcast(batch.select(*keys)), on=keys, how="left_anti"
-                )
-                # schema evolution (add-column): target schema becomes the
-                # union of current and batch columns; survivors carry NULL
-                # for newly-added columns, batch rows NULL for columns the
-                # evolved feed no longer sends — Iceberg's add-column MERGE
-                # semantics without a rewrite of untouched history
-                all_cols = current.columns + [
-                    c for c in upserts.columns if c not in current.columns
-                ]
-                merged = survivors.unionByName(
-                    upserts, allowMissingColumns=True
-                ).select(*all_cols)
-            else:
-                merged = upserts
+            current = self.read()
+            survivors = current.join(
+                F.broadcast(batch.select(*keys)), on=keys, how="left_anti"
+            )
+            # schema evolution (add-column): target schema becomes the
+            # union of current and batch columns; survivors carry NULL
+            # for newly-added columns, batch rows NULL for columns the
+            # evolved feed no longer sends — Iceberg's add-column MERGE
+            # semantics without a rewrite of untouched history
+            all_cols = current.columns + [
+                c for c in upserts.columns if c not in current.columns
+            ]
+            merged = survivors.unionByName(upserts, allowMissingColumns=True).select(*all_cols)
             merged.write.mode("overwrite").parquet(self.versions.dir_for(v))
         except Exception:
             self.versions.release(v)
@@ -1016,34 +1049,26 @@ class MorLakeTable(_MergeTable):
 
     def read(self) -> DataFrame:
         m = self._read_manifest()
-        if not self.exists():
-            raise FileNotFoundError(f"mor lake table {self.root} has no data")
+        # before the first compaction the empty state is the base
+        base = (
+            self.spark.read.parquet(self._base_dir(m["base_v"]))
+            if m["base_v"]
+            else self._read_empty()
+        )
         deltas = self._deltas_df(m)
-        if m["base_v"] == 0:
-            base = None
-        else:
-            base = (
-                self.spark.read.parquet(self._base_dir(m["base_v"]))
-                .withColumn(self.SEQ, F.lit(0))
-                .withColumn(self.DEL, F.lit(False))
-            )
         if deltas is None:
-            return base.drop(self.SEQ, self.DEL)
-        if base is None:
-            combined = deltas
-            untouched = None
-        else:
-            dkeys = deltas.select(*self.keys).distinct()
-            untouched = base.join(F.broadcast(dkeys), on=self.keys, how="left_anti")
-            overlap = base.join(F.broadcast(dkeys), on=self.keys, how="left_semi")
-            combined = overlap.unionByName(deltas, allowMissingColumns=True)
+            return base
+        base = base.withColumn(self.SEQ, F.lit(0)).withColumn(self.DEL, F.lit(False))
+        dkeys = deltas.select(*self.keys).distinct()
+        untouched = base.join(F.broadcast(dkeys), on=self.keys, how="left_anti")
+        overlap = base.join(F.broadcast(dkeys), on=self.keys, how="left_semi")
+        combined = overlap.unionByName(deltas, allowMissingColumns=True)
         from data_ingestion_resolution_platform_spark.operators.cdc import resolve_latest
 
         winners = resolve_latest(
             combined, self.keys, self.SEQ, tie_breakers=(self.lsn_col,)
         ).filter(~F.col(self.DEL))
-        if untouched is not None:
-            winners = untouched.unionByName(winners, allowMissingColumns=True)
+        winners = untouched.unionByName(winners, allowMissingColumns=True)
         # pin survivor-first column order (evolution appends new cols)
         cols = [c for c in winners.columns if c not in (self.SEQ, self.DEL)]
         return winners.select(*cols)
@@ -1221,7 +1246,7 @@ class PartitionedLakeTable(_MergeTable):
         live = [bk for bk in (buckets if buckets is not None else d) if d.get(bk, 0) > 0]
         paths = [self._bucket_dir(b, lv, d[(b, lv)]) for b, lv in live]
         if not paths:
-            raise FileNotFoundError(f"partitioned lake table {self.root} has no data")
+            return self._read_empty(self._read_schema())
         # buckets evolve independently: a bucket untouched since before a
         # schema-evolving epoch still holds old-schema files. Iceberg
         # resolves this in the METADATA layer; our stand-in is a saved
@@ -1280,22 +1305,16 @@ class PartitionedLakeTable(_MergeTable):
             touched_res = sorted(seen.get["res"])
             touched = sorted({self._owner(r, d, lstage) for r in touched_res})
             upserts = self._upserts(staged)
-            touched_live = [bk for bk in touched if d[bk] > 0]
-            if touched_live:
-                current = self.read(touched_live).withColumn(
-                    rcol, self._residue_expr(lstage)
-                )
-                survivors = current.join(
-                    F.broadcast(staged.select(*keys)), on=keys, how="left_anti"
-                )
-                # add-column schema evolution, as in LakeTable
-                merged = survivors.unionByName(upserts, allowMissingColumns=True)
-                out_cols = cols + [
-                    c for c in current.columns if c not in cols and c != rcol
-                ]
-            else:
-                merged = upserts
-                out_cols = cols
+            # no live touched bucket reads the empty state: one plan shape
+            current = self.read([bk for bk in touched if d[bk] > 0]).withColumn(
+                rcol, self._residue_expr(lstage)
+            )
+            survivors = current.join(
+                F.broadcast(staged.select(*keys)), on=keys, how="left_anti"
+            )
+            # add-column schema evolution, as in LakeTable
+            merged = survivors.unionByName(upserts, allowMissingColumns=True)
+            out_cols = cols + [c for c in current.columns if c not in cols and c != rcol]
             # join(on=keys) reorders columns key-first; pin a stable
             # column order so every bucket file shares one schema layout
             merged = merged.select(*out_cols, rcol)

@@ -33,6 +33,7 @@ from pyspark.util import inheritable_thread_target
 
 from data_ingestion_resolution_platform_spark.functions.hashing import content_sha256
 from data_ingestion_resolution_platform_spark.operators.cdc import resolve_and_detect
+from data_ingestion_resolution_platform_spark.session import codegen_compiles
 from data_ingestion_resolution_platform_spark.sources.feed import CHANGE_FEED_SCHEMA
 from data_ingestion_resolution_platform_spark.sources.lake import (
     CHANGE_COL,
@@ -45,7 +46,6 @@ from data_ingestion_resolution_platform_spark.sources.lake import (
     PartitionedLakeTable,
 )
 from data_ingestion_resolution_platform_spark.streaming.lineage import epoch_summary, lineage_rows
-from data_ingestion_resolution_platform_spark.util import empty_df
 from data_ingestion_resolution_platform_spark.streaming.schema_evolution import reconcile_exprs
 
 
@@ -127,6 +127,10 @@ class EpochChange:
     every event into a potential version boundary, not just winners.
     ``CDCPipeline.bootstrap`` builds it with ``winners = batch``.
 
+    Empty state is a zero-row file scan (every table is created before
+    its first probe), so the bootstrap's change-set plans, and compiles,
+    like every later epoch's.
+
     The view steps read these frames CONCURRENTLY (``process_batch``
     runs them on a pool, beside the staging target MERGE) and strictly
     read-only: a view writes only its own table. Valid until the gated
@@ -140,29 +144,23 @@ class EpochChange:
         keys = list(keys)
         self.batch = batch
         self.post = winners.filter(F.col("op") != "D")
-        self.pre = target.lookup(winners.select(*keys))
-        if self.pre is None:
-            self.base_after = self.post
-        else:
-            self.pre = self.pre.persist()
-            self.base_after = (
-                target.read()
-                .join(F.broadcast(winners.select(*keys)), on=keys, how="left_anti")
-                .unionByName(self.post, allowMissingColumns=True)
-            )
+        self.pre = target.lookup(winners.select(*keys)).persist()
+        self.base_after = (
+            target.read()
+            .join(F.broadcast(winners.select(*keys)), on=keys, how="left_anti")
+            .unionByName(self.post, allowMissingColumns=True)
+        )
 
     def changes(self, proj) -> DataFrame:
         """The signed pre/post mini-CDF projected onto ``proj`` (column
         names or expressions valid over both target and winner rows),
         with a ``CHANGE_COL`` column."""
-        post = self.post.select(*proj, F.lit(POSTIMAGE).alias(CHANGE_COL))
-        if self.pre is None:
-            return post
-        return self.pre.select(*proj, F.lit(PREIMAGE).alias(CHANGE_COL)).unionByName(post)
+        return self.pre.select(*proj, F.lit(PREIMAGE).alias(CHANGE_COL)).unionByName(
+            self.post.select(*proj, F.lit(POSTIMAGE).alias(CHANGE_COL))
+        )
 
     def release(self) -> None:
-        if self.pre is not None:
-            self.pre.unpersist()
+        self.pre.unpersist()
 
 
 @dataclass
@@ -299,6 +297,8 @@ class CDCPipeline:
             )
         else:
             raise ValueError(f"unknown target_mode {self.target_mode!r} (cow|mor)")
+        # empty from open: the first pre-image probe plans like any other
+        self.target.create(self.canonical)
         # conflicts/lineage are audit streams → append-only layout,
         # O(batch) writes, no rewrite of history
         self.conflicts = LakeTable(
@@ -385,6 +385,7 @@ class CDCPipeline:
             return {"skipped": True, "epoch": epoch}
         import time as _time
 
+        compiles = codegen_compiles(self.spark)
         phases: dict[str, float] = {}
         _t0 = _time.time()
         batch = reconcile_exprs(batch, self.canonical, self.renames)
@@ -403,8 +404,6 @@ class CDCPipeline:
         # the winners feed every view and the target MERGE: one
         # evaluation of the source semi-join + dropDuplicates per epoch
         winners = resolved.winners.persist()
-        advancers = self._view_advancers()
-        change = None
         try:
             # fill the winners cache (and the per-key aggregate under it)
             # before the fan-out. Left to the steps, two that plan over
@@ -450,19 +449,12 @@ class CDCPipeline:
             # behind the target's committed-epoch early return. Every
             # view advances from the ONE change-set, so the target is
             # probed once per epoch, not once per view.
-            steps = [audit_conflicts, partial(self.lineage.append, lin, f"l{epoch}", 1)]
-            if advancers:
-                change = EpochChange(self.target, batch, winners, self.keys)
-                steps += [partial(advance, change, epoch) for advance in advancers]
-            stats = stage_then_commit(
-                self.spark,
-                steps,
-                partial(
-                    self.target.merge,
-                    winners.withColumn(DELETE_COL, F.col("op") == "D"),
-                    list(self.keys),
-                    epoch_id=epoch,
-                ),
+            stats = self._fan_out(
+                batch,
+                winners,
+                epoch,
+                epoch,
+                [audit_conflicts, partial(self.lineage.append, lin, f"l{epoch}", 1)],
             )
             phases["stage_commit"] = _time.time() - _t0
             _t0 = _time.time()
@@ -476,6 +468,7 @@ class CDCPipeline:
             stats["status"] = status
             stats["conflicts"] = n_conf
             stats["phase_seconds"] = {k: round(v, 3) for k, v in phases.items()}
+            stats["codegen_compiles"] = codegen_compiles(self.spark) - compiles
         except Exception:
             # poison-pill guard (`worker.py:413-415,445-457`): record a
             # FAILED epoch row best-effort, then surface the error so
@@ -493,11 +486,30 @@ class CDCPipeline:
                 pass
             raise
         finally:
-            if change is not None:
-                change.release()
             winners.unpersist()
             resolved.unpersist()
         return stats
+
+    def _fan_out(self, batch, winners, epoch_id, view_epoch, steps=()) -> dict:
+        """:func:`stage_then_commit` of ``steps``, every enabled view's
+        ``advance(change, view_epoch)`` from one :class:`EpochChange`, and
+        the target MERGE of ``winners`` under ``epoch_id``."""
+        advancers = self._view_advancers()
+        change = EpochChange(self.target, batch, winners, self.keys) if advancers else None
+        try:
+            return stage_then_commit(
+                self.spark,
+                [*steps, *(partial(advance, change, view_epoch) for advance in advancers)],
+                partial(
+                    self.target.merge,
+                    winners.withColumn(DELETE_COL, F.col("op") == "D"),
+                    list(self.keys),
+                    epoch_id=epoch_id,
+                ),
+            )
+        finally:
+            if change is not None:
+                change.release()
 
     def _view_advancers(self) -> list:
         """The enabled maintained views' per-epoch advance steps, each
@@ -681,17 +693,9 @@ class CDCPipeline:
         from data_ingestion_resolution_platform_spark.sources.lake import apply_changelog
 
         key_list = list(self.keys)
-        cols = [*key_list, *self.view_attrs]
-        if self.target.exists():
-            r_before = self.target.read().select(*cols)
-        else:
-            r_before = (
-                empty_df(self.spark, self.view.read().select(*cols).schema)
-                if self.view.exists()
-                else None
-            )
-            if r_before is None:
-                raise ValueError("apply_dim_changes before any target state exists")
+        if not (self.target.exists() or self.view.exists()):
+            raise ValueError("apply_dim_changes before any target state exists")
+        r_before = self.target.read().select(*key_list, *self.view_attrs)
         r_changes = r_before.limit(0).withColumn(CHANGE_COL, F.lit(INSERT))
         out = maintain_join(
             self.view,
@@ -746,21 +750,32 @@ class CDCPipeline:
         and converges. A bootstrap onto an already-populated target
         retracts that target's rows for the snapshot keys like any
         other epoch.
+
+        It compiles the plans the first feed epoch runs: the tables are
+        empty, not absent, and the snapshot takes the shape of a
+        :meth:`run_stream` micro-batch's winners (the canonical columns,
+        all nullable as a file source reads them), persisted and filled
+        before the fan-out as ``process_batch``'s winners are.
         """
         if self.target.epoch_committed(epoch_id):
             return {"skipped": True, "epoch": epoch_id}
-        batch = snapshot.withColumn("op", F.lit("I")).withColumn(
-            self.lsn_col, F.lit(watermark_lsn).cast("long")
+        stamped = reconcile_exprs(
+            snapshot.withColumns(
+                {"op": F.lit("I"), self.lsn_col: F.lit(watermark_lsn).cast("long")}
+            ),
+            self.canonical,
+            self.renames,
         )
-        change = EpochChange(self.target, batch, batch, self.keys)
+        # a condition the optimizer cannot fold makes the literal stamps
+        # nullable: generated code differs on nullability
+        always = F.spark_partition_id() >= 0
+        winners = stamped.select(*[F.when(always, F.col(c)).alias(c) for c in stamped.columns])
+        winners = winners.persist()
         try:
-            return stage_then_commit(
-                self.spark,
-                [partial(advance, change, f"_{epoch_id}") for advance in self._view_advancers()],
-                partial(self.target.merge, batch, list(self.keys), epoch_id=epoch_id),
-            )
+            winners.write.format("noop").mode("overwrite").save()
+            return self._fan_out(winners, winners, epoch_id, f"_{epoch_id}")
         finally:
-            change.release()
+            winners.unpersist()
 
     # -- streaming entry --------------------------------------------------
     def run_stream(self, available_now: bool = True, trigger_seconds: float | None = None):

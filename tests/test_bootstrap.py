@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -178,3 +180,42 @@ def test_partial_bootstrap_failure_converges(spark, tmp_path, monkeypatch):
     assert _seed_ledgers(pipe) == SEED_LEDGERS
     pipe.replay_bounded(tail, epochs=1, epoch_offset=1)
     _assert_all_views_match_target(pipe)
+
+
+def test_lake_without_empty_state_opens_and_converges(spark, tmp_path):
+    """A lake written before tables were created empty has no zero-row
+    ``empty/`` dirs: it opens, skips its committed bootstrap and
+    converges on the next epoch."""
+    pipe, snapshot, wm, tail = _all_views(spark, tmp_path)
+    # created empty is not seeded: no target state, no committed epoch
+    assert not pipe.target.exists() and pipe.target.committed_epochs() == []
+    assert pipe.target.read().count() == 0
+    with pytest.raises(ValueError, match="before any target state"):
+        pipe.apply_dim_changes(pipe.dim.read().withColumn("change_type", F.lit("insert")), 1)
+    pipe.bootstrap(snapshot, wm)
+    warehouse = tmp_path / "wh"
+    empties = sorted(p for p in warehouse.rglob("empty") if p.is_dir())
+    assert empties, "no table was created empty"
+    for p in empties:
+        shutil.rmtree(p)
+
+    reopened = CDCPipeline(
+        spark,
+        feed_dir="unused",
+        warehouse=str(warehouse),
+        maintain_stats=True,
+        maintain_view=True,
+        maintain_leaderboard=True,
+        maintain_freq=True,
+        freq_width=32,
+        maintain_quantiles=True,
+        quantile_k=K,
+        maintain_history=True,
+    )
+    assert reopened.bootstrap(snapshot, wm)["skipped"]
+    _assert_all_views_match_target(reopened)
+    reopened.replay_bounded(tail, epochs=1, epoch_offset=1)
+    _assert_all_views_match_target(reopened)
+    assert _seed_ledgers(reopened) == {
+        name: sorted([*ids, f"{ids[0][0]}1"]) for name, ids in SEED_LEDGERS.items()
+    }

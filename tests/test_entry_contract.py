@@ -92,11 +92,9 @@ def test_query_matches_oracle(spark, ddb, name):
     )
 
 
-@pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
-def test_rows_only_queries_run(spark, name):
-    sdf = QUERIES[name](spark, SF_DIR)
-    assert sdf.count() >= 0
-    assert len(sdf.columns) > 0
+def test_every_query_has_an_oracle_twin():
+    # a query without a DuckDB twin would run unchecked by the oracle test
+    assert sorted(set(QUERIES) - set(ORACLES)) == []
 
 
 def test_entry_smoke(spark):

@@ -1,6 +1,6 @@
 """``lookup``, the one key-probe of a stored table, on all three layouts
 of the MERGE contract (``sources/lake.py``): exactly the stored rows of
-the probed keys, or ``None`` before the first commit."""
+the probed keys; zero rows, from a file scan, while the table is empty."""
 
 from __future__ import annotations
 
@@ -36,7 +36,15 @@ def _rows(df):
 def test_lookup_returns_exactly_the_stored_rows_of_the_keys(spark, tmp_path, layout):
     table = LAYOUTS[layout](spark, str(tmp_path / layout))
     probe = spark.createDataFrame([("r1", "a")], "repo string, path string")
-    assert table.lookup(probe) is None  # nothing committed yet
+    with pytest.raises(FileNotFoundError):  # never created
+        table.lookup(probe)
+    table.create(spark.createDataFrame([], SCHEMA).schema)
+    empty = table.lookup(probe)
+    assert sorted(empty.columns) == sorted(KEYS + ["lsn", "v"]) and empty.count() == 0
+    # an empty in-memory relation would plan (and compile) other code
+    plan = empty._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan parquet" in plan and "LocalTableScan" not in plan, plan
+    assert not table.exists() and table.committed_epochs() == []
 
     table.merge(spark.createDataFrame(EPOCH1, SCHEMA), KEYS, epoch_id=1)
     if layout == "mor":
