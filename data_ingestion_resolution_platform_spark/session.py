@@ -44,8 +44,8 @@ and AQE numbers stages in the order it plans them, so two stages of one
 shape in plans of different length missed each other in the cache;
 ``get_spark`` sets ``spark.sql.codegen.useIdInClassName=false``. The
 cache key also holds the thread's context class loader, so in local
-mode each whole-stage class compiles twice (the driver's compile check,
-then the first task). A bootstrap runs the plans a feed epoch runs, so
+mode each whole-stage class compiles twice (once when Spark plans the
+query, then again in the first task). A bootstrap runs the plans a feed epoch runs, so
 the first epoch after it finds them cached: all six views on, the
 ``tests/test_codegen_cache.py`` toy's first epoch compiled 293 classes
 when every view took a "no state yet" branch on the bootstrap, 100 with
