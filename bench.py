@@ -151,15 +151,7 @@ def run_cdc_replay(parallelism: int, n_events: int) -> dict:
         feed_dir = os.path.join(base, "feed")
         feed.write.mode("overwrite").parquet(feed_dir)
         feed_df = spark.read.parquet(feed_dir)
-        # target_mode=mor is the 10^10-event ingest configuration
-        # (O(batch) delta appends; COW rewrites touched buckets) — the
-        # scaling probe measures both so the storage-bound share of the
-        # epoch is visible as the cow/mor gap.
-        target_mode = os.environ.get("SPARK_GRAFT_TARGET_MODE", "cow")
-        warm = CDCPipeline(
-            spark, feed_dir="unused", warehouse=os.path.join(base, "warm"),
-            target_mode=target_mode,
-        )
+        warm = CDCPipeline(spark, feed_dir="unused", warehouse=os.path.join(base, "warm"))
         stride = max(1, n_events // 100_000)
         warm_dir = os.path.join(base, "warm_feed")
         feed_df.filter(
@@ -169,9 +161,7 @@ def run_cdc_replay(parallelism: int, n_events: int) -> dict:
         runs = []
         for rep in range(reps):
             wh = os.path.join(base, f"wh{rep}")
-            pipe = CDCPipeline(
-                spark, feed_dir="unused", warehouse=wh, target_mode=target_mode
-            )
+            pipe = CDCPipeline(spark, feed_dir="unused", warehouse=wh)
             os.sync()  # drain dirty pages so timing is apply-only
             compiles0 = codegen_compiles(spark)
             epoch_stats, elapsed = _timed(lambda: pipe.replay_bounded(feed_df, epochs=epochs))
@@ -1663,7 +1653,7 @@ def run_scaling_core(cpus: int) -> dict:
 
 def run_scaling(cpus: int) -> dict:
     """N vs 4N throughput + efficiency for the compute core and the
-    end-to-end replay (COW and MoR targets), normalized by the host's
+    end-to-end replay, normalized by the host's
     framework-free ceiling and storage bandwidth at the same levels."""
     levels = n, n4 = _scaling_levels(cpus)
     # scaling evidence needs compute-dominated epochs: the metric
@@ -1688,8 +1678,8 @@ def run_scaling(cpus: int) -> dict:
     # scales with a real cluster; this VM's one disk does not
     if os.path.isdir("/dev/shm"):
         env.setdefault("SPARK_GRAFT_BENCH_DIR", "/dev/shm")
-    results: dict[str, dict[int, dict]] = {"core": {}, "e2e": {}, "e2e_mor": {}}
-    ratios: dict[str, list[float]] = {"core": [], "e2e": [], "e2e_mor": []}
+    results: dict[str, dict[int, dict]] = {"core": {}, "e2e": {}}
+    ratios: dict[str, list[float]] = {"core": [], "e2e": []}
     # Host throughput on this VM drifts ±40% on multi-MINUTE
     # timescales (measured: the same pinned 24-core core probe hit
     # 348k and 499k ev/s an hour apart). A best-of-per-level ratio
@@ -1700,23 +1690,14 @@ def run_scaling(cpus: int) -> dict:
     # state), computes its own efficiency, and the median across
     # reps discards the drifted pairs. Per-level bests are still
     # reported for throughput context.
-    # Three probes per pair:
-    #   core    — disk-free fused resolve+detect (executor scaling; on
-    #             a cluster this is what added nodes buy)
-    #   e2e     — full replay incl. COW lake writes (bounded here by
-    #             the ONE local disk both levels share — context)
-    #   e2e_mor — full replay with the merge-on-read target, the
-    #             10^10-event ingest configuration (O(batch) delta
-    #             appends instead of bucket rewrites): measured cow
-    #             0.35 vs mor 0.42-0.58 at 8M events/2 epochs — the
-    #             gap is the storage-bound COW rewrite share
+    # Two probes per pair:
+    #   core — disk-free fused resolve+detect (executor scaling; on a
+    #          cluster this is what added nodes buy)
+    #   e2e  — full replay incl. the COW target's lake writes (bounded
+    #          here by the ONE local disk both levels share — context)
     for _ in range(reps):
-        for mode, flag, extra in (
-            ("core", "--core-only", {}),
-            ("e2e", "--cdc-only", {}),
-            ("e2e_mor", "--cdc-only", {"SPARK_GRAFT_TARGET_MODE": "mor"}),
-        ):
-            pair = _scaling_pair(flag, levels, {**env, **extra}, results[mode])
+        for mode, flag in (("core", "--core-only"), ("e2e", "--cdc-only")):
+            pair = _scaling_pair(flag, levels, env, results[mode])
             ratios[mode].append(_ratio(pair, levels))
 
     def eff(mode: str) -> float:
@@ -1741,10 +1722,6 @@ def run_scaling(cpus: int) -> dict:
         "e2e_efficiency": eff("e2e"),
         "e2e_events_per_sec_n": results["e2e"][n]["events_per_sec"],
         "e2e_events_per_sec_4n": results["e2e"][n4]["events_per_sec"],
-        "e2e_mor_ratio_reps": [round(x, 3) for x in ratios["e2e_mor"]],
-        "e2e_mor_efficiency": eff("e2e_mor"),
-        "e2e_mor_events_per_sec_n": results["e2e_mor"][n]["events_per_sec"],
-        "e2e_mor_events_per_sec_4n": results["e2e_mor"][n4]["events_per_sec"],
         "e2e_phase_seconds_n": results["e2e"][n].get("phase_seconds"),
         "e2e_phase_seconds_4n": results["e2e"][n4].get("phase_seconds"),
         "e2e_events": n_events,

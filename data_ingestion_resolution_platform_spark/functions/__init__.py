@@ -9,26 +9,19 @@ from data_ingestion_resolution_platform_spark.functions.normalize import (
     identity_signature,
     is_valid_email_format,
     normalize_email,
-    truncate_message,
     validation_issues,
 )
 from data_ingestion_resolution_platform_spark.functions.hashing import (
     content_sha256,
-    minhash_signature,
     shingles,
-    simhash64,
 )
 from data_ingestion_resolution_platform_spark.functions.text import (
     detect_language,
-    doc_fingerprint,
     quality_features,
     tokenize,
     token_count,
 )
 from data_ingestion_resolution_platform_spark.functions.vectors import (
-    cosine_similarity,
-    dot_product,
-    l2_norm,
     quantize_vector,
 )
 
@@ -37,19 +30,12 @@ __all__ = [
     "identity_signature",
     "is_valid_email_format",
     "normalize_email",
-    "truncate_message",
     "validation_issues",
     "content_sha256",
-    "minhash_signature",
     "shingles",
-    "simhash64",
     "detect_language",
-    "doc_fingerprint",
     "quality_features",
     "tokenize",
     "token_count",
-    "cosine_similarity",
-    "dot_product",
-    "l2_norm",
     "quantize_vector",
 ]

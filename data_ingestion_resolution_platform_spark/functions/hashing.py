@@ -2,10 +2,10 @@
 
 The north-rule invariant (BASELINE.json input_hint) is per-row
 ``sha256(content)`` equality; ``content_sha256`` is the canonical
-implementation via Spark's built-in ``sha2``. MinHash and SimHash
-signatures are built from ``xxhash64`` over shingle arrays using
-higher-order array functions — everything stays JVM-side (no Python
-per row), which is what lets these run over 100 TB of text.
+implementation via Spark's built-in ``sha2``. Shingle arrays, LSH
+band hashes and the portable polynomial hashes are built from
+built-in and higher-order array functions — everything stays JVM-side
+(no Python per row), which is what lets these run over 100 TB of text.
 """
 
 from __future__ import annotations
@@ -75,33 +75,6 @@ def portable_hash62(col: Column) -> Column:
     return h1.bitwiseOR(F.shiftleft(h2, 31))
 
 
-def _hash_with_seed(s: Column, seed_a: int, seed_b: int) -> Column:
-    """Universal-hash family member: (a*x + b) mod p over xxhash64."""
-    x = F.pmod(F.xxhash64(s), F.lit(_MERSENNE31))
-    return F.pmod(x * F.lit(seed_a) + F.lit(seed_b), F.lit(_MERSENNE31))
-
-
-def minhash_signature(shingle_arr: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature: array<long> of per-hash-function minima.
-
-    One permutation per (a, b) pair from a fixed seeded family; the
-    signature of a doc with no shingles is all-NULL (filtered upstream).
-    Entirely expression-based: ``array_min(transform(shingles, h_i))``.
-    """
-    def hasher(ai: int, bi: int):
-        return lambda s: _hash_with_seed(s, ai, bi)
-
-    sig = []
-    a, b = 1_103_515_245, 12_345  # classic LCG multipliers as seed walk
-    for i in range(num_hashes):
-        ai = (a * (2 * i + 1)) % _MERSENNE31
-        bi = (b * (i + 7)) % _MERSENNE31
-        sig.append(
-            F.array_min(F.transform(shingle_arr, hasher(ai, bi))).alias(f"mh_{i}")
-        )
-    return F.array(*sig)
-
-
 def minhash_bands(sig: Column, num_bands: int = 8, rows_per_band: int = 4) -> Column:
     """LSH banding: array of (band_id, band_hash) structs.
 
@@ -121,26 +94,6 @@ def minhash_bands(sig: Column, num_bands: int = 8, rows_per_band: int = 4) -> Co
             )
         )
     return F.array(*bands)
-
-
-def simhash64(shingle_arr: Column) -> Column:
-    """64-bit SimHash over a shingle array — expression-only.
-
-    For each bit position, counts shingles whose xxhash64 has that bit
-    set vs unset; bit is 1 iff the set-count wins. Implemented as 64
-    aggregate expressions folded with ``aggregate``; stays JVM-side.
-    """
-    def bit_counter(bit: int):
-        return lambda acc, h: acc + F.shiftright(h, bit).bitwiseAND(F.lit(1)).cast("int")
-
-    hashes = F.transform(shingle_arr, lambda s: F.xxhash64(s))
-    n = F.size(hashes)
-    result = F.lit(0).cast("long")
-    for bit in range(64):
-        ones = F.aggregate(hashes, F.lit(0), bit_counter(bit))
-        bit_set = (ones * 2 > n).cast("long")
-        result = result.bitwiseOR(F.shiftleft(bit_set, bit))
-    return result
 
 
 def hamming64(a: Column, b: Column) -> Column:

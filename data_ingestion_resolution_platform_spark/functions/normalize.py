@@ -79,11 +79,6 @@ def identity_signature(first_name: Column, last_name: Column, company: Column) -
     )
 
 
-def truncate_message(col: Column, limit: int = 5000) -> Column:
-    """P10 (`worker.py:90`): bound error-message size."""
-    return F.substring(col, 1, limit)
-
-
 def validation_issues(
     normalized_email: Column,
     first_name: Column,

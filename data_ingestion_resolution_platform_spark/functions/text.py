@@ -118,31 +118,14 @@ def split_assign(id_col: Column, fractions: dict[str, float], buckets: int = 10_
     return expr.otherwise(F.lit("rest"))
 
 
-def doc_fingerprint(text: Column) -> Column:
+def doc_fingerprint_portable(text: Column) -> Column:
     """Rolling polynomial hash over whitespace tokens, mod a small prime.
 
     fp = fold(tokens, 0, (acc, t) -> (acc*31 + tokhash(t)) % 1000003)
-    where tokhash = xxhash64 folded into [0, mod). Small modulus keeps
-    the arithmetic exact in any engine (values < 2^40 pre-mod).
-    """
-    toks = tokenize(text)
-    return F.aggregate(
-        toks,
-        F.lit(0).cast("long"),
-        lambda acc, t: (
-            acc * FINGERPRINT_BASE + F.pmod(F.xxhash64(t), F.lit(FINGERPRINT_MOD))
-        )
-        % FINGERPRINT_MOD,
-    )
-
-
-def doc_fingerprint_portable(text: Column) -> Column:
-    """Rolling hash with an engine-portable token hash.
-
-    Same polynomial fold as ``doc_fingerprint`` but the per-token hash
-    is ``length(t)*31 + ascii(first_char)`` — computable in any SQL
-    engine (used by the DuckDB oracle gate). Weaker distribution than
-    xxhash64; prefer ``doc_fingerprint`` in production.
+    with the engine-portable token hash ``length(t)*31 +
+    ascii(first_char)`` — computable in any SQL engine (the DuckDB
+    oracle gate checks it). The small modulus keeps the arithmetic
+    exact in any engine.
     """
     toks = tokenize(text)
     tok_hash = lambda t: (F.length(t) * FINGERPRINT_BASE + F.ascii(F.substring(t, 1, 1))).cast(  # noqa: E731

@@ -13,23 +13,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def dot_product(a: Column, b: Column) -> Column:
-    """Dot product of two numeric arrays (double)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(dot_product(a, a))
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
-
-
 def quantize_vector(a: Column, scale: int = 1000) -> Column:
     """array<float> → array<long> of round(x*scale): exact integer space
     for cross-engine-deterministic similarity ranking."""

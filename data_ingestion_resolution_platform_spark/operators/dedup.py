@@ -87,10 +87,11 @@ def minhash_bands(
     df = ensure_parallelism(df)
     # Explode-based signature computation: one (doc, shingle-hash) row
     # per shingle, then num_hashes `min` aggregates in a single groupBy.
-    # The array-expression form (functions/hashing.minhash_signature)
-    # re-inlines the whole shingle pipeline once per hash function —
-    # 32x duplicated codegen; this shape computes shingles exactly once
-    # and is also the 100 TB plan (no giant arrays in memory).
+    # An array-expression form (array_min(transform(shingles, h_i)) per
+    # hash function) would re-inline the whole shingle pipeline once per
+    # hash function — 32x duplicated codegen; this shape computes
+    # shingles exactly once and is also the 100 TB plan (no giant
+    # arrays in memory).
     sh_hash = (
         portable_poly_hash(F.col("sh"))
         if portable

@@ -52,8 +52,8 @@ from data_ingestion_resolution_platform_spark.sources.lake import CHANGE_COL, is
 HASH_SPACE = (1 << 31) - 1
 
 # Seed walk for the depth-wise universal hash family — same LCG
-# constants as functions/hashing.minhash_signature so the DuckDB twin
-# is one shared convention.
+# constants as the MinHash seed walk in operators/dedup.py so the DuckDB
+# twin is one shared convention.
 MIX_A = 1_103_515_245
 MIX_B = 12_345
 

@@ -144,7 +144,6 @@ def snapshot_diff(
     before: DataFrame,
     after: DataFrame,
     keys: Sequence[str],
-    compare_cols: Sequence[str] | None = None,
     include_preimages: bool = False,
 ) -> DataFrame:
     """Key-level change feed between two table snapshots (the Iceberg/
@@ -155,11 +154,10 @@ def snapshot_diff(
     Plan shape: ONE full-outer shuffle join on the natural key, then
     null-safe column comparison (``<=>``) — no window, no sort, no
     driver-side state, so it scales with the snapshot size like any
-    equi-join (AQE handles skewed keys). ``compare_cols`` defaults to
-    every non-key column present in both snapshots; columns added by
-    schema evolution between the snapshots surface as updates only for
-    keys whose compared columns changed (pass them explicitly to treat
-    backfill as change).
+    equi-join (AQE handles skewed keys). It compares every non-key
+    column present in both snapshots; columns added by schema evolution
+    between the snapshots surface as updates only for keys whose
+    compared columns changed.
 
     ``include_preimages=True`` additionally emits an ``update_preimage``
     row (the before-image) for every updated key — the Delta CDF shape
@@ -169,12 +167,7 @@ def snapshot_diff(
     same full-outer join row and fan out via a 2-element explode.
     """
     key_list = list(keys)
-    shared = [c for c in after.columns if c in set(before.columns)]
-    compare = (
-        list(compare_cols)
-        if compare_cols is not None
-        else [c for c in shared if c not in key_list]
-    )
+    compare = [c for c in after.columns if c in set(before.columns) and c not in key_list]
     a = before.select(
         *key_list,
         F.lit(True).alias("_in_a"),
@@ -502,11 +495,12 @@ class _MergeTable:
 
 
 class LakeTable(_MergeTable):
-    """Single-snapshot table: overwrite / append / merge, exactly-once.
+    """Single-snapshot table: overwrite / merge, exactly-once.
 
     ``append_only=True`` switches to a cheap append layout (one subdir
-    per epoch under ``data/``; no rewrite of prior data) — for lineage/
-    conflict/audit tables that never update rows. Epoch appends are
+    per epoch under ``data/``; no rewrite of prior data), the only one
+    that takes :meth:`append` — for lineage/conflict/audit tables that
+    never update rows. Epoch appends are
     small relative to the table, so after 10^4 epochs a full read opens
     10^4s of tiny files: :meth:`compact_appends` folds the accumulated
     dirs into a size-targeted file set (Iceberg ``rewrite_data_files``
@@ -530,6 +524,9 @@ class LakeTable(_MergeTable):
     committed, so at-least-once redelivery stays exactly-once.
     """
 
+    #: the size :meth:`compact_appends` aims each output file at
+    COMPACT_TARGET_FILE_BYTES = 128 << 20
+
     def __init__(
         self,
         spark: SparkSession,
@@ -537,14 +534,12 @@ class LakeTable(_MergeTable):
         append_only: bool = False,
         compact_small_file_bytes: int | None = 64 << 20,
         compact_min_dirs: int = 16,
-        compact_target_file_bytes: int = 128 << 20,
     ):
         self.spark = spark
         self.root = root
         self.append_only = append_only
         self.compact_small_file_bytes = compact_small_file_bytes
         self.compact_min_dirs = compact_min_dirs
-        self.compact_target_file_bytes = compact_target_file_bytes
         os.makedirs(root, exist_ok=True)
         self.ledger = _EpochLedger(root)
         self.versions = _Versioned(root)
@@ -663,7 +658,6 @@ class LakeTable(_MergeTable):
         v_from: int,
         v_to: int,
         keys: Sequence[str],
-        compare_cols: Sequence[str] | None = None,
         include_preimages: bool = False,
     ) -> DataFrame:
         """Row-level diff between two retained snapshots — the engine's
@@ -675,16 +669,13 @@ class LakeTable(_MergeTable):
             self.read(version=v_from),
             self.read(version=v_to),
             keys,
-            compare_cols,
             include_preimages=include_preimages,
         )
 
     # -- writes ----------------------------------------------------------
-    def overwrite(self, df: DataFrame, epoch_id: str | int | None = None) -> None:
+    def overwrite(self, df: DataFrame) -> None:
         """Full-refresh rebuild (S10/M4: the reference's delete-then-
         reinsert finalize, `main.py:158-159`) — but atomic."""
-        if epoch_id is not None and self.ledger.committed(epoch_id):
-            return
         v = self.versions.current() + 1
         self.versions.claim(v)  # CommitConflict → caller re-reads + retries
         try:
@@ -693,8 +684,6 @@ class LakeTable(_MergeTable):
         except Exception:
             self.versions.release(v)
             raise
-        if epoch_id is not None:
-            self.ledger.record(epoch_id, {"mode": "overwrite"})
         self.versions.vacuum()
 
     def append(
@@ -703,7 +692,7 @@ class LakeTable(_MergeTable):
         epoch_id: str | int | None = None,
         max_files: int | None = 4,
     ) -> None:
-        """S9: append (bronze/audit). ``append_only`` tables write one
+        """S9: append (bronze/audit) to an ``append_only`` table: one
         epoch subdir — no rewrite of prior data, true O(batch) cost.
 
         ``max_files`` coalesces the write: audit outputs are small
@@ -712,30 +701,16 @@ class LakeTable(_MergeTable):
         task launch + commit protocol than the write itself. Pass
         ``None`` to keep the natural partitioning for large appends.
         """
+        if not self.append_only:
+            raise ValueError("append applies to append-only tables")
         if epoch_id is not None and self.ledger.committed(epoch_id):
             return
-        if self.append_only:
-            sub = f"e={epoch_id if epoch_id is not None else int(time.time() * 1000)}"
-            out = df.coalesce(max_files) if max_files else df
-            out.write.mode("overwrite").parquet(os.path.join(self._data_dir, sub))
-        else:
-            v = self.versions.current()
-            self.versions.claim(v + 1)
-            try:
-                combined = (
-                    self.read().unionByName(df, allowMissingColumns=True) if v > 0 else df
-                )
-                combined.write.mode("overwrite").parquet(self.versions.dir_for(v + 1))
-                self.versions.commit(v + 1)
-            except Exception:
-                self.versions.release(v + 1)
-                raise
+        sub = f"e={epoch_id if epoch_id is not None else int(time.time() * 1000)}"
+        out = df.coalesce(max_files) if max_files else df
+        out.write.mode("overwrite").parquet(os.path.join(self._data_dir, sub))
         if epoch_id is not None:
             self.ledger.record(epoch_id, {"mode": "append"})
-        if not self.append_only:
-            self.versions.vacuum()
-        else:
-            self.maybe_compact_appends()
+        self.maybe_compact_appends()
 
     # -- append-only compaction -------------------------------------------
     def append_stats(self) -> dict:
@@ -763,7 +738,7 @@ class LakeTable(_MergeTable):
         epoch dirs are live AND mean file size < the configured
         small-file threshold. Disarmed tables
         (``compact_small_file_bytes=None``) never pay the stat walk."""
-        if not (self.append_only and self.compact_small_file_bytes):
+        if not self.compact_small_file_bytes:
             return None
         s = self.append_stats()
         if (
@@ -773,7 +748,7 @@ class LakeTable(_MergeTable):
             return self.compact_appends()
         return None
 
-    def compact_appends(self, target_files: int | None = None) -> dict:
+    def compact_appends(self) -> dict:
         """Fold live epoch dirs (and the prior compacted generation)
         into one size-targeted file set — Iceberg
         ``rewrite_data_files`` binpack for the append layout. Content-
@@ -785,17 +760,14 @@ class LakeTable(_MergeTable):
         if not dirs:
             return {"mode": "compact_appends", "noop": True}
         before = self.append_stats()
-        if target_files is None:
-            target_files = max(
-                1, -(-before["bytes"] // self.compact_target_file_bytes)
-            )
+        n_files = max(1, -(-before["bytes"] // self.COMPACT_TARGET_FILE_BYTES))
         snapshot = self.read()  # e=<epoch> materialized as a data column
         gen = m["gen"] + 1
         dest = self._compact_gen_dir(gen)
         tmp = os.path.join(self.root, "_compacted", f"_tmp_g{gen}")
         shutil.rmtree(tmp, ignore_errors=True)
         shutil.rmtree(dest, ignore_errors=True)  # crashed pre-flip orphan
-        snapshot.coalesce(target_files).write.mode("overwrite").parquet(tmp)
+        snapshot.coalesce(n_files).write.mode("overwrite").parquet(tmp)
         os.rename(tmp, dest)
         folded = sorted(set(m["folded"]) | {os.path.basename(d) for d in dirs})
         _write_json(self._appends_manifest_path, {"gen": gen, "folded": folded})
@@ -890,22 +862,19 @@ class MorLakeTable(_MergeTable):
     split into untouched (left-anti) and overlapping (left-semi); only
     the overlap ∪ deltas goes through the LWW aggregation; winners union
     back with the untouched base. Read cost grows with delta count, so
-    accumulated deltas fold into a new base version under one of two
-    triggers (amortized, tunable against write amplification):
-
-    - ``compact_every``: fixed cadence — every K epochs (the round-1
-      design, kept for callers that want deterministic schedules);
-    - ``compact_ratio``: MEASURED policy — compact when live delta
-      bytes / base bytes ≥ the ratio (and ≥ ``min_compact_deltas``
-      deltas are live). Byte stats ride the manifest (written once at
-      merge/compact time, Iceberg snapshot-summary style), so the
-      policy decision is metadata-only — no storage walk on reads. A
-      ratio policy self-adapts where a cadence can't: tiny
-      micro-batches against a huge base accumulate for a long time
-      (reads barely degrade), while a burst of heavy epochs triggers
-      promptly. ``scan_stats()`` exposes the live read-amplification
-      estimate; BENCH_COMPACT_POLICY.json records the measured trade
-      curve.
+    accumulated deltas fold into a new base version (amortized against
+    write amplification) under one MEASURED trigger: with
+    ``compact_ratio`` set, a MERGE compacts when live delta bytes / base
+    bytes ≥ the ratio and ≥ :attr:`MIN_COMPACT_DELTAS` deltas are live;
+    without it, only an explicit :meth:`compact` folds. Byte stats ride
+    the manifest (written once at merge/compact time, Iceberg
+    snapshot-summary style), so the policy decision is metadata-only —
+    no storage walk on reads. A ratio policy self-adapts where a fixed
+    cadence can't: tiny micro-batches against a huge base accumulate
+    for a long time (reads barely degrade), while a burst of heavy
+    epochs triggers promptly. ``scan_stats()`` exposes the live
+    read-amplification estimate; BENCH_COMPACT_POLICY.json records the
+    measured trade curve.
 
     Layout::
 
@@ -923,6 +892,8 @@ class MorLakeTable(_MergeTable):
 
     SEQ = "_mor_seq"
     DEL = "_mor_del"
+    #: the fewest live deltas the ratio trigger compacts
+    MIN_COMPACT_DELTAS = 2
 
     def __init__(
         self,
@@ -930,24 +901,13 @@ class MorLakeTable(_MergeTable):
         root: str,
         keys: Sequence[str],
         lsn_col: str,
-        compact_every: int | None = None,
         compact_ratio: float | None = None,
-        min_compact_deltas: int = 2,
-        cluster_by: Sequence[str] | None = None,
-        cluster_files: int = 16,
     ):
         self.spark = spark
         self.root = root
         self.keys = list(keys)
         self.lsn_col = lsn_col
-        self.compact_every = compact_every
         self.compact_ratio = compact_ratio
-        self.min_compact_deltas = min_compact_deltas
-        # z-order the base at compaction time (Iceberg OPTIMIZE ZORDER):
-        # deltas stay fast appends; every compaction re-tightens per-file
-        # bounds on all clustered dims for the footer-stats pruner
-        self.cluster_by = list(cluster_by) if cluster_by else None
-        self.cluster_files = cluster_files
         os.makedirs(root, exist_ok=True)
         self.ledger = _EpochLedger(root)
 
@@ -1008,15 +968,13 @@ class MorLakeTable(_MergeTable):
         return stats
 
     def _compact_trigger(self, m: dict) -> str | None:
-        """Which configured trigger (if any) fires on this manifest —
+        """``"ratio"`` when the ratio policy fires on this manifest —
         manifest-only arithmetic, no storage access."""
-        n = len(m["deltas"])
-        if self.compact_every and n >= self.compact_every:
-            return "every"
-        if self.compact_ratio is not None and n >= self.min_compact_deltas:
-            s = self.scan_stats(m)
-            if s["base_bytes"] == 0 or s["delta_ratio"] >= self.compact_ratio:
-                return "ratio"
+        if self.compact_ratio is None or len(m["deltas"]) < self.MIN_COMPACT_DELTAS:
+            return None
+        s = self.scan_stats(m)
+        if s["base_bytes"] == 0 or s["delta_ratio"] >= self.compact_ratio:
+            return "ratio"
         return None
 
     def scan_stats(self, m: dict | None = None) -> dict:
@@ -1074,27 +1032,16 @@ class MorLakeTable(_MergeTable):
         return winners.select(*cols)
 
     # -- maintenance -----------------------------------------------------
-    def compact(self, epoch_id: str | int | None = None) -> dict:
+    def compact(self) -> dict:
         """Fold live deltas into a new base version; one atomic manifest
         replace retires them. Content-idempotent (replaying a crashed
-        compaction converges), optionally ledgered."""
-        if epoch_id is not None and self.ledger.committed(epoch_id):
-            return {"skipped": True, "epoch": str(epoch_id)}
+        compaction converges)."""
         m = self._read_manifest()
         if not m["deltas"]:
             return {"mode": "compact", "noop": True}
         snapshot = self.read()
         v = m["base_v"] + 1
-        if self.cluster_by:
-            from data_ingestion_resolution_platform_spark.sources.clustering import (
-                write_clustered,
-            )
-
-            write_clustered(
-                snapshot, self._base_dir(v), self.cluster_by, n_files=self.cluster_files
-            )
-        else:
-            snapshot.write.mode("overwrite").parquet(self._base_dir(v))
+        snapshot.write.mode("overwrite").parquet(self._base_dir(v))
         retired = m["deltas"]
         new_m = {
             "base_v": v,
@@ -1108,15 +1055,12 @@ class MorLakeTable(_MergeTable):
             shutil.rmtree(self._delta_dir(s), ignore_errors=True)
         if m["base_v"] > 0:
             shutil.rmtree(self._base_dir(m["base_v"]), ignore_errors=True)
-        stats = {
+        return {
             "mode": "compact",
             "base_v": v,
             "retired_deltas": len(retired),
             "base_bytes": new_m["base_bytes"],
         }
-        if epoch_id is not None:
-            self.ledger.record(epoch_id, stats)
-        return stats
 
 
 class PartitionedLakeTable(_MergeTable):
@@ -1165,15 +1109,10 @@ class PartitionedLakeTable(_MergeTable):
         bucket_keys: Sequence[str],
         n_buckets: int = 32,
         max_bucket_bytes: int = 256 << 20,
-        sort_within: Sequence[str] | None = None,
     ):
         self.spark = spark
         self.root = root
         self.bucket_keys = list(bucket_keys)
-        # cluster rows inside each staged bucket file (Iceberg write
-        # sort order): tight per-file min/max on these columns makes
-        # scan() pruning effective on range predicates
-        self.sort_within = list(sort_within) if sort_within else []
         # initial level: smallest power of two covering n_buckets
         self.initial_level = max(0, (int(n_buckets) - 1).bit_length())
         self.n_buckets = 1 << self.initial_level
@@ -1261,11 +1200,10 @@ class PartitionedLakeTable(_MergeTable):
     def scan(self, predicates: Sequence[tuple]) -> DataFrame:
         """Stats-pruned predicate scan over the live buckets (see
         ``LakeTable.scan``). Composes with the hash-bucket layout:
-        bucket dirs whose files' footer bounds exclude the predicate
-        are planned away driver-side — with ``sort_within`` clustering
-        a time/LSN column, a time-ranged scan over a grown target opens
-        only the files that can contain the range. Results always equal
-        ``read().filter(...)``; report on ``self.last_scan_report``."""
+        bucket files whose footer bounds exclude the predicate are
+        planned away driver-side, so a scan whose predicate falls
+        outside a bucket file's min/max never opens it. Results always
+        equal ``read().filter(...)``; report on ``self.last_scan_report``."""
         from data_ingestion_resolution_platform_spark.sources.skipping import pruned_scan
 
         d = self._read_dir()
@@ -1337,8 +1275,6 @@ class PartitionedLakeTable(_MergeTable):
         rcol = self.BUCKET_COL
         n_tasks = max(1, min(n_residues, self.spark.sparkContext.defaultParallelism))
         out = df.repartition(n_tasks, F.col(rcol))
-        if self.sort_within:
-            out = out.sortWithinPartitions(rcol, *self.sort_within)
         out.write.mode("overwrite").partitionBy(rcol).parquet(path)
 
     def _place(self, staging: str, d, touched, lstage: int, schema) -> dict:

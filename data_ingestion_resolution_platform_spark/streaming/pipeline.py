@@ -42,7 +42,6 @@ from data_ingestion_resolution_platform_spark.sources.lake import (
     POSTIMAGE,
     PREIMAGE,
     LakeTable,
-    MorLakeTable,
     PartitionedLakeTable,
 )
 from data_ingestion_resolution_platform_spark.streaming.lineage import epoch_summary, lineage_rows
@@ -180,11 +179,12 @@ class CDCPipeline:
     not fields. Only the sketch width ``freq_width`` and the sample
     size ``quantile_k`` differ among callers (registry vs perfbench).
 
-    Every append-only stream (the conflicts and lineage audits, the
-    SCD2 history's closed versions) folds its epoch dirs under the
-    append layout's one small-file policy (``sources/lake.LakeTable``'s
-    measured auto-compaction). A MOR target folds its deltas every 8
-    epochs.
+    The target is one copy-on-write ``PartitionedLakeTable``: a MERGE
+    rewrites only the buckets its batch touches (the reference's one
+    resolved table). Every append-only stream (the conflicts and lineage
+    audits, the SCD2 history's closed versions) folds its epoch dirs
+    under the append layout's one small-file policy
+    (``sources/lake.LakeTable``'s measured auto-compaction).
     """
 
     keys = ("repo", "path")
@@ -207,11 +207,6 @@ class CDCPipeline:
     renames: dict = field(default_factory=dict)
     n_buckets: int = 32
     max_bucket_bytes: int = 256 << 20
-    # "cow": bucket-pruned copy-on-write rewrite (read-optimized).
-    # "mor": merge-on-read delta appends + periodic compaction
-    # (ingest-optimized — O(batch) epoch cost even when every epoch
-    # touches every bucket).
-    target_mode: str = "cow"
     # opt-in incrementally-maintained metrics table (operators/ivm.py):
     # per-stats_key row counts + content bytes kept in lock-step with
     # the target WITHOUT ever rescanning it — the epoch's pre-images
@@ -274,29 +269,17 @@ class CDCPipeline:
         # and is advanced by evolve_schema() when the producer evolves
         # (Iceberg ADD COLUMN / RENAME at the ingest edge)
         self.canonical = CHANGE_FEED_SCHEMA
-        if self.target_mode == "cow":
-            # target: hash-bucketed on the leading natural key → MERGE
-            # only rewrites touched buckets (Iceberg bucket(N, repo)
-            # analogue); buckets that outgrow max_bucket_bytes split
-            # linear-hashing style so the bucket count tracks target
-            # size as it grows 100x
-            self.target = PartitionedLakeTable(
-                self.spark,
-                os.path.join(self.warehouse, "target"),
-                bucket_keys=[self.keys[0]],
-                n_buckets=self.n_buckets,
-                max_bucket_bytes=self.max_bucket_bytes,
-            )
-        elif self.target_mode == "mor":
-            self.target = MorLakeTable(
-                self.spark,
-                os.path.join(self.warehouse, "target"),
-                keys=list(self.keys),
-                lsn_col=self.lsn_col,
-                compact_every=8,
-            )
-        else:
-            raise ValueError(f"unknown target_mode {self.target_mode!r} (cow|mor)")
+        # target: hash-bucketed on the leading natural key → MERGE only
+        # rewrites touched buckets (Iceberg bucket(N, repo) analogue);
+        # buckets that outgrow max_bucket_bytes split linear-hashing
+        # style so the bucket count tracks target size as it grows 100x
+        self.target = PartitionedLakeTable(
+            self.spark,
+            os.path.join(self.warehouse, "target"),
+            bucket_keys=[self.keys[0]],
+            n_buckets=self.n_buckets,
+            max_bucket_bytes=self.max_bucket_bytes,
+        )
         # empty from open: the first pre-image probe plans like any other
         self.target.create(self.canonical)
         # conflicts/lineage are audit streams → append-only layout,
@@ -607,13 +590,14 @@ class CDCPipeline:
             epoch_id=f"f{epoch}",
         )
 
-    def seed_dim(self, dim: DataFrame, epoch_id: str = "dim_seed") -> dict:
+    def seed_dim(self, dim: DataFrame) -> dict:
         """Install the initial dimension snapshot (PK
         ``view_join_key``). Must run before the first maintained-view
-        epoch; its own ledger makes re-seeding a no-op."""
+        epoch; its own ledger (epoch ``dim_seed``) makes re-seeding a
+        no-op."""
         if self.dim is None:
             raise ValueError("seed_dim requires maintain_view=True")
-        return self.dim.merge(dim, [self.view_join_key], epoch_id=epoch_id)
+        return self.dim.merge(dim, [self.view_join_key], epoch_id="dim_seed")
 
     def _maintain_view(self, change: "EpochChange", epoch: int) -> None:
         """Advance the maintained ``target ⋈ dim`` view by this feed
@@ -718,7 +702,7 @@ class CDCPipeline:
         )
         return out
 
-    def bootstrap(self, snapshot: DataFrame, watermark_lsn: int, epoch_id: str = "bootstrap") -> dict:
+    def bootstrap(self, snapshot: DataFrame, watermark_lsn: int) -> dict:
         """Snapshot → streaming handoff (the Debezium initial-load
         pattern; extends M4/M5 to a non-empty starting state).
 
@@ -728,10 +712,10 @@ class CDCPipeline:
         replay contract): no prefix event is ever double-applied, no
         post-watermark event is missed. Snapshot rows enter as
         synthetic inserts stamped with the watermark LSN; the bootstrap
-        is its own ledgered epoch, so a crashed or redelivered
-        bootstrap is a no-op. ``snapshot`` must be key-unique (it is a
-        table snapshot) and carry the feed's payload columns minus
-        (op, lsn).
+        is its own ledgered epoch (``bootstrap``), so a crashed or
+        redelivered bootstrap is a no-op. ``snapshot`` must be
+        key-unique (it is a table snapshot) and carry the feed's
+        payload columns minus (op, lsn).
 
         At 10^10 events this is the only sane cold-start: replaying
         the full history through the resolver costs O(history), the
@@ -740,9 +724,10 @@ class CDCPipeline:
         Maintained side tables are seeded by the same view steps as a
         feed epoch: a snapshot is an insert-only epoch, advanced into
         every enabled view from one :class:`EpochChange` on
-        :func:`stage_then_commit`, under the ledger ids ``m_``, ``h_``,
-        ``t_``, ``q_``, ``f_`` and ``v_`` + ``epoch_id`` (the SCD2
-        history opens each snapshot key's version at the watermark).
+        :func:`stage_then_commit`, under the ledger ids ``m_bootstrap``,
+        ``h_bootstrap``, ``t_bootstrap``, ``q_bootstrap``,
+        ``f_bootstrap`` and ``v_bootstrap`` (the SCD2 history opens each
+        snapshot key's version at the watermark).
         As in ``process_batch``, the target merge stages beside the
         seeds and its commit waits for all of them (the change-set is
         valid until that gated commit), so a failed seed leaves the
@@ -757,8 +742,8 @@ class CDCPipeline:
         all nullable as a file source reads them), persisted and filled
         before the fan-out as ``process_batch``'s winners are.
         """
-        if self.target.epoch_committed(epoch_id):
-            return {"skipped": True, "epoch": epoch_id}
+        if self.target.epoch_committed("bootstrap"):
+            return {"skipped": True, "epoch": "bootstrap"}
         stamped = reconcile_exprs(
             snapshot.withColumns(
                 {"op": F.lit("I"), self.lsn_col: F.lit(watermark_lsn).cast("long")}
@@ -773,7 +758,7 @@ class CDCPipeline:
         winners = winners.persist()
         try:
             winners.write.format("noop").mode("overwrite").save()
-            return self._fan_out(winners, winners, epoch_id, f"_{epoch_id}")
+            return self._fan_out(winners, winners, "bootstrap", "_bootstrap")
         finally:
             winners.unpersist()
 

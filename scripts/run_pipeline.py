@@ -34,8 +34,6 @@ def main(argv=None) -> int:
                     help="bucket split threshold (linear-hashing growth)")
     ap.add_argument("--rename", action="append", default=[], metavar="FEED=CANON",
                     help="schema-evolution rename mapping (repeatable)")
-    ap.add_argument("--target-mode", choices=["cow", "mor"], default="cow",
-                    help="copy-on-write rewrites or merge-on-read deltas")
     ap.add_argument("--maintain-stats", action="store_true",
                     help="keep the incrementally-maintained per-repo metrics table")
     ap.add_argument("--maintain-history", action="store_true",
@@ -53,7 +51,6 @@ def main(argv=None) -> int:
         spark, feed_dir=args.feed, warehouse=args.warehouse,
         renames=renames, n_buckets=args.buckets,
         max_bucket_bytes=args.max_bucket_mb << 20,
-        target_mode=args.target_mode,
         maintain_stats=args.maintain_stats,
         maintain_history=args.maintain_history,
     )

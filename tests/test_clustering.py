@@ -83,27 +83,6 @@ def test_zorder_key_handles_nulls_and_constants(spark):
     assert ks[None] <= ks[3] <= ks[7]
 
 
-def test_mor_compaction_clusters_base(spark, events, tmp_path):
-    """MorLakeTable(cluster_by=...) re-tightens file bounds at compaction."""
-    from data_ingestion_resolution_platform_spark.sources.lake import MorLakeTable
-
-    root = str(tmp_path / "mor")
-    t = MorLakeTable(
-        spark, root, keys=["event_id"], lsn_col="event_id",
-        cluster_by=["ts", "value"], cluster_files=8,
-    )
-    ev = events.limit(800)
-    t.merge(ev, ["event_id"], epoch_id="e1")
-    stats = t.compact()
-    base_dir = f"{root}/base/v={stats['base_v']}"
-    df, report = pruned_scan(spark, base_dir, [base_dir], [("value", ">=", 95.0)])
-    assert report["files_kept"] < report["files_total"]
-    expected = ev.filter(F.col("value") >= 95.0)
-    assert df.count() == expected.count()
-    # table read unchanged by clustering
-    assert t.read().count() == 800
-
-
 def test_zorder_rejects_strings(spark):
     df = spark.createDataFrame([("x", 1)], "s string, a int")
     with pytest.raises(TypeError):

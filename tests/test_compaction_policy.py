@@ -32,10 +32,10 @@ def test_mor_ratio_policy_triggers_on_heavy_deltas(spark, tmp_path):
     t = MorLakeTable(
         spark, str(tmp_path / "m"), keys=["k"], lsn_col="lsn", compact_ratio=0.5
     )
-    # bootstrap: base_v==0 and >= min_compact_deltas live deltas → the
+    # bootstrap: base_v==0 and >= MIN_COMPACT_DELTAS live deltas → the
     # ratio trigger fires (infinite ratio) and materializes a base
     s0 = t.merge(_rows(spark, 0, 2000), ["k"], epoch_id=0)
-    assert "compacted" not in s0  # single delta, under min_compact_deltas
+    assert "compacted" not in s0  # single delta, under MIN_COMPACT_DELTAS
     s1 = t.merge(_rows(spark, 2000, 2000), ["k"], epoch_id=1)
     assert s1.get("compact_trigger") == "ratio"
     assert t.n_deltas() == 0
@@ -157,7 +157,7 @@ def test_append_compaction_scan_prunes_after_fold(spark, tmp_path):
     t = LakeTable(spark, str(tmp_path / "a"), append_only=True)
     for e in range(4):
         t.append(_rows(spark, e * 1000, 1000), epoch_id=e)
-    t.compact_appends(target_files=4)
+    t.compact_appends()
     scanned = t.scan([("k", ">=", 3500)])
     got = sorted(r.k for r in scanned.collect())
     assert got == list(range(3500, 4000))

@@ -78,36 +78,6 @@ def test_mor_exactly_once_and_compaction(spark, tmp_path):
     assert len(after) == len(before) + 1
 
 
-def test_mor_auto_compact_every(spark, tmp_path):
-    feed = synth_change_feed(spark, 2000, n_repos=5, seed=4)
-    mor = MorLakeTable(
-        spark, str(tmp_path / "m"), keys=["repo", "path"], lsn_col="lsn", compact_every=2
-    )
-    for e, part in enumerate(_epochs(feed, 4), start=1):
-        batch = resolve_latest(part, ["repo", "path"], "lsn")
-        mor.merge(batch.withColumn(DELETE_COL, F.col("op") == "D"), KEYS, epoch_id=e)
-    assert mor.n_deltas() == 0  # compacted at epochs 2 and 4
-    oneshot = resolve_latest(feed, ["repo", "path"], "lsn").filter(F.col("op") != "D")
-    assert _state(mor.read()) == _state(oneshot)
-
-
-def test_pipeline_mor_target_equals_cow_target(spark, tmp_path):
-    from data_ingestion_resolution_platform_spark.streaming.pipeline import CDCPipeline
-
-    feed = synth_change_feed(spark, 5000, n_repos=12, seed=17)
-    cow = CDCPipeline(spark, feed_dir="unused", warehouse=str(tmp_path / "cow"))
-    mor = CDCPipeline(
-        spark, feed_dir="unused", warehouse=str(tmp_path / "mor"), target_mode="mor"
-    )
-    mor.target.compact_every = 2
-    cow.replay_bounded(feed, epochs=3)
-    mor.replay_bounded(feed, epochs=3)
-    a, b = cow.target.read(), mor.target.read()
-    cols = sorted(set(a.columns) & set(b.columns))
-    assert a.select(*cols).exceptAll(b.select(*cols)).count() == 0
-    assert b.select(*cols).exceptAll(a.select(*cols)).count() == 0
-
-
 def test_mor_schema_evolution_across_deltas(spark, tmp_path):
     mor = MorLakeTable(spark, str(tmp_path / "m"), keys=["k"], lsn_col="lsn")
     mor.merge(

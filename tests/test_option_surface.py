@@ -8,7 +8,10 @@ the MERGE contract: one delete-marker column, ``DELETE_COL``. Options
 that only restate them double an untested configuration space, so these
 checks keep them from coming back. For the same reason every public
 package definition needs a caller outside the tests: a function only a
-test calls is a second, ungated implementation of some semantics.
+test calls is a second, ungated implementation of some semantics. And
+every option of the storage and pipeline layers needs a non-test call
+that sets it: an option only a test sets selects a path nothing gated
+runs.
 """
 
 from __future__ import annotations
@@ -35,7 +38,7 @@ def _modules():
 def test_pipeline_fields_are_the_deployment_and_view_switches():
     assert [f.name for f in dataclasses.fields(CDCPipeline)] == [
         "spark", "feed_dir", "warehouse", "renames", "n_buckets", "max_bucket_bytes",
-        "target_mode", "maintain_stats", "maintain_history", "maintain_view",
+        "maintain_stats", "maintain_history", "maintain_view",
         "maintain_leaderboard", "maintain_freq", "freq_width", "maintain_quantiles",
         "quantile_k",
     ]
@@ -93,25 +96,32 @@ NO_CALLER_OK = {
 }
 
 
-def _references():
-    """Where each name is mentioned in the non-test sources, as
-    ``{name: {(module, line of the enclosing top-level statement)}}``.
-    A mention is a load, an attribute or an imported name, so a
-    re-export from a package ``__init__`` counts and a docstring does not."""
+def _sources():
+    """``(module, tree)`` for every non-test source: the package,
+    ``bench.py``, ``__spark_entry__.py``, ``scripts/`` and ``perfbench/``."""
     scripts = [ROOT / "bench.py", ROOT / "__spark_entry__.py",
                *sorted((ROOT / "scripts").rglob("*.py")),
                *sorted((ROOT / "perfbench").rglob("*.py"))]
-    sources = [*_modules(),
-               *((p.relative_to(ROOT).as_posix(), ast.parse(p.read_text())) for p in scripts)]
+    yield from _modules()
+    for p in scripts:
+        yield p.relative_to(ROOT).as_posix(), ast.parse(p.read_text())
+
+
+def _references():
+    """Where each name is mentioned in the non-test sources, as
+    ``{name: {(module, line of the enclosing top-level statement)}}``.
+    A mention is a load, an attribute or an imported name; a package
+    ``__init__``'s import is a re-export, not a use, and a docstring
+    is not a mention."""
     refs = collections.defaultdict(set)
-    for module, tree in sources:
+    for module, tree in _sources():
         for stmt in tree.body:
             for node in ast.walk(stmt):
                 if isinstance(node, ast.Name):
                     refs[node.id].add((module, stmt.lineno))
                 elif isinstance(node, ast.Attribute):
                     refs[node.attr].add((module, stmt.lineno))
-                elif isinstance(node, ast.alias):
+                elif isinstance(node, ast.alias) and not module.endswith("__init__.py"):
                     refs[node.name.rpartition(".")[2]].add((module, stmt.lineno))
     return refs
 
@@ -130,3 +140,101 @@ def test_every_public_definition_has_a_non_test_caller():
     assert not unlisted, f"give each a non-test caller or delete it: {unlisted}"
     stale = sorted(set(NO_CALLER_OK) - set(uncalled))
     assert not stale, f"allow-listed but called or gone: {stale}"
+
+
+# The storage and pipeline layers' defaulted parameters that no
+# non-test call passes, each kept on purpose with its reason. An option
+# only a test sets is a configuration no gated path runs.
+UNPASSED_OK: dict[str, str] = {}
+
+OPTION_MODULES = ("sources/lake.py", "streaming/pipeline.py")
+
+
+def _defaulted(fn: ast.FunctionDef, bound: bool) -> list[tuple[str, int | None]]:
+    """``fn``'s parameters that have a default, each with its position
+    among the arguments a call passes (``None`` when keyword-only)."""
+    positional = [*fn.args.posonlyargs, *fn.args.args][1 if bound else 0:]
+    first = len(positional) - len(fn.args.defaults)
+    return [(a.arg, i) for i, a in enumerate(positional) if i >= first] + [
+        (a.arg, None) for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults) if d is not None
+    ]
+
+
+def _options():
+    """``[(where, callee name, parameter, position)]`` for every public
+    function, method and constructor of :data:`OPTION_MODULES` (a
+    dataclass's defaulted fields are its constructor's parameters). A
+    private base class's public methods count: its subclasses expose them."""
+    out = []
+    for module, tree in _modules():
+        if module not in OPTION_MODULES:
+            continue
+        classes = [n for n in tree.body if isinstance(n, ast.ClassDef)]
+        bases = {b.id for c in classes if not c.name.startswith("_")
+                 for b in c.bases if isinstance(b, ast.Name)}
+        for node in tree.body:
+            if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
+                out += [(f"{module}:{node.lineno}", node.name, p, i)
+                        for p, i in _defaulted(node, bound=False)]
+            if not isinstance(node, ast.ClassDef):
+                continue
+            public = not node.name.startswith("_")
+            if public and any(ast.unparse(d).endswith("dataclass") for d in node.decorator_list):
+                fields = [s for s in node.body
+                          if isinstance(s, ast.AnnAssign) and isinstance(s.target, ast.Name)]
+                out += [(f"{module}:{s.lineno}", node.name, s.target.id, i)
+                        for i, s in enumerate(fields) if s.value is not None]
+            if not (public or node.name in bases):
+                continue
+            for fn in node.body:
+                if not isinstance(fn, ast.FunctionDef):
+                    continue
+                if fn.name == "__init__" and public:
+                    callee = node.name
+                elif not fn.name.startswith("_"):
+                    callee = fn.name
+                else:
+                    continue
+                static = any(ast.unparse(d) == "staticmethod" for d in fn.decorator_list)
+                out += [(f"{module}:{fn.lineno}", callee, p, i)
+                        for p, i in _defaulted(fn, bound=not static)]
+    return out
+
+
+def _calls():
+    """``{callee name: [(positional count, keywords, unpacks)]}`` over every
+    call in the non-test sources; ``functools.partial(f, ...)`` is a call
+    of ``f``. Callees match by name alone, so this is a lenient floor."""
+    calls = collections.defaultdict(list)
+    for _, tree in _sources():
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            func, args = node.func, node.args
+            name = getattr(func, "id", getattr(func, "attr", None))
+            if name == "partial" and args:
+                func, args = args[0], args[1:]
+                name = getattr(func, "id", getattr(func, "attr", None))
+            starred = [i for i, a in enumerate(args) if isinstance(a, ast.Starred)]
+            calls[name].append((
+                starred[0] if starred else len(args),
+                {k.arg for k in node.keywords},
+                bool(starred) or None in {k.arg for k in node.keywords},
+            ))
+    return calls
+
+
+def test_every_storage_and_pipeline_option_has_a_non_test_caller():
+    calls = _calls()
+    unpassed = {
+        f"{callee}({param})": where
+        for where, callee, param, pos in _options()
+        if not any(
+            unpacks or param in keywords or (pos is not None and pos < n_pos)
+            for n_pos, keywords, unpacks in calls[callee]
+        )
+    }
+    unlisted = {k: v for k, v in unpassed.items() if k not in UNPASSED_OK}
+    assert not unlisted, f"pass each from a non-test caller or delete it: {unlisted}"
+    stale = sorted(set(UNPASSED_OK) - set(unpassed))
+    assert not stale, f"allow-listed but passed or gone: {stale}"

@@ -201,8 +201,7 @@ def _assert_views_match_target(pipe):
     }
 
 
-@pytest.mark.parametrize("target_mode", ["cow", "mor"])
-def test_one_view_fails_while_the_others_commit(spark, tmp_path, monkeypatch, target_mode):
+def test_one_view_fails_while_the_others_commit(spark, tmp_path, monkeypatch):
     feed = synth_change_feed(spark, n_events=1500, n_repos=6, seed=9, partitions=4)
     thr = feed.agg(F.max("lsn")).collect()[0][0] // 2
     pipe = CDCPipeline(
@@ -216,7 +215,6 @@ def test_one_view_fails_while_the_others_commit(spark, tmp_path, monkeypatch, ta
         maintain_quantiles=True,
         quantile_k=K,
         maintain_history=True,
-        target_mode=target_mode,
     )
     cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
@@ -247,8 +245,8 @@ def test_one_view_fails_while_the_others_commit(spark, tmp_path, monkeypatch, ta
     assert not pipe.leaderboard.epoch_committed("t1")
     assert not pipe.target.epoch_committed(1)
     # the target MERGE staged beside the views, but its gated commit
-    # refused: the _DIR / _MANIFEST bytes, ledger and data dirs are as
-    # before (no new delta dir), and no staging dir is left
+    # refused: the _DIR bytes, ledger and data dirs are as before, and
+    # no staging dir is left
     assert _commit_state(pipe.target) == committed
     assert not glob.glob(os.path.join(pipe.target.root, "_staging_*"))
     stats_version = pipe.stats.current_version()

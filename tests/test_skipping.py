@@ -117,7 +117,6 @@ def test_partitioned_scan_prunes_cold_buckets_on_lsn(spark, tmp_path):
         str(tmp_path / "p"),
         bucket_keys=["repo"],
         n_buckets=16,
-        sort_within=["lsn"],
     )
     n, repos = 6000, 8
 
